@@ -16,8 +16,22 @@ A from-scratch re-expression of the query semantics of
 * depth-weighted scoring / chamfer / ranking analogs of
   ``src/shared/forest_vote.py`` and ``src/shared/retrieval.py``
 
-Everything is DataFrame/Catalyst-first; Python appears only in Arrow-batched
-pandas UDFs (signatures) — no per-row Python anywhere.
+Everything is DataFrame/Catalyst-first; Python runs only in Arrow-batched
+pandas kernels, never per row:
+
+* signatures: the MinHash and SimHash UDFs (``functions.minhash``,
+  ``functions.simhash``) behind ``with_signatures``, hence behind dedup,
+  incremental dedup and forest vote; the hyperplane SimHash of ``lsh_topk``
+* ``scoring="pandas"`` vector kernels (``functions.vectors``): cosine and dot
+  scoring, nearest-centroid assignment and centroid score vectors for
+  ``ivf_topk`` / ``plaid_topk``, and PLAID's chamfer max-sum re-rank
+  (their ``scoring="fold"`` twins are pure Catalyst)
+* the rolling hashes of ``operators.substring``, the ``applyInPandas``
+  verifier ``verify_pairs_pandas``, the ``mapInPandas`` media extractors,
+  and the seeded ``mapInPandas`` generators under ``sources``
+
+Spark forks those Python workers from :mod:`.worker_daemon` where the
+workers can import the engine (see :func:`.session.get_spark`).
 """
 
 from lsh_forest_for_multi_vector_retrieval_spark.config import DedupConfig

@@ -296,12 +296,15 @@ def chamfer_pair_pandas_udf():
     re-rank plan. Matches the relational production path's NULL handling:
     NaN dots (null elements) are missing, a token whose dots are all
     missing is skipped by the sum (SQL ``sum`` ignores NULLs), and a row
-    with no scoreable token at all is NULL. Token-sum order is the given
-    query-token order (callers pass q_idx-sorted matrices), so results are
-    deterministic; ulp-level differences vs the interpreted fold are
-    possible — fixture-oracle comparisons keep the fold."""
+    with no scoreable token at all is NULL. A row whose token vectors
+    differ in length is scored as the fold scores it: a dot across unequal
+    lengths is NULL, so each query token meets only the doc tokens of its
+    own length. Token-sum order is the given query-token order (callers
+    pass q_idx-sorted matrices), so results are deterministic; ulp-level
+    differences vs the interpreted fold are possible — fixture-oracle
+    comparisons keep the fold."""
 
-    def _mat(x) -> np.ndarray | None:
+    def _tokens(x) -> list | None:
         if x is None:
             return None
         # a NULL token vector inside the list (a null struct FIELD survives
@@ -309,18 +312,29 @@ def chamfer_pair_pandas_udf():
         # is NULL on the relational path, so max/sum skip it — dropping the
         # row here is the identical semantics, and np.asarray(None) would
         # otherwise kill the task with a TypeError
-        rows = [r for r in x if r is not None]
-        if not rows:
-            return None
         try:
-            m = np.asarray(
-                [np.asarray(r, dtype=np.float64) for r in rows], dtype=np.float64
-            )
-        except (ValueError, TypeError):  # ragged/non-numeric token dims
+            rows = [np.asarray(r, dtype=np.float64) for r in x if r is not None]
+        except (ValueError, TypeError):  # non-numeric token elements
             return None
-        if m.ndim != 2 or m.shape[0] == 0 or m.shape[1] == 0:
+        if not rows or any(r.ndim != 1 for r in rows):
             return None
-        return m
+        return rows
+
+    def _ragged_score(q_rows: list, d_rows: list) -> float | None:
+        by_len: dict = {}
+        for r in d_rows:
+            by_len.setdefault(len(r), []).append(r)
+        total, scored = 0.0, False
+        for qv in q_rows:
+            dm = by_len.get(len(qv))
+            if dm is None:
+                continue  # every dot of this token is NULL: skipped
+            dots = np.stack(dm) @ qv
+            if np.isnan(dots).all():
+                continue
+            total += float(np.nanmax(dots))
+            scored = True
+        return total if scored else None
 
     @pandas_udf("double")
     def _chamfer(qs: pd.Series, ds: pd.Series) -> pd.Series:
@@ -333,12 +347,16 @@ def chamfer_pair_pandas_udf():
         groups: dict = {}
         mats: list = []
         for i in range(n):
-            qm, dm = _mat(qs.iloc[i]), _mat(ds.iloc[i])
-            if qm is None or dm is None or qm.shape[1] != dm.shape[1]:
-                mats.append(None)
+            qr, dr = _tokens(qs.iloc[i]), _tokens(ds.iloc[i])
+            mats.append(None)
+            if qr is None or dr is None:
                 continue
-            mats.append((qm, dm))
-            groups.setdefault((qm.shape, dm.shape[0]), []).append(i)
+            dims = {len(r) for r in qr} | {len(r) for r in dr}
+            if len(dims) != 1 or 0 in dims:
+                out[i] = _ragged_score(qr, dr)
+                continue
+            mats[i] = (np.stack(qr), np.stack(dr))
+            groups.setdefault((mats[i][0].shape, len(dr)), []).append(i)
         for idxs in groups.values():
             Q = np.stack([mats[i][0] for i in idxs])  # (n, q, dim)
             D = np.stack([mats[i][1] for i in idxs])  # (n, d, dim)

@@ -32,6 +32,7 @@ import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # Below this many edges the component graph is collected and solved with a
 # driver-side union-find — the same size-gated physical-strategy switch
@@ -214,13 +215,17 @@ def connected_components(
     # union-find is duplicate-tolerant (a repeated edge is two no-op
     # unions), the limit bounds the RAW rows reaching the driver, and the
     # flagship's verified pairs are distinct anyway.
+    # That bound holds for integral ids only: n+1 rows of string (or other
+    # wide) ids can cost GBs of driver memory, so those gate on a count
+    # first and pull only under the bound (one extra action).
     pdf = None
     if driver_max_edges > 0:
-        pdf = (
-            edges.select("doc_a", "doc_b").limit(driver_max_edges + 1).toPandas()
-        )
-        if len(pdf) > driver_max_edges:
-            pdf = None
+        bounded = edges.select("doc_a", "doc_b").limit(driver_max_edges + 1)
+        integral = isinstance(edges.schema["doc_a"].dataType, T.IntegralType)
+        if integral or bounded.count() <= driver_max_edges:
+            pdf = bounded.toPandas()
+            if len(pdf) > driver_max_edges:
+                pdf = None
     if pdf is not None:
         labels_map = _driver_union_find(
             zip(pdf["doc_a"].tolist(), pdf["doc_b"].tolist())

@@ -19,7 +19,7 @@ keyed joins against the inverted index.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from lsh_forest_for_multi_vector_retrieval_spark.functions.vectors import (
@@ -263,6 +263,19 @@ def _sum_tok_vals(vals, round_digits: int | None):
     )
 
 
+def chamfer_pair_fold_col(
+    q_vecs: Column, d_vecs: Column, round_digits: int | None
+) -> Column:
+    """Relational twin of ``chamfer_pair_pandas_udf``: per row, the sum over
+    query tokens (in array order) of the max over doc tokens of their dot,
+    summed by :func:`_sum_tok_vals`."""
+    tok_best = F.transform(
+        q_vecs,
+        lambda q: F.array_max(F.transform(d_vecs, lambda dv: dot_col(q, dv))),
+    )
+    return _sum_tok_vals(tok_best, round_digits)
+
+
 def plaid_topk(
     doc_vectors: DataFrame,
     query_vectors: DataFrame,
@@ -461,19 +474,12 @@ def plaid_topk(
         F.array_sort(F.collect_list(F.struct("q_idx", "q_vec"))).alias("qtoks")
     )
     joined = pool.join(q_mat, "query_id").join(d_mat, "doc_id")
+    q_vecs = F.transform(F.col("qtoks"), lambda t: t["q_vec"])
     if scoring == "pandas":
-        raw = chamfer_pair_pandas_udf()(
-            F.transform(F.col("qtoks"), lambda t: t["q_vec"]), F.col("d_vecs")
-        )
+        raw = chamfer_pair_pandas_udf()(q_vecs, F.col("d_vecs"))
         score = raw if round_digits is None else F.round(raw, round_digits)
     else:
-        exact_vals = F.transform(
-            F.col("qtoks"),
-            lambda t: F.array_max(
-                F.transform(F.col("d_vecs"), lambda dv: dot_col(t["q_vec"], dv))
-            ),
-        )
-        score = _sum_tok_vals(exact_vals, round_digits)
+        score = chamfer_pair_fold_col(q_vecs, F.col("d_vecs"), round_digits)
     exact = joined.select("query_id", "doc_id", score.alias("score"))
     return exact.withColumn("rank", F.row_number().over(wr)).where(
         F.col("rank") <= k

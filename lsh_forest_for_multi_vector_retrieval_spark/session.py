@@ -8,8 +8,29 @@ Arrow) are what we would ship to a 1000-executor cluster — only
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
+
+WORKER_DAEMON_MODULE = "lsh_forest_for_multi_vector_retrieval_spark.worker_daemon"
+
+
+def _workers_import_engine(master: str) -> bool:
+    """Whether Python workers can import the engine the way this process
+    did: the package came from a plain directory whose ``sys.path`` root is
+    site-packages or, for a local master (workers inherit this process's
+    environment and working directory), on ``PYTHONPATH`` or the working
+    directory. A package loaded from an archive (``--py-files``) is not:
+    the daemon starts before any task ships that archive."""
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    if not os.path.isdir(pkg_dir):
+        return False
+    roots = list(site.getsitepackages()) + [site.getusersitepackages()]
+    if master.strip().startswith("local"):
+        roots.append(os.getcwd())
+        roots.extend(os.environ.get("PYTHONPATH", "").split(os.pathsep))
+    root = os.path.realpath(os.path.dirname(pkg_dir))
+    return any(p and os.path.realpath(p) == root for p in roots)
 
 
 def get_spark(
@@ -27,6 +48,17 @@ def get_spark(
     * shuffle partitions default to the parallelism level so local runs
       don't fragment into 200 tiny tasks; on a real cluster this would be
       ~2-3x total cores (or left to AQE's coalescing).
+    * Python workers fork from the engine's daemon
+      (``spark.python.daemon.module`` = :mod:`.worker_daemon`), which stops
+      each task from re-parsing ``pyspark.zip``'s directory (about 150 ms
+      of worker CPU per task on CPython < 3.13). Spark starts the daemon
+      with ``python -m`` before any task ships ``--py-files``, so the
+      workers must import the engine from where this driver did: a plain
+      directory whose ``sys.path`` root is site-packages or, for a local
+      master, on ``PYTHONPATH`` or the working directory. Otherwise (e.g.
+      the engine submitted as a ``--py-files`` archive) Spark's default
+      ``pyspark.daemon`` is kept, because a daemon module the daemon cannot
+      import fails every Python task. ``extra_conf`` can override it.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -54,8 +86,9 @@ def get_spark(
         # candidate-pair / verified tables cache in shuffle_partitions
         # slivers and every downstream action (CC gate count, cluster
         # count) launches one near-empty task per sliver — measured ~12 s
-        # of latency-bound stages per flagship pass at local[4]
-        # (tools/stage_metrics_probe.py), pure Amdahl floor at any scale
+        # of latency-bound stages per flagship pass at local[4] (per-stage
+        # task metrics; `perfbench/run.py --trace 1` reports them per
+        # layer), pure Amdahl floor at any scale
         .config(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
             "true",
@@ -78,6 +111,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    if _workers_import_engine(master):
+        builder = builder.config("spark.python.daemon.module", WORKER_DAEMON_MODULE)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -413,6 +413,24 @@ def test_candidate_pairs_unchanged_by_salting(sigs):
     assert off.exceptAll(on).count() == 0
 
 
+def _min_label_oracle(edges_py) -> dict:
+    """Test-local union-find: every vertex -> its component minimum."""
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges_py:
+        parent[find(a)] = find(b)
+    want = {}
+    for v in parent:
+        want.setdefault(find(v), []).append(v)
+    return {v: min(vs) for vs in want.values() for v in vs}
+
+
 @settings(max_examples=5, deadline=None)
 @given(
     st.lists(
@@ -427,21 +445,7 @@ def test_cc_strategies_match_union_find_oracle(spark, edges_py):
     three physical strategies — driver union-find, distributed star
     contraction, distributed hash-min — must label every vertex with its
     component MINIMUM, per an independent test-local union-find."""
-    parent = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges_py:
-        parent[find(a)] = find(b)
-    want = {}
-    for v in parent:
-        want.setdefault(find(v), []).append(v)
-    expect = {v: min(vs) for vs in want.values() for v in vs}
-
+    expect = _min_label_oracle(edges_py)
     edges = spark.createDataFrame(edges_py, "doc_a long, doc_b long")
     got_driver = {
         r.doc_id: r.cluster_id for r in connected_components(edges).collect()
@@ -455,6 +459,39 @@ def test_cc_strategies_match_union_find_oracle(spark, edges_py):
             ).collect()
         }
         assert got == expect, algo
+
+
+def test_cc_wide_ids_count_before_pulling_to_driver(spark, monkeypatch):
+    """String ids gate on a count: an edge set over ``driver_max_edges``
+    is never pulled to the driver, and takes the star path; under the
+    bound it still takes the driver union-find. Both label every vertex
+    with its component minimum."""
+    edges_py = [
+        (f"d{a:02d}", f"d{b:02d}")
+        for a, b in [(1, 2), (2, 3), (5, 4), (7, 7), (8, 9), (9, 1), (6, 5)]
+    ]
+    edges = spark.createDataFrame(edges_py, "doc_a string, doc_b string")
+    pulls = []
+    to_pandas = type(edges).toPandas
+
+    def counting_to_pandas(self):
+        pulls.append(self)
+        return to_pandas(self)
+
+    monkeypatch.setattr(type(edges), "toPandas", counting_to_pandas)
+    expect = _min_label_oracle(edges_py)
+
+    stats: dict = {}
+    got = connected_components(edges, driver_max_edges=3, stats=stats)
+    assert {r.doc_id: r.cluster_id for r in got.collect()} == expect
+    assert stats["strategy"] == "star"
+    assert pulls == []
+
+    stats = {}
+    got = connected_components(edges, driver_max_edges=len(edges_py), stats=stats)
+    assert {r.doc_id: r.cluster_id for r in got.collect()} == expect
+    assert stats["strategy"] == "driver_union_find"
+    assert len(pulls) == 1
 
 
 def test_cc_algorithm_validated_before_size_gate(spark):

@@ -305,6 +305,9 @@ def test_round6_kernels_degenerate_inputs(spark):
         centroid_scorevec_pandas_udf,
         chamfer_pair_pandas_udf,
     )
+    from lsh_forest_for_multi_vector_retrieval_spark.operators.plaid import (
+        chamfer_pair_fold_col,
+    )
 
     q = [[1.0, 0.0], [0.0, 2.0]]
     d = [[1.0, 1.0], [3.0, 0.0]]
@@ -315,21 +318,30 @@ def test_round6_kernels_degenerate_inputs(spark):
         (2, q, [None, [3.0, 0.0]]),        # null d token ignored -> 3+0
         (3, [None], d),                    # no scoreable q token -> NULL
         (4, q, None),                      # missing doc side -> NULL
-        (5, [[1.0]], d),                   # ragged dims -> NULL
+        (5, [[1.0]], d),                   # no equal-length doc token -> NULL
+        # one ragged q token: only doc tokens of its length score it, so
+        # [1.0] adds nothing and [1.0, 0.0] scores max(1, 3) -> 3.0
+        (6, [[1.0, 0.0], [1.0]], d),
+        # one ragged d token: q meets [1.0, 1.0] only -> 1 + 2
+        (7, q, [[1.0, 1.0], [3.0]]),
     ]
     df = spark.createDataFrame(
         rows, "id long, q array<array<double>>, d array<array<double>>"
     )
-    got = {
-        r.id: r.s
-        for r in df.select(
-            "id", chamfer_pair_pandas_udf()(F.col("q"), F.col("d")).alias("s")
-        ).collect()
-    }
+    got, fold = {}, {}
+    for r in df.select(
+        "id",
+        chamfer_pair_pandas_udf()(F.col("q"), F.col("d")).alias("s"),
+        chamfer_pair_fold_col(F.col("q"), F.col("d"), None).alias("f"),
+    ).collect():
+        got[r.id], fold[r.id] = r.s, r.f
     assert got[0] == 5.0
     assert got[1] == 3.0
     assert got[2] == 3.0
     assert got[3] is None and got[4] is None and got[5] is None
+    assert got[6] == 3.0
+    assert got[7] == 3.0
+    assert got == fold  # the pandas kernel and its fold twin agree per row
 
     cents = [[1.0, 0.0], [0.0, 1.0]]
     vdf = spark.createDataFrame(

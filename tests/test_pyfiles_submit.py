@@ -39,7 +39,9 @@ docs = spark.read.parquet(sys.argv[1])
 res = minhash_dedup(docs, DedupConfig())
 n_pairs = res.verified.count()
 n_clusters = res.clusters.select("cluster_id").distinct().count()
-print(f"PYFILES_SMOKE pairs={n_pairs} clusters={n_clusters}", flush=True)
+daemon = spark.sparkContext.getConf().get("spark.python.daemon.module", "unset")
+print(f"PYFILES_SMOKE pairs={n_pairs} clusters={n_clusters} daemon={daemon}",
+      flush=True)
 spark.stop()
 """
 
@@ -76,3 +78,6 @@ def test_spark_submit_py_files_runs_flagship(tmp_path):
     fields = dict(kv.split("=") for kv in marker[0].split()[1:])
     assert int(fields["pairs"]) >= 15
     assert int(fields["clusters"]) == 476
+    # the engine came from the archive, which Spark's daemon cannot import
+    # before a task ships it: get_spark must keep the default daemon
+    assert fields["daemon"] == "unset"

@@ -26,9 +26,9 @@ pandas kernels, never per row:
   scoring, nearest-centroid assignment and centroid score vectors for
   ``ivf_topk`` / ``plaid_topk``, and PLAID's chamfer max-sum re-rank
   (their ``scoring="fold"`` twins are pure Catalyst)
-* the rolling hashes of ``operators.substring``, the ``applyInPandas``
-  verifier ``verify_pairs_pandas``, the ``mapInPandas`` media extractors,
-  and the seeded ``mapInPandas`` generators under ``sources``
+* the rolling hashes of ``operators.substring``, the ``mapInPandas``
+  image extractors of ``operators.media``, and the seeded ``mapInPandas``
+  generators under ``sources``
 
 Spark forks those Python workers from :mod:`.worker_daemon` where the
 workers can import the engine (see :func:`.session.get_spark`).

@@ -32,24 +32,20 @@ class DedupConfig:
     num_bands: int = 16
     rows_per_band: int = 8
 
-    # --- SimHash (north_star config: 64-bit) ---
-    simhash_bits: int = 64
+    # --- SimHash (always 64-bit, one long per doc: functions/simhash.py) ---
     # candidate pre-filter: max Hamming distance between SimHashes before
     # we even bother with exact Jaccard (cheap JVM-side bit_count filter).
     simhash_prefilter_max_hamming: int | None = None  # None = disabled
 
     # --- verification ---
     jaccard_threshold: float = 0.8
-    # Semi-join-prune the signature table to docs that appear in at least
-    # one candidate pair before the verify joins. Candidate docs are a
-    # small fraction of the corpus (dedup selectivity), so this turns
-    # "shuffle every shingle array in the corpus through a sort-merge
-    # join" into "broadcast a set of ids and probe the signature scan in
-    # place" — measured 60.8 s -> ~4 s for the verify stage at 320k docs
-    # on 4 cores. The broadcast is 8 bytes/candidate-doc (~80 MB at 10M
-    # candidate docs); disable for corpora where candidate docs approach
-    # the corpus itself (the unpruned plan shuffles sigs once instead).
-    verify_prune_candidates: bool = True
+    # verify always semi-join-prunes the signature table to docs that
+    # appear in at least one candidate pair before the verify joins.
+    # Candidate docs are a small fraction of the corpus (dedup
+    # selectivity), so this turns "shuffle every shingle array in the
+    # corpus through a sort-merge join" into "broadcast a set of ids and
+    # probe the signature scan in place" — measured 60.8 s -> ~4 s for
+    # the verify stage at 320k docs on 4 cores.
     # Candidate-id sets up to this size are broadcast for the prune's
     # semi-join; above it (duplicate-dense corpora — boilerplate-heavy
     # crawls where most docs appear in some pair) the prune falls back to
@@ -114,9 +110,6 @@ class DedupConfig:
     # collect_set memory is bounded by bucket/salt instead of the whole
     # bucket; <=1 disables salting (single-shuffle plan)
     salt_partitions: int = 8
-
-    # --- misc ---
-    checkpoint_format: str = "parquet"  # "iceberg" when a catalog is configured
 
     def __post_init__(self) -> None:
         if self.num_bands * self.rows_per_band > self.num_perm:

@@ -89,12 +89,12 @@ def minhash_udf(num_perm: int = 128, seed: int = 42) -> Column:
     slower (0.56s vs 117s per 4096-row Arrow batch). Per-row also bounds
     worker memory to KBs regardless of batch size.
 
-    JVM-only alternatives measured and rejected (tools/minhash_ab.py,
-    sf0.1, 5000 docs, best of 3): this UDF 0.49s; explode + groupBy with
-    128 codegen'd min() aggregates 2.28s (pays a shuffle of the exploded
-    shingle rows); higher-order F.aggregate per perm 2.49s (HOF lambdas
-    are interpreted per element, not codegen'd). The Arrow boundary is
-    cheaper than either — the NumPy kernel stays.
+    JVM-only alternatives measured and rejected (sf0.1, 5000 docs, best
+    of 3): this UDF 0.49s; explode + groupBy with 128 codegen'd min()
+    aggregates 2.28s (pays a shuffle of the exploded shingle rows);
+    higher-order F.aggregate per perm 2.49s (HOF lambdas are interpreted
+    per element, not codegen'd). The Arrow boundary is cheaper than
+    either — the NumPy kernel stays.
     """
     a, b = minhash_params(num_perm, seed)
     a_col, b_col = a[:, None], b[:, None]

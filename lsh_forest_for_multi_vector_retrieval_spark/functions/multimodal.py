@@ -7,14 +7,14 @@ scope): media rows are (payload: binary, typed metadata struct) exactly as a
 (schemas, mapInPandas batch shape, partitioning) is real and tested; the
 *codec* layer is pluggable:
 
-* ``rawrgb`` / ``rawpcm16`` — a real, deterministic, dependency-free codec
-  (payload bytes ARE the uint8 HxWxC tensor / int16 PCM samples). All tests
-  and driver queries use it, so every downstream kernel (resize, features,
-  average-hash, frame sampling) runs on real pixel math end to end.
-* JPEG/PNG/FLAC etc. — STUBBED: the image/audio libraries are not in this
-  container, so :func:`decode_image` raises ``NotImplementedError`` for
-  them unless PIL is importable (import-try gate). The stub is the decode
-  step ONLY; nothing else is faked.
+* ``rawrgb`` — a real, deterministic, dependency-free codec (payload
+  bytes ARE the uint8 HxWxC tensor). All tests and driver queries use it,
+  so every downstream kernel (resize, features, average-hash) runs on real
+  pixel math end to end. Audio rows (``rawpcm16``, int16 PCM) ride along
+  in the media table; no kernel here decodes them.
+* JPEG/PNG — STUBBED: :func:`decode_image` raises ``NotImplementedError``
+  for them unless PIL is importable (import-try gate). The stub is the
+  decode step ONLY; nothing else is faked.
 
 Kernels are NumPy-per-row inside Arrow batches (same justification as
 functions/minhash.py:50-57 — the math is matrix-shaped, the batching
@@ -102,15 +102,6 @@ def decode_image(payload: bytes, meta) -> np.ndarray:
     raise NotImplementedError(f"unknown image codec {codec!r}")
 
 
-def decode_audio(payload: bytes, meta) -> np.ndarray:
-    """payload -> float32 samples in [-1, 1). ``rawpcm16`` = int16 LE PCM."""
-    codec = meta["codec"]
-    if codec == "rawpcm16":
-        return np.frombuffer(payload, dtype="<i2").astype(np.float32) / 32768.0
-    # STUB: flac/mp3/ogg need an audio library, absent in this container
-    raise NotImplementedError(f"audio codec {codec!r} not available in this build")
-
-
 def encode_rawrgb(frames: np.ndarray) -> bytes:
     return np.ascontiguousarray(frames, dtype=np.uint8).tobytes()
 
@@ -174,13 +165,3 @@ def image_features(frames: np.ndarray) -> dict:
         "ahash": average_hash(frames[0]),
     }
 
-
-def audio_features(samples: np.ndarray, sample_rate: int) -> dict:
-    """RMS energy, zero-crossing rate, duration — the standard cheap trio."""
-    n = samples.size
-    zc = int(np.count_nonzero(np.signbit(samples[1:]) != np.signbit(samples[:-1])))
-    return {
-        "rms": float(np.sqrt(np.mean(samples**2))) if n else 0.0,
-        "zero_crossing_rate": (zc / (n - 1)) if n > 1 else 0.0,
-        "duration_sec": n / sample_rate if sample_rate else 0.0,
-    }

@@ -11,7 +11,7 @@ Two implementations with one semantics:
   expressions. JVM-side and shuffle-free, but higher-order-function
   lambdas are INTERPRETED per element, not whole-stage-codegen'd
   (measured: F.aggregate 2.49s vs 0.49s for the NumPy kernel on the
-  minhash A/B, tools/minhash_ab.py; the IVF assignment GEMM rewrite,
+  MinHash A/B at sf0.1, 5000 docs; the IVF assignment GEMM rewrite,
   ann.py). They remain the ORACLE path: a strict left-to-right fold is
   bit-reproducible everywhere, which is what lets expected-parquet
   fixtures hash-match.

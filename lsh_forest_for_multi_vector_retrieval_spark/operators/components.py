@@ -5,25 +5,18 @@ documents and ranks documents (``ForestVote`` doc aggregation,
 /root/reference/src/shared/forest_vote.py:290-338); the dedup engine's
 final grouping is the transitive closure of verified near-dup pairs.
 
-Two distributed algorithms, both as iterative DataFrame loops with
-``localCheckpoint`` lineage truncation (SURVEY §4.2):
+Small graphs collect to a driver union-find; above the size gate the
+distributed path is alternating large-star / small-star contraction
+(Kiveris et al., "Connected Components in MapReduce and Beyond", 2014 —
+public literature), an iterative DataFrame loop with ``localCheckpoint``
+lineage truncation (SURVEY §4.2). Each round is two groupBy-min + join
+passes over the edge set; it converges in O(log^2 n) rounds REGARDLESS
+of component diameter, so a pathological 100k-doc boilerplate chain
+costs ~tens of rounds, not 100k.
 
-* ``star`` (default): alternating large-star / small-star contraction
-  (Kiveris et al., "Connected Components in MapReduce and Beyond", 2014
-  — public literature). Each round is two groupBy-min + join passes over
-  the edge set; converges in O(log^2 n) rounds REGARDLESS of component
-  diameter, so a pathological 100k-doc boilerplate chain costs ~tens of
-  rounds, not 100k.
-* ``hashmin``: classic hash-min label propagation (the north_star's
-  named construction) — every vertex takes the min label over itself and
-  its neighbors each round. Rounds = O(max component diameter): fine for
-  the dense, hub-heavy clusters real near-dup graphs produce, kept for
-  parity/cross-checking; the star path is the default because it is
-  diameter-robust (round-2 VERDICT #4 / ADVICE).
-
-Both produce cluster_id = min doc_id of the component, bit-identical to
-the driver union-find (tested, and the stress harness
-tools/cc_stress.py asserts it at >=1M edges with a planted giant chain).
+Both produce cluster_id = min doc_id of the component (tested, and the
+stress harness tools/cc_stress.py asserts it at >=1M edges with a
+planted giant chain).
 """
 
 from __future__ import annotations
@@ -42,7 +35,7 @@ from pyspark.sql import types as T
 # the pandas pull + ~660 MB for the boxed-int lists and union-find dicts
 # over ~2M vertices — ~0.9 GB peak delta, comfortably inside the >=24g
 # drivers this engine targets but worth knowing before raising the gate.
-# Label propagation at this size spends its whole wall-clock on
+# The distributed loop at this size spends its whole wall-clock on
 # per-iteration job-scheduling latency (each round is a join+agg over
 # kilobytes). Above the gate the iterative distributed loop runs as
 # before — at 10^12-doc scale the verified-pair graph is billions of
@@ -52,7 +45,7 @@ DRIVER_CC_MAX_EDGES = 5_000_000
 
 def _driver_union_find(pairs) -> dict:
     """Union-find with path compression; union-by-min keeps every root the
-    minimum id of its component, matching hash-min label propagation
+    minimum id of its component, matching the star contraction
     bit-for-bit. Returns a label for EVERY vertex seen, roots included."""
     parent: dict = {}
     nodes: set = set()
@@ -123,7 +116,7 @@ def _star_labels(
             # e1 feeds both the m2 aggregate and the small-star join:
             # without materialization the large-star join subtree executes
             # twice per round. Lazy checkpoint materializes during this
-            # round's signature action (the hashmin one-job pattern).
+            # round's first action, with no job of its own.
             .localCheckpoint(eager=False)
         )
         # --- small-star: every node and its smaller neighbors link to the
@@ -183,7 +176,6 @@ def connected_components(
     max_iterations: int = 50,
     vertex_col: str = "doc_id",
     driver_max_edges: int = DRIVER_CC_MAX_EDGES,
-    algorithm: str = "star",
     stats: dict | None = None,
 ) -> DataFrame:
     """``(doc_id, cluster_id)`` where cluster_id = min doc_id in component.
@@ -193,16 +185,10 @@ def connected_components(
 
     Physical strategy is size-gated (``driver_max_edges``; 0 forces the
     distributed path): small graphs collect to a driver union-find, large
-    graphs run the distributed loop — ``algorithm="star"`` (default,
-    diameter-robust O(log^2 n) rounds) or ``"hashmin"`` (O(diameter)
-    rounds). All three produce the identical labeling (cluster_id =
+    graphs run the distributed star contraction (diameter-robust
+    O(log^2 n) rounds). Both produce the identical labeling (cluster_id =
     component min; tested). ``stats`` (optional dict) receives
     ``{"strategy": ..., "rounds": ...}`` for diagnostics."""
-    if algorithm not in ("star", "hashmin"):
-        # validate BEFORE the size gate: a typo'd algorithm used to pass
-        # silently whenever the driver path was taken, first exploding at
-        # production scale
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
     spark = edges.sparkSession
     # gate + pull in ONE action: limit(n+1).toPandas() stops scanning once
     # n+1 rows exist, so a web-scale edge set still never pays a full
@@ -245,86 +231,15 @@ def connected_components(
             stats["rounds"] = 0  # single driver pass — keep the contract
         return labels
 
-    if algorithm == "star":
-        labels = _star_labels(edges, vertex_col, max_iterations, stats)
-        # a vertex appearing ONLY in self-loop edges never enters the
-        # contraction (u != v filter) but must still label itself
-        loops = edges.where(F.col("doc_a") == F.col("doc_b")).select(
-            F.col("doc_a").alias(vertex_col)
-        )
-        labels = labels.unionByName(
-            _self_labeled_missing(loops, labels, vertex_col)
-        )
-        if stats is not None:
-            stats["strategy"] = "star"
-        if all_vertices is not None:
-            labels = labels.unionByName(
-                _self_labeled_missing(all_vertices, labels, vertex_col)
-            )
-        return labels
-    if stats is not None:
-        stats["strategy"] = "hashmin"
-
-    sym = edges.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).unionByName(
-        edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+    labels = _star_labels(edges, vertex_col, max_iterations, stats)
+    # a vertex appearing ONLY in self-loop edges never enters the
+    # contraction (u != v filter) but must still label itself
+    loops = edges.where(F.col("doc_a") == F.col("doc_b")).select(
+        F.col("doc_a").alias(vertex_col)
     )
-    sym = sym.distinct().localCheckpoint(eager=True)
-
-    labels = (
-        sym.select(F.col("src").alias(vertex_col))
-        .distinct()
-        .withColumn("cluster_id", F.col(vertex_col))
-        .localCheckpoint(eager=True)
-    )
-
-    # -1 sentinel: "convergence never confirmed". With max_iterations<=0
-    # the loop body never runs and the old 0 initial skipped the
-    # non-convergence warning — self-labels (zero merged clusters) were
-    # returned silently.
-    changed = -1
-    hm_rounds = 0
-    for _ in range(max_iterations):
-        hm_rounds += 1
-        # candidate label for each dst = min label among its neighbors
-        msgs = (
-            sym.join(labels, sym.src == F.col(vertex_col))
-            .groupBy(F.col("dst").alias(vertex_col))
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        # carry the old label through so the convergence check needs no
-        # extra join; lazy localCheckpoint materializes during the same
-        # action as the changed-count -> exactly ONE job per iteration
-        stepped = (
-            labels.withColumnRenamed("cluster_id", "old_label")
-            .join(msgs, vertex_col, "left")
-            .select(
-                F.col(vertex_col),
-                F.least(
-                    F.col("old_label"), F.coalesce("nbr_min", "old_label")
-                ).alias("cluster_id"),
-                F.col("old_label"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        changed = stepped.where(F.col("cluster_id") != F.col("old_label")).count()
-        labels = stepped.select(vertex_col, "cluster_id")
-        if changed == 0:
-            break
+    labels = labels.unionByName(_self_labeled_missing(loops, labels, vertex_col))
     if stats is not None:
-        stats["rounds"] = hm_rounds
-    if changed != 0:
-        # a component with diameter > max_iterations would otherwise get
-        # silently split into several labels — surface it loudly
-        warnings.warn(
-            f"connected_components did not converge in {max_iterations} "
-            f"iterations ({changed} labels still changing at the last "
-            "check); cluster labels may be split. Raise max_iterations.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-
+        stats["strategy"] = "star"
     if all_vertices is not None:
         labels = labels.unionByName(
             _self_labeled_missing(all_vertices, labels, vertex_col)
@@ -336,8 +251,7 @@ def _self_labeled_missing(
     vertices: DataFrame, labels: DataFrame, vertex_col: str
 ) -> DataFrame:
     """Vertices absent from ``labels``, self-labeled as singleton
-    clusters — the shared anti-join tail of every strategy (this block
-    used to be copy-pasted four times)."""
+    clusters — the shared anti-join tail of every strategy."""
     return (
         vertices.select(vertex_col)
         .distinct()

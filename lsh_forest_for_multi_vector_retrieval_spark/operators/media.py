@@ -1,16 +1,16 @@
 """Multimodal operators over opaque binary media columns.
 
-All four are ``mapInPandas`` stages (Arrow batch in, Arrow batch out) so
-they pipeline with zero shuffle: at 100 TB each executor decodes only its
-own input splits, and the only shuffles in this file are the ones dedup
-fundamentally needs (the ahash block join). Column pruning still applies —
-each operator selects only (id, payload, meta) before the Python stage so
-the scan never drags unused columns through Arrow.
+The feature extractors are ``mapInPandas`` stages (Arrow batch in, Arrow
+batch out) so they pipeline with zero shuffle: at 100 TB each executor
+decodes only its own input splits, and the only shuffles in this file are
+the ones dedup fundamentally needs (the ahash block join). Column pruning
+still applies — each operator selects only (id, payload, meta) before the
+Python stage so the scan never drags unused columns through Arrow.
 
 Reference analog: the reference hashes token multisets of *text*
 (/root/reference/src/shared/utils.py); these operators produce the same
 kinds of per-item signatures (perceptual hash, feature vector) for pixels
-and audio so the downstream LSH/verify machinery is shared.
+so the downstream LSH/verify machinery is shared.
 """
 
 from __future__ import annotations
@@ -22,13 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.multimodal import (
-    audio_features,
-    decode_audio,
-    decode_image,
-    image_features,
-    resize_nearest,
-)
+from ..functions.multimodal import decode_image, image_features
 from ..functions.simhash import hamming_chunk_cols
 
 IMAGE_FEATURES_SCHEMA = T.StructType(
@@ -38,26 +32,6 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
         T.StructField("chan_std", T.ArrayType(T.DoubleType()), False),
         T.StructField("luma_hist", T.ArrayType(T.DoubleType()), False),
         T.StructField("ahash", T.LongType(), False),
-    ]
-)
-
-AUDIO_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("rms", T.DoubleType(), False),
-        T.StructField("zero_crossing_rate", T.DoubleType(), False),
-        T.StructField("duration_sec", T.DoubleType(), False),
-    ]
-)
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("frame_payload", T.BinaryType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("channels", T.IntegerType(), False),
     ]
 )
 
@@ -116,72 +90,6 @@ def with_ahash(media: DataFrame, id_col: str = "media_id") -> DataFrame:
             yield pd.DataFrame(rows, columns=[f.name for f in AHASH_SCHEMA])
 
     return src.mapInPandas(run, schema=AHASH_SCHEMA)
-
-
-def with_audio_features(media: DataFrame, id_col: str = "media_id") -> DataFrame:
-    src = media.where(F.col("media_type") == "audio").select(
-        F.col(id_col).alias("media_id"), "payload", "meta"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload, meta in zip(
-                pdf["media_id"], pdf["payload"], pdf["meta"]
-            ):
-                samples = decode_audio(payload, meta)
-                # sample_rate is nullable: degrade to 0 (duration 0.0 via
-                # audio_features' own guard) instead of int(None) killing
-                # the whole Arrow batch (round-5 review)
-                rows.append(
-                    {
-                        "media_id": int(media_id),
-                        **audio_features(samples, int(meta["sample_rate"] or 0)),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_FEATURES_SCHEMA])
-
-    return src.mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
-
-
-def frame_sample(
-    media: DataFrame,
-    every_k: int = 4,
-    resize_to: tuple[int, int] | None = None,
-    id_col: str = "media_id",
-) -> DataFrame:
-    """Sample every k-th frame of video rows (and the single frame of
-    images), optionally resizing — one exploded row per kept frame, encoded
-    back to rawrgb bytes. The row-explosion happens inside the Arrow stage,
-    so the plan stays a single mapInPandas with no separate explode."""
-    src = media.where(F.col("media_type").isin("image", "video")).select(
-        F.col(id_col).alias("media_id"), "payload", "meta"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload, meta in zip(
-                pdf["media_id"], pdf["payload"], pdf["meta"]
-            ):
-                frames = decode_image(payload, meta)
-                for idx in range(0, frames.shape[0], every_k):
-                    frame = frames[idx]
-                    if resize_to is not None:
-                        frame = resize_nearest(frame, *resize_to)
-                    rows.append(
-                        {
-                            "media_id": int(media_id),
-                            "frame_idx": idx,
-                            "frame_payload": frame.tobytes(),
-                            "height": frame.shape[0],
-                            "width": frame.shape[1],
-                            "channels": frame.shape[2],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SCHEMA])
-
-    return src.mapInPandas(run, schema=FRAME_SCHEMA)
 
 
 def media_near_dup_pairs(media: DataFrame, max_hamming: int = 3) -> DataFrame:

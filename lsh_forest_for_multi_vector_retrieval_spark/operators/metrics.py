@@ -2,8 +2,8 @@
 
 Reference analogs: ``recall`` (/root/reference/src/shared/utils.py:79-87),
 rank-of-true-NN (src/shared/test_query.py:108-144), top-k accuracy
-(src/shared/test_forest_vote.py:313-322), score correlation (:262-279),
-MRR@10 / Recall@100 (notebooks/plaid.ipynb cell 10).
+(src/shared/test_forest_vote.py:313-322), MRR@10 / Recall@100
+(notebooks/plaid.ipynb cell 10).
 """
 
 from __future__ import annotations
@@ -145,27 +145,3 @@ def mrr_at_k(
     s = first_rel.agg(F.sum(1.0 / F.col("first_rank"))).first()[0] or 0.0
     return s / n_q
 
-
-def score_correlation(
-    scores: DataFrame, col_a: str, col_b: str
-) -> float:
-    """Pearson r between two score columns (test_forest_vote.py:262-279).
-
-    Undefined correlations (constant column, <2 rows, all-null pairs)
-    return 0.0 instead of None so callers can do arithmetic on the
-    result — the same degenerate-input convention as ``mrr_at_k``."""
-    import math
-
-    # r = cov/(sd_a*sd_b), assembled driver-side: under ANSI mode
-    # (Spark 4 default) F.corr on a zero-variance column raises
-    # DIVIDE_BY_ZERO instead of returning NaN, so the division must not
-    # happen in the JVM. One aggregation job either way.
-    row = scores.agg(
-        F.covar_samp(col_a, col_b).alias("cov"),
-        F.var_samp(col_a).alias("va"),
-        F.var_samp(col_b).alias("vb"),
-    ).first()
-    if row.cov is None or not row.va or not row.vb or row.va < 0 or row.vb < 0:
-        return 0.0
-    r = row.cov / math.sqrt(row.va * row.vb)
-    return 0.0 if math.isnan(r) else float(r)

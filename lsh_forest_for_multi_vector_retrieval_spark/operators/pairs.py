@@ -207,29 +207,3 @@ def bucket_drop_stats(
         .where((F.col("dropped_docs") > 0) | (F.col("starred_pairs_skipped") > 0))
     )
 
-
-def self_join_candidate_pairs(
-    bands: DataFrame, cfg: DedupConfig = DedupConfig()
-) -> DataFrame:
-    """Alternative strategy: bucket equi-self-join (AQE skew-join splits
-    hot keys at runtime). Emits FULL cliques for every bucket up to
-    ``max_bucket_docs`` — equals ``candidate_pairs`` only while buckets
-    stay within ``bucket_pivots`` (above that the grouped generator
-    switches to the pivot star). Kept for cross-checking and as the
-    fallback when collect_set memory (bounded by the bucket, not the
-    partition) is a concern."""
-    multi = (
-        bands.groupBy("band_id", "band_hash")
-        .agg(F.count("*").alias("n"))
-        .where((F.col("n") > 1) & (F.col("n") <= cfg.max_bucket_docs))
-        .select("band_id", "band_hash")
-    )
-    b = bands.join(multi, ["band_id", "band_hash"], "left_semi")
-    a_side = b.select("band_id", "band_hash", F.col("doc_id").alias("doc_a"))
-    b_side = b.select("band_id", "band_hash", F.col("doc_id").alias("doc_b"))
-    return (
-        a_side.join(b_side, ["band_id", "band_hash"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )

@@ -5,14 +5,8 @@ every collected candidate and keep the close ones
 (/root/reference/src/shared/lsh_forest.py:106-108). The dedup distance is
 Jaccard over distinct shingle sets.
 
-Two implementations, results byte-identical:
-
-* ``verify_pairs`` (default): JVM-side ``array_intersect``/``array_union``
-  sizes inside whole-stage codegen — no Python crossing at all;
-* ``verify_pairs_pandas``: ``groupBy(...).applyInPandas`` with a
-  NumPy ``intersect1d`` — the Arrow-vectorized form mandated by the
-  north_star for environments where the shingle sets live in exploded
-  form. Kept tested for parity.
+``verify_pairs`` computes it JVM-side from ``array_intersect`` sizes
+inside whole-stage codegen — no Python crossing at all.
 
 An optional SimHash Hamming pre-filter (``bit_count(xor) <= h``) runs as a
 pure Column expression before the heavy join.
@@ -20,12 +14,9 @@ pure Column expression before the heavy join.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from lsh_forest_for_multi_vector_retrieval_spark.config import DedupConfig
 
@@ -34,15 +25,14 @@ def _join_shingles(
     pairs: DataFrame,
     docs: DataFrame,
     id_col: str = "doc_id",
-    prune: bool = True,
     max_broadcast_ids: int = 10_000_000,
     materialize_pairs: bool = True,
 ) -> DataFrame:
     """Attach each side's shingle set (and simhash when present).
 
-    With ``prune`` (default), ``docs`` is first semi-joined down to the
-    ids that appear in at least one pair: candidate docs are a small
-    fraction of the corpus, and without the prune the second pair join
+    ``docs`` is first semi-joined down to the ids that appear in at
+    least one pair: candidate docs are a small fraction of the corpus,
+    and without the prune the second pair join
     exceeds the broadcast threshold and SHUFFLES the full signature
     table's shingle arrays through a sort-merge join (measured: the
     verify stage was 60.8 s of a 133 s four-core flagship pass at 320k
@@ -79,35 +69,34 @@ def _join_shingles(
     pre-checkpoints MUST pass ``materialize_pairs=False`` itself or pay
     a redundant second checkpoint copy.
     """
-    if prune:
-        if materialize_pairs and pairs.storageLevel == StorageLevel.NONE:
-            pairs = pairs.localCheckpoint(eager=True)
-        cand_ids = (
-            pairs.select(F.col("doc_a").alias(id_col))
-            .unionByName(pairs.select(F.col("doc_b").alias(id_col)))
-            .distinct()
-        )
-        # Gate on a SHUFFLE-FREE upper bound first: each pair contributes
-        # at most two ids, so 2*|pairs| >= |cand_ids|. One cheap count of
-        # the slim (checkpointed / parquet-backed) pair table instead of
-        # materializing the distinct twice — the exact-count variant
-        # measurably cost the 4-core scaling leg ~2 s of serial driver
-        # time (two extra job launches + a checkpointed shuffle) at 320k
-        # docs. When the bound is exceeded, do NOT give up on the
-        # broadcast yet: on duplicate-dense corpora (one hot cluster of
-        # 50k docs can emit millions of pairs) the DISTINCT id set may
-        # still be tiny, and the shuffle fallback would exchange the full
-        # signature table's shingle arrays — the exact shuffle the prune
-        # exists to avoid. Materialize the slim distinct once and gate on
-        # its exact count; the extra action only runs in the oversized
-        # case, where its cost is dwarfed by either downstream plan.
-        if 2 * pairs.count() <= max_broadcast_ids:
+    if materialize_pairs and pairs.storageLevel == StorageLevel.NONE:
+        pairs = pairs.localCheckpoint(eager=True)
+    cand_ids = (
+        pairs.select(F.col("doc_a").alias(id_col))
+        .unionByName(pairs.select(F.col("doc_b").alias(id_col)))
+        .distinct()
+    )
+    # Gate on a SHUFFLE-FREE upper bound first: each pair contributes
+    # at most two ids, so 2*|pairs| >= |cand_ids|. One cheap count of
+    # the slim (checkpointed / parquet-backed) pair table instead of
+    # materializing the distinct twice — the exact-count variant
+    # measurably cost the 4-core scaling leg ~2 s of serial driver
+    # time (two extra job launches + a checkpointed shuffle) at 320k
+    # docs. When the bound is exceeded, do NOT give up on the
+    # broadcast yet: on duplicate-dense corpora (one hot cluster of
+    # 50k docs can emit millions of pairs) the DISTINCT id set may
+    # still be tiny, and the shuffle fallback would exchange the full
+    # signature table's shingle arrays — the exact shuffle the prune
+    # exists to avoid. Materialize the slim distinct once and gate on
+    # its exact count; the extra action only runs in the oversized
+    # case, where its cost is dwarfed by either downstream plan.
+    if 2 * pairs.count() <= max_broadcast_ids:
+        cand_ids = F.broadcast(cand_ids)
+    else:
+        cand_ids = cand_ids.localCheckpoint(eager=True)
+        if cand_ids.count() <= max_broadcast_ids:
             cand_ids = F.broadcast(cand_ids)
-        else:
-            cand_ids = cand_ids.localCheckpoint(eager=True)
-            if cand_ids.count() <= max_broadcast_ids:
-                cand_ids = F.broadcast(cand_ids)
-        docs = docs.join(cand_ids, id_col, "left_semi")
+    docs = docs.join(cand_ids, id_col, "left_semi")
     cols = ["shingles"] + (["simhash"] if "simhash" in docs.columns else [])
     a = docs.select(
         F.col(id_col).alias("doc_a"), *[F.col(c).alias(f"{c}_a") for c in cols]
@@ -142,7 +131,6 @@ def verify_pairs(
         pairs,
         docs_with_shingles,
         id_col,
-        prune=cfg.verify_prune_candidates,
         max_broadcast_ids=cfg.verify_prune_max_ids,
         materialize_pairs=materialize_pairs,
     )
@@ -164,72 +152,3 @@ def verify_pairs(
         return out
     return out.where(F.col("jaccard") >= cfg.jaccard_threshold)
 
-
-_VERIFY_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_a", T.LongType()),
-        T.StructField("doc_b", T.LongType()),
-        T.StructField("jaccard", T.DoubleType()),
-    ]
-)
-
-
-def verify_pairs_pandas(
-    pairs: DataFrame,
-    docs_with_shingles: DataFrame,
-    cfg: DedupConfig = DedupConfig(),
-    id_col: str = "doc_id",
-    num_groups: int = 64,
-    materialize_pairs: bool = True,
-) -> DataFrame:
-    """applyInPandas verification (north_star-mandated shape).
-
-    Pairs are salted into ``num_groups`` groups (uniform by pair hash) so
-    each Arrow batch carries many pairs — group-per-pair would be
-    pathological at scale; group-per-salt keeps batches dense. Applies
-    the same optional SimHash prefilter as ``verify_pairs`` (the two
-    implementations must stay byte-identical under EVERY config, not
-    just the default), and NULL shingle arrays fold to jaccard 0.0
-    exactly like the JVM path's when/otherwise.
-    """
-    joined = _join_shingles(
-        pairs,
-        docs_with_shingles,
-        id_col,
-        prune=cfg.verify_prune_candidates,
-        max_broadcast_ids=cfg.verify_prune_max_ids,
-        materialize_pairs=materialize_pairs,
-    )
-    if (
-        cfg.simhash_prefilter_max_hamming is not None
-        and "simhash_a" in joined.columns
-    ):
-        joined = simhash_prefilter(joined, cfg.simhash_prefilter_max_hamming)
-    joined = joined.withColumn(
-        "grp", F.pmod(F.xxhash64("doc_a", "doc_b"), F.lit(num_groups))
-    )
-
-    def _jaccard(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        jac = np.zeros(n, dtype=np.float64)
-        sa = pdf["shingles_a"].to_numpy()
-        sb = pdf["shingles_b"].to_numpy()
-        for i in range(n):
-            va, vb = sa[i], sb[i]
-            a = np.asarray(va if va is not None else [], dtype=np.int64)
-            b = np.asarray(vb if vb is not None else [], dtype=np.int64)
-            if len(a) == 0 and len(b) == 0:
-                jac[i] = 0.0
-                continue
-            inter = len(np.intersect1d(a, b, assume_unique=True))
-            jac[i] = inter / (len(a) + len(b) - inter)
-        return pd.DataFrame(
-            {"doc_a": pdf["doc_a"], "doc_b": pdf["doc_b"], "jaccard": jac}
-        )
-
-    out = (
-        joined.select("grp", "doc_a", "doc_b", "shingles_a", "shingles_b")
-        .groupBy("grp")
-        .applyInPandas(_jaccard, schema=_VERIFY_SCHEMA)
-    )
-    return out.where(F.col("jaccard") >= cfg.jaccard_threshold)

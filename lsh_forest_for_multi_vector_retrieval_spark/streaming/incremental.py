@@ -167,7 +167,6 @@ class IncrementalDedup:
         "minhash_seed",
         "num_bands",
         "rows_per_band",
-        "simhash_bits",
         "use_adaptive_bands",
         "adaptive_reserved_rows",
     )

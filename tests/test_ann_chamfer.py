@@ -28,7 +28,6 @@ from lsh_forest_for_multi_vector_retrieval_spark.operators.metrics import (
     pair_precision,
     pair_recall,
     recall_at_k,
-    score_correlation,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -306,13 +305,6 @@ def test_mrr(spark):
     rel = spark.createDataFrame([("q1", 11), ("q2", 99)], "q_id string, n_id long")
     # q1: first relevant at rank 2 -> 1/2; q2: none -> 0; MRR = 0.25
     assert mrr_at_k(ranks, rel, k=10) == pytest.approx(0.25)
-
-
-def test_score_correlation(spark):
-    df = spark.createDataFrame(
-        [(1.0, 2.0), (2.0, 4.0), (3.0, 6.1)], "a double, b double"
-    )
-    assert score_correlation(df, "a", "b") > 0.99
 
 
 def test_embedding_near_dup_recall_on_planted_fixture(spark):
@@ -714,15 +706,6 @@ def test_mrr_counts_zero_result_queries(spark):
     )
     # q1 hits at rank 1; q2 has no predictions at all -> MRR = (1+0)/2
     assert mrr_at_k(ranks, rel, k=10) == pytest.approx(0.5)
-
-
-def test_score_correlation_degenerate_returns_zero(spark):
-    """Round-5 review: an undefined Pearson r (constant column) returns
-    0.0 — not None — so callers can do arithmetic on the result."""
-    df = spark.createDataFrame(
-        [(1.0, 2.0), (2.0, 2.0), (3.0, 2.0)], "a double, b double"
-    )
-    assert score_correlation(df, "a", "b") == 0.0
 
 
 def test_train_codebook_empty_sample_raises():

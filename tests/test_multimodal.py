@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from lsh_forest_for_multi_vector_retrieval_spark.functions.multimodal import (
     _HAS_PIL,
     average_hash,
-    decode_audio,
     decode_image,
     encode_rawrgb,
     image_features,
@@ -19,9 +18,7 @@ from lsh_forest_for_multi_vector_retrieval_spark.functions.multimodal import (
     to_grayscale,
 )
 from lsh_forest_for_multi_vector_retrieval_spark.operators.media import (
-    frame_sample,
     media_near_dup_pairs,
-    with_audio_features,
     with_image_features,
 )
 from lsh_forest_for_multi_vector_retrieval_spark.sources.media import generate_media
@@ -49,8 +46,6 @@ def test_compressed_codec_is_stubbed():
         pytest.skip("PIL present; stub not active")
     with pytest.raises(NotImplementedError):
         decode_image(b"\xff\xd8\xff", {"codec": "jpeg"})
-    with pytest.raises(NotImplementedError):
-        decode_audio(b"fLaC", {"codec": "flac"})
 
 
 def test_resize_nearest_known_values():
@@ -122,28 +117,6 @@ def test_image_features_operator(media_df):
         assert all(0.0 <= m <= 255.0 for m in r["chan_mean"])
 
 
-def test_audio_features_operator(media_df):
-    rows = with_audio_features(media_df).collect()
-    assert len(rows) == media_df.where("media_type = 'audio'").count()
-    for r in rows:
-        # 0.5-amplitude sine: rms ~ 0.5/sqrt(2); zcr ~ 2f/sr in (0.02, 0.07)
-        assert r["rms"] == pytest.approx(0.354, abs=0.03)
-        assert 0.015 < r["zero_crossing_rate"] < 0.08
-        assert r["duration_sec"] == pytest.approx(0.5, abs=1e-6)
-
-
-def test_frame_sample_video(media_df):
-    frames = frame_sample(media_df, every_k=4, resize_to=(8, 8))
-    vids = frames.join(
-        media_df.where("media_type = 'video'").select("media_id"), "media_id"
-    )
-    per_vid = vids.groupBy("media_id").count().collect()
-    assert per_vid and all(r["count"] == 2 for r in per_vid)  # 8 frames, k=4
-    r = vids.first()
-    assert (r["height"], r["width"], r["channels"]) == (8, 8, 3)
-    assert len(bytes(r["frame_payload"])) == 8 * 8 * 3
-
-
 def test_media_near_dup_pairs_find_all_planted_groups(media_df):
     pairs = {
         (r["doc_a"], r["doc_b"]) for r in media_near_dup_pairs(media_df).collect()
@@ -184,40 +157,6 @@ def test_decode_image_rejects_bad_meta():
     ):
         with pytest.raises(ValueError, match="positive"):
             decode_image(b"", meta)
-
-
-def test_audio_features_null_sample_rate(spark):
-    """Round-5 review: a NULL sample_rate degrades to duration 0.0 instead
-    of int(None) killing the Arrow batch."""
-    import pandas as pd
-
-    samples = (np.sin(np.arange(64) / 3.0) * 20000).astype("<i2").tobytes()
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "media_id": [1],
-                "media_type": ["audio"],
-                "payload": [samples],
-                "meta": [
-                    {
-                        "codec": "rawpcm16",
-                        "width": None,
-                        "height": None,
-                        "channels": None,
-                        "n_frames": None,
-                        "sample_rate": None,
-                    }
-                ],
-            }
-        ),
-        schema="media_id long, media_type string, payload binary, "
-        "meta struct<codec:string,width:int,height:int,channels:int,"
-        "n_frames:int,sample_rate:int>",
-    )
-    got = with_audio_features(df).collect()
-    assert len(got) == 1
-    assert got[0].duration_sec == 0.0
-    assert got[0].rms > 0.0
 
 
 def test_media_near_dup_pairs_exact_only(media_df):

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -19,11 +21,9 @@ from lsh_forest_for_multi_vector_retrieval_spark.operators.components import (
 )
 from lsh_forest_for_multi_vector_retrieval_spark.operators.pairs import (
     candidate_pairs,
-    self_join_candidate_pairs,
 )
 from lsh_forest_for_multi_vector_retrieval_spark.operators.verify import (
     verify_pairs,
-    verify_pairs_pandas,
 )
 from lsh_forest_for_multi_vector_retrieval_spark.sources.pages import generate_pages
 
@@ -41,11 +41,22 @@ def sigs(spark):
 
 
 def test_grouped_and_selfjoin_pairs_agree(sigs):
+    """The grouped generator equals a test-local bucket self-join: every
+    pair of sorted ids within each multi-doc bucket (a full clique while
+    buckets stay within ``bucket_pivots``, as they do here)."""
     bands = band_table(sigs, CFG)
-    p1 = candidate_pairs(bands, CFG)
-    p2 = self_join_candidate_pairs(bands, CFG)
-    assert p1.exceptAll(p2).count() == 0
-    assert p2.exceptAll(p1).count() == 0
+    buckets: dict = {}
+    for r in bands.collect():
+        buckets.setdefault((r.band_id, r.band_hash), []).append(r.doc_id)
+    assert max(len(ids) for ids in buckets.values()) <= CFG.bucket_pivots
+    want = {
+        pair
+        for ids in buckets.values()
+        for pair in itertools.combinations(sorted(ids), 2)
+    }
+    got = [(r.doc_a, r.doc_b) for r in candidate_pairs(bands, CFG).collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == want
 
 
 def test_pairs_are_canonical_and_distinct(sigs):
@@ -83,28 +94,18 @@ def test_verify_prune_broadcast_gate(sigs):
     assert v_nm.exceptAll(v_bc).count() == 0
 
 
-def test_verify_native_and_pandas_agree(sigs):
-    pairs = candidate_pairs(band_table(sigs, CFG), CFG)
-    v1 = verify_pairs(pairs, sigs, CFG).select("doc_a", "doc_b", "jaccard")
-    v2 = verify_pairs_pandas(pairs, sigs, CFG).select("doc_a", "doc_b", "jaccard")
-    assert v1.exceptAll(v2).count() == 0
-    assert v2.exceptAll(v1).count() == 0
-
-
 def test_verify_parity_holds_with_simhash_prefilter(sigs):
-    """Round-5 review: the two verify implementations must agree under
-    EVERY config — the pandas path used to skip the SimHash prefilter,
-    silently returning a superset whenever the prefilter was enabled."""
+    """The SimHash prefilter only drops pairs: the prefiltered verified
+    set is a subset of the unfiltered one, with identical jaccards."""
     from dataclasses import replace
 
     cfg = replace(CFG, simhash_prefilter_max_hamming=3)
     pairs = candidate_pairs(band_table(sigs, CFG), CFG)
     v1 = verify_pairs(pairs, sigs, cfg).select("doc_a", "doc_b", "jaccard")
-    v2 = verify_pairs_pandas(pairs, sigs, cfg).select(
-        "doc_a", "doc_b", "jaccard"
-    )
-    assert v1.exceptAll(v2).count() == 0
-    assert v2.exceptAll(v1).count() == 0
+    v0 = verify_pairs(
+        pairs, sigs, replace(cfg, simhash_prefilter_max_hamming=None)
+    ).select("doc_a", "doc_b", "jaccard")
+    assert v1.exceptAll(v0).count() == 0
     # the prefilter must actually bite on this fixture (else the test
     # proves nothing): some candidate pair exceeds hamming 3
     loose = verify_pairs(
@@ -118,8 +119,8 @@ def test_verify_parity_holds_with_simhash_prefilter(sigs):
 
 
 def test_verify_pandas_null_shingles_fold_like_jvm(spark):
-    """Round-5 review: a NULL shingle array folds to jaccard 0.0 in the
-    JVM path; the pandas path used to crash on np.asarray(None)."""
+    """A NULL shingle array folds to jaccard 0.0, and the threshold then
+    drops those rows without failing the stage."""
     docs = spark.createDataFrame(
         [(1, [1, 2, 3]), (2, None), (3, None)],
         "doc_id long, shingles array<long>",
@@ -130,9 +131,7 @@ def test_verify_pandas_null_shingles_fold_like_jvm(spark):
     jvm = verify_pairs(pairs, docs, CFG, keep_below_threshold=True)
     got_jvm = {(r.doc_a, r.doc_b): r.jaccard for r in jvm.collect()}
     assert got_jvm == {(1, 2): 0.0, (2, 3): 0.0}
-    pd_out = verify_pairs_pandas(pairs, docs, CFG)
-    # threshold filters the 0.0 rows; the stage must not crash
-    assert pd_out.count() == 0
+    assert verify_pairs(pairs, docs, CFG).count() == 0
 
 
 def test_verify_prune_rescues_dup_dense_broadcast(sigs):
@@ -199,7 +198,7 @@ def test_connected_components_long_chain(spark):
 
 
 def test_connected_components_paths_agree(spark):
-    # the size-gated driver union-find and the distributed hash-min loop
+    # the size-gated driver union-find and the distributed star loop
     # must produce the identical labeling (cluster_id = component min) on a
     # graph with chains, merges, duplicate + reversed edges, and self-loops
     import random
@@ -211,28 +210,24 @@ def test_connected_components_paths_agree(spark):
     edges_py += [(b, a) for a, b in edges_py[:10]] + [(300, 300)]
     edges = spark.createDataFrame(edges_py, "doc_a long, doc_b long")
     driver = connected_components(edges)  # gate: tiny -> union-find
-    for algo in ("star", "hashmin"):
-        dist = connected_components(
-            edges, driver_max_edges=0, algorithm=algo
-        )  # forced distributed loop
-        assert driver.exceptAll(dist).count() == 0, algo
-        assert dist.exceptAll(driver).count() == 0, algo
+    dist = connected_components(edges, driver_max_edges=0)  # forced star
+    assert driver.exceptAll(dist).count() == 0
+    assert dist.exceptAll(driver).count() == 0
 
 
 def test_star_contraction_is_diameter_robust(spark):
-    # a 2,000-vertex path has diameter 2,000: hash-min would need 2,000
-    # rounds, the star contraction must finish in O(log^2 n) — and still
-    # label every vertex with the component min (round-2 VERDICT #4; the
-    # >=1M-edge artifact is tools/cc_stress.py -> CC_STRESS.json)
+    # a 2,000-vertex path has diameter 2,000: label propagation would
+    # need 2,000 rounds, the star contraction must finish in O(log^2 n)
+    # — and still label every vertex with the component min (round-2
+    # VERDICT #4; the >=1M-edge artifact is tools/cc_stress.py ->
+    # CC_STRESS.json)
     n = 2000
     edges = (
         spark.range(n - 1)
         .selectExpr("id as doc_a", "id + 1 as doc_b")
     )
     stats = {}
-    got = connected_components(
-        edges, driver_max_edges=0, algorithm="star", stats=stats
-    )
+    got = connected_components(edges, driver_max_edges=0, stats=stats)
     assert stats["strategy"] == "star"
     assert stats["rounds"] <= 25, stats
     assert got.count() == n
@@ -441,24 +436,21 @@ def _min_label_oracle(edges_py) -> dict:
 )
 def test_cc_strategies_match_union_find_oracle(spark, edges_py):
     """Property check on the core clusterer: on arbitrary small graphs
-    (self-loops, duplicates, reversed edges, disconnected vertices) all
-    three physical strategies — driver union-find, distributed star
-    contraction, distributed hash-min — must label every vertex with its
-    component MINIMUM, per an independent test-local union-find."""
+    (self-loops, duplicates, reversed edges, disconnected vertices) both
+    physical strategies — driver union-find and distributed star
+    contraction — must label every vertex with its component MINIMUM,
+    per an independent test-local union-find."""
     expect = _min_label_oracle(edges_py)
     edges = spark.createDataFrame(edges_py, "doc_a long, doc_b long")
     got_driver = {
         r.doc_id: r.cluster_id for r in connected_components(edges).collect()
     }
     assert got_driver == expect
-    for algo in ("star", "hashmin"):
-        got = {
-            r.doc_id: r.cluster_id
-            for r in connected_components(
-                edges, driver_max_edges=0, algorithm=algo
-            ).collect()
-        }
-        assert got == expect, algo
+    got_star = {
+        r.doc_id: r.cluster_id
+        for r in connected_components(edges, driver_max_edges=0).collect()
+    }
+    assert got_star == expect
 
 
 def test_cc_wide_ids_count_before_pulling_to_driver(spark, monkeypatch):
@@ -494,21 +486,14 @@ def test_cc_wide_ids_count_before_pulling_to_driver(spark, monkeypatch):
     assert len(pulls) == 1
 
 
-def test_cc_algorithm_validated_before_size_gate(spark):
-    """Round-5 review: a typo'd algorithm used to pass silently whenever
-    the small-graph driver path was taken."""
-    edges = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
-    with pytest.raises(ValueError, match="unknown algorithm"):
-        connected_components(edges, algorithm="staar")
-
-
 def test_cc_zero_iterations_warns_not_silently_splits(spark):
-    """Round-5 review: hashmin with max_iterations<=0 returned every
-    vertex as its own singleton with NO warning (changed stayed 0)."""
+    """max_iterations<=0 leaves the star loop only its detection round,
+    which cannot confirm a fixed point: it must warn, not silently
+    return possibly split labels."""
     edges = spark.createDataFrame([(1, 2), (2, 3)], "doc_a long, doc_b long")
     with pytest.warns(RuntimeWarning, match="did not converge"):
         connected_components(
-            edges, driver_max_edges=0, algorithm="hashmin", max_iterations=0
+            edges, driver_max_edges=0, max_iterations=0
         ).collect()
 
 
@@ -533,9 +518,7 @@ def test_cc_star_converging_at_budget_does_not_warn(spark):
     )
     # find the exact convergence round first
     stats: dict = {}
-    out = connected_components(
-        edges, driver_max_edges=0, algorithm="star", stats=stats
-    )
+    out = connected_components(edges, driver_max_edges=0, stats=stats)
     assert {r.cluster_id for r in out.collect()} == {0}
     converge_rounds = stats["rounds"] - 1  # minus the detection round
     with w.catch_warnings():
@@ -543,7 +526,6 @@ def test_cc_star_converging_at_budget_does_not_warn(spark):
         out2 = connected_components(
             edges,
             driver_max_edges=0,
-            algorithm="star",
             max_iterations=converge_rounds,
         )
         assert {r.cluster_id for r in out2.collect()} == {0}

@@ -67,32 +67,6 @@ def test_force_from_invalidates_downstream(spark, corpus_path, tmp_path):
     assert _cluster_map(r2) == m1
 
 
-def test_iceberg_knob_degrades_to_parquet_without_catalog(
-    spark, corpus_path, tmp_path,
-):
-    # checkpoint_format="iceberg" (config.py knob) must round-trip through
-    # whichever format is ACTIVE: in this sandbox no Iceberg runtime jar /
-    # catalog is configured, so CheckpointIO warns and falls back to
-    # parquet — results and resume semantics identical either way
-    import dataclasses
-    import warnings as w
-
-    cfg = dataclasses.replace(CFG, checkpoint_format="iceberg")
-    wd = str(tmp_path / "wd_ice")
-    pipe = dedup_pipeline(corpus_path, wd, cfg)
-    assert pipe.checkpoint_format == "iceberg"  # knob plumbed from config
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        r1 = pipe.run(spark)
-    assert pipe.active_format in ("iceberg", "parquet")
-    if pipe.active_format == "parquet":
-        assert any("falling back to parquet" in str(c.message) for c in caught)
-    m1 = _cluster_map(r1)
-    r2 = pipe.run(spark)  # resume through the same active format
-    assert r2.executed == []
-    assert _cluster_map(r2) == m1
-
-
 def test_metrics_lineage_recorded(spark, corpus_path, tmp_path):
     wd = str(tmp_path / "wd4")
     pipe = dedup_pipeline(corpus_path, wd, CFG)

@@ -140,8 +140,14 @@ def test_state_params_fingerprint_guard(spark, tmp_path):
     (pure recall loss, no error from Spark). The _params.json
     fingerprint must refuse the mismatch at construction, and refuse a
     legacy store with no fingerprint unless explicitly trusted."""
+    import json
     from dataclasses import replace
-    from pathlib import Path
+
+    from lsh_forest_for_multi_vector_retrieval_spark.fsutil import (
+        fs_delete,
+        fs_read_text,
+        fs_write_text,
+    )
 
     pages = generate_pages(
         spark, n_clusters=3, cluster_size=2, n_singletons=5, seed=7
@@ -156,8 +162,16 @@ def test_state_params_fingerprint_guard(spark, tmp_path):
     with pytest.raises(ValueError, match="hash family"):
         IncrementalDedup(state, replace(CFG, shingle_size=7))
 
+    # a store stamped when the fingerprint also carried "simhash_bits"
+    # (a since-removed config field) still opens: only requested keys
+    # are compared
+    params = state + "/_params.json"
+    stamped = json.loads(fs_read_text(spark, params))
+    fs_write_text(spark, params, json.dumps({**stamped, "simhash_bits": 64}))
+    IncrementalDedup(state, CFG)
+
     # legacy store: band history present, no fingerprint
-    (Path(state) / "_params.json").unlink()
+    fs_delete(spark, params)
     with pytest.raises(ValueError, match="fingerprint"):
         IncrementalDedup(state, CFG)
     IncrementalDedup(state, CFG, trust_legacy_state=True)  # stamps it

@@ -4,8 +4,8 @@ The flagship's verified-pair graphs at bench scale resolve under the
 5M-edge driver-union-find gate, so the distributed path was only ever
 exercised at toy size. This harness builds a >=1M-edge graph with a
 planted GIANT high-diameter component (a chain of >=10k docs — the
-adversarial shape for label propagation: hash-min needs diameter rounds,
-the default large-star/small-star contraction needs O(log^2 n)) plus a
+adversarial shape for label propagation, which needs diameter rounds;
+the large-star/small-star contraction needs O(log^2 n)) plus a
 realistic mass of small dense clusters, runs the forced distributed path,
 and asserts bit-identical labels vs the driver union-find. Writes
 CC_STRESS.json with rounds + wall time.
@@ -83,31 +83,29 @@ def main() -> int:
         "wall_sec": round(uf_wall, 2), "n_clusters": n_truth_clusters,
     }
 
-    for algo in ("star",):  # hashmin would need `chain_n` rounds — excluded
-        stats: dict = {}
-        t0 = time.perf_counter()
-        labels = connected_components(
-            edges, driver_max_edges=0, algorithm=algo,
-            max_iterations=60, stats=stats,
-        ).persist()
-        n_labeled = labels.count()
-        wall = time.perf_counter() - t0
-        mism = (
-            labels.join(truth.withColumnRenamed("cluster_id", "want"), "doc_id")
-            .where(F.col("cluster_id") != F.col("want"))
-            .count()
-        )
-        out["algorithms"][algo] = {
-            "rounds": stats.get("rounds"),
-            "wall_sec": round(wall, 2),
-            "n_vertices_labeled": n_labeled,
-            "label_mismatches_vs_union_find": mism,
-        }
-        print(f"{algo}: rounds={stats.get('rounds')} wall={wall:.1f}s "
-              f"mismatches={mism}", flush=True)
-        assert mism == 0, f"{algo} labels diverge from union-find"
-        assert n_labeled == len(truth_map)
-        labels.unpersist()
+    stats: dict = {}
+    t0 = time.perf_counter()
+    labels = connected_components(
+        edges, driver_max_edges=0, max_iterations=60, stats=stats,
+    ).persist()
+    n_labeled = labels.count()
+    wall = time.perf_counter() - t0
+    mism = (
+        labels.join(truth.withColumnRenamed("cluster_id", "want"), "doc_id")
+        .where(F.col("cluster_id") != F.col("want"))
+        .count()
+    )
+    out["algorithms"]["star"] = {
+        "rounds": stats.get("rounds"),
+        "wall_sec": round(wall, 2),
+        "n_vertices_labeled": n_labeled,
+        "label_mismatches_vs_union_find": mism,
+    }
+    print(f"star: rounds={stats.get('rounds')} wall={wall:.1f}s "
+          f"mismatches={mism}", flush=True)
+    assert mism == 0, "star labels diverge from union-find"
+    assert n_labeled == len(truth_map)
+    labels.unpersist()
 
     Path(ROOT / "CC_STRESS.json").write_text(json.dumps(out, indent=2))
     print(json.dumps(out))

@@ -178,17 +178,14 @@ def _log_tail(cpus: int, lines: int = 15) -> str:
     return "\n".join(p.read_text(errors="replace").splitlines()[-lines:])
 
 
-def _read_line(w: subprocess.Popen, cpus: int, tail_fn=None) -> str:
-    """Blocking readline with dead-worker detection (ADVICE round-2).
-    ``tail_fn`` lets callers with differently-named worker logs
-    (stage_scaling) report THEIR log instead of this tool's."""
+def _read_line(w: subprocess.Popen, cpus: int) -> str:
+    """Blocking readline with dead-worker detection (ADVICE round-2)."""
     line = w.stdout.readline()
     if line:
         return line
     rc = w.poll()
-    tail = (tail_fn or _log_tail)(cpus)
     raise RuntimeError(
-        f"worker local[{cpus}] died (exit={rc}); stderr tail:\n{tail}"
+        f"worker local[{cpus}] died (exit={rc}); stderr tail:\n{_log_tail(cpus)}"
     )
 
 
@@ -305,7 +302,7 @@ def main() -> int:
                     )
                 samples[cpus].append(float(sec))
                 results.add((int(nc), int(npairs)))
-                # post-leg probe (round-5, ported from stage_scaling): a
+                # post-leg probe (round-5): a
                 # pre-leg probe cannot certify a multi-minute leg — round-4
                 # committed 1-core legs with clean pre-probes that ran
                 # 1.8-2.4x the pinned quiet minimum (mid-leg throttle).

@@ -65,16 +65,14 @@ def simhash_udf() -> Column:
 
 def hamming_chunk_cols(col: Column, width: int, n_chunks: int) -> Column:
     """``array<bigint>`` of the ``n_chunks`` unsigned ``width``-bit chunks
-    of a packed 64-bit signature — the pigeonhole blocking kernel shared
-    by SimHash text dedup, ahash media dedup, and hyperplane ANN.
+    of a packed 64-bit signature — the pigeonhole blocking kernel behind
+    ``operators.pairs.chunk_blocks`` (SimHash text dedup, ahash media
+    dedup, hyperplane ANN).
 
-    One shared expression, deliberately: the width==64 case (one chunk =
-    exact-hash blocking, e.g. ``max_hamming=0``) needs ``mask = -1`` —
+    The width==64 case (one chunk = exact-hash blocking, e.g.
+    ``max_hamming=0`` or ``n_chunks=1``) needs ``mask = -1``:
     ``(1 << 64) - 1`` overflows LongType and py4j ships it as a Decimal
-    the bitwiseAND rejects. That fix previously lived only in
-    ``simhash_dedup_pairs`` while the copy-pasted sibling in
-    ``media_near_dup_pairs`` (and ``lsh_topk`` at ``n_chunks=1``) still
-    crashed (round-5 review)."""
+    the bitwiseAND rejects."""
     mask = F.lit(-1 if width == 64 else (1 << width) - 1)
     return F.array(
         *[

@@ -19,9 +19,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lsh_forest_for_multi_vector_retrieval_spark.config import DedupConfig
-from lsh_forest_for_multi_vector_retrieval_spark.functions.simhash import (
-    hamming_chunk_cols,
-)
 from lsh_forest_for_multi_vector_retrieval_spark.functions.shingles import (
     with_shingle_strings,
     with_shingles,
@@ -34,7 +31,10 @@ from lsh_forest_for_multi_vector_retrieval_spark.operators.bands import (
 from lsh_forest_for_multi_vector_retrieval_spark.operators.components import (
     connected_components,
 )
-from lsh_forest_for_multi_vector_retrieval_spark.operators.pairs import candidate_pairs
+from lsh_forest_for_multi_vector_retrieval_spark.operators.pairs import (
+    candidate_pairs,
+    hamming_pairs,
+)
 from lsh_forest_for_multi_vector_retrieval_spark.operators.verify import verify_pairs
 
 
@@ -71,6 +71,20 @@ class DedupResult:
         self.verified.unpersist(blocking=True)
 
 
+def flagship_bands(sigs: DataFrame, cfg: DedupConfig = DedupConfig()) -> DataFrame:
+    """``(band_id, band_hash, doc_id)`` — the flagship's band table under
+    ``cfg``'s band strategy, shared by ``minhash_dedup`` and the
+    checkpointed ``plans.pipeline.dedup_pipeline`` so both bucket alike.
+
+    ``cfg.use_adaptive_bands`` selects the variable-depth forest (hot
+    buckets are deepened instead of capped; bucket containment keeps
+    recall). Both strategies project to the same column order: a consumer
+    unioning bands across configs by position must not get doc_id bound
+    to band_id."""
+    table = adaptive_band_table if cfg.use_adaptive_bands else band_table
+    return table(sigs, cfg).select("band_id", "band_hash", "doc_id")
+
+
 def minhash_dedup(
     docs: DataFrame,
     cfg: DedupConfig = DedupConfig(),
@@ -93,17 +107,7 @@ def minhash_dedup(
     ).select("doc_id", "shingles", "sig", "simhash")
     if persist_intermediates:
         sigs = sigs.persist()
-    if cfg.use_adaptive_bands:
-        # variable-depth forest: hot buckets are deepened instead of
-        # capped (bucket containment keeps recall; see tools/adaptive_ab)
-        bands = adaptive_band_table(sigs, cfg).select(
-            "band_id", "band_hash", "doc_id"
-        )
-    else:
-        # same column order as the adaptive branch (and the DedupResult
-        # comment): a consumer unioning bands across configs by position
-        # must not get doc_id bound to band_id
-        bands = band_table(sigs, cfg).select("band_id", "band_hash", "doc_id")
+    bands = flagship_bands(sigs, cfg)
     cands = candidate_pairs(bands, cfg)
     if persist_intermediates:
         # the verify prune traverses cands twice (distinct candidate ids
@@ -176,25 +180,12 @@ def simhash_dedup_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """SimHash near-dup pairs: block on ``max_hamming + 1`` disjoint
-    right-shifted chunks of the 64-bit fingerprint, each
-    ``64 // (max_hamming+1)`` bits wide (any pair within the Hamming
-    budget shares at least one chunk exactly — pigeonhole; bits past
-    ``n_chunks * width`` are uncovered, which only widens blocks and so
-    only ADDS candidates), then verify Hamming exactly with
-    ``bit_count`` JVM-side. Returns (doc_a, doc_b, hamming)."""
-    # the chunk self-join reads both sides from the signature table — an
-    # unmaterialized plan would re-run the signature UDFs once per side.
-    # localCheckpoint (not persist): the slim (doc_id, simhash) projection
-    # is 16 bytes/doc, and checkpoint blocks are ContextCleaner-released
-    # when the result goes out of scope — no session-lifetime cache leak
-    # (round-2 VERDICT #3). At real scale the resumable pipeline variant
-    # checkpoints signatures to a table instead (plans/pipeline.py).
-    # eager=True: a LAZY localCheckpoint consumed by both sides of the
-    # self-join races AQE's concurrent stage materialization — the losing
-    # attempt's accumulator updates arrive after deregistration and flood
-    # the log with benign "non-existent accumulator" DAGScheduler ERRORs
-    # (round-3 VERDICT "What's wrong" #1; reproduced + bisected round 4).
+    """SimHash near-dup pairs: every pair of non-empty docs whose 64-bit
+    fingerprints differ in at most ``max_hamming`` bits, found by
+    pigeonhole chunk blocking (``pairs.hamming_pairs``). Returns (doc_a,
+    doc_b, hamming)."""
+    # eager localCheckpoint of the slim (doc_id, simhash) projection, 16
+    # bytes/doc: both self-join sides read it (see pairs.chunk_self_join)
     sigs = with_signatures(
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")),
         cfg,
@@ -204,37 +195,7 @@ def simhash_dedup_pairs(
         .select("doc_id", "simhash")
         .localCheckpoint(eager=True)
     )
-    n_chunks = max_hamming + 1  # pigeonhole blocks
-    width = 64 // n_chunks
-    # shared kernel (functions/simhash.py) — carries the width==64 mask
-    # fix for max_hamming=0 ("exact simhash only")
-    chunks = hamming_chunk_cols(F.col("simhash"), width, n_chunks)
-    blocks = sigs.select(
-        "doc_id", "simhash", F.posexplode(chunks).alias("chunk_id", "chunk_val")
-    )
-    a = blocks.select(
-        "chunk_id",
-        "chunk_val",
-        F.col("doc_id").alias("doc_a"),
-        F.col("simhash").alias("sim_a"),
-    )
-    b = blocks.select(
-        "chunk_id",
-        "chunk_val",
-        F.col("doc_id").alias("doc_b"),
-        F.col("simhash").alias("sim_b"),
-    )
-    return (
-        a.join(b, ["chunk_id", "chunk_val"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    return hamming_pairs(sigs, "doc_id", "simhash", max_hamming)
 
 
 def ngram_jaccard_pairs_exact(

@@ -196,9 +196,16 @@ def forest_vote_scores(
     )
 
 
-def get_top_k(scores: DataFrame, k: int = 10) -> DataFrame:
+def get_top_k(
+    scores: DataFrame,
+    k: int = 10,
+    query_col: str = "query_id",
+    item_col: str = "doc_id",
+    score_col: str = "score",
+) -> DataFrame:
     """heapq.nlargest analog (forest_vote.py:340-343): per-query top-k by
-    score, deterministic tie-break on doc_id -> TakeOrderedAndProject /
-    per-partition partial top-k under the window."""
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+    score, deterministic tie-break on the item id -> per-partition partial
+    top-k (WindowGroupLimit) under the window. Adds ``rank`` (1-based).
+    The one per-query top-k of forest vote, ANN, PLAID and metrics."""
+    w = Window.partitionBy(query_col).orderBy(F.desc(score_col), F.asc(item_col))
     return scores.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.multimodal import decode_image, image_features
-from ..functions.simhash import hamming_chunk_cols
+from .pairs import hamming_pairs
 
 IMAGE_FEATURES_SCHEMA = T.StructType(
     [
@@ -94,43 +94,14 @@ def with_ahash(media: DataFrame, id_col: str = "media_id") -> DataFrame:
 
 def media_near_dup_pairs(media: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Image near-duplicate pairs via perceptual average-hash + the same
-    pigeonhole chunk blocking as SimHash text dedup (operators/dedup.py:109):
+    pigeonhole chunk blocking as SimHash text dedup (``pairs.hamming_pairs``):
     any pair within Hamming<=3 of the 64-bit ahash shares one of 4 exact
     16-bit chunks, so candidate generation is an equi-join on (chunk_id,
     chunk_val) — bucketed, never all-pairs — and verification is one
     JVM-side ``bit_count`` XOR. Returns (doc_a, doc_b, hamming).
 
-    The (media_id, ahash) table feeds both sides of the self-join;
-    localCheckpoint (16 bytes/image, ContextCleaner-released) instead of
-    persist so repeated calls in one session don't accumulate cached
-    tables (round-2 ADVICE). eager=True: a lazy checkpoint feeding both
-    sides of a self-join races AQE stage materialization (benign
-    "non-existent accumulator" ERROR flood — see ngram_jaccard_pairs_exact)."""
+    The (media_id, ahash) table, 16 bytes/image, is eagerly
+    localCheckpoint-ed because both self-join sides read it (see
+    ``pairs.chunk_self_join``)."""
     sigs = with_ahash(media).localCheckpoint(eager=True)
-    n_chunks = max_hamming + 1
-    width = 64 // n_chunks
-    # shared kernel: handles the width==64 mask (max_hamming=0 = exact
-    # ahash only) that the old inline copy got wrong (round-5 review)
-    chunks = hamming_chunk_cols(F.col("ahash"), width, n_chunks)
-    blocks = sigs.select(
-        "media_id", "ahash", F.posexplode(chunks).alias("chunk_id", "chunk_val")
-    )
-    a = blocks.select(
-        "chunk_id", "chunk_val",
-        F.col("media_id").alias("doc_a"), F.col("ahash").alias("h_a"),
-    )
-    b = blocks.select(
-        "chunk_id", "chunk_val",
-        F.col("media_id").alias("doc_b"), F.col("ahash").alias("h_b"),
-    )
-    return (
-        a.join(b, ["chunk_id", "chunk_val"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    return hamming_pairs(sigs, "media_id", "ahash", max_hamming)

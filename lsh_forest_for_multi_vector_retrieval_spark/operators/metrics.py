@@ -8,8 +8,10 @@ rank-of-true-NN (src/shared/test_query.py:108-144), top-k accuracy
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from lsh_forest_for_multi_vector_retrieval_spark.operators.forest_vote import get_top_k
 
 
 def pair_recall(predicted: DataFrame, truth: DataFrame) -> float:
@@ -83,11 +85,8 @@ def recall_at_k(
     raw scored candidates."""
 
     def topk(df: DataFrame) -> DataFrame:
-        w = Window.partitionBy(query_col).orderBy(F.desc(score_col), F.asc(item_col))
-        return (
-            df.withColumn("__r", F.row_number().over(w))
-            .where(F.col("__r") <= k)
-            .select(query_col, item_col)
+        return get_top_k(df, k, query_col, item_col, score_col).select(
+            query_col, item_col
         )
 
     p, t = topk(predicted), topk(truth)

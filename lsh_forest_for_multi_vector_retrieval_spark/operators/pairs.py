@@ -17,6 +17,10 @@ Physical strategy (SURVEY §4.2):
   same recall-for-cost trade;
 * cross-band duplicate pairs are removed with one distinct (hash
   aggregate, map-side partial).
+
+Pigeonhole blocking of packed 64-bit signatures (SimHash, ahash,
+hyperplane embeddings) lives here too: ``chunk_blocks``,
+``chunk_self_join`` and ``hamming_pairs``.
 """
 
 from __future__ import annotations
@@ -25,6 +29,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lsh_forest_for_multi_vector_retrieval_spark.config import DedupConfig
+from lsh_forest_for_multi_vector_retrieval_spark.functions.simhash import (
+    hamming_chunk_cols,
+)
 
 
 def star_pair_structs(ids_col, bucket_pivots: int):
@@ -207,3 +214,75 @@ def bucket_drop_stats(
         .where((F.col("dropped_docs") > 0) | (F.col("starred_pairs_skipped") > 0))
     )
 
+
+def chunk_blocks(
+    df: DataFrame, sig_col: str, width: int, n_chunks: int, keep: list[str]
+) -> DataFrame:
+    """``(*keep, chunk_id, chunk_val)``: one row per ``width``-bit chunk of
+    the packed signature in ``sig_col`` — the engine's one pigeonhole
+    blocking explode. Two rows whose signatures share any chunk exactly
+    meet on ``(chunk_id, chunk_val)``."""
+    chunks = hamming_chunk_cols(F.col(sig_col), width, n_chunks)
+    return df.select(*keep, F.posexplode(chunks).alias("chunk_id", "chunk_val"))
+
+
+def chunk_self_join(
+    sigs: DataFrame,
+    id_col: str,
+    sig_col: str,
+    width: int,
+    n_chunks: int,
+    payload: str,
+) -> DataFrame:
+    """``(doc_a, <payload>_a, doc_b, <payload>_b)`` with ``doc_a <
+    doc_b``: every pair of rows sharing at least one signature chunk, once
+    per shared chunk (callers dedupe).
+
+    ``sigs`` feeds both join sides, so pass an eager ``localCheckpoint``:
+    an unmaterialized plan re-runs its signature UDF once per side, and a
+    LAZY checkpoint read by both sides races AQE's concurrent stage
+    materialization (the losing attempt's accumulator updates flood the
+    log with benign "non-existent accumulator" ERRORs; bisected round 4).
+    localCheckpoint rather than persist: its blocks are
+    ContextCleaner-released with the result, so repeated calls leak no
+    session-lifetime cache (round-2 VERDICT #3)."""
+    blocks = chunk_blocks(sigs, sig_col, width, n_chunks, [id_col, payload])
+
+    def side(s: str) -> DataFrame:
+        return blocks.select(
+            "chunk_id",
+            "chunk_val",
+            F.col(id_col).alias(f"doc_{s}"),
+            F.col(payload).alias(f"{payload}_{s}"),
+        )
+
+    return (
+        side("a")
+        .join(side("b"), ["chunk_id", "chunk_val"])
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", f"{payload}_a", "doc_b", f"{payload}_b")
+    )
+
+
+def hamming_pairs(
+    sigs: DataFrame, id_col: str, hash_col: str, max_hamming: int
+) -> DataFrame:
+    """``(doc_a, doc_b, hamming)``, ``doc_a < doc_b``, distinct: every pair
+    of 64-bit hashes within ``max_hamming`` bits.
+
+    Blocks on ``max_hamming + 1`` disjoint right-shifted chunks, each
+    ``64 // (max_hamming + 1)`` bits wide: a pair within the budget
+    differs in at most ``max_hamming`` chunks, so it shares at least one
+    exactly (pigeonhole). Bits past ``n_chunks * width`` are in no chunk,
+    which only widens blocks and so only ADDS candidates. Verification is
+    one JVM-side ``bit_count`` of the XOR."""
+    n_chunks = max_hamming + 1
+    pairs = chunk_self_join(
+        sigs, id_col, hash_col, 64 // n_chunks, n_chunks, hash_col
+    )
+    xor = F.col(f"{hash_col}_a").bitwiseXOR(F.col(f"{hash_col}_b"))
+    return (
+        pairs.select("doc_a", "doc_b", F.bit_count(xor).alias("hamming"))
+        .where(F.col("hamming") <= max_hamming)
+        .distinct()
+    )

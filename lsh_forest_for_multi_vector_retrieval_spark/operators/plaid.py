@@ -19,7 +19,7 @@ keyed joins against the inverted index.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from lsh_forest_for_multi_vector_retrieval_spark.functions.vectors import (
@@ -27,6 +27,7 @@ from lsh_forest_for_multi_vector_retrieval_spark.functions.vectors import (
     dot_col,
     nearest_centroid_pandas_udf,
 )
+from lsh_forest_for_multi_vector_retrieval_spark.operators.forest_vote import get_top_k
 
 
 def build_centroids(
@@ -451,14 +452,10 @@ def plaid_topk(
             _sum_tok_vals(coarse_vals, round_digits).alias("score"),
         )
     )
-    wr = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    ranked = scores.withColumn("rank", F.row_number().over(wr))
     if rerank is None:
-        return ranked.where(F.col("rank") <= k)
+        return get_top_k(scores, k)
 
-    pool = ranked.where(F.col("rank") <= max(k, rerank)).select(
-        "query_id", "doc_id"
-    )
+    pool = get_top_k(scores, max(k, rerank)).select("query_id", "doc_id")
     # exact re-rank over matrices: one row per (query, doc) carrying the
     # doc's token list and the query's q_idx-sorted token list — max over
     # doc tokens is order-independent, so the collect_list order of d_vecs
@@ -480,7 +477,4 @@ def plaid_topk(
         score = raw if round_digits is None else F.round(raw, round_digits)
     else:
         score = chamfer_pair_fold_col(q_vecs, F.col("d_vecs"), round_digits)
-    exact = joined.select("query_id", "doc_id", score.alias("score"))
-    return exact.withColumn("rank", F.row_number().over(wr)).where(
-        F.col("rank") <= k
-    )
+    return get_top_k(joined.select("query_id", "doc_id", score.alias("score")), k)

@@ -257,11 +257,13 @@ def dedup_pipeline(
     """
     from lsh_forest_for_multi_vector_retrieval_spark.config import DedupConfig
     from lsh_forest_for_multi_vector_retrieval_spark.operators.bands import (
-        band_table,
         with_signatures,
     )
     from lsh_forest_for_multi_vector_retrieval_spark.operators.components import (
         connected_components,
+    )
+    from lsh_forest_for_multi_vector_retrieval_spark.operators.dedup import (
+        flagship_bands,
     )
     from lsh_forest_for_multi_vector_retrieval_spark.operators.pairs import (
         candidate_pairs,
@@ -279,7 +281,7 @@ def dedup_pipeline(
         return with_signatures(docs, cfg).select("doc_id", "shingles", "sig", "simhash")
 
     def s_bands(spark, deps):
-        return band_table(deps["signatures"], cfg)
+        return flagship_bands(deps["signatures"], cfg)
 
     def s_candidates(spark, deps):
         return candidate_pairs(deps["bands"], cfg)

@@ -338,10 +338,9 @@ def test_embedding_near_dup_recall_on_planted_fixture(spark):
     assert extra.count() == 0
 
 
-def test_lsh_topk_ensure_k_fills_sparse_queries(spark):
-    # Q4 ascend fallback (ref utils.py:168-187): a query vector orthogonal
-    # to a tight corpus cluster lands in empty leaf buckets; ensure_k must
-    # widen (half-width chunks, then root) and return exactly k rows
+def _sparse_outlier_corpus(spark):
+    """120 vectors in a tight cluster plus one outlier (vec_id 999)
+    orthogonal to the cluster center: ``(df, center, outlier)``."""
     rng = np.random.RandomState(7)
     center = rng.standard_normal(64)
     center /= np.linalg.norm(center)
@@ -352,8 +351,17 @@ def test_lsh_topk_ensure_k_fills_sparse_queries(spark):
     # the sparse-region outlier: orthogonalized against the cluster center
     out = rng.standard_normal(64)
     out -= out.dot(center) * center
-    rows.append((999, (out / np.linalg.norm(out)).astype(np.float32).tolist()))
+    out /= np.linalg.norm(out)
+    rows.append((999, out.astype(np.float32).tolist()))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    return df, center, out
+
+
+def test_lsh_topk_ensure_k_fills_sparse_queries(spark):
+    # Q4 ascend fallback (ref utils.py:168-187): a query vector orthogonal
+    # to a tight corpus cluster lands in empty leaf buckets; ensure_k must
+    # widen (half-width chunks, then root) and return exactly k rows
+    df, _, _ = _sparse_outlier_corpus(spark)
 
     k = 5
     # 4 chunks x 16 bits: very selective blocks — without the fallback the
@@ -370,6 +378,36 @@ def test_lsh_topk_ensure_k_fills_sparse_queries(spark):
     # every query saturated when querying the full set
     counts = (
         lsh_topk(df, df, k=k, dim=64, n_chunks=4, ensure_k=True)
+        .groupBy("q_id")
+        .count()
+        .collect()
+    )
+    assert len(counts) == 121 and all(r["count"] == k for r in counts)
+
+
+def test_ivf_topk_root_fallback_fills_sparse_queries(spark):
+    """ivf_topk's ensure_k root fallback: with a two-cell codebook (the
+    cluster center and the outlier's own direction) and nprobe=1, the
+    outlier's only probed cell holds no other vector, so without the
+    fallback it gets no rows; with it, the exact broadcast scan gives it
+    brute-force's top-k while the saturated queries keep k rows."""
+    from lsh_forest_for_multi_vector_retrieval_spark.operators.ann import ivf_topk
+
+    df, center, out = _sparse_outlier_corpus(spark)
+    codebook = [center.tolist(), out.tolist()]
+    outlier = df.where(F.col("vec_id") == 999)
+    k = 5
+
+    bare = ivf_topk(df, outlier, k=k, centroids=codebook, nprobe=1)
+    assert bare.count() < k
+    ensured = ivf_topk(
+        df, outlier, k=k, centroids=codebook, nprobe=1, ensure_k=True
+    ).collect()
+    assert len(ensured) == k
+    bf = brute_force_topk(df, outlier, k=k).collect()
+    assert {r.n_id for r in ensured} == {r.n_id for r in bf}
+    counts = (
+        ivf_topk(df, df, k=k, centroids=codebook, nprobe=1, ensure_k=True)
         .groupBy("q_id")
         .count()
         .collect()

@@ -21,6 +21,7 @@ from lsh_forest_for_multi_vector_retrieval_spark.operators.components import (
 )
 from lsh_forest_for_multi_vector_retrieval_spark.operators.pairs import (
     candidate_pairs,
+    hamming_pairs,
 )
 from lsh_forest_for_multi_vector_retrieval_spark.operators.verify import (
     verify_pairs,
@@ -529,3 +530,73 @@ def test_cc_star_converging_at_budget_does_not_warn(spark):
             max_iterations=converge_rounds,
         )
         assert {r.cluster_id for r in out2.collect()} == {0}
+
+
+def _signed64(h: int) -> int:
+    return h - (1 << 64) if h >= 1 << 63 else h
+
+
+@pytest.mark.parametrize("max_hamming", [0, 3, 4, 63])
+def test_hamming_pairs_match_popcount_oracle(spark, max_hamming):
+    """``hamming_pairs`` == every pair of 64-bit hashes within the budget,
+    by ``itertools.combinations`` + popcount. The corpus plants exact
+    duplicates, 1/3/4/5-bit neighbours, a 4-bit neighbour that differs
+    only in bits 60-63 (outside every chunk at max_hamming=4: 5 chunks x
+    12 bits) and a complement (64 bits apart: the one pair max_hamming=63,
+    with 1-bit chunks, must not report)."""
+    import random
+
+    rng = random.Random(5)
+    hashes = []
+    for _ in range(10):
+        base = rng.getrandbits(64)
+        hashes.append(base)
+        for n_flip in (0, 1, 3, 4, 5):
+            h = base
+            for b in rng.sample(range(64), n_flip):
+                h ^= 1 << b
+            hashes.append(h)
+        hashes.append(base ^ (0xF << 60))
+    hashes.append(hashes[0] ^ ((1 << 64) - 1))
+    rows = [(i, _signed64(h)) for i, h in enumerate(hashes)]
+    df = spark.createDataFrame(rows, "id long, h long")
+
+    want = set()
+    for (ia, a), (ib, b) in itertools.combinations(enumerate(hashes), 2):
+        d = bin(a ^ b).count("1")
+        if d <= max_hamming:
+            want.add((ia, ib, d))
+    got = [
+        (r.doc_a, r.doc_b, r.hamming)
+        for r in hamming_pairs(df, "id", "h", max_hamming).collect()
+    ]
+    assert len(got) == len(set(got))
+    assert set(got) == want
+    assert want  # every budget has pairs to find
+
+
+def test_hamming_chunk_cols_has_one_blocking_home():
+    """The pigeonhole blocking kernel is referenced only where it is
+    defined and by ``pairs.chunk_blocks``: every SimHash / ahash /
+    hyperplane operator blocks through ``operators/pairs.py``, so a fix
+    to the blocking lands once."""
+    import ast
+    from pathlib import Path
+
+    import lsh_forest_for_multi_vector_retrieval_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    hits = set()
+    for path in root.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, (ast.alias, ast.FunctionDef)):
+                name = node.name
+            else:
+                continue
+            if name == "hamming_chunk_cols":
+                hits.add(path.relative_to(root).as_posix())
+    assert hits == {"functions/simhash.py", "operators/pairs.py"}

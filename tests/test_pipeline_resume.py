@@ -41,6 +41,34 @@ def test_full_run_then_resume_skips_everything(spark, corpus_path, tmp_path):
     assert _cluster_map(r2) == m1
 
 
+@pytest.mark.parametrize(
+    "cfg",
+    [DedupConfig(), DedupConfig(use_adaptive_bands=True, adaptive_max_bucket=2)],
+    ids=["fixed", "adaptive"],
+)
+def test_pipeline_bands_match_minhash_dedup(spark, tmp_path, cfg):
+    """The checkpointed pipeline buckets exactly like ``minhash_dedup``
+    under the same config — the band strategy (``use_adaptive_bands``)
+    included."""
+    from lsh_forest_for_multi_vector_retrieval_spark.operators.dedup import (
+        minhash_dedup,
+    )
+
+    p = str(tmp_path / "pages.parquet")
+    generate_pages(
+        spark, n_clusters=8, cluster_size=3, n_singletons=20, seed=11
+    ).write.parquet(p)
+    run = dedup_pipeline(p, str(tmp_path / "wd"), cfg).run(spark)
+    got = run.outputs["bands"].select("band_id", "band_hash", "doc_id")
+    res = minhash_dedup(spark.read.parquet(p), cfg)
+    try:
+        assert got.count() == res.bands.count() > 0
+        assert got.exceptAll(res.bands).isEmpty()
+        assert res.bands.exceptAll(got).isEmpty()
+    finally:
+        res.unpersist()
+
+
 def test_resume_from_partial_checkpoint(spark, corpus_path, tmp_path):
     wd = str(tmp_path / "wd2")
     pipe = dedup_pipeline(corpus_path, wd, CFG)

@@ -62,7 +62,9 @@ def band_table(
     cfg: DedupConfig = DedupConfig(),
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """``(band_id, band_hash, doc_id)`` — the whole forest in one table.
+    """``(doc_id, band_id, band_hash)`` — the whole forest in one table.
+    The flagship's band stage, ``dedup.flagship_bands``, projects it to
+    the canonical ``(band_id, band_hash, doc_id)``.
 
     Empty docs (sentinel signatures) are excluded: an empty document never
     generates near-dup candidates (reference base case: a leaf with <=1

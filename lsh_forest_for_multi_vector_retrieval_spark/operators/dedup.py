@@ -1,9 +1,10 @@
 """End-to-end dedup pipelines (the flagship query, SURVEY §3.3).
 
-``minhash_dedup`` is the engine's flagship: text -> shingles -> MinHash
--> bands -> candidate pairs -> exact-Jaccard verify -> connected
-components. Each arrow is a pure DataFrame->DataFrame stage; the
-checkpointed/resumable variant lives in ``plans.pipeline``.
+The flagship, text -> shingles -> MinHash -> bands -> candidate pairs
+-> exact-Jaccard verify -> connected components, is defined once, as the
+stage list ``flagship_stages``. ``minhash_dedup`` runs it in memory,
+``plans.pipeline.dedup_pipeline`` with a parquet checkpoint per stage,
+and ``IncrementalDedup.process_batch`` runs its first four stages.
 
 Also provides the simpler family every training-data pipeline needs:
 exact dedup (hash groupBy), SimHash Hamming dedup, and n-gram-Jaccard
@@ -13,15 +14,15 @@ and as the recall oracle in tests).
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lsh_forest_for_multi_vector_retrieval_spark.config import DedupConfig
 from lsh_forest_for_multi_vector_retrieval_spark.functions.shingles import (
     with_shingle_strings,
-    with_shingles,
 )
 from lsh_forest_for_multi_vector_retrieval_spark.operators.bands import (
     adaptive_band_table,
@@ -32,15 +33,24 @@ from lsh_forest_for_multi_vector_retrieval_spark.operators.components import (
     connected_components,
 )
 from lsh_forest_for_multi_vector_retrieval_spark.operators.pairs import (
+    bucket_drop_summary,
     candidate_pairs,
     hamming_pairs,
 )
 from lsh_forest_for_multi_vector_retrieval_spark.operators.verify import verify_pairs
+from lsh_forest_for_multi_vector_retrieval_spark.plans.pipeline import Stage
+
+#: the stages ``minhash_dedup`` persists, each read twice or more:
+#: signatures by the band stage and the verify join (else the pandas-UDF
+#: MinHash runs twice); candidates by verify's prune (the distinct ids +
+#: the pair join; else the bucket shuffle reruns); verified by CC's gate,
+#: its first iteration and the caller (else band -> pair -> verify reruns)
+REUSED_STAGES = ("signatures", "candidates", "verified")
 
 
 @dataclass
 class DedupResult:
-    """Flagship pipeline outputs.
+    """Flagship pipeline outputs, one field per ``flagship_stages`` stage.
 
     Pair completeness: ``verified`` holds every exact-Jaccard-verified
     candidate pair the band stage GENERATED — for buckets above
@@ -59,22 +69,20 @@ class DedupResult:
     clusters: DataFrame  # doc_id, cluster_id
 
     def unpersist(self) -> None:
-        """Release the tables ``minhash_dedup(persist_intermediates=True)``
-        cached (signatures + candidates + verified). Call when done with the result —
-        repeated pipeline runs in one session otherwise accumulate cached
-        tables (executor-memory pressure; see round-2 VERDICT). Blocking:
-        an async unpersist can race stages still reading the cache and
-        logs spurious 'non-existent accumulator' DAGScheduler errors
-        (round-3 VERDICT #1)."""
-        self.signatures.unpersist(blocking=True)
-        self.candidates.unpersist(blocking=True)
-        self.verified.unpersist(blocking=True)
+        """Release the ``REUSED_STAGES`` tables ``minhash_dedup`` cached.
+        Call when done with the result — repeated pipeline runs in one
+        session otherwise accumulate cached tables (executor-memory
+        pressure; see round-2 VERDICT). Blocking: an async unpersist can
+        race stages still reading the cache and logs spurious
+        'non-existent accumulator' DAGScheduler errors (round-3 VERDICT
+        #1)."""
+        for name in REUSED_STAGES:
+            getattr(self, name).unpersist(blocking=True)
 
 
 def flagship_bands(sigs: DataFrame, cfg: DedupConfig = DedupConfig()) -> DataFrame:
     """``(band_id, band_hash, doc_id)`` — the flagship's band table under
-    ``cfg``'s band strategy, shared by ``minhash_dedup`` and the
-    checkpointed ``plans.pipeline.dedup_pipeline`` so both bucket alike.
+    ``cfg``'s band strategy: the ``bands`` stage of ``flagship_stages``.
 
     ``cfg.use_adaptive_bands`` selects the variable-depth forest (hot
     buckets are deepened instead of capped; bucket containment keeps
@@ -85,54 +93,71 @@ def flagship_bands(sigs: DataFrame, cfg: DedupConfig = DedupConfig()) -> DataFra
     return table(sigs, cfg).select("band_id", "band_hash", "doc_id")
 
 
+def flagship_stages(
+    docs: Callable[[SparkSession], DataFrame], cfg: DedupConfig = DedupConfig()
+) -> list[Stage]:
+    """The flagship, once: ``signatures -> bands -> candidates -> verified
+    -> clusters`` as ``plans.pipeline.Stage``s. ``docs(spark)`` yields
+    ``(doc_id, text)``; every other stage reads only earlier outputs.
+
+    ``verified`` passes ``materialize_pairs=False``: each runner hands it
+    candidates that are cheap to traverse twice (cached in memory, a
+    parquet checkpoint scan, or the persisted micro-batch union)."""
+
+    def signatures(spark, deps):
+        return with_signatures(docs(spark), cfg).select(
+            "doc_id", "shingles", "sig", "simhash"
+        )
+
+    def bands(spark, deps):
+        return flagship_bands(deps["signatures"], cfg)
+
+    def candidates(spark, deps):
+        return candidate_pairs(deps["bands"], cfg)
+
+    def drops(spark, deps):
+        return bucket_drop_summary(deps["bands"], cfg)
+
+    def verified(spark, deps):
+        return verify_pairs(
+            deps["candidates"], deps["signatures"], cfg, materialize_pairs=False
+        )
+
+    def clusters(spark, deps):
+        return connected_components(
+            deps["verified"],
+            all_vertices=deps["signatures"].select("doc_id"),
+            max_iterations=cfg.cc_max_iterations,
+        )
+
+    return [
+        Stage("signatures", signatures),
+        Stage("bands", bands, write_partition_cols=("band_id", "band_hash")),
+        Stage("candidates", candidates, extra_metrics_fn=drops),
+        Stage("verified", verified),
+        Stage("clusters", clusters),
+    ]
+
+
 def minhash_dedup(
     docs: DataFrame,
     cfg: DedupConfig = DedupConfig(),
     id_col: str = "doc_id",
     text_col: str = "text",
-    persist_intermediates: bool = True,
 ) -> DedupResult:
-    """The flagship near-dup pipeline. ``docs`` needs (id_col, text_col).
-
-    ``persist_intermediates`` caches the signature table (reused by both
-    the band stage and the verify join — without it Spark recomputes the
-    pandas-UDF MinHash twice).
+    """The flagship near-dup pipeline, run in memory. ``docs`` needs
+    (id_col, text_col). Runs ``flagship_stages`` in order and persists
+    ``REUSED_STAGES``; release them with ``DedupResult.unpersist``.
 
     Note ``.verified`` is pivot-star-complete, not clique-complete, for
     buckets above ``cfg.bucket_pivots`` — see ``DedupResult``.
     """
-    sigs = with_signatures(
-        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")),
-        cfg,
-    ).select("doc_id", "shingles", "sig", "simhash")
-    if persist_intermediates:
-        sigs = sigs.persist()
-    bands = flagship_bands(sigs, cfg)
-    cands = candidate_pairs(bands, cfg)
-    if persist_intermediates:
-        # the verify prune traverses cands twice (distinct candidate ids
-        # for the signature semi-join + the pair join itself) — cache the
-        # tiny pair table instead of re-running the bucket shuffle
-        cands = cands.persist()
-    else:
-        # verify would otherwise eager-checkpoint an INTERNAL copy the
-        # caller can't see, leaving DedupResult.candidates an
-        # unmaterialized plan that re-runs the whole band/bucket chain on
-        # first use — materialize here (same cost) so the copy is shared
-        cands = cands.localCheckpoint(eager=True)
-    verified = verify_pairs(cands, sigs, cfg, materialize_pairs=False)
-    if persist_intermediates:
-        # verified is read >=3 times downstream (the CC size-gate count,
-        # the gate collect / first CC iteration, and whatever the caller
-        # does with .verified) — without this the whole band->pair->verify
-        # chain recomputes each time; the table itself is tiny
-        verified = verified.persist()
-    clusters = connected_components(
-        verified,
-        all_vertices=sigs.select("doc_id"),
-        max_iterations=cfg.cc_max_iterations,
-    )
-    return DedupResult(sigs, bands, cands, verified, clusters)
+    text = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    outputs: dict[str, DataFrame] = {}
+    for stage in flagship_stages(lambda _: text, cfg):
+        out = stage.fn(docs.sparkSession, outputs)
+        outputs[stage.name] = out.persist() if stage.name in REUSED_STAGES else out
+    return DedupResult(**outputs)
 
 
 def exact_dedup_groups(

@@ -58,8 +58,8 @@ def _join_shingles(
     ContextCleaner-released; same pattern as dedup.simhash/ann). That
     makes this call a blocking action for uncached inputs. Callers whose
     ``pairs`` is ALREADY cheap to traverse twice — persisted
-    (``minhash_dedup(persist_intermediates=True)``, streaming) or a bare
-    checkpointed-parquet scan (``plans.pipeline``) — skip it: persisted
+    (``minhash_dedup``, streaming) or a bare checkpointed-parquet scan
+    (``plans.pipeline``) — skip it: persisted
     inputs via the storageLevel check, parquet-backed OR
     already-localCheckpointed ones via ``materialize_pairs=False``
     (re-scanning a slim pair file twice is cheaper than copying it into

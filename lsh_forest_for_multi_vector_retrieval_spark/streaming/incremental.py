@@ -6,16 +6,18 @@ existing tries, /root/reference/src/shared/lsh_forest.py:66-70) is
 exactly the streaming-ingest semantics: new docs join the existing band
 index, emit dup pairs against history, and extend the index.
 
-Shape: ``readStream`` (file source) -> signatures -> ``foreachBatch``:
-each micro-batch computes band rows, joins them against the persisted
-band table (the "trie so far"), verifies collisions exactly, appends
-verified pairs + its own band rows. State lives in parquet tables, not
-executor memory, so restarts are trivial (checkpointLocation + the table
-itself) and the pattern scales to any history size — a normal-sized
-micro-batch is BROADCAST against the history (no per-batch history
-re-shuffle); an oversized batch (restart over a backlog) falls back to
-the shuffle join automatically, and ``maxFilesPerTrigger`` bounds how
-much a backlog can deliver per batch in the first place.
+Shape: ``readStream`` (file source) -> ``foreachBatch``: each
+micro-batch runs the flagship's own stages (``dedup.flagship_stages``)
+up to ``verified`` — the reference also inserts through its build
+routine, lsh_forest.py:110-126 — and before verifying joins its band
+rows against the persisted band table (the "trie so far"), then
+appends verified pairs + its own band rows. State lives in parquet
+tables, not executor memory, so restarts are trivial (checkpointLocation
++ the table itself) and the pattern scales to any history size — a
+normal-sized micro-batch is BROADCAST against the history (no per-batch
+history re-shuffle); an oversized batch (restart over a backlog) falls
+back to the shuffle join automatically, and ``maxFilesPerTrigger``
+bounds how much a backlog can deliver per batch in the first place.
 
 Durability details (round-5 review hardening):
 
@@ -47,11 +49,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from lsh_forest_for_multi_vector_retrieval_spark.config import DedupConfig
-from lsh_forest_for_multi_vector_retrieval_spark.operators.bands import (
-    band_table,
-    with_signatures,
+from lsh_forest_for_multi_vector_retrieval_spark.operators.dedup import (
+    flagship_stages,
 )
-from lsh_forest_for_multi_vector_retrieval_spark.operators.verify import verify_pairs
 
 #: declared state-table schemas (band_hash/simhash are xxhash64 →
 #: bigint; band_id is a posexplode position → int). ``batch_id`` is the
@@ -276,15 +276,15 @@ class IncrementalDedup:
                 "partitions. Use a fresh state_dir (or restore the "
                 "original checkpoint)."
             )
-        sigs = (
-            with_signatures(batch.select("doc_id", "text"), cfg)
-            .select("doc_id", "shingles", "sig", "simhash")
-            .persist()
-        )
+        # the flagship's stages by name; the history probe joins between
+        # candidates and verified, and a batch never clusters
+        docs = batch.select("doc_id", "text")
+        stage = {s.name: s.fn for s in flagship_stages(lambda _: docs, cfg)}
+        sigs = stage["signatures"](spark, {}).persist()
         # the persisted store carries only what verification reads; the
-        # sig array exists transiently for band_table
+        # sig array exists transiently for the bands stage
         store_sigs = sigs.select("doc_id", "shingles", "simhash")
-        new_bands = band_table(sigs, cfg).persist()
+        new_bands = stage["bands"](spark, {"signatures": sigs}).persist()
 
         # gate on BOTH tables: a crash between the sigs and bands writes
         # must leave a state the replay repairs, not one that crashes
@@ -293,6 +293,7 @@ class IncrementalDedup:
             spark, self.sigs_path
         )
         if have_history:
+            # by-name schema: older (doc_id, band_id, band_hash) files too
             old_bands = (
                 spark.read.schema(BANDS_SCHEMA)
                 .parquet(self.bands_path)
@@ -323,11 +324,7 @@ class IncrementalDedup:
             all_sigs = store_sigs
 
         # collisions inside the batch itself
-        from lsh_forest_for_multi_vector_retrieval_spark.operators.pairs import (
-            candidate_pairs,
-        )
-
-        intra = candidate_pairs(new_bands, cfg)
+        intra = stage["candidates"](spark, {"bands": new_bands})
         # one distinct suffices: it follows the union, subsuming the
         # per-source dedup (review: the inner distinct was a second full
         # shuffle of the history-collision pairs every batch)
@@ -341,9 +338,9 @@ class IncrementalDedup:
         # under a previously partition-less empty table trips the parquet
         # reader's partition-schema assertion). Checkpointing severs the
         # lineage so the writes below consume only materialized data.
-        verified = verify_pairs(cands, all_sigs, cfg).localCheckpoint(
-            eager=True
-        )
+        verified = stage["verified"](
+            spark, {"candidates": cands, "signatures": all_sigs}
+        ).localCheckpoint(eager=True)
 
         def _write(df: DataFrame, path: str) -> None:
             (

@@ -128,19 +128,56 @@ def test_simhash_pairs_catch_exact_dups(corpus):
 
 
 def test_unpersisted_path_matches_and_checkpoints_pairs(result, corpus):
-    """Round-5 review: with persist_intermediates=False the verify
-    prune's two traversals of the pair plan must NOT each re-run the
-    band/bucket chain — verify_pairs materializes the slim pair table
-    once (eager localCheckpoint) for uncached inputs. Results identical
-    to the persisted path; the verified plan reads a checkpointed RDD
-    scan, not a second band chain."""
-    res = minhash_dedup(corpus, CFG, persist_intermediates=False)
+    """Round-5 review: verifying an UNCACHED candidate plan must not
+    re-run the band/bucket chain once per traversal of the verify
+    prune — ``verify_pairs`` materializes the slim pair table once
+    (eager localCheckpoint). Results identical to the persisted path;
+    the verified plan reads a checkpointed RDD scan, not a second band
+    chain."""
+    from pyspark import StorageLevel
+
+    from lsh_forest_for_multi_vector_retrieval_spark.operators.bands import (
+        with_signatures,
+    )
+    from lsh_forest_for_multi_vector_retrieval_spark.operators.dedup import (
+        flagship_bands,
+    )
+    from lsh_forest_for_multi_vector_retrieval_spark.operators.pairs import (
+        candidate_pairs,
+    )
+    from lsh_forest_for_multi_vector_retrieval_spark.operators.verify import (
+        verify_pairs,
+    )
+
+    # a plan the cache manager cannot match to result's persisted tables
+    sigs = with_signatures(corpus, CFG)
+    cands = candidate_pairs(flagship_bands(sigs, CFG), CFG)
+    assert cands.storageLevel == StorageLevel.NONE
+    verified = verify_pairs(cands, sigs, CFG)
     r1 = result.verified.select("doc_a", "doc_b", "jaccard")
-    r2 = res.verified.select("doc_a", "doc_b", "jaccard")
+    r2 = verified.select("doc_a", "doc_b", "jaccard")
     assert r1.exceptAll(r2).count() == 0
     assert r2.exceptAll(r1).count() == 0
-    plan = res.verified._jdf.queryExecution().executedPlan().toString()
+    plan = verified._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in plan, plan
+
+
+def test_minhash_dedup_caches_exactly_reused_stages(corpus):
+    """``minhash_dedup`` persists exactly ``REUSED_STAGES`` — the stage
+    outputs read twice or more — and ``unpersist`` releases all of
+    them."""
+    from pyspark import StorageLevel
+
+    from lsh_forest_for_multi_vector_retrieval_spark.operators.dedup import (
+        REUSED_STAGES,
+    )
+
+    res = minhash_dedup(corpus, CFG)
+    names = ["signatures", "bands", "candidates", "verified", "clusters"]
+    cached = {n for n in names if getattr(res, n).storageLevel != StorageLevel.NONE}
+    assert cached == set(REUSED_STAGES) == {"signatures", "candidates", "verified"}
+    res.unpersist()
+    assert all(getattr(res, n).storageLevel == StorageLevel.NONE for n in names)
 
 
 def test_idempotent_rerun(corpus):

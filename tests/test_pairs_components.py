@@ -575,18 +575,17 @@ def test_hamming_pairs_match_popcount_oracle(spark, max_hamming):
     assert want  # every budget has pairs to find
 
 
-def test_hamming_chunk_cols_has_one_blocking_home():
-    """The pigeonhole blocking kernel is referenced only where it is
-    defined and by ``pairs.chunk_blocks``: every SimHash / ahash /
-    hyperplane operator blocks through ``operators/pairs.py``, so a fix
-    to the blocking lands once."""
+def _package_references(names: set[str]) -> dict[str, set[str]]:
+    """``{package-relative path: the subset of names it references}`` —
+    names read, attribute-accessed, imported or defined (AST, so
+    comments and docstrings do not count)."""
     import ast
     from pathlib import Path
 
     import lsh_forest_for_multi_vector_retrieval_spark as pkg
 
     root = Path(pkg.__file__).parent
-    hits = set()
+    hits: dict[str, set[str]] = {}
     for path in root.rglob("*.py"):
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
             if isinstance(node, ast.Name):
@@ -597,6 +596,37 @@ def test_hamming_chunk_cols_has_one_blocking_home():
                 name = node.name
             else:
                 continue
-            if name == "hamming_chunk_cols":
-                hits.add(path.relative_to(root).as_posix())
-    assert hits == {"functions/simhash.py", "operators/pairs.py"}
+            if name in names:
+                hits.setdefault(path.relative_to(root).as_posix(), set()).add(name)
+    return hits
+
+
+def test_hamming_chunk_cols_has_one_blocking_home():
+    """The pigeonhole blocking kernel is referenced only where it is
+    defined and by ``pairs.chunk_blocks``: every SimHash / ahash /
+    hyperplane operator blocks through ``operators/pairs.py``, so a fix
+    to the blocking lands once."""
+    hits = _package_references({"hamming_chunk_cols"})
+    assert set(hits) == {"functions/simhash.py", "operators/pairs.py"}
+
+
+def test_flagship_has_one_composition():
+    """The flagship operators are composed once, in
+    ``dedup.flagship_stages``: the checkpointed pipeline and the
+    incremental batch run that stage list and call none of them, and
+    the band tables are reached only through ``dedup.flagship_bands`` —
+    so a config field cannot be honoured by one runner and ignored by
+    another."""
+    operators = {
+        "with_signatures",
+        "band_table",
+        "adaptive_band_table",
+        "candidate_pairs",
+        "verify_pairs",
+        "connected_components",
+    }
+    hits = _package_references(operators)
+    assert "plans/pipeline.py" not in hits, hits["plans/pipeline.py"]
+    assert "streaming/incremental.py" not in hits, hits["streaming/incremental.py"]
+    band_users = {p for p, n in hits.items() if n & {"band_table", "adaptive_band_table"}}
+    assert band_users == {"operators/bands.py", "operators/dedup.py"}

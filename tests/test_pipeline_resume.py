@@ -47,9 +47,9 @@ def test_full_run_then_resume_skips_everything(spark, corpus_path, tmp_path):
     ids=["fixed", "adaptive"],
 )
 def test_pipeline_bands_match_minhash_dedup(spark, tmp_path, cfg):
-    """The checkpointed pipeline buckets exactly like ``minhash_dedup``
-    under the same config — the band strategy (``use_adaptive_bands``)
-    included."""
+    """The checkpointed pipeline and ``minhash_dedup`` run the same
+    ``flagship_stages``: every stage output is row-identical under the
+    same config — the band strategy (``use_adaptive_bands``) included."""
     from lsh_forest_for_multi_vector_retrieval_spark.operators.dedup import (
         minhash_dedup,
     )
@@ -59,12 +59,22 @@ def test_pipeline_bands_match_minhash_dedup(spark, tmp_path, cfg):
         spark, n_clusters=8, cluster_size=3, n_singletons=20, seed=11
     ).write.parquet(p)
     run = dedup_pipeline(p, str(tmp_path / "wd"), cfg).run(spark)
-    got = run.outputs["bands"].select("band_id", "band_hash", "doc_id")
     res = minhash_dedup(spark.read.parquet(p), cfg)
+    cols = {
+        "signatures": ["doc_id", "shingles", "sig", "simhash"],
+        "bands": ["band_id", "band_hash", "doc_id"],
+        "candidates": ["doc_a", "doc_b"],
+        "verified": ["doc_a", "doc_b", "jaccard"],
+        "clusters": ["doc_id", "cluster_id"],
+    }
     try:
-        assert got.count() == res.bands.count() > 0
-        assert got.exceptAll(res.bands).isEmpty()
-        assert res.bands.exceptAll(got).isEmpty()
+        assert list(run.outputs) == list(cols)
+        for name, c in cols.items():
+            got = run.outputs[name].select(*c)
+            want = getattr(res, name).select(*c)
+            assert got.count() == want.count() > 0, name
+            assert got.exceptAll(want).isEmpty(), name
+            assert want.exceptAll(got).isEmpty(), name
     finally:
         res.unpersist()
 

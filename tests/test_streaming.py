@@ -43,6 +43,57 @@ def test_incremental_equals_batch(spark, tmp_path):
     assert want, "fixture produced no dup pairs"
 
 
+def test_store_with_legacy_band_column_order(spark, tmp_path):
+    """Band files were once written ``(doc_id, band_id, band_hash)``
+    (``band_table``'s order); they are now written ``(band_id,
+    band_hash, doc_id)``. History reads resolve columns by name, so a
+    store whose batch 0 holds the old order still finds every pair."""
+    from lsh_forest_for_multi_vector_retrieval_spark.operators.bands import (
+        band_table,
+        with_signatures,
+    )
+
+    pages = generate_pages(
+        spark, n_clusters=12, cluster_size=3, n_singletons=40, seed=21
+    ).select("doc_id", "text").persist()
+    # split by id range: the exact-dup copies (ids 36..65) pair with
+    # cluster bases and with each other across the split
+    half_a = pages.where(F.col("doc_id") < 40)
+    half_b = pages.where(F.col("doc_id") >= 40)
+
+    inc = IncrementalDedup(str(tmp_path / "state"), CFG)
+    inc.process_batch(half_a, 0)
+    # rewrite batch 0's band partition the way the old writer laid it out
+    (
+        band_table(with_signatures(half_a, CFG), CFG)
+        .withColumn("batch_id", F.lit(0))
+        .write.mode("overwrite")
+        .partitionBy("batch_id")
+        .parquet(inc.bands_path)
+    )
+    assert spark.read.parquet(inc.bands_path + "/batch_id=0").columns == [
+        "doc_id", "band_id", "band_hash",
+    ]
+    inc.process_batch(half_b, 1)
+    assert spark.read.parquet(inc.bands_path + "/batch_id=1").columns == [
+        "band_id", "band_hash", "doc_id",
+    ]
+
+    got = {
+        (r.doc_a, r.doc_b)
+        for r in inc.pairs(spark).select("doc_a", "doc_b").distinct().collect()
+    }
+    res = minhash_dedup(pages, CFG)
+    want = {
+        (r.doc_a, r.doc_b)
+        for r in res.verified.select("doc_a", "doc_b").collect()
+    }
+    res.unpersist()
+    pages.unpersist()
+    assert got == want
+    assert any(a < 40 <= b for a, b in want)  # history collisions exist
+
+
 def test_streaming_file_source(spark, tmp_path):
     pages = generate_pages(
         spark, n_clusters=6, cluster_size=2, n_singletons=20, seed=33

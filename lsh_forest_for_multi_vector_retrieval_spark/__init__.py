@@ -22,10 +22,10 @@ pandas kernels, never per row:
 * signatures: the MinHash and SimHash UDFs (``functions.minhash``,
   ``functions.simhash``) behind ``with_signatures``, hence behind dedup,
   incremental dedup and forest vote; the hyperplane SimHash of ``lsh_topk``
-* ``scoring="pandas"`` vector kernels (``functions.vectors``): cosine and dot
-  scoring, nearest-centroid assignment and centroid score vectors for
-  ``ivf_topk`` / ``plaid_topk``, and PLAID's chamfer max-sum re-rank
-  (their ``scoring="fold"`` twins are pure Catalyst)
+* ``scoring="pandas"`` vector kernels (``functions.vectors``): the ANN
+  family's cosine re-rank, nearest-centroid assignment and centroid score
+  vectors for ``ivf_topk`` / ``plaid_topk``, and PLAID's chamfer max-sum
+  re-rank (their ``"fold"`` twins are pure Catalyst)
 * the rolling hashes of ``operators.substring``, the ``mapInPandas``
   image extractors of ``operators.media``, and the seeded ``mapInPandas``
   generators under ``sources``

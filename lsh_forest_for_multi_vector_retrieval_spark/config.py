@@ -81,7 +81,8 @@ class DedupConfig:
     # Flagship band strategy: False = fixed-depth bands + max_bucket_docs
     # cap (default; the cap ledger records drops), True = variable-depth
     # adaptive_band_table (deepen hot buckets instead of capping them).
-    # tools/adaptive_ab.py A/Bs the two on a boilerplate-heavy corpus.
+    # ADAPTIVE_AB.json records an A/B of the two on a boilerplate-heavy
+    # corpus.
     use_adaptive_bands: bool = False
     # Minimum RESERVED permutation rows guaranteed to the adaptive path:
     # deepened bucket keys draw extra MinHash rows from positions past the

@@ -24,6 +24,8 @@ Two implementations with one semantics:
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column
@@ -69,12 +71,6 @@ def l2_sq_col(a: Column, b: Column) -> Column:
     return F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v)
 
 
-def hamming_col(a: Column, b: Column) -> Column:
-    """Hamming distance between packed 64-bit signatures (the reference's
-    default dist, lsh_forest.py:86) — one xor + popcount."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 def _stack_pair_batch(
     a: pd.Series, b: pd.Series
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
@@ -94,14 +90,13 @@ def _stack_pair_batch(
 
     A third bad shape is invisible at this layer: a null ELEMENT inside
     an otherwise-sound array crosses Arrow as NaN, so the row classifies
-    valid here and its einsum product is NaN. The kernels handle it
-    downstream: the dot kernel masks NaN results back to SQL NULL
-    (matching ``dot_col``, whose fold is NULL once any product is NULL)
-    and cosine's ``den > 0`` gate is False on a NaN denominator, giving
-    0.0 (matching ``cosine_col``'s NULL-condition ``otherwise(0.0)``);
-    an INF element instead leaves den positive while num (inf*0) or the
-    division (inf/inf) goes NaN — both cosine paths mask that row to
-    NULL (the pandas kernel's NaN mask; ``cosine_col``'s outer nanvl)."""
+    valid here and its einsum product is NaN. The cosine kernel handles
+    it downstream: its ``den > 0`` gate is False on a NaN denominator,
+    giving 0.0 (matching ``cosine_col``'s NULL-condition
+    ``otherwise(0.0)``); an INF element instead leaves den positive while
+    num (inf*0) or the division (inf/inf) goes NaN — both cosine paths
+    mask that row to NULL (the pandas kernel's NaN mask; ``cosine_col``'s
+    outer nanvl)."""
     arrs_a = [None if x is None else np.asarray(x, dtype=np.float64) for x in a]
     arrs_b = [None if x is None else np.asarray(x, dtype=np.float64) for x in b]
     null = np.array(
@@ -191,10 +186,20 @@ def centroid_scores_arr(centroids: list[list[float]], vec_col: str) -> Column:
     row explosion. The struct ordering (score desc via array_max/sort,
     ties toward the LOWEST centroid id via ``negcid``) is the single
     tie-break rule shared by every argmax consumer: ``array_max(...)``
-    ["cid"] is the nearest cell, ``reverse(array_sort(...))`` the probe
-    order. Single home for the kernel duplicated by plaid.centroid_index
-    and ann.ivf_topk pre-round-5."""
-    cents_lit = _codebook_literal(centroids)
+    ["cid"] is the nearest cell (:func:`nearest_centroid`),
+    ``reverse(array_sort(...))`` the probe order.
+
+    Memoized on the codebook's values and ``vec_col``: ``ann.ivf_topk``
+    takes both the nearest cell and the probe order from one codebook,
+    and the expression build is a measured driver cost (see
+    ``_codebook_literal``), so it is paid once per call."""
+    codebook = tuple(tuple(float(v) for v in c) for c in centroids)
+    return _centroid_scores_arr(codebook, vec_col)
+
+
+@functools.lru_cache(maxsize=8)
+def _centroid_scores_arr(codebook: tuple, vec_col: str) -> Column:
+    cents_lit = _codebook_literal(codebook)
     return F.transform(
         cents_lit,
         lambda c: F.struct(
@@ -203,6 +208,27 @@ def centroid_scores_arr(centroids: list[list[float]], vec_col: str) -> Column:
             c["cid"].alias("cid"),
         ),
     )
+
+
+def nearest_centroid(
+    codebook: list[list[float]], vec_col: str, assignment: str
+) -> Column:
+    """The codebook POSITION nearest to ``vec_col`` (max dot, ties to the
+    lowest position) — the one nearest-centroid kernel choice of
+    ``ann.ivf_topk`` and ``plaid.centroid_index``.
+
+    ``assignment="fold"``: ``array_max`` over :func:`centroid_scores_arr`
+    — interpreted per element, bit-reproducible, what the fixture
+    oracles pin. ``"pandas"``: :func:`nearest_centroid_pandas_udf`, one
+    Arrow-batched GEMM + argmax per batch — the production path;
+    ulp-level reduction-order variance can flip an EXACT score tie, so
+    oracle comparisons keep the fold."""
+    if assignment == "fold":
+        return F.array_max(centroid_scores_arr(codebook, vec_col))["cid"]
+    if assignment == "pandas":
+        return nearest_centroid_pandas_udf(codebook)(F.col(vec_col))
+    # a typo ("Pandas") must not silently fall back to the slow path
+    raise ValueError(f"assignment must be 'fold' or 'pandas', got {assignment!r}")
 
 
 def nearest_centroid_pandas_udf(centroids: list[list[float]]):
@@ -380,38 +406,6 @@ def chamfer_pair_pandas_udf():
     return _chamfer
 
 
-def dot_pandas_udf():
-    """Arrow-batched exact dot product over ``(array, array)`` row pairs —
-    the plain-dot sibling of :func:`cosine_pandas_udf`, used by the PLAID
-    interaction scorer's ``scoring="pandas"`` production path (the
-    centroid-score and exact-rerank stages are max-sum-of-DOTS, not
-    cosine). Null/ragged rows score NULL, matching the fold path; so do
-    rows whose arrays carry null ELEMENTS (Arrow surfaces those as NaN,
-    which would otherwise outrank every real score — see
-    ``_stack_pair_batch``)."""
-
-    @pandas_udf("double")
-    def _dot(a: pd.Series, b: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
-        valid, _null, arrs_a, arrs_b = _stack_pair_batch(a, b)
-        vals = _pairwise_dense(
-            valid, arrs_a, arrs_b, lambda ma, mb: np.einsum("ij,ij->i", ma, mb)
-        )
-        # null ELEMENTS cross Arrow as NaN and einsum propagates them;
-        # fold semantics are NULL (any NULL product folds the sum to
-        # NULL), and NULL — unlike NaN — cannot outrank real scores
-        nan_rows = np.isnan(vals)
-        if nan_rows.any():
-            valid[np.flatnonzero(valid)[nan_rows]] = False
-            vals = vals[~nan_rows]
-        if valid.all():
-            return pd.Series(vals)
-        return _scatter_valid(valid, vals)
-
-    return _dot
-
-
 def cosine_pandas_udf():
     """Arrow-batched exact cosine over ``(array, array)`` row pairs —
     one vectorized einsum per Arrow batch instead of an interpreted
@@ -437,7 +431,7 @@ def cosine_pandas_udf():
         vals = _pairwise_dense(valid, arrs_a, arrs_b, _cos_dense)
         # an inf element can make num NaN while den stays positive
         # (inf*0) or make the division NaN (inf/inf); mask those rows to
-        # NULL exactly like dot_pandas_udf and cosine_col's outer nanvl —
+        # NULL exactly like cosine_col's outer nanvl —
         # a NaN score would outrank every real one (round-5 review)
         nan_rows = np.isnan(vals)
         if nan_rows.any():

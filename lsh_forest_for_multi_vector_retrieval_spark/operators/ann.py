@@ -348,33 +348,25 @@ def ivf_topk(
     * ``round_digits``: round cosine BEFORE ranking (with the seeded
       codebook this makes the result bit-reproducible — fixture-oracle
       mode, same discipline as ``lsh_topk``/``plaid_topk``).
-    * ``assignment``: "fold" (default) computes corpus cell ids with the
-      interpreted JVM left-fold — bit-reproducible by the pure-Python
-      fixture, but HOF lambdas pay an interpreted expression tree per
-      element (~n_centroids*dim ops/row). "pandas" computes them with one
-      Arrow-batched NumPy GEMM + argmax — the production path (alternated
-      sf0.1 minima 5.4s vs 7.3s; the residue is codebook collect+train
-      and the ensure_k pass, not assignment); ulp-level GEMM
-      reduction-order variance
-      can flip argmax only on exact centroid-score ties, so results are
-      equal in practice but not provably bit-stable — keep "fold" for
-      oracle comparisons. Query probing always uses the fold (the query
-      side is small).
+    * ``assignment``: the corpus cell kernel,
+      ``functions.vectors.nearest_centroid`` — "fold" (default) is the
+      interpreted, bit-reproducible left-fold (~n_centroids*dim ops/row);
+      "pandas" is one Arrow-batched GEMM + argmax, the production path
+      (alternated sf0.1 minima 5.4s vs 7.3s; the residue is codebook
+      collect+train and the ensure_k pass, not assignment). Query probing
+      always uses the fold (the query side is small).
 
     Reference analog: DESCEND + collect + exact re-rank
     (lsh_forest.py:76-108) with k-means cells instead of hash prefixes.
     """
     from lsh_forest_for_multi_vector_retrieval_spark.functions.vectors import (
         centroid_scores_arr,
-        nearest_centroid_pandas_udf,
+        nearest_centroid,
     )
     from lsh_forest_for_multi_vector_retrieval_spark.operators.plaid import (
         sample_codebook,
     )
 
-    if assignment not in ("fold", "pandas"):
-        # a typo ("Pandas") must not silently fall back to the slow path
-        raise ValueError(f"assignment must be 'fold' or 'pandas', got {assignment!r}")
     cosine = _cosine_fn(scoring)
     if centroids is None:
         centroids = sample_codebook(
@@ -383,16 +375,13 @@ def ivf_topk(
         )
     # shared kernel (functions.vectors): struct order (s, -cid) makes
     # max/sort break ties toward the LOWEST centroid id, matching the
-    # fixture emulation
+    # fixture emulation; the fold cell and the probe share one literal
     scored_arr = centroid_scores_arr(centroids, vec_col)
-    cell = F.array_max(scored_arr)["cid"]
+    cell = nearest_centroid(centroids, vec_col, assignment)
     probe_cells = F.transform(
         F.slice(F.reverse(F.array_sort(scored_arr)), 1, nprobe),
         lambda x: x["cid"],
     )
-
-    if assignment == "pandas":
-        cell = nearest_centroid_pandas_udf(centroids)(F.col(vec_col))
     c_cells = corpus.select(
         F.col(id_col).alias("n_id"),
         F.col(vec_col).alias("n_vec"),

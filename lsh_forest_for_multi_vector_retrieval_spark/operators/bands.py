@@ -31,7 +31,6 @@ def with_signatures(
     df: DataFrame,
     cfg: DedupConfig = DedupConfig(),
     text_col: str = "text",
-    include_simhash: bool = True,
 ) -> DataFrame:
     """text -> shingles -> MinHash sig (+ SimHash). One narrow stage
     (plus an up-repartition when the source arrives under-partitioned)."""
@@ -51,10 +50,7 @@ def with_signatures(
     # adaptive band strategy is on (fresh permutations past the base bands)
     mh = minhash_udf(cfg.signature_len, cfg.minhash_seed)
     out = out.withColumn("sig", mh(F.col("shingles")))
-    if include_simhash:
-        sh = simhash_udf()
-        out = out.withColumn("simhash", sh(F.col("shingles")))
-    return out
+    return out.withColumn("simhash", simhash_udf()(F.col("shingles")))
 
 
 def band_table(

@@ -99,15 +99,14 @@ def forest_vote_scores(
     alpha: float = 0.5,
     beta: float = 0.4,
     use_popularity: bool = True,
-    skip_root: bool = True,
     weight_floor: float = 0.0,
     max_node_docs: int | None = 512,
 ) -> DataFrame:
     """(query_id, doc_id, score): depth-weighted, popularity-penalized,
     per-tree- and per-query-normalized vote scores.
 
-    ``skip_root`` (forest_vote.py:279-280) drops depth-0; here depth
-    starts at 1, so it filters nothing unless disabled semantics change.
+    The reference's ``skip_root`` (forest_vote.py:279-280) needs no
+    filter here: ``prefix_table`` emits depths 1..r only, never the root.
     ``weight_floor`` (forest_vote.py:202-204) prunes negligible weights
     — a pushed-down predicate.
     ``max_node_docs`` is the reference's F5 pivot cap (lsh_forest.py:
@@ -163,9 +162,6 @@ def forest_vote_scores(
         "query_id", "doc_id", "band_id", F.col("m.depth").alias("depth"),
         F.col("m.node_docs").alias("node_docs"),
     )
-    if skip_root:
-        scored = scored.where(F.col("depth") >= 1)
-
     w = depth_weight_col(F.col("depth"), scheme, cfg.rows_per_band, gamma, alpha)
     if weight_floor > 0.0:
         scored = scored.where(w > weight_floor)

@@ -102,22 +102,6 @@ def recall_at_k(
     )
 
 
-def rank_of_true_nn(
-    predicted_ranks: DataFrame,
-    true_nn: DataFrame,
-    query_col: str = "q_id",
-    item_col: str = "n_id",
-) -> DataFrame:
-    """Where does the true NN land in the predicted ranking?
-    (test_query.py:108-144). predicted_ranks: (q, item, rank);
-    true_nn: (q, item). Missing -> null rank."""
-    return true_nn.join(
-        predicted_ranks.select(query_col, item_col, "rank"),
-        [query_col, item_col],
-        "left",
-    )
-
-
 def mrr_at_k(
     predicted_ranks: DataFrame,
     relevant: DataFrame,

@@ -142,7 +142,6 @@ def bucket_ids_capped(
 def candidate_pairs(
     bands: DataFrame,
     cfg: DedupConfig = DedupConfig(),
-    keep_band_id: bool = False,
 ) -> DataFrame:
     """``(doc_a, doc_b)`` with ``doc_a < doc_b``, distinct across bands.
 
@@ -161,12 +160,11 @@ def candidate_pairs(
         bands, ["band_id", "band_hash"], cfg.max_bucket_docs, cfg.salt_partitions
     )
     pair_structs = star_pair_structs(F.col("ids"), cfg.bucket_pivots)
-    pairs = grouped.select(
-        F.col("band_id"), F.explode(pair_structs).alias("p")
-    ).select("band_id", "p.doc_a", "p.doc_b")
-    if keep_band_id:
-        return pairs
-    return pairs.select("doc_a", "doc_b").distinct()
+    return (
+        grouped.select(F.explode(pair_structs).alias("p"))
+        .select("p.doc_a", "p.doc_b")
+        .distinct()
+    )
 
 
 def bucket_drop_stats(

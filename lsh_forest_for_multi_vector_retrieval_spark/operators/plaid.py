@@ -9,7 +9,8 @@ is < ``t_cs``, union candidate docs from the index; (cells 7-8) centroid
 interaction score ``S_cq[doc_cids].max(axis=0).sum()`` and rank.
 
 Spark mapping (SURVEY §2.9): KMeans via ``pyspark.ml`` (P2); the inverted
-index is an exploded ``(centroid_id, doc_id)`` DataFrame (P3); pruning is
+index is one ``(doc_id, cposs)`` row per doc, exploded for the candidate
+join (P3, ``centroid_index``); pruning is
 a window top-nprobe + a ``max >= t_cs`` filter; the max-then-sum
 interaction score is the V2 chamfer shape — two hash aggregates. The
 centroid table is tiny and broadcast everywhere; the only wide ops are
@@ -25,7 +26,7 @@ from pyspark.sql import functions as F
 from lsh_forest_for_multi_vector_retrieval_spark.functions.vectors import (
     centroid_scores_arr,
     dot_col,
-    nearest_centroid_pandas_udf,
+    nearest_centroid,
 )
 from lsh_forest_for_multi_vector_retrieval_spark.operators.forest_vote import get_top_k
 
@@ -93,7 +94,7 @@ def train_codebook(
     if not init:
         # np.stack([]) would raise a cryptic "need at least one array to
         # stack" deep inside Lloyd — same explicit guard as
-        # centroid_index's "centroids table is empty"
+        # plaid_topk's "centroids table is empty"
         raise ValueError(
             "codebook sample is empty — the input vectors DataFrame has no rows"
         )
@@ -174,72 +175,26 @@ def sample_codebook(
     return train_codebook([r["_v"] for r in rows], k, iters, normalize, round_digits)
 
 
-def nearest_centroid_col(centroids: list[list[float]], vec_col: str) -> "F.Column":
-    """Nearest-centroid (max dot, ties to lowest id) as ONE projection
-    expression over a LITERAL codebook — no join, no shuffle, no row
-    explosion. Same fold arithmetic as the old crossJoin scoring
-    (``dot_col``), so assignments are bit-identical. The kernel lives in
-    ``functions.vectors.centroid_scores_arr`` — single home shared with
-    ``ann.ivf_topk``'s cell assignment."""
-    return F.array_max(centroid_scores_arr(centroids, vec_col))["cid"]
-
-
 def centroid_index(
     doc_vectors: DataFrame,
-    centroids: DataFrame,
+    codebook: list[list[float]],
     doc_col: str = "doc_id",
     vec_col: str = "embedding",
     assignment: str = "fold",
 ) -> DataFrame:
-    """P3: the inverted index. Every doc token is assigned to its nearest
-    (max-dot) centroid; output is the distinct exploded ``(centroid_id,
-    doc_id)`` form — kept exploded rather than collect_set'd, per SURVEY
-    §1.3, so downstream joins stay relational.
-
-    Assignment is a LITERAL-codebook argmax projection (round-4 VERDICT
-    #2/"Next #3"): the old plan crossJoined every token vector against the
-    centroid table and took argmax through a ``row_number`` window
-    partitioned by (doc_id, vector) — a |vectors| x k row explosion
-    through a full shuffle, the last 100x hazard in the headline plans.
-    The codebook is tiny (k <= a few hundred) and is collected once and
-    embedded as a literal — note that makes building this plan a small
-    blocking Spark action (one scan of the k-row centroid table), the
-    price of a no-shuffle whole-stage-codegen assignment projection with
-    bit-identical results (same ``dot_col`` fold per centroid, same
-    desc-score / asc-id tie-break).
-
-    ``centroid_id`` need not be dense 0..k-1: the argmax runs over
-    codebook POSITIONS (id-sorted, so position ties = lowest-id ties)
-    and positions map back to the real ids through a k-element literal
-    lookup — a filtered codebook (e.g. empty cells dropped) keeps its
-    original ids in the output.
-
-    ``assignment="pandas"``: Arrow-batched NumPy GEMM + argmax — the
-    production path for wide codebooks (same trade as ``ann.ivf_topk``:
-    ulp-level reduction-order variance can flip exact ties, so keep
-    "fold" for fixture-oracle comparisons)."""
-    if assignment not in ("fold", "pandas"):
-        raise ValueError(f"assignment must be 'fold' or 'pandas', got {assignment!r}")
-    rows = sorted(
-        centroids.select("centroid_id", "centroid").collect(),
-        key=lambda r: r.centroid_id,
-    )
-    if not rows:
-        raise ValueError("centroids table is empty")
-    codebook = [r.centroid for r in rows]
-    if assignment == "pandas":
-        pos = nearest_centroid_pandas_udf(codebook)(F.col(vec_col))
-    else:
-        pos = nearest_centroid_col(codebook, vec_col)
-    ids = [r.centroid_id for r in rows]
-    if ids == list(range(len(rows))):
-        cell = pos  # dense table: position IS the id — skip the lookup
-    else:
-        cell = F.element_at(F.array(*[F.lit(i) for i in ids]), pos + F.lit(1))
+    """P3: the inverted index, one row per doc: ``(doc_id, cposs)``, the
+    sorted distinct codebook POSITIONS of the doc's tokens. Each token's
+    position is ``functions.vectors.nearest_centroid`` (max dot, ties to the
+    lowest position) over the LITERAL codebook — a projection, so there is
+    no |vectors| x k crossJoin and no argmax window, and the only shuffle
+    is the groupBy, whose ``collect_set`` also dedups (centroid, doc).
+    Callers work on positions, so a codebook whose ids are sparse needs
+    no id lookup."""
+    pos = nearest_centroid(codebook, vec_col, assignment)
     return (
-        doc_vectors.select(
-            cell.alias("centroid_id"), F.col(doc_col).alias("doc_id")
-        ).distinct()
+        doc_vectors.select(pos.alias("cpos"), F.col(doc_col).alias("doc_id"))
+        .groupBy("doc_id")
+        .agg(F.sort_array(F.collect_set("cpos")).alias("cposs"))
     )
 
 
@@ -312,11 +267,9 @@ def plaid_topk(
     quantization then only decides the pool, not the final order — the
     same cheap-candidates -> exact-verify split as the dedup flagship.
 
-    ``assignment`` picks the nearest-centroid kernel for the inverted
-    index ("pandas" = the Arrow GEMM production path; "fold" =
-    bit-reproducible oracle path) — the same two kernels
-    :func:`centroid_index` exposes, applied inline here so the codebook
-    is collected once.
+    ``assignment`` picks the nearest-centroid kernel of the inverted
+    index (:func:`centroid_index`): "pandas" = the Arrow GEMM production
+    path; "fold" = bit-reproducible oracle path.
 
     ``scoring`` picks the dot-product kernel for the query-token x centroid
     S_cq scores and the exact re-rank: "fold" (default) is the interpreted
@@ -343,18 +296,15 @@ def plaid_topk(
     arithmetic, same max semantics, same q_idx-ordered sum."""
     if scoring not in ("fold", "pandas"):
         raise ValueError(f"scoring must be 'fold' or 'pandas', got {scoring!r}")
-    if assignment not in ("fold", "pandas"):
-        raise ValueError(f"assignment must be 'fold' or 'pandas', got {assignment!r}")
     from lsh_forest_for_multi_vector_retrieval_spark.functions.vectors import (
         centroid_scorevec_pandas_udf,
         chamfer_pair_pandas_udf,
     )
 
     # one bounded collect of the tiny codebook, shared by assignment AND
-    # scoring (the former plan collected it inside centroid_index and
-    # additionally broadcast the centroid table for S_cq). All internal
-    # arithmetic runs over codebook POSITIONS in centroid_id order —
-    # position ties == lowest-id ties, the centroid_index convention.
+    # scoring. All internal arithmetic runs over codebook POSITIONS in
+    # centroid_id order — position ties == lowest-id ties, so sparse
+    # centroid ids need no lookup.
     crows = sorted(
         centroids.select("centroid_id", "centroid").collect(),
         key=lambda r: r.centroid_id,
@@ -364,24 +314,14 @@ def plaid_topk(
     codebook = [r.centroid for r in crows]
     n_cents = len(codebook)
 
-    # inverted index over positions (the literal-argmax projection),
-    # aggregated straight to its per-doc array form: groupBy +
-    # collect_set dedups (centroid, doc) in the SAME exchange the former
-    # distinct + groupBy pair spent two on, and the eager localCheckpoint
-    # stops the corpus assignment subtree from executing once per
-    # consumer (the candidate join AND the score projection both read it;
-    # Spark has no cross-branch subtree reuse). One row per doc, a few
-    # ints wide — ContextCleaner-released, the repo's established pattern.
-    if assignment == "pandas":
-        pos = nearest_centroid_pandas_udf(codebook)(F.col(vec_col))
-    else:
-        pos = F.array_max(centroid_scores_arr(codebook, vec_col))["cid"]
-    doc_cents = (
-        doc_vectors.select(pos.alias("cpos"), F.col(doc_col).alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.sort_array(F.collect_set("cpos")).alias("cposs"))
-        .localCheckpoint(eager=True)
-    )
+    # the eager localCheckpoint stops the corpus assignment subtree from
+    # executing once per consumer (the candidate join AND the score
+    # projection both read it; Spark has no cross-branch subtree reuse).
+    # One row per doc, a few ints wide — ContextCleaner-released, the
+    # repo's established pattern.
+    doc_cents = centroid_index(
+        doc_vectors, codebook, doc_col, vec_col, assignment
+    ).localCheckpoint(eager=True)
     index = doc_cents.select("doc_id", F.explode("cposs").alias("cpos"))
 
     # S_cq: per query token, the score against EVERY centroid as one

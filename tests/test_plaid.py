@@ -91,15 +91,21 @@ def test_build_centroids_ml_path(spark, doc_vectors, query_vectors):
     assert sum(1 for q, d in top1.items() if q == d) >= 6, top1
 
 
+def _codebook(centroids):
+    return [r.centroid for r in centroids.orderBy("centroid_id").collect()]
+
+
 def test_centroid_index_covers_every_doc(doc_vectors, centroids):
-    idx = centroid_index(doc_vectors, centroids)
-    # every doc appears; centroid ids are within range
-    assert idx.select("doc_id").distinct().count() == N_DOCS
-    cids = {r.centroid_id for r in idx.select("centroid_id").distinct().collect()}
-    assert cids <= set(range(12))
-    # a doc has at most TOKS_PER_DOC distinct centroids
-    mx = idx.groupBy("doc_id").count().agg(F.max("count")).first()[0]
-    assert mx <= TOKS_PER_DOC
+    idx = centroid_index(doc_vectors, _codebook(centroids))
+    assert idx.columns == ["doc_id", "cposs"]
+    rows = idx.collect()
+    # one row per doc; positions are within the codebook, sorted and
+    # distinct, at most one per token
+    assert sorted(r.doc_id for r in rows) == list(range(N_DOCS))
+    for r in rows:
+        assert r.cposs == sorted(set(r.cposs)), r
+        assert set(r.cposs) <= set(range(12)), r
+        assert 1 <= len(r.cposs) <= TOKS_PER_DOC, r
 
 
 def test_centroid_index_no_crossjoin_and_matches_legacy_plan(
@@ -111,14 +117,16 @@ def test_centroid_index_no_crossjoin_and_matches_legacy_plan(
     from pyspark.sql import Window
     from lsh_forest_for_multi_vector_retrieval_spark.functions.vectors import dot_col
 
-    idx = centroid_index(doc_vectors, centroids)
+    codebook = _codebook(centroids)
+    idx = centroid_index(doc_vectors, codebook)
     plan = idx._jdf.queryExecution().executedPlan().toString()
     for bad in ("CartesianProduct", "BroadcastNestedLoopJoin", "Window"):
         assert bad not in plan, f"{bad} in plan:\n{plan}"
-    # the only exchange left is the final distinct's hash aggregate
+    # the only exchange left is the per-doc collect_set aggregate
     assert plan.count("Exchange") <= 1, plan
 
-    # legacy formulation (the pre-round-5 plan) must give identical rows
+    # legacy formulation (the pre-round-5 plan) must give identical rows;
+    # the fixture's ids are dense, so a position is the centroid id
     scored = doc_vectors.select("doc_id", "embedding").crossJoin(
         F.broadcast(centroids)
     )
@@ -133,32 +141,30 @@ def test_centroid_index_no_crossjoin_and_matches_legacy_plan(
         .select("centroid_id", "doc_id")
         .distinct()
     )
-    assert idx.exceptAll(legacy).count() == 0
-    assert legacy.exceptAll(idx).count() == 0
+    exploded = idx.select(F.explode("cposs").alias("centroid_id"), "doc_id")
+    assert exploded.exceptAll(legacy).count() == 0
+    assert legacy.exceptAll(exploded).count() == 0
 
     # pandas GEMM path agrees (ties are absent in this float data)
-    pidx = centroid_index(doc_vectors, centroids, assignment="pandas")
+    pidx = centroid_index(doc_vectors, codebook, assignment="pandas")
     assert pidx.exceptAll(idx).count() == 0
     assert idx.exceptAll(pidx).count() == 0
 
 
-def test_centroid_index_sparse_ids(doc_vectors, centroids):
-    """A filtered codebook (sparse, non-dense centroid ids) must keep its
-    REAL ids in the output: the argmax runs over id-sorted positions and
-    maps back through a literal lookup. A monotonic remap preserves the
-    lowest-id tie-break, so assignments correspond 1:1 to the dense
-    table's."""
-    dense = centroid_index(doc_vectors, centroids)
+def test_plaid_topk_sparse_centroid_ids(doc_vectors, query_vectors, centroids):
+    """A filtered codebook (sparse, non-dense centroid ids) ranks exactly
+    like the dense one: plaid_topk works on id-sorted codebook positions,
+    and a monotonic id remap keeps the lowest-id tie-break."""
     sparse_cents = centroids.select(
         (F.col("centroid_id") * 3 + 2).alias("centroid_id"), "centroid"
     )
     for mode in ("fold", "pandas"):
-        sparse = centroid_index(doc_vectors, sparse_cents, assignment=mode)
-        remapped = dense.select(
-            (F.col("centroid_id") * 3 + 2).alias("centroid_id"), "doc_id"
-        )
-        assert sparse.exceptAll(remapped).count() == 0, mode
-        assert remapped.exceptAll(sparse).count() == 0, mode
+        kw = dict(k=5, nprobe=3, assignment=mode, scoring=mode)
+        dense = plaid_topk(doc_vectors, query_vectors, centroids, **kw)
+        sparse = plaid_topk(doc_vectors, query_vectors, sparse_cents, **kw)
+        assert sparse.exceptAll(dense).count() == 0, mode
+        assert dense.exceptAll(sparse).count() == 0, mode
+        assert dense.count() > 0, mode
 
 
 def test_plaid_ranks_planted_doc_first(doc_vectors, query_vectors, centroids):

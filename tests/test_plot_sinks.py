@@ -121,30 +121,6 @@ def test_multi_line_series_colors_and_legend(tmp_path):
         P.multi_line_png(out, {"a": ([1.0], [1.0, 2.0])})
 
 
-def test_write_sweep_artifacts(tmp_path):
-    import csv
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    from grid_sweep import write_sweep_artifacts
-
-    rows = [
-        {"num_bands": nb, "rows_per_band": rpb, "jaccard_threshold": t,
-         "recall": 0.9 + 0.01 * nb / 8, "precision": 0.8 + t / 10}
-        for nb, rpb in [(8, 16), (16, 8)]
-        for t in (0.7, 0.8, 0.9)
-    ]
-    written = write_sweep_artifacts(rows, out_dir=str(tmp_path / "charts"))
-    assert len(written) == 3
-    with open(written[0]) as f:
-        assert len(list(csv.DictReader(f))) == len(rows)
-    for png in written[1:]:
-        w, h, px = decode_png(open(png, "rb").read())
-        assert (w, h) == (640, 480)
-        assert any(c == P.SERIES_COLORS[1] for c in px.values())
-
-
 def test_line_and_trend_render(tmp_path):
     P.line_png(str(tmp_path / "l.png"), [0, 1, 2, 3], [1.0, 3.0, 2.0, 5.0])
     P.scatter_trend_png(str(tmp_path / "t.png"),

@@ -78,14 +78,17 @@ def test_bench_corpus_path_fingerprints_recipe(monkeypatch):
 
 
 def test_bench_child_pythonpath_prepends(monkeypatch):
+    from pathlib import Path
+
     import bench
 
+    root = str(Path(bench.__file__).parent)
     monkeypatch.setenv("PYTHONPATH", "/some/spark/python")
     got = bench._child_pythonpath()
-    assert got.startswith("/root/repo")
+    assert got.startswith(root)
     assert "/some/spark/python" in got
     monkeypatch.delenv("PYTHONPATH")
-    assert bench._child_pythonpath() == "/root/repo"
+    assert bench._child_pythonpath() == root
 
 
 def test_entry_best_jaccard_covers_doc_b_side(spark):

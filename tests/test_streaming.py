@@ -16,12 +16,17 @@ from lsh_forest_for_multi_vector_retrieval_spark.streaming.incremental import (
 CFG = DedupConfig()
 
 
-def test_incremental_equals_batch(spark, tmp_path):
+@pytest.mark.parametrize("split", ["parity", "id_range"])
+def test_incremental_equals_batch(spark, tmp_path, split):
     pages = generate_pages(
         spark, n_clusters=12, cluster_size=3, n_singletons=40, seed=21
     ).select("doc_id", "text").persist()
-    half_a = pages.where(F.col("doc_id") % 2 == 0)
-    half_b = pages.where(F.col("doc_id") % 2 == 1)
+    if split == "parity":
+        in_batch_0 = F.col("doc_id") % 2 == 0
+    else:
+        in_batch_0 = F.col("doc_id") < 40
+    half_a = pages.where(in_batch_0)
+    half_b = pages.where(~in_batch_0)
 
     inc = IncrementalDedup(str(tmp_path / "state"), CFG)
     inc.process_batch(half_a, 0)
@@ -41,6 +46,11 @@ def test_incremental_equals_batch(spark, tmp_path):
     # arrivals (band collisions are deterministic, so equality holds)
     assert got == want
     assert want, "fixture produced no dup pairs"
+    if split == "id_range":
+        # with this seed every dup pair has ids of one parity, so only the
+        # range split joins a batch-1 doc against batch-0 history
+        crossing = [(a, b) for a, b in want if (a < 40) != (b < 40)]
+        assert crossing, "id-range split produced no cross-batch pair"
 
 
 def test_store_with_legacy_band_column_order(spark, tmp_path):

@@ -75,18 +75,18 @@ def main() -> int:
     # 4. (round-5) PLAID inverted-index assignment: literal-codebook argmax
     # projection — the round-4 crossJoin+window row explosion is gone
     from lsh_forest_for_multi_vector_retrieval_spark.operators.plaid import (
-        build_centroids,
         centroid_index,
+        sample_codebook,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     corpus = emb.select((F.col("vec_id") / 4).cast("long").alias("doc_id"), "embedding")
-    cents = build_centroids(corpus, k=8, seed=42)
+    codebook = sample_codebook(corpus, k=8)
     sections.append((
         "plaid centroid_index (literal-codebook argmax assignment)",
-        plan_of(centroid_index(corpus, cents)),
+        plan_of(centroid_index(corpus, codebook)),
         ["no CartesianProduct / join for assignment",
-         "only shuffle is the final distinct"],
+         "only shuffle is the per-doc collect_set groupBy"],
     ))
 
     # 5. (round-5) streaming history probe: micro-batch side broadcast,
@@ -212,7 +212,8 @@ def main() -> int:
         "CartesianProduct" not in pl
         and "Join" not in pl
         and len(set(_re.findall(r"(?<!Broadcast)Exchange \((\d+)\)", pl))) <= 1,
-        "literal-codebook argmax; the single Exchange is the output distinct "
+        "literal-codebook argmax; the single Exchange is the per-doc "
+        "collect_set groupBy "
         "(round-4 VERDICT #2: the old plan exploded |vectors|xK rows through "
         "a crossJoin + row_number window shuffle)",
     )

@@ -391,7 +391,7 @@ def q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-bucketed ANN top-10 for the first 20 vectors — the FAISS
     IVF-flat shape next to lsh_ann_topk's hyperplane blocks: pinned
     deterministic codebook (plaid.sample_codebook), literal-array cell
-    assignment, top-nprobe probing, cell join, exact cosine rounded to
+    assignment, top-nprobe probing, cell probe, exact cosine rounded to
     6dp BEFORE ranking, ties by n_id, ensure_k root fallback.
     Deterministic end to end, so the oracle is an expected-parquet
     fixture from an independent pure-Python emulation."""

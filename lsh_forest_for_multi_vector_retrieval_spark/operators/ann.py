@@ -1,30 +1,38 @@
 """Approximate/exact nearest-neighbor search over an embedding column.
 
-Reference analog: ``LSHForest.query`` (/root/reference/src/shared/
-lsh_forest.py:76-108, utils.py:168-187) — DESCEND to a bucket, collect
-candidates, ASCEND when a query is short, exact re-rank, top-k. Three
-strategies; only the probe differs between them:
+Reference analog: ``LSHForest.query`` (reference ``src/shared/
+lsh_forest.py:76-108``, ``utils.py:168-187``) — DESCEND to a bucket,
+collect candidates, ASCEND when a query is short, exact re-rank, top-k.
+Three strategies; only the probe differs between them:
 
 * ``brute_force_topk``: the exact baseline (the reference's brute_nn
-  oracle, notebooks/lsh_forest.ipynb cell 1) — every query takes the
-  root scan: query x corpus with the *small side broadcast*.
-* ``lsh_topk``: hyperplane-SimHash both sides and block on bit-chunks of
-  the signature (``pairs.chunk_blocks``); candidates are the corpus
-  vectors sharing a chunk. Shuffle is bounded by block sizes, never
-  |Q|x|N|.
+  oracle, notebooks/lsh_forest.ipynb cell 1) — query x corpus with the
+  queries broadcast, relational.
+* ``lsh_topk``: hyperplane-SimHash both sides; candidates are the corpus
+  vectors sharing a signature chunk (``pairs.chunk_values``) with the
+  query.
 * ``ivf_topk``: the FAISS IVF-flat shape — k-means cells over a literal
   codebook; candidates are the corpus vectors in a query's top-``nprobe``
   cells.
 
-Shared pieces: ``_short_queries`` (the ``ensure_k`` gate), ``_root_scan``
-(the exact broadcast fallback, and all of ``brute_force_topk``) and
-``_rerank_topk`` (exact cosine + ``forest_vote.get_top_k``).
+``lsh_topk`` and ``ivf_topk`` share one core, ``_probe_topk``, in the
+shape of REPOSE (ICDE 2021): each corpus partition answers top-k
+locally, and one step merges. The query batch is collected once and
+broadcast; one ``mapInArrow`` pass over the corpus partitions applies the
+probe mask, drops self-matches and keeps, per (partition, query), a
+provable superset of the local top-k. The corpus is never shuffled: only
+that small candidate table reaches ``_rerank_topk`` (exact cosine +
+``forest_vote.get_top_k``), the re-rank tail of all three strategies.
 """
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
 from lsh_forest_for_multi_vector_retrieval_spark.functions.simhash import (
     hyperplane_simhash_udf,
@@ -35,8 +43,8 @@ from lsh_forest_for_multi_vector_retrieval_spark.functions.vectors import (
 )
 from lsh_forest_for_multi_vector_retrieval_spark.operators.forest_vote import get_top_k
 from lsh_forest_for_multi_vector_retrieval_spark.operators.pairs import (
-    chunk_blocks,
     chunk_self_join,
+    chunk_values,
 )
 
 
@@ -68,39 +76,391 @@ def _cosine_fn(scoring: str):
     return cosine_pandas_udf() if scoring == "pandas" else cosine_col
 
 
-def _short_queries(cand: DataFrame, q: DataFrame, k: int) -> DataFrame:
-    """The rows of ``q`` whose ``q_id`` holds fewer than ``k`` rows in
-    ``cand`` — the reference's ASCEND trigger (utils.py:168-187)."""
-    sat = (
-        cand.groupBy("q_id")
-        .agg(F.count("*").alias("n"))
-        .where(F.col("n") >= k)
-        .select("q_id")
-    )
-    return q.join(sat, "q_id", "left_anti")
-
-
-def _root_scan(short: DataFrame, corpus: DataFrame) -> DataFrame:
-    """``(q_id, q_vec, n_id, n_vec)`` for every (query, corpus vector)
-    pair but self-matches: the exact scan from the root, queries broadcast."""
-    return (
-        F.broadcast(short.select("q_id", "q_vec"))
-        .crossJoin(corpus.select("n_id", "n_vec"))
-        .where(F.col("q_id") != F.col("n_id"))
-    )
-
-
 def _rerank_topk(
     cand: DataFrame, cosine, k: int, round_digits: int | None = None
 ) -> DataFrame:
     """(q_id, n_id, cosine, rank): exact cosine over the candidate
-    vectors, optionally rounded BEFORE ranking, then the per-query top-k
-    (ties by ``n_id``)."""
+    vectors, optionally rounded BEFORE ranking, one row per ``(q_id,
+    n_id)``, then the per-query top-k (ties by ``n_id``). Scoring runs
+    before the one ``q_id`` exchange, which the per-pair max shares with
+    the window, so only scores are shuffled; when the corpus repeats an
+    id, its best-scoring vector counts."""
     cos = cosine(F.col("q_vec"), F.col("n_vec"))
     if round_digits is not None:
         cos = F.round(cos, round_digits)
-    scored = cand.select("q_id", "n_id", cos.alias("cosine"))
+    scored = (
+        cand.select("q_id", "n_id", cos.alias("cosine"))
+        .repartition("q_id")
+        .groupBy("q_id", "n_id")
+        .agg(F.max("cosine").alias("cosine"))
+    )
     return get_top_k(scored, k, "q_id", "n_id", "cosine")
+
+
+# --------------------------------------------------------------------------
+# _probe_topk: broadcast queries, one corpus pass, local top-k, one merge.
+#
+# A level is a tuple of probe keys ``(key column, positional)``; a corpus
+# row is a level's candidate for a query when any key matches (the empty
+# tuple is the root: every row). A key column holds an array per row on
+# both sides. ``positional``: query element j matches corpus element j
+# (LSH chunk c against chunk c); otherwise every query element is matched
+# against the corpus row's single element (IVF probe cells against the
+# row's cell). NULL elements match nothing.
+
+
+def _keep_margin(round_digits: int | None) -> float:
+    """How far below a partition's k-th best approximate cosine a row may
+    score and still be kept. A dropped row has k rows (distinct ids) in
+    its partition scoring more than ``10**-round_digits`` above it, so
+    they still score strictly higher after HALF_UP rounding and it cannot
+    reach the global top-k; the ``1e-9`` covers the NumPy-vs-exact ulps."""
+    return (0.0 if round_digits is None else 10.0 ** -round_digits) + 1e-9
+
+
+def _list_parts(col):
+    """``(offsets, lengths, valid, values)`` of an Arrow list array; the
+    offsets index ``values`` directly."""
+    off = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    return off, np.diff(off), col.is_valid().to_numpy(zero_copy_only=False), col.values
+
+
+def _key_matrix(col, width: int):
+    """``(vals, ok)``, both ``(rows, width)``: a key column as int64 with
+    its element validity; rows of another length match nothing."""
+    import pyarrow.compute as pc
+
+    off, lens, valid, values = _list_parts(col)
+    vals = np.zeros((len(col), width), dtype=np.int64)
+    ok = np.zeros((len(col), width), dtype=bool)
+    rows = np.flatnonzero(valid & (lens == width))
+    if len(rows) and width:
+        idx = off[rows][:, None] + np.arange(width)
+        vals[rows] = pc.fill_null(values, 0).to_numpy(zero_copy_only=False)[idx]
+        ok[rows] = values.is_valid().to_numpy(zero_copy_only=False)[idx]
+    return vals, ok
+
+
+def _dense_view(col, dims) -> dict:
+    """``{dim: (at, mat, norms)}`` of an Arrow vector column: ``at[row]``
+    is the row's index in ``mat`` when its vector is non-NULL, of length
+    ``dim`` and finite, else -1."""
+    off, lens, valid, values = _list_parts(col)
+    flat = values.to_numpy(zero_copy_only=False).astype(np.float64)  # NULL -> NaN
+    view = {}
+    for dim in dims:
+        rows = np.flatnonzero(valid & (lens == dim))
+        mat = flat[off[rows][:, None] + np.arange(dim)]
+        fin = np.isfinite(mat).all(axis=1)
+        at = np.full(len(col), -1)
+        at[rows[fin]] = np.arange(fin.sum())
+        with np.errstate(all="ignore"):
+            view[dim] = (at, mat[fin], np.linalg.norm(mat[fin], axis=1))
+    return view
+
+
+def _approx_cosine(view: dict, qv, rows):
+    """``(score, dirty)`` of one query vector against ``rows`` of a
+    ``_dense_view``: the NumPy cosine, with ``dirty`` set where it cannot
+    stand in for the exact re-rank score — a NULL, ragged, wrong-dim or
+    non-finite vector on either side, or a non-finite product. Zero
+    norms score 0.0, like ``cosine_col``."""
+    score = np.zeros(len(rows))
+    dirty = np.ones(len(rows), dtype=bool)
+    if qv is None:
+        return score, dirty
+    at, mat, norms = view[len(qv)]
+    idx = at[rows]
+    ok = idx >= 0
+    with np.errstate(all="ignore"):
+        num = mat[idx[ok]] @ qv
+        den = np.linalg.norm(qv) * norms[idx[ok]]
+        s = np.where(den > 0, num / np.where(den > 0, den, 1.0), 0.0)
+    score[ok] = s
+    dirty[ok] = ~(np.isfinite(num) & np.isfinite(den) & np.isfinite(s))
+    return score, dirty
+
+
+def _keep_floor(score, dirty, ids, k: int, margin: float) -> float:
+    """The keep threshold of one (partition, query, level): the k-th best
+    clean score over distinct ids, minus ``margin``; ``-inf`` (keep all)
+    while fewer than k distinct ids score clean."""
+    clean = ~dirty
+    if clean.sum() < k:
+        return -np.inf
+    s, i = score[clean], ids[clean]
+    order = np.argsort(-s, kind="stable")
+    _, first = np.unique(i[order], return_index=True)
+    if len(first) < k:
+        return -np.inf
+    return s[order][np.sort(first)[k - 1]] - margin
+
+
+def _probe_kernel(bq, levels: list, k: int, margin: float, counts: bool, schema):
+    """The ``mapInArrow`` body of ``_probe_topk`` over ``(n_id, n_vec,
+    *keys)``. Per query and level it keeps every candidate row that is
+    dirty or scores within ``margin`` of the partition's k-th best, and
+    with ``counts`` one count row: ``n`` distinct candidate ids (capped
+    at k) and, below k, the ids themselves. It decides no final score or
+    rank; rows stream through, so memory holds only what is kept."""
+
+    def run(batches):
+        import pyarrow as pa
+
+        q = bq.value
+        live = [j for j, x in enumerate(q["ids"]) if x is not None]
+        dims = {len(v) for v in q["dense"] if v is not None}
+        kept: dict = {}  # (level, query) -> [[sub, rows, score, dirty, ids]]
+        seen: dict = {}  # (level, query) -> distinct candidate ids
+        subs = []
+        for b in batches:
+            if not b.num_rows:
+                continue
+            nid = b.column(0)
+            ids = (
+                np.array(nid.to_pylist(), dtype=object)
+                if nid.null_count
+                else nid.to_numpy(zero_copy_only=False)
+            )
+            id_ok = nid.is_valid().to_numpy(zero_copy_only=False)
+            view = _dense_view(b.column(1), dims)
+            mats = {
+                c: _key_matrix(b.column(c), q["keys"][c][0].shape[1] if pos else 1)
+                for level in levels
+                for c, pos in level
+            }
+            fresh = []
+            for lvl, level in enumerate(levels):
+                for j in live:
+                    hit = id_ok & (ids != q["ids"][j])
+                    if level:
+                        hit &= np.logical_or.reduce(
+                            [_match(mats[c], q["keys"][c], j, pos) for c, pos in level]
+                        )
+                    rows = np.flatnonzero(hit)
+                    if not len(rows):
+                        continue
+                    key = (lvl, j)
+                    if counts and len(seen.setdefault(key, set())) < k:
+                        seen[key].update(ids[rows].tolist())
+                    pieces = kept.setdefault(key, [])
+                    s, d = _approx_cosine(view, q["dense"][j], rows)
+                    i = ids[rows]
+                    floor = _keep_floor(
+                        np.concatenate([p[2] for p in pieces] + [s]),
+                        np.concatenate([p[3] for p in pieces] + [d]),
+                        np.concatenate([p[4] for p in pieces] + [i]),
+                        k,
+                        margin,
+                    )
+                    for p in pieces:
+                        keep = p[3] | (p[2] >= floor)
+                        p[1:] = [x[keep] for x in p[1:]]
+                    keep = d | (s >= floor)
+                    piece = [len(subs), rows[keep], s[keep], d[keep], i[keep]]
+                    pieces.append(piece)
+                    fresh.append(piece)
+            if fresh:
+                take = np.unique(np.concatenate([p[1] for p in fresh]))
+                subs.append((b.column(0).take(take), b.column(1).take(take)))
+                for p in fresh:
+                    p[1] = np.searchsorted(take, p[1])
+        out = [(key, p) for key, ps in kept.items() for p in ps if len(p[1])]
+        if out:
+            lvl = np.concatenate([np.full(len(p[1]), key[0], np.int32) for key, p in out])
+            pos = pa.array(np.concatenate([np.full(len(p[1]), key[1]) for key, p in out]))
+            m = len(lvl)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(lvl, pa.int32()),
+                    q["arrow_ids"].take(pos),
+                    pa.concat_arrays([subs[p[0]][0].take(p[1]) for _, p in out]),
+                    q["arrow_vecs"].take(pos),
+                    pa.concat_arrays([subs[p[0]][1].take(p[1]) for _, p in out]),
+                    pa.nulls(m, pa.int32()),
+                    pa.nulls(m, schema.field("ids").type),
+                ],
+                schema=schema,
+            )
+        if seen:
+            keys = list(seen)
+            m = len(keys)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array([lvl for lvl, _ in keys], pa.int32()),
+                    q["arrow_ids"].take(pa.array([j for _, j in keys])),
+                    pa.nulls(m, schema.field("n_id").type),
+                    pa.nulls(m, schema.field("q_vec").type),
+                    pa.nulls(m, schema.field("n_vec").type),
+                    pa.array([min(len(seen[key]), k) for key in keys], pa.int32()),
+                    pa.array(
+                        [list(seen[key]) if len(seen[key]) < k else None for key in keys],
+                        schema.field("ids").type,
+                    ),
+                ],
+                schema=schema,
+            )
+
+    return run
+
+
+def _match(mat, qkeys, j: int, positional: bool):
+    """Rows of a corpus key matrix matching query ``j``'s keys."""
+    vals, ok = mat
+    qv, qok = qkeys[0][j], qkeys[1][j]
+    if positional:
+        return ((vals == qv) & ok & qok).any(axis=1)
+    return ((vals[:, :1] == qv) & ok[:, :1] & qok).any(axis=1)
+
+
+def _query_payload(rows: list, keys: list[str], arrow) -> dict:
+    """What the corpus pass needs of a query slice: the ids and vectors
+    as Arrow arrays (to emit) and NumPy (to score), and each probe key
+    as an int64 matrix with its element validity, keyed by the key's
+    column in the pass frame."""
+    import pyarrow as pa
+
+    def dense(v):
+        a = None if v is None else np.array(v, dtype=np.float64)  # NULL -> NaN
+        return a if a is not None and np.isfinite(a).all() else None
+
+    def key_matrix(col):
+        vals = [r[col] or [] for r in rows]
+        width = max((len(v) for v in vals), default=0)
+        mat = np.zeros((len(rows), width), dtype=np.int64)
+        ok = np.zeros((len(rows), width), dtype=bool)
+        for j, v in enumerate(vals):
+            for c, x in enumerate(v):
+                if x is not None:
+                    mat[j, c], ok[j, c] = x, True
+        return mat, ok
+
+    return {
+        "ids": [r["q_id"] for r in rows],
+        "arrow_ids": pa.array([r["q_id"] for r in rows], arrow.field("q_id").type),
+        "arrow_vecs": pa.array([r["q_vec"] for r in rows], arrow.field("q_vec").type),
+        "dense": [dense(r["q_vec"]) for r in rows],
+        "keys": {2 + c: key_matrix(name) for c, name in enumerate(keys)},
+    }
+
+
+def _query_slices(rows: list, budget: int) -> list[list]:
+    """Consecutive query slices of at most ``budget`` estimated bytes
+    each (the session's ``spark.sql.autoBroadcastJoinThreshold``; a
+    non-positive budget is one slice). Always at least one slice."""
+    out, cur, size = [], [], 0
+    for r in rows:
+        b = 16 + 8 * sum(len(x) for x in r[1:] if x is not None)
+        if cur and budget > 0 and size + b > budget:
+            out.append(cur)
+            cur, size = [], 0
+        cur.append(r)
+        size += b
+    return out + [cur]
+
+
+def _candidates(out: DataFrame) -> DataFrame:
+    """The candidate rows of a corpus pass (count rows carry ``n``)."""
+    return out.where(F.col("n").isNull()).select("q_id", "n_id", "q_vec", "n_vec")
+
+
+def _reached(out: DataFrame, k: int) -> set:
+    """``(level, q_id)`` whose candidates hold at least k distinct ids,
+    from the count rows of a checkpointed pass (<= partitions x queries
+    x levels rows)."""
+    hit, pool = set(), {}
+    for r in out.where(F.col("n").isNotNull()).select("lvl", "q_id", "n", "ids").collect():
+        if r.n >= k:
+            hit.add((r.lvl, r.q_id))
+        else:
+            pool.setdefault((r.lvl, r.q_id), set()).update(r.ids)
+    return hit | {key for key, ids in pool.items() if len(ids) >= k}
+
+
+def _probe_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    levels: list,
+    k: int,
+    cosine,
+    round_digits: int | None,
+    ensure_k: bool,
+) -> DataFrame:
+    """(q_id, n_id, cosine, rank): the top-k of ``corpus`` ``(n_id, n_vec,
+    *keys)`` for ``queries`` ``(q_id, q_vec, *keys)`` over the probe
+    ``levels`` (see the note above ``_keep_margin``).
+
+    The queries are collected once and broadcast, in slices bounded by
+    ``spark.sql.autoBroadcastJoinThreshold`` (one corpus pass per slice).
+    ``levels[0]`` is the descend probe. With ``ensure_k`` the pass is an
+    eager ``localCheckpoint`` and only its count rows are collected; the
+    queries short of k distinct ids take a second pass that scans
+    ``levels[1:]`` and keeps, per query, the first level reaching k (the
+    last level, the root, otherwise). Levels nest, so that is the
+    reference's ascend: every query gets min(k, distinct non-NULL corpus
+    ids other than its own) rows."""
+    spark = corpus.sparkSession
+    margin = _keep_margin(round_digits)
+    budget = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    qrows = queries.collect()
+
+    def scan(lv: list, rows: list, counts: bool) -> DataFrame:
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        names = sorted({c for level in lv for c, _ in level}, key=corpus.columns.index)
+        frame = corpus.select("n_id", "n_vec", *names)
+        n_id = frame.schema["n_id"].dataType
+        schema = StructType(
+            [
+                StructField("lvl", IntegerType()),
+                StructField("q_id", queries.schema["q_id"].dataType),
+                StructField("n_id", n_id),
+                StructField("q_vec", queries.schema["q_vec"].dataType),
+                StructField("n_vec", frame.schema["n_vec"].dataType),
+                StructField("n", IntegerType()),
+                StructField("ids", ArrayType(n_id)),
+            ]
+        )
+        arrow = to_arrow_schema(schema)
+        spec = [tuple((2 + names.index(c), pos) for c, pos in level) for level in lv]
+        passes = [
+            frame.mapInArrow(
+                _probe_kernel(
+                    spark.sparkContext.broadcast(_query_payload(s, names, arrow)),
+                    spec, k, margin, counts, arrow,
+                ),
+                schema,
+            )
+            for s in _query_slices(rows, budget)
+        ]
+        return functools.reduce(DataFrame.union, passes)
+
+    first = scan(levels[:1], qrows, ensure_k)
+    if not ensure_k:
+        return _rerank_topk(_candidates(first), cosine, k, round_digits)
+    first = first.localCheckpoint(eager=True)
+    reached = _reached(first, k)
+    short = [r for r in qrows if r.q_id is not None and (0, r.q_id) not in reached]
+    cand = _candidates(first)
+    if short:
+        ascend = levels[1:]
+        second = scan(ascend, short, len(ascend) > 1)
+        up = set()
+        if len(ascend) > 1:
+            second = second.localCheckpoint(eager=True)
+            up = _reached(second, k)
+        wins: dict = {}
+        for q_id in dict.fromkeys(r.q_id for r in short):
+            lvl = next((i for i in range(len(ascend)) if (i, q_id) in up), len(ascend) - 1)
+            wins.setdefault(lvl, []).append(q_id)
+        pick = functools.reduce(
+            lambda a, b: a | b,
+            [(F.col("lvl") == lvl) & F.col("q_id").isin(ids) for lvl, ids in wins.items()],
+        )
+        cand = cand.where(~F.col("q_id").isin([r.q_id for r in short])).union(
+            _candidates(second.where(pick))
+        )
+    return _rerank_topk(cand, cosine, k, round_digits)
 
 
 def brute_force_topk(
@@ -111,14 +471,16 @@ def brute_force_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(q_id, n_id, cosine, rank) exact top-k by cosine; self-matches
-    excluded. Queries are broadcast (the small dim side)."""
+    excluded, one row per (q_id, n_id). Every query scans the whole
+    corpus, the queries broadcast (the small dim side)."""
     q = queries.select(
         F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
     )
     c = corpus.select(
         F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec")
     )
-    return _rerank_topk(_root_scan(q, c), cosine_col, k)
+    pairs = F.broadcast(q).crossJoin(c).where(F.col("q_id") != F.col("n_id"))
+    return _rerank_topk(pairs, cosine_col, k)
 
 
 def lsh_topk(
@@ -135,7 +497,8 @@ def lsh_topk(
     round_digits: int | None = None,
     scoring: str = "fold",
 ) -> DataFrame:
-    """LSH-bucketed ANN: exact rerank only inside signature-chunk blocks.
+    """LSH-bucketed ANN: exact rerank only of the corpus vectors sharing
+    a signature chunk with the query.
 
     ``scoring="pandas"``: Arrow-batched einsum cosine for the re-rank
     (production path; "fold" stays the fixture-oracle path — see
@@ -157,85 +520,46 @@ def lsh_topk(
     recover recall with multiple independent tables (distinct ``seed``s,
     union the candidates) rather than a wider word.
 
+    Plan: the queries' signatures are collected and broadcast, and one
+    pass over the corpus partitions keeps each partition's local top-k
+    candidates (``_probe_topk``); the corpus is never shuffled.
+
     ``ensure_k``: the reference's ASCEND phase (query_rec walks up parents
-    collecting candidates until max_candidates, /root/reference/src/
-    shared/utils.py:168-187). A query in a sparse signature region may
-    collect <k candidates from its leaf blocks; with ensure_k the
-    under-served queries retry at *half chunk width* (shorter prefix =
-    parent bucket), and any still short fall back to the root — an exact
-    scan against the full corpus, broadcast-joined since residual queries
-    are few. Guarantees min(k, |corpus| - 1) rows per query.
+    collecting candidates until max_candidates, reference src/shared/
+    utils.py:168-187). A query in a sparse signature region may collect
+    fewer than k candidates from its leaf chunks; with ensure_k the short
+    queries retry at *half chunk width* (shorter prefix = parent bucket,
+    unioned with the leaf chunks), and any still short fall back to the
+    root — an exact scan of the whole corpus. Every query then gets
+    min(k, number of distinct corpus ids other than its own) rows.
     """
     cosine = _cosine_fn(scoring)
     _validate_chunking(bits, n_chunks)
     hp = hyperplane_simhash_udf(dim=dim, bits=bits, seed=seed)
-    qsig = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"),
-        hp(F.col(vec_col)).alias("sig"),
-    )
-    csig = corpus.select(
-        F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"),
-        hp(F.col(vec_col)).alias("sig"),
-    )
-    if ensure_k:
-        # reused by the block join(s) AND the root fallback
-        qsig = qsig.persist()
-        csig = csig.persist()
+    width = bits // n_chunks
+    half = max(width // 2, 1)
 
-    def block_join(qs: DataFrame, width: int) -> DataFrame:
-        n_ch = bits // width
-        qb = chunk_blocks(qs, "sig", width, n_ch, ["q_id", "q_vec"])
-        cb = chunk_blocks(csig, "sig", width, n_ch, ["n_id", "n_vec"])
-        return (
-            qb.join(cb, ["chunk_id", "chunk_val"])
-            .where(F.col("q_id") != F.col("n_id"))
-            .select("q_id", "n_id", "q_vec", "n_vec")
-            .dropDuplicates(["q_id", "n_id"])
+    def keyed(df: DataFrame, side: str) -> DataFrame:
+        sig = df.select(
+            F.col(id_col).alias(f"{side}_id"),
+            F.col(vec_col).alias(f"{side}_vec"),
+            hp(F.col(vec_col)).alias("sig"),
+        )
+        return sig.select(
+            f"{side}_id",
+            f"{side}_vec",
+            chunk_values("sig", width, n_chunks).alias("leaf"),
+            chunk_values("sig", half, bits // half).alias("parent"),
         )
 
-    width = bits // n_chunks
-    cand = block_join(qsig, width)
-    if ensure_k:
-        # the candidate table feeds BOTH the _short_queries aggregation and
-        # the final union: without materialization the exploded block
-        # join + dedup shuffle (the dominant cost) is re-executed up to
-        # three times across those consumers
-        cand = cand.localCheckpoint(eager=True)
-        # gate each widening phase on whether ANY query is actually short
-        # (round 6): the common saturated case used to pay the half-width
-        # corpus re-explode + shuffle + checkpoint AND the root-fallback
-        # subtree just to add zero rows. The isEmpty probes cost two small
-        # jobs over the checkpointed candidate table; when queries ARE
-        # short, the phases run exactly as before (the skipped
-        # dropDuplicates is a no-op on the already-deduped block join
-        # output).
-        unsat = _short_queries(cand, qsig, k)
-        if width > 1 and not unsat.isEmpty():
-            # ascend one level: parent prefix = half-width chunks
-            deeper = block_join(unsat, max(width // 2, 1))
-            cand = (
-                cand.unionByName(deeper)
-                .dropDuplicates(["q_id", "n_id"])
-                .localCheckpoint(eager=True)
-            )
-            unsat = _short_queries(cand, qsig, k)
-        if not unsat.isEmpty():
-            # root fallback: exact scan for the (few) still-short queries
-            cand = cand.unionByName(_root_scan(unsat, csig)).dropDuplicates(
-                ["q_id", "n_id"]
-            )
-    out = _rerank_topk(cand, cosine, k, round_digits)
-    if ensure_k:
-        # materialize the (small, <=|Q|*k rows) result, then release the
-        # caches — round-2 VERDICT: the old persist-and-return leaked
-        # qsig/csig for the session lifetime, and 28 queries per driver
-        # session accumulate leaked tables into executor-memory pressure
-        out = out.localCheckpoint(eager=True)
-        # blocking: async unpersist races in-flight stages and logs
-        # spurious accumulator errors (round-3 VERDICT #1)
-        qsig.unpersist(blocking=True)
-        csig.unpersist(blocking=True)
-    return out
+    levels = [(("leaf", True),)]
+    if width > 1:
+        levels.append((("leaf", True), ("parent", True)))
+    levels.append(())
+    return _probe_topk(
+        keyed(corpus, "n"), keyed(queries, "q"),
+        levels if ensure_k else levels[:1], k, cosine, round_digits, ensure_k,
+    )
 
 
 def brute_force_near_dup_pairs(
@@ -326,7 +650,7 @@ def ivf_topk(
 ) -> DataFrame:
     """(q_id, n_id, cosine, rank) — IVF-bucketed ANN, the third strategy
     next to ``brute_force_topk`` (exact) and ``lsh_topk`` (hyperplane
-    blocks): the FAISS IVF-flat shape re-expressed relationally.
+    blocks): the FAISS IVF-flat shape.
 
     * codebook: ``plaid.sample_codebook`` — bounded deterministic sample,
       pinned driver-side Lloyd (the standard "train the quantizer on ~1e5
@@ -337,14 +661,16 @@ def ivf_topk(
       codegen, NO shuffle and NO row explosion for the corpus side (a
       64-way crossJoin + window would shuffle |corpus|*64 rows).
     * probing: per query the top-``nprobe`` cells by the same struct
-      ordering (``reverse(array_sort(...))``), exploded to (q_id, cell).
-    * search: one keyed join probe-cells x corpus-cells (shuffle bounded
-      by cell sizes — never |Q| x |N|; AQE skew-join splits a hot cell),
-      exact JVM cosine, per-query window top-k. Each corpus vector lives
-      in exactly one cell, so candidates need no dedup.
+      ordering (``reverse(array_sort(...))``), collected with the query
+      batch and broadcast.
+    * search: one pass over the corpus partitions keeps, per query, each
+      partition's local top-k of the vectors in its probed cells
+      (``_probe_topk``); the corpus is never shuffled. Exact cosine and
+      the per-query top-k run on that small candidate table.
     * ``ensure_k``: queries with fewer than ``k`` candidates fall back to
-      a broadcast exact scan (same semantics as ``lsh_topk``'s root
-      fallback) — guarantees k rows per query.
+      an exact scan of the whole corpus (the root, as in ``lsh_topk``) —
+      every query gets min(k, number of distinct corpus ids other than
+      its own) rows.
     * ``round_digits``: round cosine BEFORE ranking (with the seeded
       codebook this makes the result bit-reproducible — fixture-oracle
       mode, same discipline as ``lsh_topk``/``plaid_topk``).
@@ -385,34 +711,15 @@ def ivf_topk(
     c_cells = corpus.select(
         F.col(id_col).alias("n_id"),
         F.col(vec_col).alias("n_vec"),
-        cell.alias("cell"),
+        F.array(cell).alias("cell"),
     )
     q_cells = queries.select(
         F.col(id_col).alias("q_id"),
         F.col(vec_col).alias("q_vec"),
-        F.explode(probe_cells).alias("cell"),
+        probe_cells.alias("cell"),
     )
-    cand = (
-        q_cells.join(c_cells, "cell")
-        .where(F.col("q_id") != F.col("n_id"))
-        .select("q_id", "n_id", "q_vec", "n_vec")
+    levels = [(("cell", False),), ()]
+    return _probe_topk(
+        c_cells, q_cells, levels if ensure_k else levels[:1],
+        k, cosine, round_digits, ensure_k,
     )
-    if ensure_k:
-        # cand feeds BOTH the saturation aggregate and the final union —
-        # without materialization the cell join (and the corpus assignment
-        # UDF under it) executes twice in one action (round 6; the same
-        # fix lsh_topk's ensure_k path has carried since round 2)
-        cand = cand.localCheckpoint(eager=True)
-        q = queries.select(
-            F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
-        )
-        # same short-query gate as lsh_topk: the saturated common case
-        # skips the root-fallback subtree entirely
-        unsat = _short_queries(cand, q, k)
-        if not unsat.isEmpty():
-            c = corpus.select(
-                F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec")
-            )
-            cand = cand.unionByName(_root_scan(unsat, c))
-        cand = cand.dropDuplicates(["q_id", "n_id"])
-    return _rerank_topk(cand, cosine, k, round_digits)

@@ -23,7 +23,7 @@ log1p(n_docs/|docs at node|)^beta.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from lsh_forest_for_multi_vector_retrieval_spark.config import DedupConfig
@@ -124,8 +124,17 @@ def forest_vote_scores(
     # the most expensive stage): it feeds BOTH the node_pop aggregation
     # and the join probe side, and an unmaterialized plan would run the
     # explode twice — the repo's established eager-localCheckpoint
-    # pattern (ann.embedding_near_dup_pairs, dedup.simhash_dedup_pairs)
-    corpus_pref = prefix_table(corpus_sigs, cfg).localCheckpoint(eager=True)
+    # pattern (ann.embedding_near_dup_pairs, dedup.simhash_dedup_pairs).
+    # The same job counts the corpus for the popularity IDF: an
+    # Observation on corpus_sigs, filled by the checkpoint, replaces a
+    # corpus_sigs.count() of its own.
+    seen = Observation()
+    corpus_pref = prefix_table(
+        corpus_sigs.observe(seen, F.count(F.lit(1)).alias("n_docs")), cfg
+    ).localCheckpoint(eager=True)
+    # a zero-depth table is an empty plan that the optimizer prunes,
+    # Observation included, so nothing would ever fill it
+    n_docs = seen.get["n_docs"] if cfg.rows_per_band else 0
     query_pref = prefix_table(query_sigs, cfg).withColumnRenamed(
         "doc_id", "query_id"
     )
@@ -144,7 +153,6 @@ def forest_vote_scores(
     )
     if max_node_docs is not None:
         node_pop = node_pop.where(F.col("node_docs") <= max_node_docs)
-    n_docs = corpus_sigs.count()
 
     # join the bounded node table FIRST: a linear shuffle that drops every
     # mega-node row before the query join ever sees it, and carries

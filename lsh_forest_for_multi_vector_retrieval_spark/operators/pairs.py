@@ -19,13 +19,13 @@ Physical strategy (SURVEY §4.2):
   aggregate, map-side partial).
 
 Pigeonhole blocking of packed 64-bit signatures (SimHash, ahash,
-hyperplane embeddings) lives here too: ``chunk_blocks``,
-``chunk_self_join`` and ``hamming_pairs``.
+hyperplane embeddings) lives here too: ``chunk_values``,
+``chunk_blocks``, ``chunk_self_join`` and ``hamming_pairs``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from lsh_forest_for_multi_vector_retrieval_spark.config import DedupConfig
@@ -250,6 +250,14 @@ def bucket_drop_summary(bands: DataFrame, cfg: DedupConfig = DedupConfig()) -> d
     }
 
 
+def chunk_values(sig_col: str, width: int, n_chunks: int) -> Column:
+    """``array<bigint>``: the ``n_chunks`` ``width``-bit chunks of the
+    packed signature in ``sig_col``, chunk ``c`` at position ``c``. Two
+    signatures block together when they agree at any position; a NULL
+    signature gives NULL chunks, which match nothing."""
+    return hamming_chunk_cols(F.col(sig_col), width, n_chunks)
+
+
 def chunk_blocks(
     df: DataFrame, sig_col: str, width: int, n_chunks: int, keep: list[str]
 ) -> DataFrame:
@@ -257,7 +265,7 @@ def chunk_blocks(
     the packed signature in ``sig_col`` — the engine's one pigeonhole
     blocking explode. Two rows whose signatures share any chunk exactly
     meet on ``(chunk_id, chunk_val)``."""
-    chunks = hamming_chunk_cols(F.col(sig_col), width, n_chunks)
+    chunks = chunk_values(sig_col, width, n_chunks)
     return df.select(*keep, F.posexplode(chunks).alias("chunk_id", "chunk_val"))
 
 

@@ -196,6 +196,29 @@ def _keep_floor(score, dirty, ids, k: int, margin: float) -> float:
     return s[order][np.sort(first)[k - 1]] - margin
 
 
+def _keep_piece(
+    pieces: list, sub: int, k: int, margin: float, rows, score, dirty, ids, *extra
+) -> list:
+    """Add one batch's candidate rows of a (partition, query) to its kept
+    ``pieces`` (``[sub, rows, score, dirty, ids, *extra]`` each, ``extra``
+    being more per-row arrays): re-prune every piece to the new
+    ``_keep_floor`` and append, and return, the new one."""
+    floor = _keep_floor(
+        np.concatenate([p[2] for p in pieces] + [score]),
+        np.concatenate([p[3] for p in pieces] + [dirty]),
+        np.concatenate([p[4] for p in pieces] + [ids]),
+        k,
+        margin,
+    )
+    for p in pieces:
+        keep = p[3] | (p[2] >= floor)
+        p[1:] = [x[keep] for x in p[1:]]
+    keep = dirty | (score >= floor)
+    piece = [sub] + [x[keep] for x in (rows, score, dirty, ids, *extra)]
+    pieces.append(piece)
+    return piece
+
+
 def _probe_kernel(bq, levels: list, k: int, margin: float, counts: bool, schema):
     """The ``mapInArrow`` body of ``_probe_topk`` over ``(n_id, n_vec,
     *keys)``. Per query and level it keeps every candidate row that is
@@ -243,23 +266,12 @@ def _probe_kernel(bq, levels: list, k: int, margin: float, counts: bool, schema)
                     key = (lvl, j)
                     if counts and len(seen.setdefault(key, set())) < k:
                         seen[key].update(ids[rows].tolist())
-                    pieces = kept.setdefault(key, [])
                     s, d = _approx_cosine(view, q["dense"][j], rows)
-                    i = ids[rows]
-                    floor = _keep_floor(
-                        np.concatenate([p[2] for p in pieces] + [s]),
-                        np.concatenate([p[3] for p in pieces] + [d]),
-                        np.concatenate([p[4] for p in pieces] + [i]),
-                        k,
-                        margin,
+                    fresh.append(
+                        _keep_piece(
+                            kept.setdefault(key, []), len(subs), k, margin, rows, s, d, ids[rows]
+                        )
                     )
-                    for p in pieces:
-                        keep = p[3] | (p[2] >= floor)
-                        p[1:] = [x[keep] for x in p[1:]]
-                    keep = d | (s >= floor)
-                    piece = [len(subs), rows[keep], s[keep], d[keep], i[keep]]
-                    pieces.append(piece)
-                    fresh.append(piece)
             if fresh:
                 take = np.unique(np.concatenate([p[1] for p in fresh]))
                 subs.append((b.column(0).take(take), b.column(1).take(take)))
@@ -344,6 +356,20 @@ def _query_payload(rows: list, keys: list[str], arrow) -> dict:
     }
 
 
+def _broadcast_budget(spark) -> int:
+    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes."""
+    return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+
+def _require_positive(**counts) -> None:
+    """Raise ``ValueError``, before any job runs, unless every given count
+    is at least 1 (0 would silently answer nothing; a negative count
+    fails inside a job or slices a driver list from the end)."""
+    for name, v in counts.items():
+        if v < 1:
+            raise ValueError(f"{name} must be >= 1, got {v!r}")
+
+
 def _query_slices(rows: list, budget: int) -> list[list]:
     """Consecutive query slices of at most ``budget`` estimated bytes
     each (the session's ``spark.sql.autoBroadcastJoinThreshold``; a
@@ -399,9 +425,10 @@ def _probe_topk(
     last level, the root, otherwise). Levels nest, so that is the
     reference's ascend: every query gets min(k, distinct non-NULL corpus
     ids other than its own) rows."""
+    _require_positive(k=k)
     spark = corpus.sparkSession
     margin = _keep_margin(round_digits)
-    budget = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    budget = _broadcast_budget(spark)
     qrows = queries.collect()
 
     def scan(lv: list, rows: list, counts: bool) -> DataFrame:
@@ -694,6 +721,7 @@ def ivf_topk(
     )
 
     cosine = _cosine_fn(scoring)
+    _require_positive(k=k, nprobe=nprobe)
     if centroids is None:
         centroids = sample_codebook(
             corpus, k=n_centroids, iters=iters, sample_limit=sample_limit,

@@ -17,15 +17,19 @@ A from-scratch re-expression of the query semantics of
   ``src/shared/forest_vote.py`` and ``src/shared/retrieval.py``
 
 Everything is DataFrame/Catalyst-first; Python runs only in Arrow-batched
-pandas kernels, never per row:
+kernels, never one UDF call per row:
 
-* signatures: the MinHash and SimHash UDFs (``functions.minhash``,
+* signatures: the MinHash and SimHash pandas UDFs (``functions.minhash``,
   ``functions.simhash``) behind ``with_signatures``, hence behind dedup,
-  incremental dedup and forest vote; the hyperplane SimHash of ``lsh_topk``
-* ``scoring="pandas"`` vector kernels (``functions.vectors``): the ANN
-  family's cosine re-rank, nearest-centroid assignment and centroid score
-  vectors for ``ivf_topk`` / ``plaid_topk``, and PLAID's chamfer max-sum
-  re-rank (their ``"fold"`` twins are pure Catalyst)
+  incremental dedup and forest vote
+* the vector kernels, ``arrow_udf``s over the one Arrow list decoder of
+  ``functions.vectors``: the hyperplane SimHash of ``lsh_topk``, and with
+  ``scoring="pandas"`` / ``assignment="pandas"`` the ANN family's cosine
+  re-rank, nearest-centroid assignment and centroid score vectors for
+  ``ivf_topk`` / ``plaid_topk``, and PLAID's chamfer max-sum re-rank
+  (their ``"fold"`` twins are pure Catalyst)
+* the ``mapInArrow`` corpus passes of ``ann._probe_topk`` and
+  ``plaid_topk``, over the same decoder
 * the rolling hashes of ``operators.substring``, the ``mapInPandas``
   image extractors of ``operators.media``, and the seeded ``mapInPandas``
   generators under ``sources``

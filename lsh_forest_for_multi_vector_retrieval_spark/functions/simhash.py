@@ -1,4 +1,4 @@
-"""SimHash (64-bit) — Arrow-batched pandas UDF, NumPy-vectorized.
+"""SimHash (64-bit) — Arrow-batched, NumPy-vectorized UDFs.
 
 Reference analog: hyperplane LSH ``h(v) = sign(v . w)``
 (/root/reference/src/shared/lsh_family.py:19-42, lsh_forest.py:26-32).
@@ -9,16 +9,24 @@ exactly a hyperplane sign in the 2^64-dim feature space.
 
 Also provides hyperplane SimHash over dense float vectors (the literal
 reference operator H1) for the embeddings table.
+
+The text ``simhash_udf`` is a ``pandas_udf`` with a per-row loop, a
+measured choice (see ``minhash.py``); ``hyperplane_simhash_udf`` is an
+``arrow_udf`` over the vector decoder of ``functions.vectors``, one
+matmul per batch.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
+
+from lsh_forest_for_multi_vector_retrieval_spark.functions.vectors import _vectors
 
 _BITS = np.arange(64, dtype=np.uint64)
 
@@ -89,6 +97,10 @@ def hyperplane_simhash_udf(dim: int, bits: int = 64, seed: int = 42) -> Column:
     (dim, bits) Gaussian matrix drawn once from RandomState(seed)
     (reference draws per-closure, lsh_family.py:30-36; we draw the whole
     matrix up front — same distribution, executor-deterministic).
+
+    A NULL, ragged or wrong-dim vector signs NULL. A NULL or NaN element
+    makes every projection NaN, and ``NaN >= 0`` is false, so the row
+    signs 0; an inf element signs by its infinite projections.
     """
     if not 1 <= bits <= 64:
         # the signature is packed into ONE 64-bit word; numpy uint64
@@ -101,33 +113,20 @@ def hyperplane_simhash_udf(dim: int, bits: int = 64, seed: int = 42) -> Column:
     w = rng.standard_normal((dim, bits))
     bit_idx = np.arange(bits, dtype=np.uint64)
 
-    @pandas_udf(T.LongType())
-    def _hp_simhash(vec_col: pd.Series) -> pd.Series:
-        n = len(vec_col)
-        if n == 0:
-            return pd.Series(np.empty(0, dtype=np.int64))
+    @arrow_udf(T.LongType())
+    def _hp_simhash(vec_col: pa.Array) -> pa.Array:
         # NULL / ragged / wrong-dim rows DEGRADE to a NULL signature
         # (they drop out of chunk blocking downstream) instead of
-        # failing the whole Spark task via np.stack — same convention
-        # as vectors._stack_pair_batch and the fold cosine path.
-        good = np.ones(n, dtype=bool)
-        rows = []
-        for i, v in enumerate(vec_col):
-            a = None if v is None else np.asarray(v, dtype=np.float64)
-            if a is None or a.ndim != 1 or a.shape[0] != dim:
-                good[i] = False
-            else:
-                rows.append(a)
-        vals = np.zeros(n, dtype=np.int64)
-        if rows:
-            m = np.stack(rows)  # (n_good, dim)
-            proj = m @ w  # (n_good, bits)
-            words = ((proj >= 0).astype(np.uint64) << bit_idx[None, :]).sum(
-                axis=1, dtype=np.uint64
-            )
-            vals[good] = words.view(np.int64)
-        out = pd.Series(vals, dtype="Int64")
-        out[~good] = pd.NA
-        return out
+        # failing the whole Spark task
+        lens, valid, gather = _vectors(vec_col)
+        good = valid & (lens == dim)
+        rows = np.flatnonzero(good)
+        proj = gather(rows, dim) @ w  # (n_good, bits)
+        words = ((proj >= 0).astype(np.uint64) << bit_idx[None, :]).sum(
+            axis=1, dtype=np.uint64
+        )
+        vals = np.zeros(len(vec_col), dtype=np.int64)
+        vals[rows] = words.view(np.int64)
+        return pa.array(vals, mask=~good)
 
     return _hp_simhash

@@ -15,11 +15,26 @@ Two implementations with one semantics:
   ann.py). They remain the ORACLE path: a strict left-to-right fold is
   bit-reproducible everywhere, which is what lets expected-parquet
   fixtures hash-match.
-* ``cosine_pandas_udf`` — Arrow-batched NumPy einsum over the pair
-  batch: the PRODUCTION scoring path for exact re-rank in the ANN
-  family (round-4 VERDICT "What's missing" #2). ~dim x fewer interpreted
-  steps per row; ulp-level reduction-order differences from the fold are
+* the NumPy kernels — ``cosine_pandas_udf``,
+  ``nearest_centroid_pandas_udf``, ``centroid_scorevec_pandas_udf`` and
+  ``chamfer_pair_pandas_udf`` here, ``simhash.hyperplane_simhash_udf``
+  next door: ``arrow_udf``s, one GEMM or einsum per Arrow batch, the
+  PRODUCTION path (the operators' ``scoring="pandas"`` and
+  ``assignment="pandas"``). The names and the knob value predate the
+  move from pandas to Arrow UDFs; callers and the benchmark pass them,
+  so they stay. ulp-level reduction-order differences from the fold are
   possible, so fixture-oracle comparisons keep the fold.
+
+Every NumPy kernel, and the ``mapInArrow`` corpus passes of
+``operators/ann.py`` and ``operators/plaid.py``, reads its vector columns
+through one Arrow list decoder (``_list_parts``, ``_vectors``): list
+offsets index the flat values directly, with no per-row conversion. Each
+kernel DEGRADES on the rows the decoder classifies as degenerate exactly
+like its fold twin, never crashing the task: a NULL array, a ragged or
+wrong-dim array, a NULL element (it reads as NaN, like a stored NaN) and
+non-finite values. A kernel never returns NaN where the fold returns
+NULL: Spark orders NaN ABOVE every number, so a NaN score would pass a
+``score >= threshold`` filter that a NULL correctly fails.
 """
 
 from __future__ import annotations
@@ -27,10 +42,10 @@ from __future__ import annotations
 import functools
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 
 def dot_col(a: Column, b: Column) -> Column:
@@ -40,8 +55,8 @@ def dot_col(a: Column, b: Column) -> Column:
     # ABOVE every double — a NaN score would pass `score >= threshold`
     # filters that corrupt data must fail. Normalize NaN folds to NULL so
     # both scoring paths agree on bad data: the Arrow kernel cannot
-    # distinguish a null element from a stored NaN (both cross Arrow as
-    # NaN) and already masks NaN results to NULL; without this, fold vs
+    # distinguish a null element from a stored NaN (both read as NaN)
+    # and already masks NaN results to NULL; without this, fold vs
     # pandas returned DIFFERENT pair sets on NaN-poisoned embeddings.
     # NULL inputs are unaffected (nanvl passes non-NaN values through,
     # and NULL is not NaN), so clean-data results are bit-identical.
@@ -71,88 +86,35 @@ def l2_sq_col(a: Column, b: Column) -> Column:
     return F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v)
 
 
-def _stack_pair_batch(
-    a: pd.Series, b: pd.Series
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Classify an ``(array, array)`` Arrow batch for dense scoring,
-    tolerating null and ragged rows. Returns ``(valid_mask, null_mask,
-    arrs_a, arrs_b)``; feed the valid rows through ``_pairwise_dense``
-    (which groups by row length before stacking). Bad rows
-    must DEGRADE exactly like the fold path, not crash the task, and the
-    fold distinguishes the two failure shapes: a NULL input array makes
-    the whole fold NULL (``dot_col`` scores NULL; ``cosine_col``'s
-    ``when(denom > 0)`` condition is then NULL and the ``otherwise(0.0)``
-    catches it — cosine scores 0.0), while a ragged length mismatch
-    null-pads ``zip_with`` so the dot folds to NULL but the norms stay
-    finite — both score NULL. Never substitute NaN for NULL: Spark
-    orders NaN ABOVE every number, so a NaN score would pass a
-    ``score >= threshold`` filter that a NULL correctly fails.
-
-    A third bad shape is invisible at this layer: a null ELEMENT inside
-    an otherwise-sound array crosses Arrow as NaN, so the row classifies
-    valid here and its einsum product is NaN. The cosine kernel handles
-    it downstream: its ``den > 0`` gate is False on a NaN denominator,
-    giving 0.0 (matching ``cosine_col``'s NULL-condition
-    ``otherwise(0.0)``); an INF element instead leaves den positive while
-    num (inf*0) or the division (inf/inf) goes NaN — both cosine paths
-    mask that row to NULL (the pandas kernel's NaN mask; ``cosine_col``'s
-    outer nanvl)."""
-    arrs_a = [None if x is None else np.asarray(x, dtype=np.float64) for x in a]
-    arrs_b = [None if x is None else np.asarray(x, dtype=np.float64) for x in b]
-    null = np.array(
-        [x is None or y is None for x, y in zip(arrs_a, arrs_b)], dtype=bool
-    )
-    valid = np.array(
-        [
-            x is not None and y is not None and x.shape == y.shape
-            for x, y in zip(arrs_a, arrs_b)
-        ],
-        dtype=bool,
-    )
-    return valid, null, arrs_a, arrs_b
+def _list_parts(col):
+    """``(offsets, lengths, valid, values)`` of an Arrow list array; the
+    offsets index ``values`` directly (a sliced array's offsets are not
+    rebased, and ``values`` is the whole child array)."""
+    off = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    return off, np.diff(off), col.is_valid().to_numpy(zero_copy_only=False), col.values
 
 
-def _pairwise_dense(
-    valid: np.ndarray,
-    arrs_a: list,
-    arrs_b: list,
-    dense_fn,
-) -> np.ndarray:
-    """Apply ``dense_fn(ma, mb) -> vals`` over the valid rows, grouped by
-    row length so ``np.stack`` never sees a cross-row shape mismatch: a
-    batch mixing dim-64 pairs with (equal-length) dim-32 or empty pairs
-    runs one einsum PER length present — one group on healthy data, and
-    every equal-shape pair still scores exactly like the per-row fold
-    (the fold has no notion of "the batch's dim"). Returns vals in
-    valid-row order, ready for ``_scatter_valid``."""
-    vidx = np.flatnonzero(valid)
-    vals = np.empty(len(vidx), dtype=np.float64)
-    if not len(vidx):
-        return vals
-    lengths = np.fromiter(
-        (arrs_a[i].shape[0] for i in vidx), dtype=np.int64, count=len(vidx)
-    )
-    for dim in np.unique(lengths):
-        grp = lengths == dim
-        sel = vidx[grp]
-        ma = np.stack([arrs_a[i] for i in sel])
-        mb = np.stack([arrs_b[i] for i in sel])
-        vals[grp] = dense_fn(ma, mb)
-    return vals
+def _vectors(col):
+    """``(lengths, valid, gather)`` of an Arrow vector column:
+    ``gather(rows, dim)`` is the ``(len(rows), dim)`` float64 matrix of
+    ``rows``, valid rows of length ``dim``; a NULL element reads NaN."""
+    off, lens, valid, values = _list_parts(col)
+    flat = values.to_numpy(zero_copy_only=False).astype(np.float64)
+    return lens, valid, lambda rows, dim: flat[off[rows][:, None] + np.arange(dim)]
 
 
-def _scatter_valid(
-    valid: np.ndarray, vals: np.ndarray, null_fill: np.ndarray | None = None
-) -> pd.Series:
-    """Scores back into batch order; invalid rows become SQL NULL (object
-    dtype carries real None through Arrow, unlike float NaN) — except
-    rows flagged in ``null_fill``, which take 0.0 (cosine's
-    ``otherwise(0.0)`` convention for NULL inputs)."""
-    out = np.full(len(valid), None, dtype=object)
-    out[valid] = [float(v) for v in vals]
-    if null_fill is not None:
-        out[null_fill & ~valid] = 0.0
-    return pd.Series(out, dtype=object)
+def _spans(starts, counts):
+    """The ranges ``[starts[i], starts[i] + counts[i])``, concatenated."""
+    return np.repeat(starts - (np.cumsum(counts) - counts), counts) + np.arange(counts.sum())
+
+
+def _require_kernel(**choices) -> None:
+    """Raise ``ValueError``, before any job runs, unless every given kernel
+    choice is ``"fold"`` or ``"pandas"``: a typo such as ``"Pandas"`` must
+    not silently fall back to the slow path."""
+    for name, v in choices.items():
+        if v not in ("fold", "pandas"):
+            raise ValueError(f"{name} must be 'fold' or 'pandas', got {v!r}")
 
 
 def _codebook_literal(centroids: list[list[float]]) -> Column:
@@ -223,12 +185,10 @@ def nearest_centroid(
     Arrow-batched GEMM + argmax per batch — the production path;
     ulp-level reduction-order variance can flip an EXACT score tie, so
     oracle comparisons keep the fold."""
-    if assignment == "fold":
-        return F.array_max(centroid_scores_arr(codebook, vec_col))["cid"]
+    _require_kernel(assignment=assignment)
     if assignment == "pandas":
         return nearest_centroid_pandas_udf(codebook)(F.col(vec_col))
-    # a typo ("Pandas") must not silently fall back to the slow path
-    raise ValueError(f"assignment must be 'fold' or 'pandas', got {assignment!r}")
+    return F.array_max(centroid_scores_arr(codebook, vec_col))["cid"]
 
 
 def nearest_centroid_pandas_udf(centroids: list[list[float]]):
@@ -240,29 +200,19 @@ def nearest_centroid_pandas_udf(centroids: list[list[float]]):
     score tie, so fixture-oracle comparisons keep the fold). Degenerate
     rows (NULL, empty, or wrong-dim vectors) assign to cell 0, exactly
     like the fold: every per-centroid dot is NULL there, so the struct
-    max falls through to the lowest-cid tie-break (verified empirically
-    against ``array_max(centroid_scores_arr(...))["cid"]``)."""
+    max falls through to the lowest-cid tie-break."""
     cmat = np.asarray(centroids, dtype=np.float64)
     dim = cmat.shape[1]
 
-    @pandas_udf("int")
-    def _cell_pd(v: pd.Series) -> pd.Series:
-        if len(v) == 0:  # np.stack raises on an empty Arrow batch
-            return pd.Series([], dtype="int64")
-        arrs = [None if x is None else np.asarray(x, dtype=np.float64) for x in v]
-        valid = np.array(
-            [x is not None and x.ndim == 1 and x.shape[0] == dim for x in arrs],
-            dtype=bool,
-        )
-        if valid.all():
-            return pd.Series(np.argmax(np.stack(arrs) @ cmat.T, axis=1))
-        out = np.zeros(len(arrs), dtype=np.int64)  # fold's degenerate-row cell
-        if valid.any():
-            m = np.stack([x for x, ok in zip(arrs, valid) if ok])
-            out[valid] = np.argmax(m @ cmat.T, axis=1)
-        return pd.Series(out)
+    @arrow_udf("int")
+    def _cell(v: pa.Array) -> pa.Array:
+        lens, valid, gather = _vectors(v)
+        rows = np.flatnonzero(valid & (lens == dim))
+        out = np.zeros(len(v), dtype=np.int32)  # the fold's degenerate-row cell
+        out[rows] = np.argmax(gather(rows, dim) @ cmat.T, axis=1)
+        return pa.array(out)
 
-    return _cell_pd
+    return _cell
 
 
 def centroid_scorevec_pandas_udf(centroids: list[list[float]]):
@@ -272,46 +222,38 @@ def centroid_scorevec_pandas_udf(centroids: list[list[float]]):
     (one matmul per batch instead of k interpreted folds per row).
     Degenerate rows (NULL / empty / wrong-dim vectors) yield an array of
     SQL NULLs, exactly like the per-centroid fold (``dot_col`` is NULL on
-    every such row); a null ELEMENT inside a vector crosses Arrow as NaN,
-    poisons that row's GEMM products, and is masked back to NULL per
-    position (fold semantics again). ulp-level GEMM reduction-order
-    variance vs the fold is possible — fixture-oracle paths keep the
-    fold, same contract as ``nearest_centroid_pandas_udf``."""
+    every such row); a NULL element poisons that row's products, which
+    are NULL per position (fold semantics again)."""
     cmat = np.asarray(centroids, dtype=np.float64)
-    dim = cmat.shape[1]
-    k = cmat.shape[0]
+    k, dim = cmat.shape
 
-    @pandas_udf("array<double>")
-    def _scores(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype=object)
-        arrs = [None if x is None else np.asarray(x, dtype=np.float64) for x in v]
-        valid = np.array(
-            [x is not None and x.ndim == 1 and x.shape[0] == dim for x in arrs],
-            dtype=bool,
+    @arrow_udf("array<double>")
+    def _scores(v: pa.Array) -> pa.Array:
+        lens, valid, gather = _vectors(v)
+        rows = np.flatnonzero(valid & (lens == dim))
+        out = np.full((len(v), k), np.nan)
+        out[rows] = gather(rows, dim) @ cmat.T
+        flat = out.ravel()
+        return pa.ListArray.from_arrays(
+            pa.array(np.arange(len(v) + 1) * k, pa.int32()),
+            pa.array(flat, mask=np.isnan(flat)),
         )
-        out: list = [None] * len(arrs)
-        nulls = [None] * k
-        if valid.any():
-            m = np.stack([x for x, ok in zip(arrs, valid) if ok]) @ cmat.T
-            rows = iter(m)
-            for i, ok in enumerate(valid):
-                if ok:
-                    row = next(rows)
-                    if np.isnan(row).any():
-                        out[i] = [
-                            None if np.isnan(x) else float(x) for x in row
-                        ]
-                    else:
-                        out[i] = row.tolist()
-                else:
-                    out[i] = nulls
-        else:
-            for i in range(len(arrs)):
-                out[i] = nulls
-        return pd.Series(out, dtype=object)
 
     return _scores
+
+
+def _token_table(col):
+    """``(row, token, length, gather)`` of the non-NULL token vectors of an
+    Arrow ``array<array>`` column, in row and token order: token ``t``
+    belongs to row ``row[t]`` and has length ``length[t]``, and
+    ``gather(token[ts], dim)`` is its matrix (as in ``_vectors``)."""
+    off, n_tok, valid, toks = _list_parts(col)
+    counts = np.where(valid, n_tok, 0)
+    token = _spans(off[:-1], counts)
+    row = np.repeat(np.arange(len(col)), counts)
+    lens, tok_ok, gather = _vectors(toks)
+    keep = tok_ok[token]
+    return row[keep], token[keep], lens[token[keep]], gather
 
 
 def chamfer_pair_pandas_udf():
@@ -320,125 +262,97 @@ def chamfer_pair_pandas_udf():
     dot(q, d)`` — ONE einsum per equal-shape group per batch, replacing the
     q_tok x d_tok row explosion + two hash aggregates of the former exact
     re-rank plan. Matches the relational production path's NULL handling:
-    NaN dots (null elements) are missing, a token whose dots are all
-    missing is skipped by the sum (SQL ``sum`` ignores NULLs), and a row
-    with no scoreable token at all is NULL. A row whose token vectors
-    differ in length is scored as the fold scores it: a dot across unequal
-    lengths is NULL, so each query token meets only the doc tokens of its
-    own length. Token-sum order is the given query-token order (callers
-    pass q_idx-sorted matrices), so results are deterministic; ulp-level
-    differences vs the interpreted fold are possible — fixture-oracle
-    comparisons keep the fold."""
+    a NULL token vector is a missing token, NaN dots (NULL elements) are
+    missing, a token whose dots are all missing is skipped by the sum (SQL
+    ``sum`` ignores NULLs), and a row with no scoreable token at all is
+    NULL. A row whose token vectors differ in length is scored as the fold
+    scores it: a dot across unequal lengths is NULL, so each query token
+    meets only the doc tokens of its own length. Token-sum order is the
+    given query-token order (callers pass q_idx-sorted matrices), so
+    results are deterministic; ulp-level differences vs the interpreted
+    fold are possible — fixture-oracle comparisons keep the fold."""
 
-    def _tokens(x) -> list | None:
-        if x is None:
-            return None
-        # a NULL token vector inside the list (a null struct FIELD survives
-        # collect_list) is a missing token: every dot it would contribute
-        # is NULL on the relational path, so max/sum skip it — dropping the
-        # row here is the identical semantics, and np.asarray(None) would
-        # otherwise kill the task with a TypeError
-        try:
-            rows = [np.asarray(r, dtype=np.float64) for r in x if r is not None]
-        except (ValueError, TypeError):  # non-numeric token elements
-            return None
-        if not rows or any(r.ndim != 1 for r in rows):
-            return None
-        return rows
-
-    def _ragged_score(q_rows: list, d_rows: list) -> float | None:
-        by_len: dict = {}
-        for r in d_rows:
-            by_len.setdefault(len(r), []).append(r)
-        total, scored = 0.0, False
-        for qv in q_rows:
-            dm = by_len.get(len(qv))
-            if dm is None:
-                continue  # every dot of this token is NULL: skipped
-            dots = np.stack(dm) @ qv
-            if np.isnan(dots).all():
-                continue
-            total += float(np.nanmax(dots))
-            scored = True
-        return total if scored else None
-
-    @pandas_udf("double")
-    def _chamfer(qs: pd.Series, ds: pd.Series) -> pd.Series:
-        import warnings
-
+    @arrow_udf("double")
+    def _chamfer(qs: pa.Array, ds: pa.Array) -> pa.Array:
         n = len(qs)
-        if n == 0:
-            return pd.Series([], dtype="float64")
-        out = np.full(n, None, dtype=object)
-        groups: dict = {}
-        mats: list = []
-        for i in range(n):
-            qr, dr = _tokens(qs.iloc[i]), _tokens(ds.iloc[i])
-            mats.append(None)
-            if qr is None or dr is None:
-                continue
-            dims = {len(r) for r in qr} | {len(r) for r in dr}
-            if len(dims) != 1 or 0 in dims:
-                out[i] = _ragged_score(qr, dr)
-                continue
-            mats[i] = (np.stack(qr), np.stack(dr))
-            groups.setdefault((mats[i][0].shape, len(dr)), []).append(i)
-        for idxs in groups.values():
-            Q = np.stack([mats[i][0] for i in idxs])  # (n, q, dim)
-            D = np.stack([mats[i][1] for i in idxs])  # (n, d, dim)
-            s = np.einsum("nqe,npe->nqp", Q, D)  # (n, q, d) dots
-            with warnings.catch_warnings():
-                # all-NaN token rows are legitimate (every dot missing) —
-                # nanmax's RuntimeWarning for them is expected, not a signal
-                warnings.simplefilter("ignore", RuntimeWarning)
-                # NaN dots are missing (fold scores them NULL; max ignores)
-                tok_best = np.where(
-                    np.isnan(s).all(axis=2), np.nan, np.nanmax(s, axis=2)
-                )  # (n, q)
+        q_row, q_tok, q_len, q_mat = _token_table(qs)
+        d_row, d_tok, d_len, d_mat = _token_table(ds)
+        nq, nd = np.bincount(q_row, minlength=n), np.bincount(d_row, minlength=n)
+        lo, hi = np.full(n, np.iinfo(np.int64).max), np.full(n, -1)
+        for row, length in ((q_row, q_len), (d_row, d_len)):
+            np.minimum.at(lo, row, length)
+            np.maximum.at(hi, row, length)
+        both = (nq > 0) & (nd > 0)
+        dense = both & (lo == hi) & (lo > 0)
+        out = np.full(n, np.nan)
+        # dense rows: one einsum per (query tokens, dim, doc tokens) shape
+        rows = np.flatnonzero(dense)
+        shapes, group = np.unique(
+            np.stack([nq[rows], lo[rows], nd[rows]], axis=1), axis=0, return_inverse=True
+        )
+        q_at, d_at = np.cumsum(nq) - nq, np.cumsum(nd) - nd
+        for g, (tq, dim, td) in enumerate(shapes):
+            sel = rows[group.ravel() == g]
+            Q = q_mat(q_tok[(q_at[sel][:, None] + np.arange(tq)).ravel()], dim)
+            D = d_mat(d_tok[(d_at[sel][:, None] + np.arange(td)).ravel()], dim)
+            s = np.einsum(
+                "nqe,npe->nqp", Q.reshape(len(sel), tq, dim), D.reshape(len(sel), td, dim)
+            )
+            # NaN dots are missing (the fold scores them NULL; max ignores
+            # them): fmax skips NaN, and is NaN only when all are missing
+            tok_best = np.fmax.reduce(s, axis=2)  # (n, q)
             any_tok = ~np.isnan(tok_best)
             totals = np.where(any_tok, tok_best, 0.0).sum(axis=1)
-            for j, i in enumerate(idxs):
-                out[i] = float(totals[j]) if any_tok[j].any() else None
-        if all(x is not None for x in out):
-            return pd.Series([float(x) for x in out], dtype="float64")
-        return pd.Series(out, dtype=object)
+            out[sel] = np.where(any_tok.any(axis=1), totals, np.nan)
+        # ragged rows: each query token meets the doc tokens of its length
+        ragged = both & ~dense
+        qi, di = np.flatnonzero(ragged[q_row]), np.flatnonzero(ragged[d_row])
+        width = max(q_len.max(initial=0), d_len.max(initial=0)) + 1
+        d_key = d_row[di] * width + d_len[di]
+        order = np.argsort(d_key, kind="stable")
+        q_key = q_row[qi] * width + q_len[qi]
+        first = np.searchsorted(d_key[order], q_key, "left")
+        cnt = np.searchsorted(d_key[order], q_key, "right") - first
+        pq, pd = np.repeat(qi, cnt), di[order[_spans(first, cnt)]]
+        dots = np.empty(len(pq))
+        for dim in np.unique(q_len[pq]):
+            at = np.flatnonzero(q_len[pq] == dim)
+            dots[at] = np.einsum("ij,ij->i", q_mat(q_tok[pq[at]], dim), d_mat(d_tok[pd[at]], dim))
+        best = np.full(len(q_row), np.nan)
+        np.fmax.at(best, pq, dots)
+        # the sum over the scored tokens, in token order
+        ok = qi[~np.isnan(best[qi])]
+        scored = np.bincount(q_row[ok], minlength=n) > 0
+        out[scored] = np.bincount(q_row[ok], weights=best[ok], minlength=n)[scored]
+        return pa.array(out, mask=np.isnan(out))
 
     return _chamfer
 
 
 def cosine_pandas_udf():
-    """Arrow-batched exact cosine over ``(array, array)`` row pairs —
-    one vectorized einsum per Arrow batch instead of an interpreted
-    HOF fold per element. Same zero-denominator convention as
-    ``cosine_col`` (returns 0.0); NULL-input rows score 0.0 and ragged
-    rows score NULL — exactly the fold path's behavior (see
-    ``_stack_pair_batch``). Production scoring path for the ANN re-rank
-    family (``scoring="pandas"``)."""
+    """Arrow-batched exact cosine over ``(array, array)`` row pairs — one
+    einsum per Arrow batch and row length instead of an interpreted HOF
+    fold per element; every equal-length pair scores, whatever the
+    batch's other lengths. The fold path's conventions, row for row: a
+    zero or NaN denominator scores 0.0 (``cosine_col``'s
+    ``otherwise(0.0)``, which also catches a NULL input array and a NULL
+    element); a ragged pair scores NULL (``zip_with`` null-pads it); a
+    NaN result (an inf element: inf*0 or inf/inf) is NULL, like
+    ``cosine_col``'s outer nanvl. Production scoring path for the ANN
+    re-rank family (``scoring="pandas"``)."""
 
-    def _cos_dense(ma: np.ndarray, mb: np.ndarray) -> np.ndarray:
-        num = np.einsum("ij,ij->i", ma, mb)
-        den = np.sqrt(np.einsum("ij,ij->i", ma, ma)) * np.sqrt(
-            np.einsum("ij,ij->i", mb, mb)
-        )
-        safe = np.where(den > 0, den, 1.0)
-        return np.where(den > 0, num / safe, 0.0)
-
-    @pandas_udf("double")
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
-        valid, null, arrs_a, arrs_b = _stack_pair_batch(a, b)
-        vals = _pairwise_dense(valid, arrs_a, arrs_b, _cos_dense)
-        # an inf element can make num NaN while den stays positive
-        # (inf*0) or make the division NaN (inf/inf); mask those rows to
-        # NULL exactly like cosine_col's outer nanvl —
-        # a NaN score would outrank every real one (round-5 review)
-        nan_rows = np.isnan(vals)
-        if nan_rows.any():
-            valid[np.flatnonzero(valid)[nan_rows]] = False
-            vals = vals[~nan_rows]
-        if valid.all():
-            return pd.Series(vals)
-        return _scatter_valid(valid, vals, null_fill=null)
+    @arrow_udf("double")
+    def _cos(a: pa.Array, b: pa.Array) -> pa.Array:
+        la, va, ga = _vectors(a)
+        lb, vb, gb = _vectors(b)
+        out = np.where(va & vb & (la != lb), np.nan, 0.0)
+        ok = va & vb & (la == lb)
+        for dim in np.unique(la[ok]):
+            rows = np.flatnonzero(ok & (la == dim))
+            ma, mb = ga(rows, dim), gb(rows, dim)
+            num = np.einsum("ij,ij->i", ma, mb)
+            den = np.sqrt(np.einsum("ij,ij->i", ma, ma)) * np.sqrt(np.einsum("ij,ij->i", mb, mb))
+            out[rows] = np.where(den > 0, num / np.where(den > 0, den, 1.0), 0.0)
+        return pa.array(out, mask=np.isnan(out))
 
     return _cos

@@ -38,6 +38,9 @@ from lsh_forest_for_multi_vector_retrieval_spark.functions.simhash import (
     hyperplane_simhash_udf,
 )
 from lsh_forest_for_multi_vector_retrieval_spark.functions.vectors import (
+    _list_parts,
+    _require_kernel,
+    _vectors,
     cosine_col,
     cosine_pandas_udf,
 )
@@ -71,8 +74,6 @@ def _cosine_fn(scoring: str):
     thousands of candidates/query the interpreted fold was the dominant
     per-row cost of every ANN row). Identical semantics; ulp-level
     reduction-order differences possible, so fixtures keep "fold"."""
-    if scoring not in ("fold", "pandas"):
-        raise ValueError(f"scoring must be 'fold' or 'pandas', got {scoring!r}")
     return cosine_pandas_udf() if scoring == "pandas" else cosine_col
 
 
@@ -118,13 +119,6 @@ def _keep_margin(round_digits: int | None) -> float:
     return (0.0 if round_digits is None else 10.0 ** -round_digits) + 1e-9
 
 
-def _list_parts(col):
-    """``(offsets, lengths, valid, values)`` of an Arrow list array; the
-    offsets index ``values`` directly."""
-    off = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-    return off, np.diff(off), col.is_valid().to_numpy(zero_copy_only=False), col.values
-
-
 def _key_matrix(col, width: int):
     """``(vals, ok)``, both ``(rows, width)``: a key column as int64 with
     its element validity; rows of another length match nothing."""
@@ -145,12 +139,11 @@ def _dense_view(col, dims) -> dict:
     """``{dim: (at, mat, norms)}`` of an Arrow vector column: ``at[row]``
     is the row's index in ``mat`` when its vector is non-NULL, of length
     ``dim`` and finite, else -1."""
-    off, lens, valid, values = _list_parts(col)
-    flat = values.to_numpy(zero_copy_only=False).astype(np.float64)  # NULL -> NaN
+    lens, valid, gather = _vectors(col)
     view = {}
     for dim in dims:
         rows = np.flatnonzero(valid & (lens == dim))
-        mat = flat[off[rows][:, None] + np.arange(dim)]
+        mat = gather(rows, dim)
         fin = np.isfinite(mat).all(axis=1)
         at = np.full(len(col), -1)
         at[rows[fin]] = np.arange(fin.sum())
@@ -560,6 +553,7 @@ def lsh_topk(
     root — an exact scan of the whole corpus. Every query then gets
     min(k, number of distinct corpus ids other than its own) rows.
     """
+    _require_kernel(scoring=scoring)
     cosine = _cosine_fn(scoring)
     _validate_chunking(bits, n_chunks)
     hp = hyperplane_simhash_udf(dim=dim, bits=bits, seed=seed)
@@ -639,6 +633,7 @@ def embedding_near_dup_pairs(
     value to both when comparing against the brute oracle, or a pair
     whose raw cosine sits just under ``min_cosine`` but rounds up to it
     counts as a false miss no blocking tuning can fix."""
+    _require_kernel(scoring=scoring)
     cosine = _cosine_fn(scoring)
     _validate_chunking(bits, n_chunks)
     hp = hyperplane_simhash_udf(dim=dim, bits=bits, seed=seed)
@@ -720,6 +715,7 @@ def ivf_topk(
         sample_codebook,
     )
 
+    _require_kernel(assignment=assignment, scoring=scoring)
     cosine = _cosine_fn(scoring)
     _require_positive(k=k, nprobe=nprobe)
     if centroids is None:

@@ -216,10 +216,21 @@ def connected_components(
         labels_map = _driver_union_find(
             zip(pdf["doc_a"].tolist(), pdf["doc_b"].tolist())
         )
+        # from an Arrow table, so Spark holds the labels as a local
+        # relation: a parallelized Python list would be a PythonRDD whose
+        # every read runs Python worker tasks
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+
         vtype = edges.schema["doc_a"].dataType
-        rows = [(v, c) for v, c in labels_map.items()]
+        atype = to_arrow_type(vtype)
         labels = spark.createDataFrame(
-            rows,
+            pa.table(
+                {
+                    vertex_col: pa.array(list(labels_map), atype),
+                    "cluster_id": pa.array(list(labels_map.values()), atype),
+                }
+            ),
             schema=f"{vertex_col} {vtype.simpleString()}, cluster_id {vtype.simpleString()}",
         )
         if all_vertices is not None:

@@ -31,6 +31,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StructField, StructType
 
 from lsh_forest_for_multi_vector_retrieval_spark.functions.vectors import (
+    _list_parts,
+    _require_kernel,
+    _spans,
     centroid_scores_arr,
     dot_col,
     nearest_centroid,
@@ -39,7 +42,6 @@ from lsh_forest_for_multi_vector_retrieval_spark.operators.ann import (
     _broadcast_budget,
     _keep_margin,
     _keep_piece,
-    _list_parts,
     _query_slices,
     _require_positive,
 )
@@ -374,8 +376,7 @@ def _pool_kernel(bq, keep: int, margin: float, max_tokens: int, schema):
                 continue
             seg = lens[rows]
             starts = np.cumsum(seg) - seg
-            flat = np.repeat(off[rows] - starts, seg) + np.arange(seg.sum())
-            cpos = values.to_numpy(zero_copy_only=False)[flat]
+            cpos = values.to_numpy(zero_copy_only=False)[_spans(off[rows], seg)]
             ids = did.take(pa.array(rows)).to_numpy(zero_copy_only=False)
             fresh = []
             for j, lut in enumerate(q["kept"]):
@@ -503,11 +504,10 @@ def plaid_topk(
     Rows equal those of the relational plan this replaced (candidate
     join, score join, pool, ``d_mat`` join): the pass only drops rows
     that cannot reach a top-k."""
+    _require_kernel(assignment=assignment, scoring=scoring)
     _require_positive(k=k, nprobe=nprobe)
     if rerank is not None:
         _require_positive(rerank=rerank)
-    if scoring not in ("fold", "pandas"):
-        raise ValueError(f"scoring must be 'fold' or 'pandas', got {scoring!r}")
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 

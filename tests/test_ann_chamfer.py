@@ -29,8 +29,13 @@ from lsh_forest_for_multi_vector_retrieval_spark.operators.metrics import (
     pair_recall,
     recall_at_k,
 )
+from test_plaid_probe import _conf
 
 SF = "/root/testdata/sf0.001"
+
+# Arrow batches of 3 rows: a vector kernel's batches then cut through
+# clean and degenerate rows alike
+BATCH_3 = "spark.sql.execution.arrow.maxRecordsPerBatch", "3"
 
 
 @pytest.fixture(scope="module")
@@ -688,6 +693,20 @@ def test_pandas_scoring_null_and_ragged_rows_score_null(spark):
         "id", dot_col(F.col("a"), F.col("b")).alias("s")
     ).where(F.col("s") >= 0.5)
     assert [r.id for r in kept_dot.collect()] == [0, 5]
+    # the same rows in one partition, in 3-row Arrow batches: each batch
+    # mixes clean and degenerate rows, and the kernel still agrees with
+    # the fold row for row
+    with _conf(spark, *BATCH_3):
+        multi = df.coalesce(1).select(
+            "id",
+            cosine_pandas_udf()(F.col("a"), F.col("b")).alias("cos_pd"),
+            cosine_col(F.col("a"), F.col("b")).alias("cos_fold"),
+        ).collect()
+    assert len(multi) == len(got)
+    for r in multi:
+        assert (r.cos_pd is None) == (r.cos_fold is None), r
+        if r.cos_pd is not None:
+            assert abs(r.cos_pd - r.cos_fold) < 1e-12, r
 
 
 def test_pandas_centroid_assignment_degrades_like_fold(spark):
@@ -719,6 +738,23 @@ def test_pandas_centroid_assignment_degrades_like_fold(spark):
     for r in got:
         assert r.pd_cell == r.fold_cell, r
     assert [r.pd_cell for r in got] == [1, 0, 0, 0, 0]
+    # with NULL-element rows too, in one partition of 3-row Arrow batches
+    more = df.unionByName(
+        spark.createDataFrame(
+            [(5, [None, 1.0]), (6, [0.2, 0.8]), (7, [1.0, None]), (8, [0.7, 0.3])],
+            "id long, vec array<double>",
+        )
+    ).coalesce(1)
+    with _conf(spark, *BATCH_3):
+        multi = more.select(
+            "id",
+            nearest_centroid_pandas_udf(cents)(F.col("vec")).alias("pd_cell"),
+            F.array_max(centroid_scores_arr(cents, "vec"))["cid"].alias("fold_cell"),
+        ).collect()
+    assert sorted((r.id, r.pd_cell) for r in multi) == sorted((r.id, r.fold_cell) for r in multi)
+    assert sorted((r.id, r.pd_cell) for r in multi) == [
+        (0, 1), (1, 0), (2, 0), (3, 0), (4, 0), (5, 0), (6, 1), (7, 0), (8, 0)
+    ]
 
 
 def test_hyperplane_udf_degrades_on_bad_rows(spark):
@@ -747,6 +783,33 @@ def test_hyperplane_udf_degrades_on_bad_rows(spark):
         .view(np.int64)
     )
     assert [sigs[i] for i in range(6)] == list(words)
+    # a NULL or NaN element makes every projection NaN (sign 0); inf
+    # elements sign by their infinite projections. The values are the
+    # ones the pandas-UDF kernel gave; they hold in 3-row Arrow batches
+    inf = float("inf")
+    odd = spark.createDataFrame(
+        rows
+        + [
+            (103, [1.0, None, 0.5, -0.5, 2.0, 0.0, 1.0, -1.0]),
+            (104, [None] * 8),
+            (105, [inf] + [0.0] * 7),
+            (106, [-inf] + [0.0] * 7),
+            (107, [inf, -inf, 1.0] + [0.0] * 5),
+        ],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1)
+    with _conf(spark, *BATCH_3):
+        odd_sigs = {
+            r.vec_id: r.sig for r in odd.select("vec_id", hp("embedding").alias("sig")).collect()
+        }
+    assert odd_sigs == {
+        **sigs,
+        103: 0,
+        104: 0,
+        105: 929293572120908493,
+        106: -929293572120908494,
+        107: 586736309088813060,
+    }
     # dirty corpus end-to-end: ensure_k still returns k rows per clean query
     clean = df.where(F.col("vec_id") < 100)
     res = lsh_topk(df, clean, k=3, dim=8, ensure_k=True, round_digits=6)

@@ -216,6 +216,27 @@ def test_connected_components_paths_agree(spark):
     assert dist.exceptAll(driver).count() == 0
 
 
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_driver_labels_are_a_local_relation(spark, id_type):
+    """The driver union-find's labels are built from an Arrow table typed
+    like ``doc_a``, so Spark holds them as a local relation: their plan
+    has no RDD scan, whose every read would run Python worker tasks.
+    They still equal the star path's labels."""
+    cast = str if id_type == "string" else int
+    edges_py = [(1, 2), (2, 3), (10, 11), (5, 5), (12, 10)]
+    edges = spark.createDataFrame(
+        [(cast(a), cast(b)) for a, b in edges_py], f"doc_a {id_type}, doc_b {id_type}"
+    )
+    stats: dict = {}
+    driver = connected_components(edges, stats=stats)
+    assert stats["strategy"] == "driver_union_find"
+    plan = driver._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+    star = connected_components(edges, driver_max_edges=0)
+    assert driver.dtypes == star.dtypes
+    assert sorted(driver.collect()) == sorted(star.collect())
+
+
 def test_star_contraction_is_diameter_robust(spark):
     # a 2,000-vertex path has diameter 2,000: label propagation would
     # need 2,000 rounds, the star contraction must finish in O(log^2 n)

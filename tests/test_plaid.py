@@ -308,12 +308,15 @@ def test_round6_kernels_degenerate_inputs(spark):
     from pyspark.sql import functions as F
 
     from lsh_forest_for_multi_vector_retrieval_spark.functions.vectors import (
+        centroid_scores_arr,
         centroid_scorevec_pandas_udf,
         chamfer_pair_pandas_udf,
     )
     from lsh_forest_for_multi_vector_retrieval_spark.operators.plaid import (
         chamfer_pair_fold_col,
     )
+    from test_ann_chamfer import BATCH_3
+    from test_plaid_probe import _conf
 
     q = [[1.0, 0.0], [0.0, 2.0]]
     d = [[1.0, 1.0], [3.0, 0.0]]
@@ -348,6 +351,14 @@ def test_round6_kernels_degenerate_inputs(spark):
     assert got[6] == 3.0
     assert got[7] == 3.0
     assert got == fold  # the pandas kernel and its fold twin agree per row
+    # the same rows in one partition, in 3-row Arrow batches
+    with _conf(spark, *BATCH_3):
+        multi = df.coalesce(1).select(
+            "id",
+            chamfer_pair_pandas_udf()(F.col("q"), F.col("d")).alias("s"),
+            chamfer_pair_fold_col(F.col("q"), F.col("d"), None).alias("f"),
+        ).collect()
+    assert {r.id: r.s for r in multi} == {r.id: r.f for r in multi} == got
 
     cents = [[1.0, 0.0], [0.0, 1.0]]
     vdf = spark.createDataFrame(
@@ -363,6 +374,24 @@ def test_round6_kernels_degenerate_inputs(spark):
     assert [round(x, 9) for x in sv[0]] == [2.0, 3.0]
     assert list(sv[1]) == [None, None]  # NULL vector -> per-centroid NULLs
     assert list(sv[2]) == [None, None]  # wrong-dim vector -> NULLs
+    # more rows, a NULL element among them, in one partition of 3-row
+    # Arrow batches: the kernel equals its fold twin row for row
+    more = vdf.unionByName(
+        spark.createDataFrame(
+            [(3, [None, 1.0]), (4, [0.5, 0.5]), (5, []), (6, [1.0, 2.0]), (7, [3.0, None])],
+            "id long, v array<double>",
+        )
+    ).coalesce(1)
+    with _conf(spark, *BATCH_3):
+        multi = more.select(
+            "id",
+            centroid_scorevec_pandas_udf(cents)(F.col("v")).alias("s"),
+            F.transform(centroid_scores_arr(cents, "v"), lambda c: c["s"]).alias("f"),
+        ).collect()
+    assert len(multi) == 8
+    for r in multi:
+        assert r.s == r.f, r
+    assert {r.id: r.s for r in multi}[7] == [None, None]  # NULL element
 
     # non-finite centroids cannot survive a SQL literal — rejected loudly
     import pytest as _pytest

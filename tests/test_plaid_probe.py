@@ -17,7 +17,11 @@ from lsh_forest_for_multi_vector_retrieval_spark.functions.vectors import (
     chamfer_pair_pandas_udf,
 )
 from lsh_forest_for_multi_vector_retrieval_spark.operators import ann, plaid
-from lsh_forest_for_multi_vector_retrieval_spark.operators.ann import ivf_topk, lsh_topk
+from lsh_forest_for_multi_vector_retrieval_spark.operators.ann import (
+    embedding_near_dup_pairs,
+    ivf_topk,
+    lsh_topk,
+)
 from lsh_forest_for_multi_vector_retrieval_spark.operators.forest_vote import get_top_k
 from lsh_forest_for_multi_vector_retrieval_spark.operators.plaid import (
     _sum_tok_vals,
@@ -244,18 +248,39 @@ def _jobs(spark, action) -> int:
     ],
 )
 def test_counts_are_validated_before_any_job(spark, corpus, queries, cents, call, name, bad):
-    vecs = corpus.select("vec_id", "embedding")
-    calls = {
-        "plaid": lambda **kw: plaid_topk(corpus, queries, cents, **kw),
-        "ivf": lambda **kw: ivf_topk(vecs, vecs.limit(3), **kw),
-        "lsh": lambda **kw: lsh_topk(vecs, vecs.limit(3), **kw),
-    }
-
     def call_it():
         with pytest.raises(ValueError, match=f"{name} must be >= 1, got {bad}"):
-            calls[call](**{name: bad})
+            _call(call, corpus, queries, cents, **{name: bad})
 
     assert _jobs(spark, call_it) == 0
+
+
+@pytest.mark.parametrize(
+    "call, name",
+    [
+        ("plaid", "assignment"), ("plaid", "scoring"), ("ivf", "assignment"),
+        ("ivf", "scoring"), ("lsh", "scoring"), ("near_dup", "scoring"),
+    ],
+)
+def test_kernel_choices_are_validated_before_any_job(spark, corpus, queries, cents, call, name):
+    """A kernel choice other than 'fold' or 'pandas' fails before the
+    query collect (plaid) or the codebook sample (ivf) runs."""
+    def call_it():
+        with pytest.raises(ValueError, match=f"{name} must be 'fold' or 'pandas', got 'Pandas'"):
+            _call(call, corpus, queries, cents, **{name: "Pandas"})
+
+    assert _jobs(spark, call_it) == 0
+
+
+def _call(call, corpus, queries, cents, **kw):
+    vecs = corpus.select("vec_id", "embedding")
+    if call == "plaid":
+        return plaid_topk(corpus, queries, cents, **kw)
+    if call == "ivf":
+        return ivf_topk(vecs, vecs.limit(3), **kw)
+    if call == "lsh":
+        return lsh_topk(vecs, vecs.limit(3), **kw)
+    return embedding_near_dup_pairs(vecs, **kw)
 
 
 def test_doc_token_bound_fails_loudly_above_and_passes_at(spark, corpus, queries, cents, monkeypatch):

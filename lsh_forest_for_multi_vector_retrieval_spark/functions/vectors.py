@@ -194,13 +194,15 @@ def nearest_centroid(
 def nearest_centroid_pandas_udf(centroids: list[list[float]]):
     """Arrow-batched GEMM + argmax nearest-centroid assignment — the
     production sibling of ``array_max(centroid_scores_arr(...))["cid"]``.
-    ``np.argmax`` takes the FIRST max, i.e. ties go to the lowest
-    centroid id — the same rule as the fold path's struct ordering
-    (ulp-level GEMM reduction-order variance can still flip an EXACT
-    score tie, so fixture-oracle comparisons keep the fold). Degenerate
-    rows (NULL, empty, or wrong-dim vectors) assign to cell 0, exactly
-    like the fold: every per-centroid dot is NULL there, so the struct
-    max falls through to the lowest-cid tie-break."""
+    The argmax follows the fold's struct ordering: ties go to the lowest
+    centroid id, and a NaN score (inf meeting a 0 weight, or a NULL
+    element) ranks below every number, -inf included, as the NULL the
+    fold's ``dot_col`` makes of it does (ulp-level GEMM reduction-order
+    variance can still flip an EXACT score tie, so fixture-oracle
+    comparisons keep the fold). Degenerate rows (NULL, empty, or
+    wrong-dim vectors) and all-NaN rows assign to cell 0, exactly like
+    the fold: every per-centroid dot is NULL there, so the struct max
+    falls through to the lowest-cid tie-break."""
     cmat = np.asarray(centroids, dtype=np.float64)
     dim = cmat.shape[1]
 
@@ -209,7 +211,11 @@ def nearest_centroid_pandas_udf(centroids: list[list[float]]):
         lens, valid, gather = _vectors(v)
         rows = np.flatnonzero(valid & (lens == dim))
         out = np.zeros(len(v), dtype=np.int32)  # the fold's degenerate-row cell
-        out[rows] = np.argmax(gather(rows, dim) @ cmat.T, axis=1)
+        s = gather(rows, dim) @ cmat.T
+        num = ~np.isnan(s)
+        top = np.where(num, s, -np.inf).max(axis=1, initial=-np.inf)
+        best = num & (s == top[:, None])
+        out[rows] = np.where(best.any(axis=1), best.argmax(axis=1), 0)
         return pa.array(out)
 
     return _cell

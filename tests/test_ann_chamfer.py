@@ -230,7 +230,7 @@ def test_forest_vote_node_cap_preserves_topk(spark):
     # shared boilerplate footer forces depth-1 mega-nodes (the 100-TB
     # skew shape: every page of a site shares chrome).
     from lsh_forest_for_multi_vector_retrieval_spark.operators.forest_vote import (
-        prefix_table,
+        prefix_hashes,
     )
     from lsh_forest_for_multi_vector_retrieval_spark.sources.pages import generate_pages
 
@@ -267,8 +267,8 @@ def test_forest_vote_node_cap_preserves_topk(spark):
     # the cap must be non-vacuous on this fixture: boilerplate creates
     # nodes holding more than `cap` of the ~175 corpus docs
     node_sizes = (
-        prefix_table(corpus, cfg)
-        .groupBy("band_id", "depth", "prefix_hash")
+        corpus.select(F.posexplode(prefix_hashes(F.col("sig"), cfg)).alias("pos", "prefix_hash"))
+        .groupBy("pos", "prefix_hash")
         .count()
     )
     assert node_sizes.where(F.col("count") > cap).count() > 0
@@ -741,7 +741,11 @@ def test_pandas_centroid_assignment_degrades_like_fold(spark):
     # with NULL-element rows too, in one partition of 3-row Arrow batches
     more = df.unionByName(
         spark.createDataFrame(
-            [(5, [None, 1.0]), (6, [0.2, 0.8]), (7, [1.0, None]), (8, [0.7, 0.3])],
+            [(5, [None, 1.0]), (6, [0.2, 0.8]), (7, [1.0, None]), (8, [0.7, 0.3]),
+             # an inf meeting a 0 weight is a NaN dot: NULL in the fold,
+             # which ranks below every number, -inf included
+             (9, [float("inf"), 0.0]), (10, [0.0, float("inf")]),
+             (11, [float("-inf"), 0.0]), (12, [float("inf"), float("inf")])],
             "id long, vec array<double>",
         )
     ).coalesce(1)
@@ -753,7 +757,8 @@ def test_pandas_centroid_assignment_degrades_like_fold(spark):
         ).collect()
     assert sorted((r.id, r.pd_cell) for r in multi) == sorted((r.id, r.fold_cell) for r in multi)
     assert sorted((r.id, r.pd_cell) for r in multi) == [
-        (0, 1), (1, 0), (2, 0), (3, 0), (4, 0), (5, 0), (6, 1), (7, 0), (8, 0)
+        (0, 1), (1, 0), (2, 0), (3, 0), (4, 0), (5, 0), (6, 1), (7, 0), (8, 0),
+        (9, 0), (10, 1), (11, 0), (12, 0),
     ]
 
 
@@ -855,25 +860,39 @@ def test_embedding_near_dup_round_digits_matches_brute_boundary(spark, embedding
     assert ls == bs and len(bs) > 0
 
 
-def test_prefix_table_max_depth_bounds(spark):
-    """Round-5 review: max_depth=0 must mean 'zero-depth table' (not
+def test_prefix_hashes_max_depth_bounds(spark):
+    """Round-5 review: max_depth=0 must mean 'zero-depth path' (not
     silently full depth via a falsy-or), and a depth beyond rows_per_band
-    must raise instead of slicing prefix hashes across band boundaries."""
+    must raise instead of slicing prefix hashes across band boundaries.
+    Element b*max_depth + d-1 is tree b's depth-d node."""
     from lsh_forest_for_multi_vector_retrieval_spark.operators.forest_vote import (
-        prefix_table,
+        prefix_hashes,
     )
 
     cfg = DedupConfig()
     sigs = spark.createDataFrame(
-        [(i, list(range(cfg.num_bands * cfg.rows_per_band))) for i in range(3)],
+        [(i, list(range(i, i + cfg.num_bands * cfg.rows_per_band))) for i in range(3)],
         "doc_id long, sig array<long>",
     )
-    assert prefix_table(sigs, cfg, max_depth=0).count() == 0
-    assert prefix_table(sigs, cfg, max_depth=1).count() == 3 * cfg.num_bands
+    r = cfg.rows_per_band
+
+    def paths(m):
+        return [row.h for row in sigs.orderBy("doc_id").select(
+            prefix_hashes(F.col("sig"), cfg, max_depth=m).alias("h")).collect()]
+
+    assert paths(0) == [[], [], []]
+    assert [len(h) for h in paths(1)] == [cfg.num_bands] * 3
+    want = sigs.orderBy("doc_id").select(
+        F.xxhash64(F.slice("sig", 1, 2)).alias("b0d2"),
+        F.xxhash64(F.slice("sig", r + 1, 1)).alias("b1d1"),
+        F.xxhash64(F.slice("sig", 2 * r + 1, 2)).alias("b2d2"),
+    ).collect()
+    assert [(h[1], h[2], h[5]) for h in paths(2)] == [tuple(w) for w in want]
+    assert [h[:2] for h in paths(2)] == [h[:2] for h in paths(None)]
     with pytest.raises(ValueError):
-        prefix_table(sigs, cfg, max_depth=cfg.rows_per_band + 1)
+        prefix_hashes(F.col("sig"), cfg, max_depth=r + 1)
     with pytest.raises(ValueError):
-        prefix_table(sigs, cfg, max_depth=-1)
+        prefix_hashes(F.col("sig"), cfg, max_depth=-1)
 
 
 def test_chamfer_distance_quantized_null_parity(spark):

@@ -279,18 +279,72 @@ def test_ann_topk_job_count_and_plan_shape(spark, vecs):
 
         bare = call(ensure_k=False)
         bare.collect()
-        plan = bare._jdf.queryExecution().executedPlan().toString()
-        plan = plan.split("== Initial Plan ==")[0].splitlines()  # the final plan
+        plan = _final_plan(bare)
         at = [i for i, line in enumerate(plan) if "MapInArrow" in line]
         assert len(at) == 1, (name, plan)
-        depth = len(plan[at[0]]) - len(plan[at[0]].lstrip(" :+-"))
-        below = []
-        for line in plan[at[0] + 1:]:
-            if len(line) - len(line.lstrip(" :+-")) <= depth:
-                break
-            below.append(line)
-        assert not any("Exchange" in line for line in below), (name, plan)
+        assert not any("Exchange" in line for line in _below(plan, at[0])), (name, plan)
         assert sum("Exchange" in line for line in plan) == 1, (name, plan)
+
+
+def _final_plan(df) -> list[str]:
+    """The lines of ``df``'s executed plan; after an action, AQE's final
+    plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0].splitlines()
+
+
+def _below(plan: list[str], at: int) -> list[str]:
+    """The lines of the subtree under ``plan[at]``."""
+    depth = len(plan[at]) - len(plan[at].lstrip(" :+-"))
+    below = []
+    for line in plan[at + 1:]:
+        if len(line) - len(line.lstrip(" :+-")) <= depth:
+            break
+        below.append(line)
+    return below
+
+
+def test_forest_vote_job_count_and_plan_shape(spark, monkeypatch):
+    """A warm ``forest_vote_scores`` + ``get_top_k`` collect runs 5 jobs:
+    the query collect, the checkpointed corpus pass, the count-row
+    collect and the result's collect (one exchange stage + the result
+    stage). The pass is one ``MapInArrow`` with no Exchange below it, so
+    the corpus is never shuffled; the result's plan holds one Exchange,
+    ``hashpartitioning(query_id)``, with the node cap on and off."""
+    from lsh_forest_for_multi_vector_retrieval_spark.config import DedupConfig
+
+    cfg = DedupConfig()
+    rng = np.random.default_rng(5)
+    sigs = rng.integers(0, 6, size=(120, cfg.num_perm)).tolist()
+    corpus = spark.createDataFrame(list(enumerate(sigs)), "doc_id long, sig array<long>")
+    corpus = corpus.localCheckpoint(eager=True)
+    queries = corpus.where(F.col("doc_id") % 10 == 0)
+    passes = []
+    frame = type(corpus)
+    real = frame.localCheckpoint
+    monkeypatch.setattr(
+        frame, "localCheckpoint", lambda self, *a, **kw: passes.append(self) or real(self, *a, **kw)
+    )
+    for cap in (512, None):
+        def call():
+            return forest_vote.get_top_k(
+                forest_vote.forest_vote_scores(corpus, queries, cfg, max_node_docs=cap), k=5
+            )
+
+        call().collect()  # warm
+        assert _jobs(spark, lambda: call().collect()) == 5, cap
+
+        passes.clear()
+        top = call()
+        assert top.collect()
+        assert len(passes) == 1, cap
+        scan = _final_plan(passes[0])
+        at = [i for i, line in enumerate(scan) if "MapInArrow" in line]
+        assert len(at) == 1, (cap, scan)
+        assert not any("Exchange" in line for line in _below(scan, at[0])), (cap, scan)
+        plan = _final_plan(top)
+        exchanges = [line for line in plan if "Exchange" in line]
+        assert len(exchanges) == 1 and "hashpartitioning(query_id" in exchanges[0], (cap, plan)
 
 
 def test_forest_vote_counts_the_corpus_under_its_checkpoint(spark, monkeypatch):

@@ -171,6 +171,44 @@ def main() -> int:
          "the re-rank reuses that exchange"],
     ))
 
+    # 9. forest vote (perfbench's call): broadcast query paths, one corpus
+    # pass, one query_id exchange. The pass is checkpointed inside the
+    # call, so its plan is recorded from the frame forest_vote_scores
+    # checkpoints; the corpus signatures are materialized first, as the
+    # caller's persisted table is. Captured after an action.
+    from lsh_forest_for_multi_vector_retrieval_spark.operators.forest_vote import (
+        forest_vote_scores,
+        get_top_k,
+    )
+
+    cfg = DedupConfig()
+    fv_sigs = with_signatures(docs.select("doc_id", "text"), cfg).select(
+        "doc_id", "sig"
+    ).localCheckpoint()
+    fv_queries = fv_sigs.where(F.col("doc_id") % 31 == 0)
+    frame = type(fv_sigs)
+    checkpoint = frame.localCheckpoint
+    fv_passes = []
+    frame.localCheckpoint = (
+        lambda self, *a, **kw: fv_passes.append(self) or checkpoint(self, *a, **kw)
+    )
+    try:
+        fv_top = get_top_k(forest_vote_scores(fv_sigs, fv_queries, cfg), k=5)
+    finally:
+        frame.localCheckpoint = checkpoint
+    fv_top.collect()
+    sections.append((
+        "forest vote corpus pass (the frame forest_vote_scores checkpoints)",
+        "\n\n".join(plan_of(p) for p in fv_passes),
+        ["one MapInArrow over the corpus", "no Exchange below it"],
+    ))
+    sections.append((
+        "forest vote top-k (forest_vote_scores + get_top_k)",
+        plan_of(fv_top),
+        ["one Exchange, hashpartitioning(query_id)",
+         "every scoring stage above it"],
+    ))
+
     checks: list[str] = []
 
     def check(name: str, ok: bool, detail: str = "") -> None:
@@ -298,23 +336,26 @@ def main() -> int:
     pt = sections[7][1]
     pt_final = pt.split("== Initial Plan ==", 1)[0]
 
-    def details(node_id: str) -> str:
+    def details(plan: str, node_id: str) -> str:
         # the per-node block of the formatted explain's details section
-        m = _re.search(rf"\n\({node_id}\) [^\n]*\n(.*?)(?:\n\n|\Z)", pt, _re.S)
+        m = _re.search(rf"\n\({node_id}\) [^\n]*\n(.*?)(?:\n\n|\Z)", plan, _re.S)
         return m.group(1) if m else ""
+
+    def exchange_ids(plan: str) -> list[str]:
+        # shuffle exchanges (not Broadcast/ReusedExchange) of a plan's tree
+        return sorted(set(_re.findall(r"(?<![A-Za-z])Exchange \((\d+)\)", plan)))
 
     aggs = [
         i for i in sorted(set(_re.findall(r"ObjectHashAggregate \((\d+)\)", pt_final)))
-        if "partial_collect_list" in details(i)
+        if "partial_collect_list" in details(pt, i)
     ]
     exchanges = [
-        i for i in sorted(set(_re.findall(r"(?<![A-Za-z])Exchange \((\d+)\)", pt_final)))
-        if "hashpartitioning(doc_id" in details(i)
+        i for i in exchange_ids(pt_final) if "hashpartitioning(doc_id" in details(pt, i)
     ]
     check(
         "plaid_topk aggregates doc_vectors exactly once, by doc_id",
         len(aggs) == 1
-        and "Keys [1]: [doc_id" in details(aggs[0])
+        and "Keys [1]: [doc_id" in details(pt, aggs[0])
         and len(exchanges) == 1
         and "ReusedExchange" in pt_final,
         f"{len(aggs)} map-side collect_list aggregate(s), {len(exchanges)} "
@@ -322,6 +363,30 @@ def main() -> int:
         "(doc_id, cposs, d_vecs) table, the re-rank through a ReusedExchange "
         "(the former plan grouped doc_vectors twice: the inverted index and "
         "d_mat)",
+    )
+
+    fv_tree = sections[8][1].split("\n\n", 1)[0]  # the first pass's tree
+    check(
+        "forest vote: one MapInArrow over the corpus, no Exchange below it",
+        len(fv_passes) == 1
+        and fv_tree.count("MapInArrow") == 1
+        and "Exchange" not in fv_tree,
+        f"{len(fv_passes)} checkpointed pass(es); the pass counts the query-path "
+        "nodes and emits the (query, doc, node) matches per corpus partition "
+        "(the former plan exploded the corpus into per-node rows and shuffled "
+        "them for the node_pop groupBy and two joins)",
+    )
+    ft = sections[9][1]
+    ft_final = ft.split("== Initial Plan ==", 1)[0]
+    fv_exchanges = exchange_ids(ft_final)
+    check(
+        "forest vote: one query_id exchange above the pass",
+        len(fv_exchanges) == 1
+        and "hashpartitioning(query_id" in details(ft, fv_exchanges[0])
+        and "MapInArrow" in ft_final.split("Exchange (", 1)[1],
+        f"{len(fv_exchanges)} shuffle exchange(s); the groupBy, both windows "
+        "and get_top_k run on the one query_id partitioning (the former plan "
+        "ran one exchange each, keyed on supersets of query_id)",
     )
 
     out = ["# PLAN_AUDIT — physical plans of the headline operators",

@@ -102,7 +102,7 @@ def flagship_stages(
 
     ``verified`` passes ``materialize_pairs=False``: each runner hands it
     candidates that are cheap to traverse twice (cached in memory, a
-    parquet checkpoint scan, or the persisted micro-batch union)."""
+    parquet checkpoint scan, or the checkpointed micro-batch union)."""
 
     def signatures(spark, deps):
         return with_signatures(docs(spark), cfg).select(

@@ -44,7 +44,7 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -99,11 +99,13 @@ def history_collisions(
     same cap here a 1M-doc history bucket emits 1M pairs per colliding
     new doc per batch, growing without bound over stream lifetime. When
     set, the history side is first pruned to the COLLIDING buckets (a
-    broadcast semi-join — still no full-history shuffle), then capped to
-    the ``max_bucket_docs`` smallest doc_ids per bucket (the batch
-    path's deterministic keep rule; oldest docs win, matching batch-mode
-    ordering when ids grow with arrival). The ranking window shuffles
-    only the colliding-bucket subset, never the full history.
+    semi-join against the same batch rows the probe joins — on the
+    broadcast path still no full-history shuffle), then capped to the
+    ``max_bucket_docs`` smallest DISTINCT doc_ids per bucket (the batch
+    path's deterministic keep rule, whose ``collect_set`` also counts an
+    id once; oldest docs win, matching batch-mode ordering when ids grow
+    with arrival). The ranking window shuffles only the colliding-bucket
+    subset, never the full history.
 
     Reference analog: incremental insert threading new vectors into an
     EXISTING trie (/root/reference/src/shared/lsh_forest.py:66-70) — the
@@ -114,27 +116,51 @@ def history_collisions(
     n = new_bands.select(
         "band_id", "band_hash", F.col("doc_id").alias("new_doc")
     )
+    if broadcast:
+        n = F.broadcast(n)
     if max_bucket_docs is not None:
-        keys = n.select("band_id", "band_hash").distinct()
-        o = o.join(
-            F.broadcast(keys) if broadcast else keys,
-            ["band_id", "band_hash"],
-            "left_semi",
+        # ``doc_b >= doc_a`` holds for every pair with an id (it is NULL
+        # only for a NULL-id pair, which the output drops anyway), so this
+        # keeps exactly the colliding rows. It names new_doc, so column
+        # pruning leaves the batch rows whole and the semi-join and the
+        # probe below share one exchange of them: the broadcast, or on the
+        # fallback the batch side's hash exchange
+        pair = (o["old_doc"], n["new_doc"])
+        hit = (
+            (o["band_id"] == n["band_id"])
+            & (o["band_hash"] == n["band_hash"])
+            & (F.greatest(*pair) >= F.least(*pair))
         )
+        o = o.join(n, hit, "left_semi")
+        # dense_rank: a doc id stored by two batches takes one slot
         w = Window.partitionBy("band_id", "band_hash").orderBy("old_doc")
         o = (
-            o.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= max_bucket_docs)
-            .drop("_rn")
+            o.withColumn("_rank", F.dense_rank().over(w))
+            .where(F.col("_rank") <= max_bucket_docs)
+            .drop("_rank")
         )
     return (
-        o.join(F.broadcast(n) if broadcast else n, ["band_id", "band_hash"])
+        o.join(n, ["band_id", "band_hash"])
         .select(
             F.least("old_doc", "new_doc").alias("doc_a"),
             F.greatest("old_doc", "new_doc").alias("doc_b"),
         )
         .where(F.col("doc_a") != F.col("doc_b"))
     )
+
+
+def _release(checkpoints: list[DataFrame]) -> None:
+    """Drop the blocks of eager ``localCheckpoint``s. The cache manager
+    does not know them, so ``DataFrame.unpersist`` cannot; left alone
+    they stay on the executors until a driver GC lets the ContextCleaner
+    run (every 30 min by default), one set per micro-batch. Each frame's
+    plan is the ``LogicalRDD`` over the checkpointed RDD, and its blocks
+    are dropped the way the ContextCleaner drops them (``RDD.unpersist``
+    does the same but logs a warning per checkpoint that its lineage is
+    lost)."""
+    for df in checkpoints:
+        rdd = df._jdf.queryExecution().analyzed().rdd()
+        rdd.context().unpersistRDD(rdd.id(), True)
 
 
 class IncrementalDedup:
@@ -263,7 +289,18 @@ class IncrementalDedup:
         partition overwrite, so a replayed batch overwrites its own
         partition instead of appending duplicates; history reads exclude
         the current batch_id (a half-written retry partition is invisible).
+        The checkpoints the batch makes are released when it returns, so
+        executor storage stays flat over the stream's lifetime.
         """
+        held: list[DataFrame] = []
+        try:
+            self._insert(batch, batch_id, held)
+        finally:
+            _release(held)
+
+    def _insert(
+        self, batch: DataFrame, batch_id: int, held: list[DataFrame]
+    ) -> None:
         spark = batch.sparkSession
         cfg = self.cfg
         hwm = self._high_water_mark(spark)
@@ -280,11 +317,30 @@ class IncrementalDedup:
         # candidates and verified, and a batch never clusters
         docs = batch.select("doc_id", "text")
         stage = {s.name: s.fn for s in flagship_stages(lambda _: docs, cfg)}
-        sigs = stage["signatures"](spark, {}).persist()
+
+        def checkpoint(df: DataFrame) -> DataFrame:
+            # eager, and on ``held`` for process_batch to release
+            held.append(df.localCheckpoint(eager=True))
+            return held[-1]
+
+        # the batch is signed once, into an eager checkpoint that every
+        # later read (bands, the store, verify) consumes. Its Observation
+        # counts the non-empty docs, and ``band_table`` emits exactly
+        # ``num_bands`` rows per non-empty doc (adaptive bands are
+        # rejected in __init__), so the broadcast gate needs no job of
+        # its own
+        signed = Observation()
+        sigs = checkpoint(
+            stage["signatures"](spark, {}).observe(
+                signed, F.count_if(F.size("shingles") > 0).alias("n")
+            )
+        )
         # the persisted store carries only what verification reads; the
         # sig array exists transiently for the bands stage
         store_sigs = sigs.select("doc_id", "shingles", "simhash")
-        new_bands = stage["bands"](spark, {"signatures": sigs}).persist()
+        # a narrow projection of the checkpoint: every reader recomputes
+        # the band hashes in the JVM rather than caching the rows
+        new_bands = stage["bands"](spark, {"signatures": sigs})
 
         # gate on BOTH tables: a crash between the sigs and bands writes
         # must leave a state the replay repairs, not one that crashes
@@ -309,13 +365,12 @@ class IncrementalDedup:
             # collisions of new docs vs history: micro-batch side broadcast,
             # history probed in place (no per-batch history re-shuffle) —
             # unless the batch itself is oversized (backlog restart), where
-            # the shuffle join is the one that survives. count() is free
-            # here: new_bands is persisted and consumed below regardless.
-            small = new_bands.count() <= self.broadcast_max_band_rows
+            # the shuffle join is the one that survives
+            band_rows = signed.get["n"] * cfg.num_bands
             hist_hits = history_collisions(
                 new_bands,
                 old_bands,
-                broadcast=small,
+                broadcast=band_rows <= self.broadcast_max_band_rows,
                 max_bucket_docs=cfg.max_bucket_docs,
             )
             all_sigs = old_sigs.unionByName(store_sigs)
@@ -323,24 +378,26 @@ class IncrementalDedup:
             hist_hits = None
             all_sigs = store_sigs
 
-        # collisions inside the batch itself
+        # collisions inside the batch itself. Both distincts stay: the
+        # intra one is the flagship's own ``candidates`` stage, and the
+        # union's also folds a history pair found in several bands (and
+        # a pair of a doc id stored by two batches)
         intra = stage["candidates"](spark, {"bands": new_bands})
-        # one distinct suffices: it follows the union, subsuming the
-        # per-source dedup (review: the inner distinct was a second full
-        # shuffle of the history-collision pairs every batch)
-        cands = (
+        # an eager checkpoint, not a cache: verify's candidate prune reads
+        # the pairs twice, and everything is materialized BEFORE the first
+        # state write — the verified plan reads the history tables, and
+        # executing it after this batch's own sigs/bands writes makes the
+        # file source re-list a directory with in-flight files (observed:
+        # a first-ever partition dir appearing under a previously
+        # partition-less empty table trips the parquet reader's
+        # partition-schema assertion). The checkpoints sever the lineage,
+        # so the writes below consume only materialized data.
+        cands = checkpoint(
             intra if hist_hits is None else intra.unionByName(hist_hits).distinct()
-        ).persist()  # verify's candidate prune traverses cands twice
-        # materialize BEFORE any state write: the verified plan reads the
-        # history tables, and executing it after this batch's own sigs/
-        # bands writes makes the file source re-list a directory with
-        # in-flight files (observed: a first-ever partition dir appearing
-        # under a previously partition-less empty table trips the parquet
-        # reader's partition-schema assertion). Checkpointing severs the
-        # lineage so the writes below consume only materialized data.
-        verified = stage["verified"](
-            spark, {"candidates": cands, "signatures": all_sigs}
-        ).localCheckpoint(eager=True)
+        )
+        verified = checkpoint(
+            stage["verified"](spark, {"candidates": cands, "signatures": all_sigs})
+        )
 
         def _write(df: DataFrame, path: str) -> None:
             (
@@ -359,9 +416,6 @@ class IncrementalDedup:
             self._hwm_path,
             json.dumps({"max_batch_id": max(hwm, batch_id)}),
         )
-        cands.unpersist(blocking=True)
-        sigs.unpersist(blocking=True)
-        new_bands.unpersist(blocking=True)
 
     # -- streaming wiring ----------------------------------------------------
     def start(

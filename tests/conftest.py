@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from lsh_forest_for_multi_vector_retrieval_spark.session import get_spark
@@ -15,3 +17,21 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def jobs(spark):
+    """``jobs(action)``: the Spark jobs one call of ``action`` launches,
+    AQE stage jobs and checkpoints included."""
+    sc = spark.sparkContext
+
+    def count(action) -> int:
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

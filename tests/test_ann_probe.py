@@ -5,8 +5,6 @@ gates and the root scan."""
 
 from __future__ import annotations
 
-import uuid
-
 import numpy as np
 import pytest
 from pyspark.sql import Observation
@@ -247,20 +245,7 @@ def test_one_row_per_query_and_id_when_the_corpus_repeats_an_id(spark, vecs):
 
 
 # --------------------------------------------------------- CI guards
-def _jobs(spark, action) -> int:
-    """Spark jobs one call of ``action`` launches, AQE stage jobs and
-    checkpoints included."""
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_ann_topk_job_count_and_plan_shape(spark, vecs):
+def test_ann_topk_job_count_and_plan_shape(jobs, vecs):
     """A saturated ``ensure_k`` call runs: the query collect, the
     checkpointed corpus pass, the count-row collect and the result's
     collect (one exchange stage + the result stage) — at most 5 jobs.
@@ -275,7 +260,7 @@ def test_ann_topk_job_count_and_plan_shape(spark, vecs):
     }
     for name, call in calls.items():
         call(ensure_k=True).collect()  # warm
-        assert _jobs(spark, lambda: call(ensure_k=True).collect()) <= 5, name
+        assert jobs(lambda: call(ensure_k=True).collect()) <= 5, name
 
         bare = call(ensure_k=False)
         bare.collect()
@@ -304,7 +289,7 @@ def _below(plan: list[str], at: int) -> list[str]:
     return below
 
 
-def test_forest_vote_job_count_and_plan_shape(spark, monkeypatch):
+def test_forest_vote_job_count_and_plan_shape(spark, jobs, monkeypatch):
     """A warm ``forest_vote_scores`` + ``get_top_k`` collect runs 5 jobs:
     the query collect, the checkpointed corpus pass, the count-row
     collect and the result's collect (one exchange stage + the result
@@ -332,7 +317,7 @@ def test_forest_vote_job_count_and_plan_shape(spark, monkeypatch):
             )
 
         call().collect()  # warm
-        assert _jobs(spark, lambda: call().collect()) == 5, cap
+        assert jobs(lambda: call().collect()) == 5, cap
 
         passes.clear()
         top = call()
@@ -347,7 +332,7 @@ def test_forest_vote_job_count_and_plan_shape(spark, monkeypatch):
         assert len(exchanges) == 1 and "hashpartitioning(query_id" in exchanges[0], (cap, plan)
 
 
-def test_forest_vote_counts_the_corpus_under_its_checkpoint(spark, monkeypatch):
+def test_forest_vote_counts_the_corpus_under_its_checkpoint(spark, jobs, monkeypatch):
     """``n_docs`` comes from an Observation the eager ``corpus_pref``
     checkpoint fills: scores are identical to counting the corpus, and
     the call runs exactly the jobs of that count fewer."""
@@ -365,7 +350,7 @@ def test_forest_vote_counts_the_corpus_under_its_checkpoint(spark, monkeypatch):
 
     scores()  # warm
     got = []
-    new_jobs = _jobs(spark, lambda: got.append(scores()))
+    new_jobs = jobs(lambda: got.append(scores()))
 
     class Counted(Observation):
         @property
@@ -374,8 +359,8 @@ def test_forest_vote_counts_the_corpus_under_its_checkpoint(spark, monkeypatch):
 
     monkeypatch.setattr(forest_vote, "Observation", Counted)
     want = []
-    old_jobs = _jobs(spark, lambda: want.append(scores()))
-    count_jobs = _jobs(spark, corpus.count)
+    old_jobs = jobs(lambda: want.append(scores()))
+    count_jobs = jobs(corpus.count)
     assert got == want and got
     assert count_jobs >= 1 and new_jobs == old_jobs - count_jobs
     corpus.unpersist()

@@ -6,7 +6,6 @@ inverted index, the score join, the pool and the ``d_mat`` join."""
 from __future__ import annotations
 
 import contextlib
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -227,18 +226,6 @@ def test_plaid_pass_slices_a_query_batch_above_the_broadcast_threshold(spark, co
 
 
 # ------------------------------------------------------------ the bounds
-def _jobs(spark, action) -> int:
-    """Spark jobs one call of ``action`` launches, AQE stage jobs included."""
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize(
     "call, name, bad",
     [
@@ -247,12 +234,12 @@ def _jobs(spark, action) -> int:
         ("ivf", "nprobe", 0), ("ivf", "nprobe", -1), ("ivf", "k", 0), ("lsh", "k", 0), ("lsh", "k", -1),
     ],
 )
-def test_counts_are_validated_before_any_job(spark, corpus, queries, cents, call, name, bad):
+def test_counts_are_validated_before_any_job(jobs, corpus, queries, cents, call, name, bad):
     def call_it():
         with pytest.raises(ValueError, match=f"{name} must be >= 1, got {bad}"):
             _call(call, corpus, queries, cents, **{name: bad})
 
-    assert _jobs(spark, call_it) == 0
+    assert jobs(call_it) == 0
 
 
 @pytest.mark.parametrize(
@@ -262,14 +249,14 @@ def test_counts_are_validated_before_any_job(spark, corpus, queries, cents, call
         ("ivf", "scoring"), ("lsh", "scoring"), ("near_dup", "scoring"),
     ],
 )
-def test_kernel_choices_are_validated_before_any_job(spark, corpus, queries, cents, call, name):
+def test_kernel_choices_are_validated_before_any_job(jobs, corpus, queries, cents, call, name):
     """A kernel choice other than 'fold' or 'pandas' fails before the
     query collect (plaid) or the codebook sample (ivf) runs."""
     def call_it():
         with pytest.raises(ValueError, match=f"{name} must be 'fold' or 'pandas', got 'Pandas'"):
             _call(call, corpus, queries, cents, **{name: "Pandas"})
 
-    assert _jobs(spark, call_it) == 0
+    assert jobs(call_it) == 0
 
 
 def _call(call, corpus, queries, cents, **kw):
@@ -299,7 +286,7 @@ def test_doc_token_bound_fails_loudly_above_and_passes_at(spark, corpus, queries
 
 
 # ------------------------------------------------------------- CI guards
-def test_plaid_job_count_and_plan_shape(spark, corpus, queries, cents):
+def test_plaid_job_count_and_plan_shape(jobs, corpus, queries, cents):
     """A warm re-rank call runs at most 7 jobs: the query collect, the
     per-doc exchange, the query-vector broadcast, the pool window's
     exchange, the pool broadcast, the final window's exchange and the
@@ -311,7 +298,7 @@ def test_plaid_job_count_and_plan_shape(spark, corpus, queries, cents):
                           assignment="pandas", scoring="pandas")
 
     call().collect()  # warm
-    assert _jobs(spark, lambda: call().collect()) <= 7
+    assert jobs(lambda: call().collect()) <= 7
 
     df = call()
     df.collect()

@@ -263,6 +263,16 @@ def test_history_hot_bucket_cap_bounds_pairs(spark):
     uncapped = history_collisions(new, old).count()
     assert uncapped == 1000
 
+    # every id stored by two batches (a replayed feed): each id takes one
+    # slot, as the batch path's collect_set counts it once — still the 64
+    # smallest distinct ids, on both sides of the broadcast gate
+    twice = old.unionByName(old)
+    for broadcast in (True, False):
+        capped = history_collisions(
+            new, twice, broadcast=broadcast, max_bucket_docs=64
+        ).collect()
+        assert {r.doc_a for r in capped} == set(range(64)), broadcast
+
 
 def test_hwm_guard_refuses_renumbered_batches(spark, tmp_path):
     """Round-5 review: deleting the streaming checkpoint while keeping
@@ -314,3 +324,77 @@ def test_adaptive_bands_rejected_by_streaming(tmp_path):
         IncrementalDedup(
             str(tmp_path / "ad_state"), replace(CFG, use_adaptive_bands=True)
         )
+
+
+def _small_pages(spark):
+    """41 pages whose exact-dup copies pair across an id split at 20."""
+    return generate_pages(
+        spark, n_clusters=3, cluster_size=2, n_singletons=5, seed=11
+    ).select("doc_id", "text").localCheckpoint(eager=True)
+
+
+def test_process_batch_job_budget(spark, jobs, tmp_path):
+    """Job counts of one ``process_batch``: without history, and with
+    history on both sides of ``broadcast_max_band_rows``. The budgets are
+    the measured counts (the same cold and warm); a change that cuts jobs
+    lowers them. Each call leaves nothing behind: what it reads twice is
+    an eager checkpoint, not a cache, so the cache manager stays empty,
+    and it releases its checkpoints, so block storage stays flat from
+    batch to batch (checkpoints are not in the cache manager; only the
+    block manager's RDD list shows them)."""
+    pages = _small_pages(spark)
+    first = pages.where(F.col("doc_id") < 20)
+    second = pages.where(F.col("doc_id") >= 20)
+    spark.catalog.clearCache()  # earlier tests' caches are not this call's
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    sc = spark.sparkContext._jsc.sc()
+
+    def stored() -> set[int]:
+        return {info.id() for info in sc.getRDDStorageInfo()}
+
+    before = stored()
+    inc = IncrementalDedup(str(tmp_path / "state"), CFG)
+    assert jobs(lambda: inc.process_batch(first, 0)) <= 15
+    assert cache.isEmpty() and stored() <= before
+    assert jobs(lambda: inc.process_batch(second, 1)) <= 19
+    assert cache.isEmpty() and stored() <= before
+    # a replay of batch 1 past the gate: the shuffle join
+    shuffled = IncrementalDedup(str(tmp_path / "state"), CFG, broadcast_max_band_rows=0)
+    assert jobs(lambda: shuffled.process_batch(second, 1)) <= 19
+    assert cache.isEmpty() and stored() <= before
+
+
+def test_broadcast_gate_boundary(spark, tmp_path, monkeypatch):
+    """The gate counts the batch's band rows exactly, without a job of its
+    own: ``num_bands`` per doc with shingles, none for an empty or NULL
+    text. At that count the batch broadcasts; one row less takes the
+    shuffle join, and both find the same pairs."""
+    from lsh_forest_for_multi_vector_retrieval_spark.streaming import incremental
+
+    pages = _small_pages(spark)
+    first = pages.where(F.col("doc_id") < 20)
+    blanks = spark.createDataFrame(
+        [(100, ""), (101, None), (102, "  ")], "doc_id long, text string"
+    )
+    second = pages.where(F.col("doc_id") >= 20).unionByName(blanks)
+    band_rows = pages.where(F.col("doc_id") >= 20).count() * CFG.num_bands
+
+    paths = []
+    probe = incremental.history_collisions
+
+    def recording(*args, broadcast=True, **kwargs):
+        paths.append(broadcast)
+        return probe(*args, broadcast=broadcast, **kwargs)
+
+    monkeypatch.setattr(incremental, "history_collisions", recording)
+    IncrementalDedup(str(tmp_path / "state"), CFG).process_batch(first, 0)
+    got = []
+    for limit in (band_rows, band_rows - 1):  # the second replays batch 1
+        inc = IncrementalDedup(
+            str(tmp_path / "state"), CFG, broadcast_max_band_rows=limit
+        )
+        inc.process_batch(second, 1)
+        got.append({tuple(r) for r in inc.pairs(spark).select("doc_a", "doc_b").collect()})
+    assert paths == [True, False]
+    assert got[0] == got[1]
+    assert any(a < 20 <= b for a, b in got[0])  # history collisions exist

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import shutil
 import sys
 from pathlib import Path
 
@@ -118,6 +119,26 @@ def main() -> int:
         "streaming history_collisions (micro-batch broadcast probe)",
         plan_of(history_collisions(new_bands, hist_bands)),
         ["BroadcastHashJoin", "no shuffle Exchange on the history side"],
+    ))
+
+    # 5b. the capped probe process_batch runs (max_bucket_docs is set by
+    # default): the batch band rows are a projection of the signing
+    # checkpoint, as in process_batch, and the batch is the complement of
+    # the history so buckets collide. Captured after an action, so the
+    # plan is AQE's final one.
+    cfg = DedupConfig()
+    batch_sigs = with_signatures(
+        docs.where(F.col("doc_id") % 10 == 0), cfg
+    ).localCheckpoint(eager=True)
+    capped = history_collisions(
+        band_table(batch_sigs, cfg), hist_bands, max_bucket_docs=cfg.max_bucket_docs
+    )
+    capped.collect()
+    sections.append((
+        "streaming history_collisions, capped (the probe process_batch runs)",
+        plan_of(capped),
+        ["one broadcast of the batch band rows, reused by the semi-join and the join",
+         "one Exchange: the cap window over the colliding history rows"],
     ))
 
     # 6. (round-5) BPE token-encoding stage: learn = one map-side-combined
@@ -311,7 +332,44 @@ def main() -> int:
         "history every micro-batch)",
     )
 
-    bl = sections[5][1]
+    def details(plan: str, node_id: str) -> str:
+        # the per-node block of the formatted explain's details section
+        m = _re.search(rf"\n\({node_id}\) [^\n]*\n(.*?)(?:\n\n|\Z)", plan, _re.S)
+        return m.group(1) if m else ""
+
+    def exchange_ids(plan: str) -> list[str]:
+        # shuffle exchanges (not Broadcast/ReusedExchange) of a plan's tree
+        return sorted(set(_re.findall(r"(?<![A-Za-z])Exchange \((\d+)\)", plan)))
+
+    ct = sections[5][1]
+    ct_final = ct.split("== Initial Plan ==", 1)[0]
+    bx = _re.findall(r"BroadcastExchange \((\d+)\)", ct_final)
+    rx = _re.findall(r"ReusedExchange \((\d+)\)", ct_final)
+    check(
+        "capped history probe: one broadcast of the batch rows, reused by both joins",
+        len(bx) == 1
+        and len(rx) == 1
+        and f"[Reuses operator id: {bx[0]}]" in ct
+        and "LeftSemi" in ct_final,
+        f"{len(bx)} BroadcastExchange, {len(rx)} ReusedExchange; the semi-join "
+        "that finds the colliding buckets and the probe that pairs them read "
+        "one broadcast (the former plan also broadcast a distinct key table, "
+        "behind a shuffle of its own)",
+    )
+    cx = exchange_ids(ct_final)
+    at = ct_final.find(f"Exchange ({cx[0]})") if len(cx) == 1 else -1
+    check(
+        "capped history probe: the history scan's only Exchange is the cap window",
+        len(cx) == 1
+        and "hashpartitioning(band_id" in details(ct, cx[0])
+        and ct_final.count("Scan parquet") == 1
+        and at < ct_final.find("LeftSemi") < ct_final.find("Scan parquet"),
+        f"{len(cx)} shuffle exchange(s); the history is probed in place, and "
+        "only its rows in colliding buckets are shuffled, for the "
+        "max_bucket_docs rank",
+    )
+
+    bl = sections[6][1]
     check(
         "bpe learn aggregates map-side before its one shuffle",
         "partial" in bl.lower(),
@@ -324,7 +382,7 @@ def main() -> int:
         "driver table never routes the corpus-wide word set through a "
         "global Sort Exchange",
     )
-    be_tree = sections[6][1].split("\n\n", 1)[0]
+    be_tree = sections[7][1].split("\n\n", 1)[0]
     check(
         "bpe encode is a shuffle-free Arrow projection",
         ("ArrowEvalPython" in be_tree or "EvalPython" in be_tree)
@@ -333,17 +391,8 @@ def main() -> int:
         "Project, zero Exchanges",
     )
 
-    pt = sections[7][1]
+    pt = sections[8][1]
     pt_final = pt.split("== Initial Plan ==", 1)[0]
-
-    def details(plan: str, node_id: str) -> str:
-        # the per-node block of the formatted explain's details section
-        m = _re.search(rf"\n\({node_id}\) [^\n]*\n(.*?)(?:\n\n|\Z)", plan, _re.S)
-        return m.group(1) if m else ""
-
-    def exchange_ids(plan: str) -> list[str]:
-        # shuffle exchanges (not Broadcast/ReusedExchange) of a plan's tree
-        return sorted(set(_re.findall(r"(?<![A-Za-z])Exchange \((\d+)\)", plan)))
 
     aggs = [
         i for i in sorted(set(_re.findall(r"ObjectHashAggregate \((\d+)\)", pt_final)))
@@ -365,7 +414,7 @@ def main() -> int:
         "d_mat)",
     )
 
-    fv_tree = sections[8][1].split("\n\n", 1)[0]  # the first pass's tree
+    fv_tree = sections[9][1].split("\n\n", 1)[0]  # the first pass's tree
     check(
         "forest vote: one MapInArrow over the corpus, no Exchange below it",
         len(fv_passes) == 1
@@ -376,7 +425,7 @@ def main() -> int:
         "(the former plan exploded the corpus into per-node rows and shuffled "
         "them for the node_pop groupBy and two joins)",
     )
-    ft = sections[9][1]
+    ft = sections[10][1]
     ft_final = ft.split("== Initial Plan ==", 1)[0]
     fv_exchanges = exchange_ids(ft_final)
     check(
@@ -399,6 +448,7 @@ def main() -> int:
                 "```", plan.rstrip(), "```", ""]
     Path(ROOT / "PLAN_AUDIT.md").write_text("\n".join(out))
     print("\n".join(checks))
+    shutil.rmtree(hist_dir, ignore_errors=True)
     spark.stop()
     return 0
 

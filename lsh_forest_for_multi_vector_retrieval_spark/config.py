@@ -39,25 +39,21 @@ class DedupConfig:
 
     # --- verification ---
     jaccard_threshold: float = 0.8
-    # verify always semi-join-prunes the signature table to docs that
-    # appear in at least one candidate pair before the verify joins.
-    # Candidate docs are a small fraction of the corpus (dedup
-    # selectivity), so this turns "shuffle every shingle array in the
-    # corpus through a sort-merge join" into "broadcast a set of ids and
-    # probe the signature scan in place" — measured 60.8 s -> ~4 s for
-    # the verify stage at 320k docs on 4 cores.
-    # Candidate-id sets up to this size are broadcast for the prune's
-    # semi-join; above it (duplicate-dense corpora — boilerplate-heavy
-    # crawls where most docs appear in some pair) the prune falls back to
-    # a shuffle semi-join of the slim id column instead of force-feeding
-    # a multi-GB LongHashedRelation past the autoBroadcastJoinThreshold
-    # (a broadcast hash relation costs ~30-50 B/row on the executor heap,
-    # not the 8 B/row of the raw longs: 10M ids ~ 0.3-0.5 GB, a safe
-    # ceiling for 8 GB executors). Gating is two-tier (verify.py): the
-    # shuffle-free bound 2*|pairs| fast-paths the common case, and only
-    # when that bound is exceeded is the exact distinct-id count
-    # materialized and compared — so this knob is always an EXACT id
-    # ceiling, at one extra action only on duplicate-dense inputs.
+    # verify probes the signature table in place with a BROADCAST of the
+    # pairs' endpoint rows (doc_a, doc_b, endpoint id): the inner join is
+    # the prune to candidate docs, so the shingle arrays of the rest of
+    # the corpus never move (unpruned, the verify stage was 60.8 s of a
+    # 133 s flagship pass at 320k docs on 4 cores; pruned ~4 s). This
+    # knob is the broadcast ceiling in LONGS: a one-long row of a
+    # broadcast hash relation costs ~30-50 B on the executor heap, so 10M
+    # is ~0.3-0.5 GB, a safe ceiling for 8 GB executors. The endpoint table
+    # is at most 2*|pairs| rows of three longs, broadcast while
+    # 6*|pairs| fits. Above it (duplicate-dense corpora: boilerplate-heavy
+    # crawls where millions of pairs span few docs) the exact distinct
+    # endpoint ids are materialized and counted, one id per long; they
+    # are broadcast for a semi-join prune when they fit and shuffled
+    # when not, and the endpoint rows then join the pruned docs
+    # (verify.py::_join_shingles).
     verify_prune_max_ids: int = 10_000_000
 
     # --- skew / scale controls (north_rule: explicit skew handling) ---

@@ -7,10 +7,12 @@ permutation parameters ``(A, B)`` are drawn once from a seeded generator and
 captured in the UDF closure — broadcast to every executor for free via task
 serialization, no driver round-trips.
 
-Arithmetic is plain ``(a*h + b) mod p`` over uint64 with the Mersenne prime
+Arithmetic is ``(a*h + b) mod p`` over uint64 with the Mersenne prime
 p = 2^61 - 1; uint64 wraparound is deterministic and identical on every
 platform/executor, which is the property that matters for dedup (the
-north_rule requires reproducible signatures across the cluster).
+north_rule requires reproducible signatures across the cluster). The UDF
+reduces mod p with shifts and masks instead of ``%``, bit-identical to the
+``minhash_np`` oracle.
 
 Vectorization: per Arrow batch we hash the batch's *unique* shingles once
 (a (num_perm, U) matrix) and take per-document segment minima with
@@ -27,6 +29,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 MERSENNE_61 = np.uint64((1 << 61) - 1)
+SHIFT_61 = np.uint64(61)
 EMPTY_SIG_FILL = np.int64((1 << 61) - 1)  # sentinel sig for empty docs
 
 
@@ -112,8 +115,19 @@ def minhash_udf(num_perm: int = 128, seed: int = 42) -> Column:
                 out.append(empty_sig)
                 continue
             s = np.asarray(x, dtype=np.int64).view(np.uint64)
-            sig = ((a_col * s[None, :] + b_col) % MERSENNE_61).min(axis=1)
-            out.append(sig.astype(np.int64))
+            # v mod p without a division: 2^61 = 1 (mod p), so
+            # r = (v & p) + (v >> 61) = v (mod p) with r < 2p. Per element
+            # the residue is min(r, r - p) in uint64 (r - p wraps above p
+            # when r < p), so the row minimum is the smaller of the two
+            # row minima. In place: a work matrix and one temporary
+            v = a_col * s[None, :]
+            v += b_col
+            r = v & MERSENNE_61
+            v >>= SHIFT_61
+            r += v
+            low = r.min(axis=1)
+            r -= MERSENNE_61
+            out.append(np.minimum(low, r.min(axis=1)).astype(np.int64))
         return pd.Series(out)
 
     return _minhash

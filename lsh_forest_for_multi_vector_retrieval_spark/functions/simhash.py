@@ -49,8 +49,11 @@ def simhash_udf() -> Column:
     """Factory: ``array<bigint> shingles -> bigint simhash``."""
 
     # per-row kernels: the (n_shingles, 64) bit matrix of one document is
-    # ~75 KB and cache-resident (see minhash.py for the measured rationale)
-    bit_row = _BITS[None, :]
+    # ~16 KB of bytes and cache-resident (see minhash.py for the measured
+    # rationale). The bits come from the explicit little-endian byte view,
+    # so column b of ``unpackbits(..., bitorder="little")`` is bit b of the
+    # word on any host, and bit b is set when its +-1 votes sum to >= 0,
+    # i.e. 2 * ones >= n
 
     @pandas_udf(T.LongType())
     def _simhash(shingle_col: pd.Series) -> pd.Series:
@@ -61,33 +64,30 @@ def simhash_udf() -> Column:
             n = 0 if x is None else len(x)
             if n == 0:
                 continue
-            s = np.asarray(x, dtype=np.int64).view(np.uint64)
-            bits = ((s[:, None] >> bit_row) & np.uint64(1)).astype(np.int64)
-            votes = 2 * bits.sum(axis=0) - n
-            word = ((votes >= 0).astype(np.uint64) << _BITS).sum(dtype=np.uint64)
-            out[i] = np.int64(word.astype(np.int64))
+            s = np.asarray(x, dtype="<i8").view(np.uint8).reshape(n, 8)
+            ones = np.unpackbits(s, axis=1, bitorder="little").sum(axis=0)
+            out[i] = np.packbits(2 * ones >= n, bitorder="little").view("<i8")[0]
         return pd.Series(out)
 
     return _simhash
 
 
-def hamming_chunk_cols(col: Column, width: int, n_chunks: int) -> Column:
+def hamming_chunk_cols(name: str, width: int, n_chunks: int) -> Column:
     """``array<bigint>`` of the ``n_chunks`` unsigned ``width``-bit chunks
-    of a packed 64-bit signature — the pigeonhole blocking kernel behind
-    ``operators.pairs.chunk_blocks`` (SimHash text dedup, ahash media
-    dedup, hyperplane ANN).
+    of the packed 64-bit signature in column ``name`` — the pigeonhole
+    blocking kernel behind ``operators.pairs.chunk_blocks`` (SimHash text
+    dedup, ahash media dedup, hyperplane ANN).
 
-    The width==64 case (one chunk = exact-hash blocking, e.g.
+    Built as one SQL expression, ``array(shiftrightunsigned(sig, c*width)
+    & mask, ...)``: one py4j call instead of four ``F`` calls per chunk
+    (lsh_topk builds hundreds of chunks), for the same analyzed plan. The
+    width==64 case (one chunk = exact-hash blocking, e.g.
     ``max_hamming=0`` or ``n_chunks=1``) needs ``mask = -1``:
-    ``(1 << 64) - 1`` overflows LongType and py4j ships it as a Decimal
-    the bitwiseAND rejects."""
-    mask = F.lit(-1 if width == 64 else (1 << width) - 1)
-    return F.array(
-        *[
-            F.shiftrightunsigned(col, c * width).bitwiseAND(mask)
-            for c in range(n_chunks)
-        ]
-    )
+    ``(1 << 64) - 1`` does not fit a bigint literal."""
+    mask = -1 if width == 64 else (1 << width) - 1
+    sig = "`" + name.replace("`", "``") + "`"
+    chunks = (f"shiftrightunsigned({sig}, {c * width}) & {mask}" for c in range(n_chunks))
+    return F.expr(f"array({', '.join(chunks)})")
 
 
 def hyperplane_simhash_udf(dim: int, bits: int = 64, seed: int = 42) -> Column:

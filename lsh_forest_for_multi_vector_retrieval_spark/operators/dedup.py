@@ -42,8 +42,8 @@ from lsh_forest_for_multi_vector_retrieval_spark.plans.pipeline import Stage
 
 #: the stages ``minhash_dedup`` persists, each read twice or more:
 #: signatures by the band stage and the verify join (else the pandas-UDF
-#: MinHash runs twice); candidates by verify's prune (the distinct ids +
-#: the pair join; else the bucket shuffle reruns); verified by CC's gate,
+#: MinHash runs twice); candidates by verify's gate count and its
+#: endpoint rows (else the bucket shuffle reruns); verified by CC's gate,
 #: its first iteration and the caller (else band -> pair -> verify reruns)
 REUSED_STAGES = ("signatures", "candidates", "verified")
 
@@ -102,7 +102,10 @@ def flagship_stages(
 
     ``verified`` passes ``materialize_pairs=False``: each runner hands it
     candidates that are cheap to traverse twice (cached in memory, a
-    parquet checkpoint scan, or the checkpointed micro-batch union)."""
+    parquet checkpoint scan, or the checkpointed micro-batch union). A
+    runner that already knows the candidate row count passes it as
+    ``deps["candidates_count"]`` (an int), and verify's broadcast gate
+    then launches no count job."""
 
     def signatures(spark, deps):
         return with_signatures(docs(spark), cfg).select(
@@ -120,7 +123,11 @@ def flagship_stages(
 
     def verified(spark, deps):
         return verify_pairs(
-            deps["candidates"], deps["signatures"], cfg, materialize_pairs=False
+            deps["candidates"],
+            deps["signatures"],
+            cfg,
+            materialize_pairs=False,
+            n_pairs=deps.get("candidates_count"),
         )
 
     def clusters(spark, deps):

@@ -255,7 +255,7 @@ def chunk_values(sig_col: str, width: int, n_chunks: int) -> Column:
     packed signature in ``sig_col``, chunk ``c`` at position ``c``. Two
     signatures block together when they agree at any position; a NULL
     signature gives NULL chunks, which match nothing."""
-    return hamming_chunk_cols(F.col(sig_col), width, n_chunks)
+    return hamming_chunk_cols(sig_col, width, n_chunks)
 
 
 def chunk_blocks(

@@ -6,19 +6,58 @@ every collected candidate and keep the close ones
 Jaccard over distinct shingle sets.
 
 ``verify_pairs`` computes it JVM-side from ``array_intersect`` sizes
-inside whole-stage codegen — no Python crossing at all.
+inside whole-stage codegen — no Python crossing at all. Each pair's two
+shingle sets meet through one broadcast probe of the signature table and
+one exchange on the pair (``_join_shingles``).
 
 An optional SimHash Hamming pre-filter (``bit_count(xor) <= h``) runs as a
-pure Column expression before the heavy join.
+pure Column expression on the gathered pairs.
 """
 
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from lsh_forest_for_multi_vector_retrieval_spark.config import DedupConfig
+
+
+def _endpoints(pairs: DataFrame, id_col: str) -> DataFrame:
+    """``(doc_a, doc_b, id_col)``: one row per distinct endpoint of each
+    pair (a self pair has one)."""
+    return pairs.select(
+        "doc_a",
+        "doc_b",
+        F.explode(F.array_distinct(F.array("doc_a", "doc_b"))).alias(id_col),
+    )
+
+
+def _gather(hits: DataFrame, cols: list[str], id_col: str) -> DataFrame:
+    """``(doc_a, doc_b, <c>_a, <c>_b for c in cols)`` from the endpoint
+    rows matched to docs: one exchange on the pair, then one row per
+    a-side x b-side doc match. Each side's set counts an identical doc
+    row once, so a doc id stored twice with the same content does not
+    multiply the pair; docs that share an id but differ still give one
+    row per combination."""
+    row = F.struct(*cols)
+
+    def side(end: str) -> Column:
+        # collect_set skips the NULL of the other endpoint's rows
+        return F.collect_set(F.when(F.col(id_col) == F.col(end), row)).alias(end + "_")
+
+    return (
+        hits.groupBy("doc_a", "doc_b")
+        .agg(side("doc_a"), side("doc_b"))
+        .select("doc_a", "doc_b", F.explode("doc_a_").alias("_a"), "doc_b_")
+        .select("doc_a", "doc_b", "_a", F.explode("doc_b_").alias("_b"))
+        .select(
+            "doc_a",
+            "doc_b",
+            *[F.col(f"_a.{c}").alias(f"{c}_a") for c in cols],
+            *[F.col(f"_b.{c}").alias(f"{c}_b") for c in cols],
+        )
+    )
 
 
 def _join_shingles(
@@ -27,84 +66,63 @@ def _join_shingles(
     id_col: str = "doc_id",
     max_broadcast_ids: int = 10_000_000,
     materialize_pairs: bool = True,
+    n_pairs: int | None = None,
 ) -> DataFrame:
-    """Attach each side's shingle set (and simhash when present).
+    """Attach each side's shingle set (and simhash when present) with one
+    probe of ``docs`` and one exchange.
 
-    ``docs`` is first semi-joined down to the ids that appear in at
-    least one pair: candidate docs are a small fraction of the corpus,
-    and without the prune the second pair join
-    exceeds the broadcast threshold and SHUFFLES the full signature
-    table's shingle arrays through a sort-merge join (measured: the
-    verify stage was 60.8 s of a 133 s four-core flagship pass at 320k
-    docs — ~0.6 GB of arrays shuffled to verify 10k pairs; pruned: the
-    id set broadcasts and the signature scan is probed in place). The
-    broadcast is COUNT-GATED (``max_broadcast_ids``, from
-    ``DedupConfig.verify_prune_max_ids``): on duplicate-dense corpora
-    where candidate docs approach the corpus itself, the explicit hint
-    would force a multi-GB hash relation past the
-    autoBroadcastJoinThreshold, so oversized id sets fall back to a
-    shuffle semi-join of the slim id column — still far cheaper than
-    shuffling the shingle arrays. The gate is two-tier: a shuffle-free
-    2*|pairs| bound fast-paths the common case, and the exact distinct
-    count (one extra action on a materialized slim table) rescues
-    duplicate-dense corpora where millions of pairs span few docs — see
-    the inline note.
+    Each pair is exploded into one row per distinct endpoint. Those rows
+    are BROADCAST and the signature table is probed in place: the inner
+    join is itself the prune to candidate docs, so no shingle array of a
+    non-candidate doc moves, and no id set is built. One ``groupBy`` on
+    the pair then brings both endpoints' doc rows together (the
+    filter-then-verify shape of string similarity joins: each candidate's
+    two records meet once). The exchange carries each candidate doc's
+    shingles once per pair it is in.
 
-    The prune traverses the pair plan TWICE (the candidate-id distinct
-    plus the pair join itself), so an UNCACHED ``pairs`` plan would
-    re-run its whole band/bucket chain for each — when the caller hasn't
-    persisted it, the slim (doc_a, doc_b) table is materialized once
-    here via eager ``localCheckpoint`` (two longs per row,
-    ContextCleaner-released; same pattern as dedup.simhash/ann). That
-    makes this call a blocking action for uncached inputs. Callers whose
-    ``pairs`` is ALREADY cheap to traverse twice — persisted
-    (``minhash_dedup``, streaming) or a bare checkpointed-parquet scan
-    (``plans.pipeline``) — skip it: persisted
-    inputs via the storageLevel check, parquet-backed OR
-    already-localCheckpointed ones via ``materialize_pairs=False``
-    (re-scanning a slim pair file twice is cheaper than copying it into
-    block-manager storage that lingers until ContextCleaner GCs the
-    reference). NOTE ``Dataset.storageLevel`` consults only the cache
-    manager and reads NONE for checkpointed plans, so a caller that
-    pre-checkpoints MUST pass ``materialize_pairs=False`` itself or pay
-    a redundant second checkpoint copy.
+    The broadcast is gated in longs (``max_broadcast_ids``, from
+    ``DedupConfig.verify_prune_max_ids``): the endpoint table is at most
+    2*|pairs| rows of three longs. Above the gate (duplicate-dense
+    corpora, where millions of pairs can span few docs) the exact
+    distinct endpoint ids are materialized and counted, and the
+    signature table is semi-join pruned to them, by a broadcast when they
+    fit and a shuffle semi-join when not; the endpoint rows then join the
+    pruned docs. Only that last tier exchanges the signature table, and
+    the gather never carries a non-candidate doc (unpruned, verify was
+    60.8 s of a 133 s four-core flagship pass at 320k docs: ~0.6 GB of
+    arrays shuffled to verify 10k pairs).
+
+    ``n_pairs`` is the row count of ``pairs`` when the caller already
+    knows it (``process_batch`` counts its candidate checkpoint with an
+    ``Observation``); such a ``pairs`` must be cheap to read twice, as
+    the tier above the gate does. Otherwise the count and the endpoint
+    rows read ``pairs`` twice (three times above the gate), so an
+    UNCACHED ``pairs`` plan is materialized once as an eager
+    ``localCheckpoint`` whose ``Observation`` supplies the count: the
+    checkpoint costs no extra job. Callers whose ``pairs`` is ALREADY
+    cheap to traverse again (persisted, a bare parquet scan, or itself a
+    checkpoint) pass ``materialize_pairs=False``. ``Dataset.storageLevel``
+    consults only the cache manager and reads NONE for checkpointed
+    plans, so such a caller MUST pass it or pay a second copy.
     """
-    if materialize_pairs and pairs.storageLevel == StorageLevel.NONE:
+    if n_pairs is None and materialize_pairs and pairs.storageLevel == StorageLevel.NONE:
+        counted = Observation()
+        pairs = pairs.observe(counted, F.count(F.lit(1)).alias("n"))
         pairs = pairs.localCheckpoint(eager=True)
-    cand_ids = (
-        pairs.select(F.col("doc_a").alias(id_col))
-        .unionByName(pairs.select(F.col("doc_b").alias(id_col)))
-        .distinct()
-    )
-    # Gate on a SHUFFLE-FREE upper bound first: each pair contributes
-    # at most two ids, so 2*|pairs| >= |cand_ids|. One cheap count of
-    # the slim (checkpointed / parquet-backed) pair table instead of
-    # materializing the distinct twice — the exact-count variant
-    # measurably cost the 4-core scaling leg ~2 s of serial driver
-    # time (two extra job launches + a checkpointed shuffle) at 320k
-    # docs. When the bound is exceeded, do NOT give up on the
-    # broadcast yet: on duplicate-dense corpora (one hot cluster of
-    # 50k docs can emit millions of pairs) the DISTINCT id set may
-    # still be tiny, and the shuffle fallback would exchange the full
-    # signature table's shingle arrays — the exact shuffle the prune
-    # exists to avoid. Materialize the slim distinct once and gate on
-    # its exact count; the extra action only runs in the oversized
-    # case, where its cost is dwarfed by either downstream plan.
-    if 2 * pairs.count() <= max_broadcast_ids:
-        cand_ids = F.broadcast(cand_ids)
-    else:
-        cand_ids = cand_ids.localCheckpoint(eager=True)
-        if cand_ids.count() <= max_broadcast_ids:
-            cand_ids = F.broadcast(cand_ids)
-    docs = docs.join(cand_ids, id_col, "left_semi")
+        n_pairs = counted.get["n"]
+    elif n_pairs is None:
+        n_pairs = pairs.count()
     cols = ["shingles"] + (["simhash"] if "simhash" in docs.columns else [])
-    a = docs.select(
-        F.col(id_col).alias("doc_a"), *[F.col(c).alias(f"{c}_a") for c in cols]
-    )
-    b = docs.select(
-        F.col(id_col).alias("doc_b"), *[F.col(c).alias(f"{c}_b") for c in cols]
-    )
-    return pairs.join(a, "doc_a").join(b, "doc_b")
+    docs = docs.select(id_col, *cols)
+    ends = _endpoints(pairs, id_col)
+    if 6 * n_pairs <= max_broadcast_ids:
+        hits = docs.join(F.broadcast(ends), id_col)
+    else:
+        ids = ends.select(id_col).distinct().localCheckpoint(eager=True)
+        if ids.count() <= max_broadcast_ids:
+            ids = F.broadcast(ids)
+        hits = ends.join(docs.join(ids, id_col, "left_semi"), id_col)
+    return _gather(hits, cols, id_col)
 
 
 def simhash_prefilter(joined: DataFrame, max_hamming: int) -> DataFrame:
@@ -120,19 +138,26 @@ def verify_pairs(
     id_col: str = "doc_id",
     keep_below_threshold: bool = False,
     materialize_pairs: bool = True,
+    n_pairs: int | None = None,
 ) -> DataFrame:
     """``(doc_a, doc_b, jaccard)`` for pairs with jaccard >= threshold.
 
-    ``materialize_pairs=False`` skips the prune's eager localCheckpoint
-    of ``pairs`` — pass it when ``pairs`` is already a bare parquet scan
-    (the checkpointed pipeline) so a cheap re-scan isn't copied into
-    block-manager storage."""
+    ``pairs`` is a set: a pair listed twice is verified once. A doc id
+    with several identical rows in ``docs_with_shingles`` counts once;
+    rows that differ give one output row per combination.
+
+    ``materialize_pairs=False`` skips the eager localCheckpoint of an
+    uncached ``pairs`` — pass it when ``pairs`` is already a bare parquet
+    scan or a checkpoint, so a cheap re-scan isn't copied into
+    block-manager storage. ``n_pairs``, the row count of ``pairs`` when
+    the caller knows it, saves the count job of the broadcast gate."""
     joined = _join_shingles(
         pairs,
         docs_with_shingles,
         id_col,
         max_broadcast_ids=cfg.verify_prune_max_ids,
         materialize_pairs=materialize_pairs,
+        n_pairs=n_pairs,
     )
     if (
         cfg.simhash_prefilter_max_hamming is not None

@@ -291,6 +291,12 @@ class IncrementalDedup:
         the current batch_id (a half-written retry partition is invisible).
         The checkpoints the batch makes are released when it returns, so
         executor storage stays flat over the stream's lifetime.
+
+        A doc id ingested again under a new ``batch_id`` (the same page
+        re-delivered) is verified against each identical stored copy once,
+        so the new partition holds each of its pairs once. The pairs that
+        the earlier batch wrote remain in its own partition, so ``pairs``
+        can list a pair once per batch that found it.
         """
         held: list[DataFrame] = []
         try:
@@ -383,20 +389,32 @@ class IncrementalDedup:
         # union's also folds a history pair found in several bands (and
         # a pair of a doc id stored by two batches)
         intra = stage["candidates"](spark, {"bands": new_bands})
-        # an eager checkpoint, not a cache: verify's candidate prune reads
-        # the pairs twice, and everything is materialized BEFORE the first
+        # an eager checkpoint, not a cache: verify reads the pairs more
+        # than once above its broadcast gate, and everything is
+        # materialized BEFORE the first
         # state write — the verified plan reads the history tables, and
         # executing it after this batch's own sigs/bands writes makes the
         # file source re-list a directory with in-flight files (observed:
         # a first-ever partition dir appearing under a previously
         # partition-less empty table trips the parquet reader's
         # partition-schema assertion). The checkpoints sever the lineage,
-        # so the writes below consume only materialized data.
+        # so the writes below consume only materialized data. Its
+        # Observation counts the pairs for verify's broadcast gate.
+        found = Observation()
         cands = checkpoint(
-            intra if hist_hits is None else intra.unionByName(hist_hits).distinct()
+            (
+                intra if hist_hits is None else intra.unionByName(hist_hits).distinct()
+            ).observe(found, F.count(F.lit(1)).alias("n"))
         )
         verified = checkpoint(
-            stage["verified"](spark, {"candidates": cands, "signatures": all_sigs})
+            stage["verified"](
+                spark,
+                {
+                    "candidates": cands,
+                    "signatures": all_sigs,
+                    "candidates_count": found.get["n"],
+                },
+            )
         )
 
         def _write(df: DataFrame, path: str) -> None:

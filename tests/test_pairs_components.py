@@ -160,6 +160,137 @@ def test_verify_prune_rescues_dup_dense_broadcast(sigs):
     assert v.exceptAll(base).count() == 0
 
 
+def _ancestors(plan: str, leaf: str) -> list[str]:
+    """The node lines from the first line naming ``leaf`` up to the root
+    of a plan's final tree string, nearest first."""
+    import re
+
+    lines = plan.split("== Initial Plan ==")[0].splitlines()
+
+    def depth(line: str) -> int:
+        return re.match(r"[ :|+\-]*", line).end()
+
+    i = next(k for k, line in enumerate(lines) if leaf in line)
+    out, d = [], depth(lines[i])
+    for line in reversed(lines[:i]):
+        if depth(line) < d:
+            out.append(line)
+            d = depth(line)
+    return out
+
+
+def test_verify_job_budget_and_plan_shape(sigs, jobs):
+    """Under the broadcast gate verify broadcasts the pairs' endpoint
+    rows, probes the signature scan in place and gathers each pair's
+    docs in one exchange on the pair. The budgets are the measured warm
+    counts; a change that cuts jobs lowers them."""
+    pairs = candidate_pairs(band_table(sigs, CFG), CFG).localCheckpoint(eager=True)
+    n_pairs = pairs.count()
+
+    def run(**kw):
+        verify_pairs(pairs, sigs, CFG, materialize_pairs=False, **kw).collect()
+
+    assert jobs(run) <= 5
+    assert jobs(lambda: run(n_pairs=n_pairs)) <= 4
+    # an uncached plan: its checkpoint supplies the count
+    lazy = candidate_pairs(band_table(sigs, CFG), CFG)
+    assert jobs(lambda: verify_pairs(lazy, sigs, CFG).collect()) <= 7
+
+    v = verify_pairs(pairs, sigs, CFG, materialize_pairs=False)
+    v.collect()
+    plan = v._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("BroadcastExchange") == 1
+    shuffles = [s for s in final.splitlines() if "Exchange hashpartitioning" in s]
+    assert len(shuffles) == 1 and "hashpartitioning(doc_a" in shuffles[0]
+    up = _ancestors(plan, "InMemoryTableScan")
+    join = next(k for k, line in enumerate(up) if "BroadcastHashJoin" in line)
+    assert "Inner" in up[join]
+    assert not any("Exchange" in line or "QueryStage" in line for line in up[1:join])
+
+
+def test_verify_above_gate_prunes_before_any_exchange(sigs):
+    """Above the gate the exact distinct endpoint ids prune the signature
+    table first: no Exchange carries an unpruned signature row."""
+    from dataclasses import replace
+
+    pairs = candidate_pairs(band_table(sigs, CFG), CFG).localCheckpoint(eager=True)
+    cfg = replace(CFG, verify_prune_max_ids=2 * pairs.count())  # over the gate
+    v = verify_pairs(pairs, sigs, cfg, materialize_pairs=False)
+    v.collect()
+    up = _ancestors(v._jdf.queryExecution().executedPlan().toString(), "InMemoryTableScan")
+    semi = next(k for k, line in enumerate(up) if "LeftSemi" in line)
+    assert not any("Exchange" in line for line in up[:semi])
+
+
+@pytest.fixture(scope="module")
+def degenerate(spark):
+    """Docs and pairs on every edge verify has: a doc id stored twice
+    identically and twice differently, NULL and empty shingles, a NULL
+    simhash and id, self, reversed and NULL-id pairs, and an endpoint
+    missing from docs. The oracle is the two-join plan over the distinct
+    doc rows: ``(doc_a, doc_b, jaccard, hamming <= 3)``."""
+    docs = spark.createDataFrame(
+        [
+            (1, [1, 2, 3, 4], 10), (1, [1, 2, 3, 4], 10), (2, [1, 2, 3, 5], 11),
+            (3, [1, 2, 3, 4], 10), (3, [7, 8], 12), (4, None, 13), (5, [], 14),
+            (6, [1, 2, 3, 4], None), (None, [1, 2], 1), (7, [1, 2, 3, 4], 1 << 40),
+        ],
+        "doc_id long, shingles array<long>, simhash long",
+    )
+    pairs = spark.createDataFrame(
+        [
+            (1, 2), (2, 1), (1, 1), (1, 3), (3, 6), (4, 5), (1, 4), (1, 99),
+            (None, 2), (2, None), (6, 6), (5, 5), (1, 7), (3, 3),
+        ],
+        "doc_a long, doc_b long",
+    )
+    d = docs.distinct()
+    a = d.select(*[F.col(c).alias(c.replace("doc_id", "doc") + "_a") for c in d.columns])
+    b = d.select(*[F.col(c).alias(c.replace("doc_id", "doc") + "_b") for c in d.columns])
+    inter = F.size(F.array_intersect("shingles_a", "shingles_b"))
+    union = F.size("shingles_a") + F.size("shingles_b") - inter
+    oracle = pairs.join(a, "doc_a").join(b, "doc_b").select(
+        "doc_a",
+        "doc_b",
+        F.when(union > 0, inter / union).otherwise(0.0).alias("jaccard"),
+        F.coalesce(F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))) <= 3, F.lit(False)),
+    )
+    return docs, pairs, [tuple(r) for r in oracle.collect()]
+
+
+def _verified(df) -> list[tuple]:
+    return sorted((r.doc_a, r.doc_b, r.jaccard) for r in df.collect())
+
+
+@pytest.mark.parametrize("max_ids", [10_000_000, 20, 0], ids=["broadcast", "rescue", "shuffle"])
+def test_verify_degenerate_grid_matches_two_join_oracle(degenerate, max_ids):
+    """Every tier gives the two-join plan's rows over the distinct doc
+    rows, with and without the threshold and the SimHash prefilter."""
+    from dataclasses import replace
+
+    docs, pairs, oracle = degenerate
+    for keep in (False, True):
+        for hamming in (None, 3):
+            cfg = replace(
+                CFG, verify_prune_max_ids=max_ids, simhash_prefilter_max_hamming=hamming
+            )
+            want = sorted(
+                (a, b, j)
+                for a, b, j, near in oracle
+                if (keep or j >= cfg.jaccard_threshold) and (hamming is None or near)
+            )
+            got = _verified(verify_pairs(pairs, docs, cfg, keep_below_threshold=keep))
+            assert got == want, (keep, hamming)
+    if max_ids == 10_000_000:
+        checkpointed = pairs.localCheckpoint(eager=True)
+        got = verify_pairs(
+            checkpointed, docs.drop("simhash"), CFG, keep_below_threshold=True,
+            materialize_pairs=False, n_pairs=checkpointed.count(),
+        )
+        assert _verified(got) == sorted((a, b, j) for a, b, j, _ in oracle)
+
+
 def test_adaptive_bands_cover_same_docs(spark, sigs):
     small_cfg = DedupConfig(adaptive_max_bucket=2, adaptive_max_extra_rows=3)
     ab = adaptive_band_table(sigs, small_cfg)

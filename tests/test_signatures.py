@@ -219,3 +219,58 @@ def test_signature_udfs_degrade_on_null_arrays(spark):
     }
     assert got[2] == got[3]  # NULL == empty sentinel
     assert got[1][0] != got[2][0]
+
+
+def test_simhash_udf_matches_oracle_on_edge_rows(spark):
+    """The bit-vote kernel equals ``simhash_np`` on web-sized rows and on
+    the edges: empty and NULL arrays (0), one shingle (its own bits), and
+    tied votes, where a bit set in exactly half the shingles is set."""
+    rng = np.random.RandomState(5)
+    rows = [
+        (i, rng.randint(-(2**63), 2**63 - 1, size=rng.randint(200, 261), dtype=np.int64).tolist())
+        for i in range(24)
+    ]
+    rows += [
+        (100, []),
+        (101, None),
+        (102, [-(2**63)]),  # one shingle: the sign bit alone
+        (103, [0, -1]),  # every bit tied
+        (104, [0b0110, 0b0101]),  # bits 1 and 2 tied, bit 0 tied, bit 3 unset
+        (105, [7, 7, 0, 0, 1 << 62, -1]),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, shingles array<long>")
+    got = {r.doc_id: r.h for r in df.select("doc_id", simhash_udf()("shingles").alias("h")).collect()}
+    for doc_id, s in rows:
+        want = int(simhash_np(np.array(s or [], dtype=np.int64)))
+        assert got[doc_id] == want, f"doc {doc_id}"
+    assert got[101] == 0
+    assert got[102] == -(2**63)
+    assert got[103] == -1
+    assert got[104] == 0b0111
+
+
+def test_minhash_udf_reduction_edges(spark):
+    """The UDF's shift-and-mask reduction equals ``% p`` where it can go
+    wrong: shingles crafted as ``s = (x - b) * a^-1 mod 2^64`` make
+    ``a*s + b`` wrap to ``x`` = p-1, p, p+1, 2p and 2^64-1 (residues p-1,
+    0, 1, 0 and 7) at chosen permutations."""
+    p = (1 << 61) - 1
+    targets = [p - 1, p, p + 1, 2 * p, (1 << 64) - 1]
+    a, b = minhash_params(128, 42)
+    rows, want_at = [], {}
+    for x in targets:
+        for perm in (0, 63, 127):
+            ai, bi = int(a[perm]), int(b[perm])
+            s = (x - bi) * pow(ai, -1, 1 << 64) % (1 << 64)
+            s = s - (1 << 64) if s >= 1 << 63 else s
+            rows.append((len(rows), [s]))
+            want_at[len(rows) - 1] = (perm, x % p)
+    rows.append((len(rows), [s for _, (s,) in rows]))  # all in one doc
+    df = spark.createDataFrame(rows, "doc_id long, shingles array<long>")
+    mh = minhash_udf(num_perm=128, seed=42)
+    got = {r.doc_id: np.array(r.sig) for r in df.select("doc_id", mh("shingles").alias("sig")).collect()}
+    for doc_id, sh in rows:
+        want = minhash_np(np.array(sh, dtype=np.int64), a, b)
+        assert np.array_equal(got[doc_id], want), f"doc {doc_id}"
+    for doc_id, (perm, residue) in want_at.items():
+        assert got[doc_id][perm] == residue, f"doc {doc_id}"

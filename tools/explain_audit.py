@@ -230,6 +230,29 @@ def main() -> int:
          "every scoring stage above it"],
     ))
 
+    # 11. verify_pairs (perfbench's call): checkpointed candidates and
+    # signatures, captured after an action
+    from lsh_forest_for_multi_vector_retrieval_spark.operators.pairs import (
+        candidate_pairs,
+    )
+    from lsh_forest_for_multi_vector_retrieval_spark.operators.verify import (
+        verify_pairs,
+    )
+
+    v_sigs = with_signatures(docs.select("doc_id", "text"), cfg).select(
+        "doc_id", "shingles", "sig", "simhash"
+    ).localCheckpoint(eager=True)
+    v_cands = candidate_pairs(band_table(v_sigs, cfg), cfg).localCheckpoint(eager=True)
+    verified = verify_pairs(v_cands, v_sigs, cfg, materialize_pairs=False)
+    verified.collect()
+    sections.append((
+        "verify_pairs (checkpointed candidates and signatures)",
+        plan_of(verified),
+        ["one BroadcastExchange: the pairs' endpoint rows",
+         "the signature scan probed in place",
+         "one Exchange: the gather on (doc_a, doc_b)"],
+    ))
+
     checks: list[str] = []
 
     def check(name: str, ok: bool, detail: str = "") -> None:
@@ -270,16 +293,12 @@ def main() -> int:
         f"{len(shuffle_ids)} materialized ShuffleQueryStages + "
         f"{len(bcast_ids)} broadcast-exchange node ids (signature "
         "repartition, salted bucket stage-1 groupBy + tiny pre-capped "
-        "stage-2 merge, pair distinct, CC label shuffle, plus the "
-        "candidate-id distinct lineage — previously hidden behind a "
-        "localCheckpoint that the round-5 shuffle-free broadcast gate "
-        "removed, so its two slim-column stages now SHOW in the plan "
-        "while the executed work went down (verify.py:80-92); the "
-        "round-5 verify semi-join prune replaced the corpus-wide "
-        "verify-join shuffle with broadcast probes, so the heavy verify "
-        "Exchange is gone). Round-4: +1 small shuffle by design — the "
-        "two-stage salted bucket cap that bounds collect_set memory by "
-        "bucket/salt (pairs.py::bucket_ids_capped)",
+        "stage-2 merge, pair distinct, and verify's gather of each "
+        "pair's two docs on (doc_a, doc_b): verify broadcasts the pairs' "
+        "endpoint rows and probes the signature table in place, so no "
+        "shingle array of a non-candidate doc is shuffled). The two-stage "
+        "salted bucket cap bounds collect_set memory by bucket/salt "
+        "(pairs.py::bucket_ids_capped)",
     )
     pr = sections[1][1]
     check("filter pushed to parquet scan", "PushedFilters" in pr and "lang" in pr)
@@ -436,6 +455,48 @@ def main() -> int:
         f"{len(fv_exchanges)} shuffle exchange(s); the groupBy, both windows "
         "and get_top_k run on the one query_id partitioning (the former plan "
         "ran one exchange each, keyed on supersets of query_id)",
+    )
+
+    vp = sections[11][1]
+    vp_final = vp.split("== Initial Plan ==", 1)[0]
+    vp_lines = vp_final.splitlines()
+    vp_bx = set(_re.findall(r"BroadcastExchange \((\d+)\)", vp_final))
+    vp_sx = exchange_ids(vp_final)
+    sig_scan = next(
+        (
+            k for k, line in enumerate(vp_lines)
+            if (m := _re.search(r"Scan ExistingRDD \((\d+)\)", line))
+            and "shingles" in details(vp, m.group(1))
+        ),
+        None,
+    )
+
+    def depth(line: str) -> int:
+        return _re.match(r"[ :|+\-]*", line).end()
+
+    # the scan's ancestors up to the inner join that probes it
+    probe_path: list[str] = []
+    if sig_scan is not None:
+        d = depth(vp_lines[sig_scan])
+        for line in reversed(vp_lines[:sig_scan]):
+            if depth(line) < d:
+                probe_path.append(line)
+                d = depth(line)
+                if "BroadcastHashJoin Inner" in line:
+                    break
+    check(
+        "verify: one endpoint broadcast, the signature scan probed in place, one gather exchange",
+        len(vp_bx) == 1
+        and len(vp_sx) == 1
+        and "hashpartitioning(doc_a" in details(vp, vp_sx[0])
+        and bool(probe_path)
+        and "BroadcastHashJoin Inner" in probe_path[-1]
+        and not any("Exchange" in line for line in probe_path),
+        f"{len(vp_bx)} BroadcastExchange, {len(vp_sx)} shuffle exchange(s); each "
+        "pair's two shingle sets meet in one groupBy on the pair (the former "
+        "plan counted the pairs, built a distinct id set behind a shuffle, "
+        "broadcast it for a semi-join and then ran two pair joins, each its "
+        "own AQE stage)",
     )
 
     out = ["# PLAN_AUDIT — physical plans of the headline operators",

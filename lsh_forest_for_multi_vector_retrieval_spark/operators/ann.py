@@ -33,6 +33,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
+from pyspark.sql.window import Window
 
 from lsh_forest_for_multi_vector_retrieval_spark.functions.simhash import (
     hyperplane_simhash_udf,
@@ -78,23 +79,39 @@ def _cosine_fn(scoring: str):
 
 
 def _rerank_topk(
-    cand: DataFrame, cosine, k: int, round_digits: int | None = None
+    cand: DataFrame, cosine, k: int, round_digits: int | None = None, ascend: bool = False
 ) -> DataFrame:
     """(q_id, n_id, cosine, rank): exact cosine over the candidate
     vectors, optionally rounded BEFORE ranking, one row per ``(q_id,
     n_id)``, then the per-query top-k (ties by ``n_id``). Scoring runs
     before the one ``q_id`` exchange, which the per-pair max shares with
     the window, so only scores are shuffled; when the corpus repeats an
-    id, its best-scoring vector counts."""
+    id, its best-scoring vector counts.
+
+    ``ascend``: ``cand`` holds the rows of several nested probe levels
+    (``lvl``), and each query keeps only those of its first level with
+    at least k distinct ids, or of its last level. The windows that pick
+    it run after the same exchange, so the choice is data: no per-query
+    value enters the plan."""
     cos = cosine(F.col("q_vec"), F.col("n_vec"))
     if round_digits is not None:
         cos = F.round(cos, round_digits)
-    scored = (
-        cand.select("q_id", "n_id", cos.alias("cosine"))
-        .repartition("q_id")
-        .groupBy("q_id", "n_id")
-        .agg(F.max("cosine").alias("cosine"))
-    )
+    keys = ["q_id", "n_id"] + (["lvl"] if ascend else [])
+    scored = cand.select(*keys, cos.alias("cosine")).repartition("q_id")
+    if ascend:
+        q, level = Window.partitionBy("q_id"), Window.partitionBy("q_id", "lvl")
+        scored = (
+            scored.withColumn("_ids", F.size(F.collect_set("n_id").over(level)))
+            .withColumn(
+                "_win",
+                F.coalesce(
+                    F.min(F.when(F.col("_ids") >= k, F.col("lvl"))).over(q),
+                    F.max("lvl").over(q),
+                ),
+            )
+            .where(F.col("lvl") == F.col("_win"))
+        )
+    scored = scored.groupBy("q_id", "n_id").agg(F.max("cosine").alias("cosine"))
     return get_top_k(scored, k, "q_id", "n_id", "cosine")
 
 
@@ -380,7 +397,7 @@ def _query_slices(rows: list, budget: int) -> list[list]:
 
 def _candidates(out: DataFrame) -> DataFrame:
     """The candidate rows of a corpus pass (count rows carry ``n``)."""
-    return out.where(F.col("n").isNull()).select("q_id", "n_id", "q_vec", "n_vec")
+    return out.where(F.col("n").isNull()).select("lvl", "q_id", "n_id", "q_vec", "n_vec")
 
 
 def _reached(out: DataFrame, k: int) -> set:
@@ -413,11 +430,15 @@ def _probe_topk(
     ``spark.sql.autoBroadcastJoinThreshold`` (one corpus pass per slice).
     ``levels[0]`` is the descend probe. With ``ensure_k`` the pass is an
     eager ``localCheckpoint`` and only its count rows are collected; the
-    queries short of k distinct ids take a second pass that scans
-    ``levels[1:]`` and keeps, per query, the first level reaching k (the
-    last level, the root, otherwise). Levels nest, so that is the
-    reference's ascend: every query gets min(k, distinct non-NULL corpus
-    ids other than its own) rows."""
+    queries short of k distinct ids take a second pass, part of the
+    result's plan, that scans ``levels[1:]``. The re-rank keeps, per
+    query, the first level reaching k distinct ids (the last level, the
+    root, otherwise), counted over the kept rows: a partition keeps k
+    distinct ids of a level whenever it has k clean ones and every row
+    otherwise (``_keep_floor``), so the kept rows reach k exactly when
+    the candidates do. Levels nest, so that is the reference's ascend:
+    every query gets min(k, distinct non-NULL corpus ids other than its
+    own) rows."""
     _require_positive(k=k)
     spark = corpus.sparkSession
     margin = _keep_margin(round_digits)
@@ -461,26 +482,10 @@ def _probe_topk(
     first = first.localCheckpoint(eager=True)
     reached = _reached(first, k)
     short = [r for r in qrows if r.q_id is not None and (0, r.q_id) not in reached]
-    cand = _candidates(first)
-    if short:
-        ascend = levels[1:]
-        second = scan(ascend, short, len(ascend) > 1)
-        up = set()
-        if len(ascend) > 1:
-            second = second.localCheckpoint(eager=True)
-            up = _reached(second, k)
-        wins: dict = {}
-        for q_id in dict.fromkeys(r.q_id for r in short):
-            lvl = next((i for i in range(len(ascend)) if (i, q_id) in up), len(ascend) - 1)
-            wins.setdefault(lvl, []).append(q_id)
-        pick = functools.reduce(
-            lambda a, b: a | b,
-            [(F.col("lvl") == lvl) & F.col("q_id").isin(ids) for lvl, ids in wins.items()],
-        )
-        cand = cand.where(~F.col("q_id").isin([r.q_id for r in short])).union(
-            _candidates(second.where(pick))
-        )
-    return _rerank_topk(cand, cosine, k, round_digits)
+    if not short:
+        return _rerank_topk(_candidates(first), cosine, k, round_digits)
+    second = scan(levels[1:], short, False).withColumn("lvl", F.col("lvl") + 1)
+    return _rerank_topk(_candidates(first.union(second)), cosine, k, round_digits, ascend=True)
 
 
 def brute_force_topk(

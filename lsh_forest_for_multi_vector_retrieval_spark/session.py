@@ -14,6 +14,10 @@ from pyspark.sql import SparkSession
 
 WORKER_DAEMON_MODULE = "lsh_forest_for_multi_vector_retrieval_spark.worker_daemon"
 
+#: ``spark.sql.codegen.cache.maxEntries``: how many generated classes the
+#: session keeps compiled (Spark's default is 100). See ``get_spark``.
+CODEGEN_CACHE_ENTRIES = 2000
+
 
 def _workers_import_engine(master: str) -> bool:
     """Whether Python workers can import the engine the way this process
@@ -59,6 +63,20 @@ def get_spark(
       the engine submitted as a ``--py-files`` archive) Spark's default
       ``pyspark.daemon`` is kept, because a daemon module the daemon cannot
       import fails every Python task. ``extra_conf`` can override it.
+    * The generated-code cache holds ``CODEGEN_CACHE_ENTRIES`` classes
+      (``spark.sql.codegen.cache.maxEntries``, Spark's default 100), so
+      each plan is compiled once per session. At the default one warm
+      ``dedup_web`` operation of ``perfbench`` compiles 108 classes and
+      one ``retrieve`` round 117-118: more than the LRU cache holds, so
+      every class is evicted before its next use and Janino compiles and
+      loads it again. The engine's working set, measured as distinct
+      classes compiled: both perfbench workloads in one session (set-up,
+      warm-up, 3 + 3 operations) 292, and ``tools/check_oracles.py``'s
+      35 queries 501; the constant leaves headroom above both.
+      A cached class costs non-heap memory, not heap: the perfbench
+      session ended at 279 MB of JVM non-heap use with the large cache
+      against 289 MB at the default, which keeps loading fresh copies.
+      ``extra_conf`` can override it.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -110,6 +128,7 @@ def get_spark(
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if _workers_import_engine(master):
         builder = builder.config("spark.python.daemon.module", WORKER_DAEMON_MODULE)

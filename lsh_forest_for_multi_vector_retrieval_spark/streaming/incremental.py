@@ -28,8 +28,8 @@ Durability details (round-5 review hardening):
   while the parquet I/O happily used the remote store.
 * State reads declare their schemas, so an empty partitioned table (a
   batch that found no pairs, or whose docs all had empty shingle sets)
-  is a readable empty DataFrame, not an un-inferable ``_SUCCESS``-only
-  directory that crashes the next batch.
+  is a readable empty DataFrame, not an un-inferable directory without
+  data files that crashes the next batch.
 * Writes run sigs -> bands -> pairs and history gates on BOTH sigs and
   bands: a crash between writes can only leave a state the replayed
   batch repairs, never a bands-without-sigs state that crashes every
@@ -285,9 +285,9 @@ class IncrementalDedup:
     # -- batch core (reused by foreachBatch) --------------------------------
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         """Idempotent under foreachBatch's at-least-once delivery: every
-        state table is partitioned by ``batch_id`` and written with dynamic
-        partition overwrite, so a replayed batch overwrites its own
-        partition instead of appending duplicates; history reads exclude
+        state table is partitioned by ``batch_id``, and a batch overwrites
+        its own ``batch_id=<id>`` directory, so a replayed batch replaces
+        its partition instead of appending duplicates; history reads exclude
         the current batch_id (a half-written retry partition is invisible).
         The checkpoints the batch makes are released when it returns, so
         executor storage stays flat over the stream's lifetime.
@@ -418,12 +418,15 @@ class IncrementalDedup:
         )
 
         def _write(df: DataFrame, path: str) -> None:
+            # straight into the batch's partition directory, replacing only
+            # it: the id stays in the path, out of the plan, so a new batch
+            # id compiles no new class (a literal ``batch_id`` column did).
+            # No reader checks a ``_SUCCESS`` marker, and one per batch
+            # directory would grow the files every listing opens
             (
-                df.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(path)
+                df.write.mode("overwrite")
+                .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+                .parquet(f"{path}/batch_id={batch_id}")
             )
 
         _write(store_sigs, self.sigs_path)

@@ -35,3 +35,19 @@ def jobs(spark):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     return count
+
+
+@pytest.fixture
+def compiles(spark):
+    """``compiles(action)``: the classes Spark's code generator compiles
+    while ``action`` runs (``CodegenMetrics``' compilation count). A plan
+    whose classes are still in the session's codegen cache compiles
+    none."""
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def count(action) -> int:
+        before = metric.getCount()
+        action()
+        return metric.getCount() - before
+
+    return count

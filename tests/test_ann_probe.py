@@ -365,3 +365,31 @@ def test_forest_vote_counts_the_corpus_under_its_checkpoint(spark, jobs, monkeyp
     assert count_jobs >= 1 and new_jobs == old_jobs - count_jobs
     corpus.unpersist()
     docs.unpersist()
+
+
+def test_ensure_k_new_query_batch_compiles_no_class(vecs, compiles, monkeypatch):
+    """The ascend's per-query choices are data, not literals in the plan:
+    once one ``ensure_k`` call has compiled its plan, a call on another
+    query batch whose short queries ascend compiles no class."""
+    batches = [
+        vecs.where(F.col("vec_id") % 7 == r).localCheckpoint(eager=True) for r in (0, 1)
+    ]
+    ascended = []
+    rerank = ann._rerank_topk
+
+    def recording(*args, ascend=False, **kwargs):
+        ascended.append(ascend)
+        return rerank(*args, ascend=ascend, **kwargs)
+
+    monkeypatch.setattr(ann, "_rerank_topk", recording)
+    calls = {
+        "lsh": lambda q: lsh_topk(vecs, q, k=30, n_chunks=4, round_digits=6, ensure_k=True),
+        "ivf": lambda q: ivf_topk(
+            vecs, q, k=20, centroids=_codebook(32), nprobe=2, round_digits=6, ensure_k=True
+        ),
+    }
+    for name, call in calls.items():
+        call(batches[0]).collect()  # compiles the plan
+        ascended.clear()
+        assert compiles(lambda: call(batches[1]).collect()) == 0, name
+        assert ascended == [True], name

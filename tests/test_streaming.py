@@ -418,3 +418,28 @@ def test_broadcast_gate_boundary(spark, tmp_path, monkeypatch):
     assert paths == [True, False]
     assert got[0] == got[1]
     assert any(a < 20 <= b for a, b in got[0])  # history collisions exist
+
+
+def test_new_batch_id_compiles_no_class(spark, compiles, tmp_path):
+    """A batch id stays out of generated code: once one call has compiled
+    the plan, the same batch ingested under another id into a copy of the
+    same store compiles no class (a literal ``batch_id`` column compiled
+    two classes per table write, six per new id), and stores the same
+    pairs."""
+    import shutil
+
+    pages = _small_pages(spark)
+    first = pages.where(F.col("doc_id") < 20)
+    second = pages.where(F.col("doc_id") >= 20)
+    IncrementalDedup(str(tmp_path / "a"), CFG).process_batch(first, 0)
+    shutil.copytree(tmp_path / "a", tmp_path / "b")
+    a = IncrementalDedup(str(tmp_path / "a"), CFG)
+    a.process_batch(second, 1)
+    b = IncrementalDedup(str(tmp_path / "b"), CFG)
+    assert compiles(lambda: b.process_batch(second, 2)) == 0
+
+    def pairs(inc):
+        return sorted(tuple(r) for r in inc.pairs(spark).collect())
+
+    assert pairs(b) == pairs(a)
+    assert spark.read.parquet(b.pairs_path + "/batch_id=2").count() > 0

@@ -55,6 +55,10 @@ def main() -> int:
         print(f"unknown query name(s): {sorted(unknown)}; known: {sorted(qs)}")
         return 2
     failures = []
+    # generated classes compiled by the queries: with every class still
+    # cached, the distinct classes they need (get_spark's cache size)
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = codegen.METRIC_COMPILATION_TIME().getCount()
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -94,6 +98,9 @@ def main() -> int:
         print(f"{name:28s} {mark} rows={len(a)} {status if mark == 'FAIL' else ''}")
         if mark == "FAIL":
             failures.append(name)
+    compiled = codegen.METRIC_COMPILATION_TIME().getCount() - compiled
+    cache = spark.conf.get("spark.sql.codegen.cache.maxEntries")
+    print(f"generated classes compiled by the queries: {compiled} (codegen cache: {cache})")
     # entry smoke
     if not only:
         n = entrymod.entry(spark).count()

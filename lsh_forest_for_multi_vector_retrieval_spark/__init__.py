@@ -28,8 +28,9 @@ kernels, never one UDF call per row:
   re-rank, nearest-centroid assignment and centroid score vectors for
   ``ivf_topk`` / ``plaid_topk``, and PLAID's chamfer max-sum re-rank
   (their ``"fold"`` twins are pure Catalyst)
-* the ``mapInArrow`` corpus passes of ``ann._probe_topk`` and
-  ``plaid_topk``, over the same decoder
+* the ``mapInArrow`` corpus passes of ``operators.topk`` (behind
+  ``lsh_topk``, ``ivf_topk``, ``plaid_topk`` and forest vote), over the
+  same decoder
 * the rolling hashes of ``operators.substring``, the ``mapInPandas``
   image extractors of ``operators.media``, and the seeded ``mapInPandas``
   generators under ``sources``

@@ -15,19 +15,17 @@ Three strategies; only the probe differs between them:
   codebook; candidates are the corpus vectors in a query's top-``nprobe``
   cells.
 
-``lsh_topk`` and ``ivf_topk`` share one core, ``_probe_topk``, in the
-shape of REPOSE (ICDE 2021): each corpus partition answers top-k
-locally, and one step merges. The query batch is collected once and
-broadcast; one ``mapInArrow`` pass over the corpus partitions applies the
-probe mask, drops self-matches and keeps, per (partition, query), a
+``lsh_topk`` and ``ivf_topk`` share one core, ``_probe_topk``, on
+``operators/topk.py`` (REPOSE, ICDE 2021): each corpus partition answers
+top-k locally, and one step merges. The query batch is collected once
+and broadcast; one ``mapInArrow`` pass over the corpus partitions applies
+the probe mask, drops self-matches and keeps, per (partition, query), a
 provable superset of the local top-k. The corpus is never shuffled: only
 that small candidate table reaches ``_rerank_topk`` (exact cosine +
-``forest_vote.get_top_k``), the re-rank tail of all three strategies.
+``topk.get_top_k``), the re-rank tail of all three strategies.
 """
 
 from __future__ import annotations
-
-import functools
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -42,14 +40,17 @@ from lsh_forest_for_multi_vector_retrieval_spark.functions.vectors import (
     _list_parts,
     _require_kernel,
     _vectors,
+    centroid_scores_arr,
     cosine_col,
     cosine_pandas_udf,
+    nearest_centroid,
 )
-from lsh_forest_for_multi_vector_retrieval_spark.operators.forest_vote import get_top_k
+from lsh_forest_for_multi_vector_retrieval_spark.operators import topk
 from lsh_forest_for_multi_vector_retrieval_spark.operators.pairs import (
     chunk_self_join,
     chunk_values,
 )
+from lsh_forest_for_multi_vector_retrieval_spark.operators.plaid import sample_codebook
 
 
 def _validate_chunking(bits: int, n_chunks: int) -> None:
@@ -112,7 +113,7 @@ def _rerank_topk(
             .where(F.col("lvl") == F.col("_win"))
         )
     scored = scored.groupBy("q_id", "n_id").agg(F.max("cosine").alias("cosine"))
-    return get_top_k(scored, k, "q_id", "n_id", "cosine")
+    return topk.get_top_k(scored, k, "q_id", "n_id", "cosine")
 
 
 # --------------------------------------------------------------------------
@@ -125,15 +126,6 @@ def _rerank_topk(
 # (LSH chunk c against chunk c); otherwise every query element is matched
 # against the corpus row's single element (IVF probe cells against the
 # row's cell). NULL elements match nothing.
-
-
-def _keep_margin(round_digits: int | None) -> float:
-    """How far below a partition's k-th best approximate cosine a row may
-    score and still be kept. A dropped row has k rows (distinct ids) in
-    its partition scoring more than ``10**-round_digits`` above it, so
-    they still score strictly higher after HALF_UP rounding and it cannot
-    reach the global top-k; the ``1e-9`` covers the NumPy-vs-exact ulps."""
-    return (0.0 if round_digits is None else 10.0 ** -round_digits) + 1e-9
 
 
 def _key_matrix(col, width: int):
@@ -191,48 +183,10 @@ def _approx_cosine(view: dict, qv, rows):
     return score, dirty
 
 
-def _keep_floor(score, dirty, ids, k: int, margin: float) -> float:
-    """The keep threshold of one (partition, query, level): the k-th best
-    clean score over distinct ids, minus ``margin``; ``-inf`` (keep all)
-    while fewer than k distinct ids score clean."""
-    clean = ~dirty
-    if clean.sum() < k:
-        return -np.inf
-    s, i = score[clean], ids[clean]
-    order = np.argsort(-s, kind="stable")
-    _, first = np.unique(i[order], return_index=True)
-    if len(first) < k:
-        return -np.inf
-    return s[order][np.sort(first)[k - 1]] - margin
-
-
-def _keep_piece(
-    pieces: list, sub: int, k: int, margin: float, rows, score, dirty, ids, *extra
-) -> list:
-    """Add one batch's candidate rows of a (partition, query) to its kept
-    ``pieces`` (``[sub, rows, score, dirty, ids, *extra]`` each, ``extra``
-    being more per-row arrays): re-prune every piece to the new
-    ``_keep_floor`` and append, and return, the new one."""
-    floor = _keep_floor(
-        np.concatenate([p[2] for p in pieces] + [score]),
-        np.concatenate([p[3] for p in pieces] + [dirty]),
-        np.concatenate([p[4] for p in pieces] + [ids]),
-        k,
-        margin,
-    )
-    for p in pieces:
-        keep = p[3] | (p[2] >= floor)
-        p[1:] = [x[keep] for x in p[1:]]
-    keep = dirty | (score >= floor)
-    piece = [sub] + [x[keep] for x in (rows, score, dirty, ids, *extra)]
-    pieces.append(piece)
-    return piece
-
-
 def _probe_kernel(bq, levels: list, k: int, margin: float, counts: bool, schema):
     """The ``mapInArrow`` body of ``_probe_topk`` over ``(n_id, n_vec,
-    *keys)``. Per query and level it keeps every candidate row that is
-    dirty or scores within ``margin`` of the partition's k-th best, and
+    *keys)``. Per query and level ``topk.keep_loop`` keeps every candidate
+    row dirty or within ``margin`` of the partition's k-th best, and
     with ``counts`` one count row: ``n`` distinct candidate ids (capped
     at k) and, below k, the ids themselves. It decides no final score or
     rank; rows stream through, so memory holds only what is kept."""
@@ -243,12 +197,9 @@ def _probe_kernel(bq, levels: list, k: int, margin: float, counts: bool, schema)
         q = bq.value
         live = [j for j, x in enumerate(q["ids"]) if x is not None]
         dims = {len(v) for v in q["dense"] if v is not None}
-        kept: dict = {}  # (level, query) -> [[sub, rows, score, dirty, ids]]
         seen: dict = {}  # (level, query) -> distinct candidate ids
-        subs = []
-        for b in batches:
-            if not b.num_rows:
-                continue
+
+        def candidates(b):
             nid = b.column(0)
             ids = (
                 np.array(nid.to_pylist(), dtype=object)
@@ -262,7 +213,6 @@ def _probe_kernel(bq, levels: list, k: int, margin: float, counts: bool, schema)
                 for level in levels
                 for c, pos in level
             }
-            fresh = []
             for lvl, level in enumerate(levels):
                 for j in live:
                     hit = id_ok & (ids != q["ids"][j])
@@ -276,29 +226,20 @@ def _probe_kernel(bq, levels: list, k: int, margin: float, counts: bool, schema)
                     key = (lvl, j)
                     if counts and len(seen.setdefault(key, set())) < k:
                         seen[key].update(ids[rows].tolist())
-                    s, d = _approx_cosine(view, q["dense"][j], rows)
-                    fresh.append(
-                        _keep_piece(
-                            kept.setdefault(key, []), len(subs), k, margin, rows, s, d, ids[rows]
-                        )
-                    )
-            if fresh:
-                take = np.unique(np.concatenate([p[1] for p in fresh]))
-                subs.append((b.column(0).take(take), b.column(1).take(take)))
-                for p in fresh:
-                    p[1] = np.searchsorted(take, p[1])
-        out = [(key, p) for key, ps in kept.items() for p in ps if len(p[1])]
-        if out:
-            lvl = np.concatenate([np.full(len(p[1]), key[0], np.int32) for key, p in out])
-            pos = pa.array(np.concatenate([np.full(len(p[1]), key[1]) for key, p in out]))
-            m = len(lvl)
+                    yield (key, rows, *_approx_cosine(view, q["dense"][j], rows), ids[rows])
+
+        pieces, cols = topk.keep_loop(batches, k, margin, candidates)
+        if pieces:
+            held, n = zip(*pieces)
+            pos = pa.array(np.repeat([j for _, j in held], n))
+            m = sum(n)
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(lvl, pa.int32()),
+                    pa.array(np.repeat([lvl for lvl, _ in held], n), pa.int32()),
                     q["arrow_ids"].take(pos),
-                    pa.concat_arrays([subs[p[0]][0].take(p[1]) for _, p in out]),
+                    cols[0],
                     q["arrow_vecs"].take(pos),
-                    pa.concat_arrays([subs[p[0]][1].take(p[1]) for _, p in out]),
+                    cols[1],
                     pa.nulls(m, pa.int32()),
                     pa.nulls(m, schema.field("ids").type),
                 ],
@@ -366,35 +307,6 @@ def _query_payload(rows: list, keys: list[str], arrow) -> dict:
     }
 
 
-def _broadcast_budget(spark) -> int:
-    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes."""
-    return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-
-
-def _require_positive(**counts) -> None:
-    """Raise ``ValueError``, before any job runs, unless every given count
-    is at least 1 (0 would silently answer nothing; a negative count
-    fails inside a job or slices a driver list from the end)."""
-    for name, v in counts.items():
-        if v < 1:
-            raise ValueError(f"{name} must be >= 1, got {v!r}")
-
-
-def _query_slices(rows: list, budget: int) -> list[list]:
-    """Consecutive query slices of at most ``budget`` estimated bytes
-    each (the session's ``spark.sql.autoBroadcastJoinThreshold``; a
-    non-positive budget is one slice). Always at least one slice."""
-    out, cur, size = [], [], 0
-    for r in rows:
-        b = 16 + 8 * sum(len(x) for x in r[1:] if x is not None)
-        if cur and budget > 0 and size + b > budget:
-            out.append(cur)
-            cur, size = [], 0
-        cur.append(r)
-        size += b
-    return out + [cur]
-
-
 def _candidates(out: DataFrame) -> DataFrame:
     """The candidate rows of a corpus pass (count rows carry ``n``)."""
     return out.where(F.col("n").isNull()).select("lvl", "q_id", "n_id", "q_vec", "n_vec")
@@ -424,7 +336,7 @@ def _probe_topk(
 ) -> DataFrame:
     """(q_id, n_id, cosine, rank): the top-k of ``corpus`` ``(n_id, n_vec,
     *keys)`` for ``queries`` ``(q_id, q_vec, *keys)`` over the probe
-    ``levels`` (see the note above ``_keep_margin``).
+    ``levels`` (see the note above ``_key_matrix``).
 
     The queries are collected once and broadcast, in slices bounded by
     ``spark.sql.autoBroadcastJoinThreshold`` (one corpus pass per slice).
@@ -435,19 +347,15 @@ def _probe_topk(
     query, the first level reaching k distinct ids (the last level, the
     root, otherwise), counted over the kept rows: a partition keeps k
     distinct ids of a level whenever it has k clean ones and every row
-    otherwise (``_keep_floor``), so the kept rows reach k exactly when
+    otherwise (``topk.keep_loop``), so the kept rows reach k exactly when
     the candidates do. Levels nest, so that is the reference's ascend:
     every query gets min(k, distinct non-NULL corpus ids other than its
     own) rows."""
-    _require_positive(k=k)
-    spark = corpus.sparkSession
-    margin = _keep_margin(round_digits)
-    budget = _broadcast_budget(spark)
+    topk.require_positive(k=k)
+    margin = topk.keep_margin(round_digits)
     qrows = queries.collect()
 
     def scan(lv: list, rows: list, counts: bool) -> DataFrame:
-        from pyspark.sql.pandas.types import to_arrow_schema
-
         names = sorted({c for level in lv for c, _ in level}, key=corpus.columns.index)
         frame = corpus.select("n_id", "n_vec", *names)
         n_id = frame.schema["n_id"].dataType
@@ -462,19 +370,12 @@ def _probe_topk(
                 StructField("ids", ArrayType(n_id)),
             ]
         )
-        arrow = to_arrow_schema(schema)
         spec = [tuple((2 + names.index(c), pos) for c, pos in level) for level in lv]
-        passes = [
-            frame.mapInArrow(
-                _probe_kernel(
-                    spark.sparkContext.broadcast(_query_payload(s, names, arrow)),
-                    spec, k, margin, counts, arrow,
-                ),
-                schema,
-            )
-            for s in _query_slices(rows, budget)
-        ]
-        return functools.reduce(DataFrame.union, passes)
+        return topk.sliced_pass(
+            frame, schema, rows,
+            lambda s, arrow: _query_payload(s, names, arrow),
+            lambda bq, arrow: _probe_kernel(bq, spec, k, margin, counts, arrow),
+        )
 
     first = scan(levels[:1], qrows, ensure_k)
     if not ensure_k:
@@ -712,17 +613,9 @@ def ivf_topk(
     Reference analog: DESCEND + collect + exact re-rank
     (lsh_forest.py:76-108) with k-means cells instead of hash prefixes.
     """
-    from lsh_forest_for_multi_vector_retrieval_spark.functions.vectors import (
-        centroid_scores_arr,
-        nearest_centroid,
-    )
-    from lsh_forest_for_multi_vector_retrieval_spark.operators.plaid import (
-        sample_codebook,
-    )
-
     _require_kernel(assignment=assignment, scoring=scoring)
     cosine = _cosine_fn(scoring)
-    _require_positive(k=k, nprobe=nprobe)
+    topk.require_positive(k=k, nprobe=nprobe)
     if centroids is None:
         centroids = sample_codebook(
             corpus, k=n_centroids, iters=iters, sample_limit=sample_limit,

@@ -10,14 +10,15 @@ common signature prefix inside each tree: a match on per-depth prefix
 hashes followed by a max. The path-walk and seen-set bookkeeping are
 artifacts of pointer tries and disappear (SURVEY §2.6 S3).
 
-Candidate generation is one corpus pass, in the shape of REPOSE (ICDE
-2021) and of ``ann._probe_topk``: every trie node is a ``prefix_hashes``
-element, computed by the same JVM expression on both sides. The query
-paths are collected once and broadcast; one ``mapInArrow`` pass over the
-corpus counts the docs of each query-path node and emits the ``(query,
-doc, node)`` matches. The counts are summed on the driver and attached
-to the matches by a narrow pass; the matches then take one ``query_id``
-exchange, and every scoring stage after it runs on that partitioning.
+Candidate generation is one corpus pass on ``operators/topk.py`` (REPOSE,
+ICDE 2021): every trie node is a ``prefix_hashes`` element, computed by
+the same JVM expression on both sides. The query paths are collected
+once and broadcast; one ``mapInArrow`` pass over the corpus
+(``topk.sliced_pass``) counts the docs of each query-path node and
+emits the ``(query, doc, node)`` matches. The counts are summed on the
+driver and attached to the matches by a narrow pass; the matches then
+take one ``query_id`` exchange, and every scoring stage after it runs
+on that partitioning.
 
 Scoring stages (forest_vote.py:290-338 ``query``), JVM expressions:
   per (query, doc, tree): w(depth) * popularity_idf
@@ -32,8 +33,6 @@ log1p(n_docs/|docs at node|)^beta.
 
 from __future__ import annotations
 
-import functools
-
 import numpy as np
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
@@ -44,6 +43,10 @@ from lsh_forest_for_multi_vector_retrieval_spark.functions.vectors import (
     _list_parts,
     _spans,
 )
+from lsh_forest_for_multi_vector_retrieval_spark.operators import topk
+
+# re-exported: the driver entry point and the benchmark import it from here
+from lsh_forest_for_multi_vector_retrieval_spark.operators.topk import get_top_k  # noqa: F401
 
 
 def prefix_hashes(
@@ -310,12 +313,6 @@ def forest_vote_scores(
     """
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    # ann imports this module (get_top_k), so its helpers load here
-    from lsh_forest_for_multi_vector_retrieval_spark.operators.ann import (
-        _broadcast_budget,
-        _query_slices,
-    )
-
     spark = corpus_sigs.sparkSession
     positions = cfg.num_bands * cfg.rows_per_band
     paths = prefix_hashes(F.col("sig"), cfg).alias("h")
@@ -335,28 +332,27 @@ def forest_vote_scores(
             StructField("n", LongType()),
         ]
     )
-    arrow = to_arrow_schema(schema)
     seen = Observation()
     frame = corpus_sigs.observe(seen, F.count(F.lit(1)).alias("n_docs")).select("doc_id", paths)
     claimed = np.zeros(len(node_pos), dtype=bool)
-    passes, at = [], 0
-    for s in _query_slices(qrows, _broadcast_budget(spark)):
+    at = 0
+
+    def payload(s: list, arrow) -> dict:
+        """The next slice's payload (``sliced_pass`` asks in slice order)."""
+        nonlocal at
         rows = slice(at, at + len(s))
         at += len(s)
-        payload = _slice_payload(
+        sliced = _slice_payload(
             [r.query_id for r in s], arrow.field("query_id").type,
             node_of[rows], node_pos, node_hash, ~claimed,
         )
-        claimed[payload["gids"]] = True
-        passes.append(
-            frame.mapInArrow(
-                _vote_kernel(
-                    spark.sparkContext.broadcast(payload), positions, max_node_docs, arrow
-                ),
-                schema,
-            )
-        )
-    out = functools.reduce(DataFrame.union, passes).localCheckpoint(eager=True)
+        claimed[sliced["gids"]] = True
+        return sliced
+
+    out = topk.sliced_pass(
+        frame, schema, qrows, payload,
+        lambda bq, arrow: _vote_kernel(bq, positions, max_node_docs, arrow),
+    ).localCheckpoint(eager=True)
     n_docs = seen.get["n_docs"]
     node_docs = np.zeros(len(node_pos), dtype=np.int64)
     counted = out.where(F.col("n").isNotNull()).select("node", "n").collect()
@@ -418,18 +414,3 @@ def forest_vote_scores(
         "doc_id",
         (F.col("raw_score") / F.max("raw_score").over(qw)).alias("score"),
     )
-
-
-def get_top_k(
-    scores: DataFrame,
-    k: int = 10,
-    query_col: str = "query_id",
-    item_col: str = "doc_id",
-    score_col: str = "score",
-) -> DataFrame:
-    """heapq.nlargest analog (forest_vote.py:340-343): per-query top-k by
-    score, deterministic tie-break on the item id -> per-partition partial
-    top-k (WindowGroupLimit) under the window. Adds ``rank`` (1-based).
-    The one per-query top-k of forest vote, ANN, PLAID and metrics."""
-    w = Window.partitionBy(query_col).orderBy(F.desc(score_col), F.asc(item_col))
-    return scores.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)

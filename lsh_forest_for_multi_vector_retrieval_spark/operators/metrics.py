@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lsh_forest_for_multi_vector_retrieval_spark.operators.forest_vote import get_top_k
+from lsh_forest_for_multi_vector_retrieval_spark.operators.topk import get_top_k
 
 
 def pair_recall(predicted: DataFrame, truth: DataFrame) -> float:

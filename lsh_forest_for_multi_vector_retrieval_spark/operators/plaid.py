@@ -10,19 +10,18 @@ interaction score ``S_cq[doc_cids].max(axis=0).sum()`` and rank.
 
 Spark mapping (SURVEY §2.9): KMeans via ``pyspark.ml`` (P2); the inverted
 index is one ``(doc_id, cposs)`` row per doc (P3, ``centroid_index``).
-``plaid_topk`` has the shape of REPOSE (ICDE 2021), like
-``ann._probe_topk``: the small query side (S_cq rows and the kept
-centroids per query) is collected once and broadcast; ``doc_vectors`` is
-aggregated once, by ``doc_id``, into ``(doc_id, cposs, d_vecs)``; one
-``mapInArrow`` pass over that table keeps, per partition and query, a
-provable superset of the local top pool by centroid score; one merge
-(``forest_vote.get_top_k``) ranks it with the relational score kernels,
-and the exact re-rank reads ``d_vecs`` for the pool rows only.
+``plaid_topk`` runs on ``operators/topk.py`` (REPOSE, ICDE 2021): the
+small query side (S_cq rows and the kept centroids per query) is
+collected once and broadcast; ``doc_vectors`` is aggregated once, by
+``doc_id``, into ``(doc_id, cposs, d_vecs)``; one ``mapInArrow`` pass
+over that table keeps, per partition and query, a provable superset of
+the local top pool by centroid score; one merge (``topk.get_top_k``)
+ranks it with the relational score kernels, and the exact re-rank reads
+``d_vecs`` for the pool rows only.
 """
 
 from __future__ import annotations
 
-import functools
 import math
 
 import numpy as np
@@ -35,17 +34,12 @@ from lsh_forest_for_multi_vector_retrieval_spark.functions.vectors import (
     _require_kernel,
     _spans,
     centroid_scores_arr,
+    centroid_scorevec_pandas_udf,
+    chamfer_pair_pandas_udf,
     dot_col,
     nearest_centroid,
 )
-from lsh_forest_for_multi_vector_retrieval_spark.operators.ann import (
-    _broadcast_budget,
-    _keep_margin,
-    _keep_piece,
-    _query_slices,
-    _require_positive,
-)
-from lsh_forest_for_multi_vector_retrieval_spark.operators.forest_vote import get_top_k
+from lsh_forest_for_multi_vector_retrieval_spark.operators import topk
 
 #: The most token vectors one document may hold. ``plaid_topk`` keeps one
 #: row per document holding all of its token vectors (``d_vecs``, which
@@ -309,7 +303,7 @@ def _pool_rows(queries: dict, n_cents: int) -> list[tuple]:
     """One ``(query_id, S, NULL mask, kept)`` row per query with a kept
     position: ``S`` is its token x position score matrix flattened, tokens
     in ``_tok_order`` and NULL read as -inf — the shape
-    ``ann._query_slices`` sizes."""
+    ``topk.query_slices`` sizes."""
     rows = []
     for qid, (toks, kept) in queries.items():
         if not kept:
@@ -357,11 +351,8 @@ def _pool_kernel(bq, keep: int, margin: float, max_tokens: int, schema):
         import pyarrow as pa
 
         q = bq.value
-        kept: dict = {}  # query -> [[sub, rows, score, dirty, ids, vals, nulls]]
-        subs = []
-        for b in batches:
-            if not b.num_rows:
-                continue
+
+        def candidates(b):
             did = b.column(0)
             ntok = b.column(2).to_numpy(zero_copy_only=False)
             over = np.flatnonzero(ntok > max_tokens)
@@ -373,12 +364,11 @@ def _pool_kernel(bq, keep: int, margin: float, max_tokens: int, schema):
             off, lens, valid, values = _list_parts(b.column(1))
             rows = np.flatnonzero(did.is_valid().to_numpy(zero_copy_only=False) & valid & (lens > 0))
             if not len(rows):
-                continue
+                return
             seg = lens[rows]
             starts = np.cumsum(seg) - seg
             cpos = values.to_numpy(zero_copy_only=False)[_spans(off[rows], seg)]
             ids = did.take(pa.array(rows)).to_numpy(zero_copy_only=False)
-            fresh = []
             for j, lut in enumerate(q["kept"]):
                 at = np.flatnonzero(np.logical_or.reduceat(lut[cpos], starts))
                 if not len(at):
@@ -394,31 +384,21 @@ def _pool_kernel(bq, keep: int, margin: float, max_tokens: int, schema):
                 for t in range(vals.shape[1]):
                     score = score + vals[:, t]
                 dirty = (nulls | ~np.isfinite(vals)).any(axis=1)
-                fresh.append(
-                    _keep_piece(
-                        kept.setdefault(j, []), len(subs), keep, margin,
-                        rows[at], score, dirty, ids[at], vals, nulls,
-                    )
-                )
-            if fresh:
-                take = np.unique(np.concatenate([p[1] for p in fresh]))
-                subs.append((did.take(pa.array(take)), b.column(1).take(pa.array(take))))
-                for p in fresh:
-                    p[1] = np.searchsorted(take, p[1])
-        out = [(j, p) for j, ps in kept.items() for p in ps if len(p[1])]
-        if out:
-            pos = pa.array(np.concatenate([np.full(len(p[1]), j) for j, p in out]))
-            width = np.concatenate([np.full(len(p[1]), p[5].shape[1]) for _, p in out])
+                yield j, rows[at], score, dirty, ids[at], vals, nulls
+
+        pieces, cols = topk.keep_loop(batches, keep, margin, candidates)
+        if pieces:
+            js, n, vals, nulls = zip(*pieces)
+            width = np.repeat([v.shape[1] for v in vals], n)
             yield pa.RecordBatch.from_arrays(
                 [
-                    q["arrow_ids"].take(pos),
-                    pa.concat_arrays([subs[p[0]][0].take(pa.array(p[1])) for _, p in out]),
-                    pa.concat_arrays([subs[p[0]][1].take(pa.array(p[1])) for _, p in out]),
+                    q["arrow_ids"].take(pa.array(np.repeat(js, n))),
+                    *cols,
                     pa.ListArray.from_arrays(
                         pa.array(np.concatenate([[0], np.cumsum(width)]), pa.int32()),
                         pa.array(
-                            np.concatenate([p[5].ravel() for _, p in out]),
-                            mask=np.concatenate([p[6].ravel() for _, p in out]),
+                            np.concatenate([v.ravel() for v in vals]),
+                            mask=np.concatenate([x.ravel() for x in nulls]),
                         ),
                         type=schema.field("vals").type,
                     ),
@@ -478,7 +458,7 @@ def plaid_topk(
     may hold more than ``MAX_DOC_TOKENS`` token vectors.
 
     Physical plan: broadcast queries, one pass over a per-doc table, one
-    merge (the ``ann._probe_topk`` shape).
+    merge (the ``operators/topk.py`` shape, like ``ann._probe_topk``).
     * Query side: each token's S_cq array (a LITERAL-codebook projection)
       and its top-``nprobe`` probe (the ``ann.ivf_topk`` struct sort,
       desc score / asc position) are collected once; the kept centroids
@@ -492,7 +472,7 @@ def plaid_topk(
       S_cq score among the doc's positions (the ``array_max`` of cell 7,
       a selection, so exact). Per partition it keeps every doc that can
       still reach the top ``max(k, rerank)`` (``k`` without re-rank) by
-      centroid score: within ``ann._keep_margin`` of the partition's
+      centroid score: within ``topk.keep_margin`` of the partition's
       best, or dirty (a NULL or non-finite value). It emits slim
       ``(query_id, doc_id, cposs, vals)`` rows, no vectors.
     * ``_sum_tok_vals`` over ``vals`` is the centroid score and
@@ -505,16 +485,11 @@ def plaid_topk(
     join, score join, pool, ``d_mat`` join): the pass only drops rows
     that cannot reach a top-k."""
     _require_kernel(assignment=assignment, scoring=scoring)
-    _require_positive(k=k, nprobe=nprobe)
+    topk.require_positive(k=k, nprobe=nprobe)
     if rerank is not None:
-        _require_positive(rerank=rerank)
+        topk.require_positive(rerank=rerank)
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
-
-    from lsh_forest_for_multi_vector_retrieval_spark.functions.vectors import (
-        centroid_scorevec_pandas_udf,
-        chamfer_pair_pandas_udf,
-    )
 
     spark = doc_vectors.sparkSession
     # one bounded collect of the tiny codebook, shared by assignment AND
@@ -578,19 +553,13 @@ def plaid_topk(
             StructField("vals", ArrayType(qf["s_arr"].dataType.elementType)),
         ]
     )
-    arrow = to_arrow_schema(schema)
     keep = k if rerank is None else max(k, rerank)
-    passes = [
-        frame.mapInArrow(
-            _pool_kernel(
-                spark.sparkContext.broadcast(_pool_payload(s, n_cents, arrow)),
-                keep, _keep_margin(round_digits), MAX_DOC_TOKENS, arrow,
-            ),
-            schema,
-        )
-        for s in _query_slices(_pool_rows(queries, n_cents), _broadcast_budget(spark))
-    ]
-    survivors = functools.reduce(DataFrame.union, passes)
+    margin = topk.keep_margin(round_digits)
+    survivors = topk.sliced_pass(
+        frame, schema, _pool_rows(queries, n_cents),
+        lambda s, arrow: _pool_payload(s, n_cents, arrow),
+        lambda bq, arrow: _pool_kernel(bq, keep, margin, MAX_DOC_TOKENS, arrow),
+    )
 
     # centroid score: the sum over the q_idx-sorted tokens of each
     # token's best score among the doc's centroid positions
@@ -598,13 +567,13 @@ def plaid_topk(
         "query_id", "doc_id", "cposs", _sum_tok_vals(F.col("vals"), round_digits).alias("score")
     )
     if rerank is None:
-        return get_top_k(scores.drop("cposs"), k)
+        return topk.get_top_k(scores.drop("cposs"), k)
 
     # exact re-rank over matrices: one row per pool (query, doc) carrying
     # the doc's token list and the query's q_idx-sorted token list — max
     # over doc tokens is order-independent, so the collect_list order of
     # d_vecs cannot affect the score
-    pool = get_top_k(scores, keep).select("query_id", "doc_id", "cposs")
+    pool = topk.get_top_k(scores, keep).select("query_id", "doc_id", "cposs")
     # the query token lists, from the driver's copy: an Arrow table
     # becomes a local relation, built without Python tasks
     qm_schema = StructType(
@@ -646,4 +615,4 @@ def plaid_topk(
         score = raw if round_digits is None else F.round(raw, round_digits)
     else:
         score = chamfer_pair_fold_col(q_vecs, F.col("d_vecs"), round_digits)
-    return get_top_k(joined.select("query_id", "doc_id", score.alias("score")), k)
+    return topk.get_top_k(joined.select("query_id", "doc_id", score.alias("score")), k)

@@ -41,6 +41,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from lsh_forest_for_multi_vector_retrieval_spark.operators.pairs import (
+    bucket_ids_capped,
+    star_pair_structs,
+)
+
 _BASE = np.uint64(1000003)
 _OFFSET = np.uint64(1469598103934665603)
 
@@ -182,10 +187,6 @@ def substring_dup_pairs(
     verified against) the pivots, so recall for "is doc X a substring-dup
     of anything" is preserved.
     """
-    from lsh_forest_for_multi_vector_retrieval_spark.operators.pairs import (
-        bucket_ids_capped,
-        star_pair_structs,
-    )
     from lsh_forest_for_multi_vector_retrieval_spark.session import (
         ensure_min_partitions,
     )

@@ -4,6 +4,7 @@ import uuid
 
 import pytest
 
+from lsh_forest_for_multi_vector_retrieval_spark.operators import topk
 from lsh_forest_for_multi_vector_retrieval_spark.session import get_spark
 
 
@@ -51,3 +52,15 @@ def compiles(spark):
         return metric.getCount() - before
 
     return count
+
+
+@pytest.fixture
+def slices(monkeypatch):
+    """The list of ``topk.query_slices``' results, one per call made
+    while the test runs: each call's query slices."""
+    calls = []
+    real = topk.query_slices
+    monkeypatch.setattr(
+        topk, "query_slices", lambda spark, rows: calls.append(real(spark, rows)) or calls[-1]
+    )
+    return calls

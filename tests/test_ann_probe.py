@@ -1,7 +1,7 @@
 """The shared ANN core ``ann._probe_topk`` (broadcast queries, one corpus
-pass, local top-k, one merge) against a test-local copy of the
-relational plan it replaced: block or cell join, dedup, the short-query
-gates and the root scan."""
+pass, local top-k, one merge, on ``operators/topk.py``) against a
+test-local copy of the relational plan it replaced: block or cell join,
+dedup, the short-query gates and the root scan."""
 
 from __future__ import annotations
 
@@ -198,7 +198,7 @@ def test_probe_null_signature_query_and_dirty_corpus_rows(spark, vecs):
     assert [r[1] for r in null_q] == list(range(8)) and {r[2] for r in null_q} == {0.0}
 
 
-def test_probe_slices_a_query_batch_above_the_broadcast_threshold(spark, vecs, monkeypatch):
+def test_probe_slices_a_query_batch_above_the_broadcast_threshold(spark, vecs, slices):
     """With ``spark.sql.autoBroadcastJoinThreshold`` below the query
     batch's bytes, the queries are broadcast in slices, one corpus pass
     each, and the rows do not change."""
@@ -207,9 +207,6 @@ def test_probe_slices_a_query_batch_above_the_broadcast_threshold(spark, vecs, m
     kw = dict(k=20, ensure_k=True, round_digits=6)
     want_lsh = _rows(relational_lsh(vecs, queries, n_chunks=4, scoring="fold", **kw))
     want_ivf = _rows(relational_ivf(vecs, queries, centroids=cb, nprobe=2, scoring="fold", **kw))
-    slices = []
-    real = ann._query_slices
-    monkeypatch.setattr(ann, "_query_slices", lambda rows, b: slices.append(real(rows, b)) or slices[-1])
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "4000")
     try:
@@ -246,12 +243,12 @@ def test_one_row_per_query_and_id_when_the_corpus_repeats_an_id(spark, vecs):
 
 # --------------------------------------------------------- CI guards
 def test_ann_topk_job_count_and_plan_shape(jobs, vecs):
-    """A saturated ``ensure_k`` call runs: the query collect, the
+    """A saturated ``ensure_k`` call runs 5 jobs: the query collect, the
     checkpointed corpus pass, the count-row collect and the result's
-    collect (one exchange stage + the result stage) — at most 5 jobs.
-    No Exchange sits below the corpus pass, so the corpus is never
-    shuffled; the one exchange is the re-rank's ``q_id`` shuffle of the
-    candidate table."""
+    collect (one exchange stage + the result stage); without ``ensure_k``
+    it runs 3, the query collect and the result's two. No Exchange sits
+    below the corpus pass, so the corpus is never shuffled; the one
+    exchange is the re-rank's ``q_id`` shuffle of the candidate table."""
     queries = vecs.where(F.col("vec_id") < 20)
     cb = _codebook(8)
     calls = {
@@ -260,10 +257,11 @@ def test_ann_topk_job_count_and_plan_shape(jobs, vecs):
     }
     for name, call in calls.items():
         call(ensure_k=True).collect()  # warm
-        assert jobs(lambda: call(ensure_k=True).collect()) <= 5, name
+        assert jobs(lambda: call(ensure_k=True).collect()) == 5, name
 
         bare = call(ensure_k=False)
         bare.collect()
+        assert jobs(lambda: call(ensure_k=False).collect()) == 3, name
         plan = _final_plan(bare)
         at = [i for i, line in enumerate(plan) if "MapInArrow" in line]
         assert len(at) == 1, (name, plan)
@@ -367,10 +365,12 @@ def test_forest_vote_counts_the_corpus_under_its_checkpoint(spark, jobs, monkeyp
     docs.unpersist()
 
 
-def test_ensure_k_new_query_batch_compiles_no_class(vecs, compiles, monkeypatch):
+def test_ensure_k_new_query_batch_compiles_no_class(vecs, compiles, jobs, monkeypatch):
     """The ascend's per-query choices are data, not literals in the plan:
     once one ``ensure_k`` call has compiled its plan, a call on another
-    query batch whose short queries ascend compiles no class."""
+    query batch whose short queries ascend compiles no class. The LSH
+    call runs 5 jobs: the query collect, the checkpointed leaf pass, the
+    count-row collect and the result's collect over the ascend pass."""
     batches = [
         vecs.where(F.col("vec_id") % 7 == r).localCheckpoint(eager=True) for r in (0, 1)
     ]
@@ -393,3 +393,5 @@ def test_ensure_k_new_query_batch_compiles_no_class(vecs, compiles, monkeypatch)
         ascended.clear()
         assert compiles(lambda: call(batches[1]).collect()) == 0, name
         assert ascended == [True], name
+        if name == "lsh":
+            assert jobs(lambda: call(batches[1]).collect()) == 5

@@ -7,7 +7,6 @@ from __future__ import annotations
 import pytest
 
 from lsh_forest_for_multi_vector_retrieval_spark.config import DedupConfig
-from lsh_forest_for_multi_vector_retrieval_spark.operators import ann
 from lsh_forest_for_multi_vector_retrieval_spark.operators.forest_vote import (
     forest_vote_scores,
 )
@@ -85,14 +84,11 @@ CASES = {
 
 
 @pytest.mark.parametrize("name", list(CASES))
-def test_forest_vote_degenerate_inputs_keep_their_rows(spark, monkeypatch, name):
+def test_forest_vote_degenerate_inputs_keep_their_rows(spark, slices, name):
     parts, queries, schema, cfg, kw, threshold, want = CASES[name]
     corpus = spark.createDataFrame(parts[0], schema).coalesce(1)
     for p in parts[1:]:
         corpus = corpus.union(spark.createDataFrame(p, schema).coalesce(1))
-    slices = []
-    real = ann._query_slices
-    monkeypatch.setattr(ann, "_query_slices", lambda rows, b: slices.append(real(rows, b)) or slices[-1])
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     if threshold:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)

@@ -15,13 +15,12 @@ from lsh_forest_for_multi_vector_retrieval_spark.functions.vectors import (
     centroid_scorevec_pandas_udf,
     chamfer_pair_pandas_udf,
 )
-from lsh_forest_for_multi_vector_retrieval_spark.operators import ann, plaid
+from lsh_forest_for_multi_vector_retrieval_spark.operators import plaid
 from lsh_forest_for_multi_vector_retrieval_spark.operators.ann import (
     embedding_near_dup_pairs,
     ivf_topk,
     lsh_topk,
 )
-from lsh_forest_for_multi_vector_retrieval_spark.operators.forest_vote import get_top_k
 from lsh_forest_for_multi_vector_retrieval_spark.operators.plaid import (
     _sum_tok_vals,
     build_centroids_deterministic,
@@ -29,6 +28,7 @@ from lsh_forest_for_multi_vector_retrieval_spark.operators.plaid import (
     chamfer_pair_fold_col,
     plaid_topk,
 )
+from lsh_forest_for_multi_vector_retrieval_spark.operators.topk import get_top_k
 from test_expected_fixtures import SF001 as SF
 
 
@@ -210,15 +210,11 @@ def test_plaid_pass_keeps_dirty_rows(spark, corpus, cents):
                 assert any(r[0] == 50 for r in got), got
 
 
-def test_plaid_pass_slices_a_query_batch_above_the_broadcast_threshold(spark, corpus, queries, cents, monkeypatch):
+def test_plaid_pass_slices_a_query_batch_above_the_broadcast_threshold(spark, corpus, queries, cents, slices):
     """Below the query batch's bytes, the queries are broadcast in slices,
     one pass each, and the rows do not change."""
     kw = dict(k=10, nprobe=4, rerank=20, round_digits=6)
     want = _rows(relational_plaid(corpus, queries, cents, **kw))
-    slices = []
-    real = plaid._query_slices
-    assert real is ann._query_slices
-    monkeypatch.setattr(plaid, "_query_slices", lambda rows, b: slices.append(real(rows, b)) or slices[-1])
     with _conf(spark, "spark.sql.autoBroadcastJoinThreshold", "2000"):
         got = _rows(plaid_topk(corpus, queries, cents, **kw))
     assert got == want
@@ -287,18 +283,21 @@ def test_doc_token_bound_fails_loudly_above_and_passes_at(spark, corpus, queries
 
 # ------------------------------------------------------------- CI guards
 def test_plaid_job_count_and_plan_shape(jobs, corpus, queries, cents):
-    """A warm re-rank call runs at most 7 jobs: the query collect, the
-    per-doc exchange, the query-vector broadcast, the pool window's
-    exchange, the pool broadcast, the final window's exchange and the
-    result (the codebook is a local relation: collecting it runs none).
+    """A warm re-rank call runs 7 jobs: the query collect, the per-doc
+    exchange, the query-vector broadcast, the pool window's exchange, the
+    pool broadcast, the final window's exchange and the result (the
+    codebook is a local relation: collecting it runs none); without
+    re-rank it runs 4: the query collect, the per-doc exchange, the
+    window's exchange and the result.
     Exactly one Exchange sits below the pass, keyed on ``doc_id``, and the
     re-rank reads that same exchange: ``doc_vectors`` is aggregated once."""
-    def call():
-        return plaid_topk(corpus, queries, cents, k=10, nprobe=4, rerank=20,
+    def call(rerank=20):
+        return plaid_topk(corpus, queries, cents, k=10, nprobe=4, rerank=rerank,
                           assignment="pandas", scoring="pandas")
 
-    call().collect()  # warm
-    assert jobs(lambda: call().collect()) <= 7
+    for rerank, budget in ((20, 7), (None, 4)):
+        call(rerank).collect()  # warm
+        assert jobs(lambda: call(rerank).collect()) == budget, rerank
 
     df = call()
     df.collect()

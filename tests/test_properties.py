@@ -12,6 +12,7 @@ from Schleimer-Wilkerson-Aiken 2003 §3 (any shared substring of length
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -19,6 +20,7 @@ from lsh_forest_for_multi_vector_retrieval_spark.functions.minhash import (
     minhash_np,
     minhash_params,
 )
+from lsh_forest_for_multi_vector_retrieval_spark.operators import topk
 from lsh_forest_for_multi_vector_retrieval_spark.operators.substring import (
     _rolling_hashes,
     _winnow,
@@ -83,6 +85,65 @@ def test_minhash_collision_rate_tracks_jaccard(data):
     )
     sigma = np.sqrt(max(j * (1 - j), 1e-9) / 64)
     assert abs(rate - j) <= 6 * sigma + 1e-12
+
+
+def _kth_floor(score, dirty, ids, k, margin):
+    """The k-th best clean score over distinct ids, minus ``margin``;
+    ``-inf`` below k distinct clean ids."""
+    best: dict = {}
+    for s, d, i in zip(score, dirty, ids):
+        if not d:
+            best[i] = max(best.get(i, -np.inf), s)
+    top = sorted(best.values(), reverse=True)
+    return top[k - 1] - margin if len(top) >= k else -np.inf
+
+
+@given(st.data())
+@settings(max_examples=300, deadline=None)
+def test_keep_loop_keeps_a_superset_of_each_keys_top_k(data):
+    """``topk.keep_loop`` over candidate rows of several keys, split into
+    Arrow batches at random: per key it keeps every dirty row and every
+    row scoring at least the k-th best clean score over distinct ids of
+    all the key's rows, minus the margin — the provable superset of the
+    top-k that ``ann._probe_topk`` and ``plaid_topk`` merge — and each
+    kept row comes back once, with its key."""
+    n = data.draw(st.integers(0, 40))
+
+    def column(elems, dtype):
+        return np.array(data.draw(st.lists(elems, min_size=n, max_size=n)), dtype=dtype)
+
+    score = column(st.sampled_from([0.0, 0.5, 1.0]) | st.floats(-2.0, 2.0), float)
+    dirty = column(st.booleans(), bool)
+    score[dirty & column(st.booleans(), bool)] = np.nan
+    ids = column(st.integers(0, 9), np.int64)
+    keys = column(st.integers(0, 2), np.int64)
+    k = data.draw(st.integers(1, 6))
+    margin = data.draw(st.sampled_from([0.0, 1e-6]) | st.floats(0.0, 1.0))
+    cuts = sorted(data.draw(st.lists(st.integers(0, n), max_size=6)))
+    bounds = [0, *cuts, n]
+    batches = [
+        pa.record_batch([pa.array(np.arange(a, b)), pa.array(-np.arange(a, b))], ["row", "neg"])
+        for a, b in zip(bounds, bounds[1:])
+    ]
+
+    def candidates(b):
+        rows = b.column(0).to_numpy()
+        for key in np.unique(keys[rows]):
+            at = np.flatnonzero(keys[rows] == key)
+            g = rows[at]
+            yield int(key), at, score[g], dirty[g], ids[g]
+
+    pieces, cols = topk.keep_loop(batches, k, margin, candidates)
+    kept = np.array([], dtype=np.int64) if cols is None else cols[0].to_numpy()
+    assert len(kept) == len(set(kept.tolist())) == sum(p[1] for p in pieces)
+    assert np.array_equal(np.repeat([p[0] for p in pieces], [p[1] for p in pieces]), keys[kept])
+    if cols is not None:
+        assert np.array_equal(cols[1].to_numpy(), -kept)
+    for key in np.unique(keys):
+        mine = keys == key
+        floor = _kth_floor(score[mine], dirty[mine], ids[mine], k, margin)
+        must = np.flatnonzero(mine & (dirty | (score >= floor)))
+        assert set(must.tolist()) <= set(kept.tolist()), (key, floor)
 
 
 texts = st.text(

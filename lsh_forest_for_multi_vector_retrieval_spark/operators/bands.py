@@ -108,7 +108,7 @@ def adaptive_band_table(
     ``sigs``, and the per-round ``isEmpty()`` action plus the final
     union would re-execute the whole chain from scratch — O(rounds^2)
     shuffle recomputation, including re-running the MinHash UDF itself
-    when ``sigs`` arrives unpersisted (round-5 review).
+    when ``sigs`` arrives unmaterialized (round-5 review).
     """
     base_rows = cfg.rows_per_band
     base_end = cfg.num_bands * base_rows

@@ -17,7 +17,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from lsh_forest_for_multi_vector_retrieval_spark.config import DedupConfig
@@ -39,12 +39,17 @@ from lsh_forest_for_multi_vector_retrieval_spark.operators.pairs import (
 )
 from lsh_forest_for_multi_vector_retrieval_spark.operators.verify import verify_pairs
 from lsh_forest_for_multi_vector_retrieval_spark.plans.pipeline import Stage
+from lsh_forest_for_multi_vector_retrieval_spark.session import (
+    checkpoint,
+    ensure_min_partitions,
+    release,
+)
 
-#: the stages ``minhash_dedup`` persists, each read twice or more:
+#: the stages ``minhash_dedup`` checkpoints, each read twice or more:
 #: signatures by the band stage and the verify join (else the pandas-UDF
-#: MinHash runs twice); candidates by verify's gate count and its
-#: endpoint rows (else the bucket shuffle reruns); verified by CC's gate,
-#: its first iteration and the caller (else band -> pair -> verify reruns)
+#: MinHash runs twice); candidates by verify's endpoint rows and the
+#: caller (else the bucket shuffle reruns); verified by CC's gate, its
+#: first iteration and the caller (else band -> pair -> verify reruns)
 REUSED_STAGES = ("signatures", "candidates", "verified")
 
 
@@ -60,7 +65,8 @@ class DedupResult:
     unaffected (the star keeps every bucket connected) and every skipped
     comparison is counted in ``pairs.bucket_drop_stats``; set
     ``bucket_pivots >= max_bucket_docs`` if a complete pair list matters
-    more than the O(k*n) hot-bucket bound."""
+    more than the O(k*n) hot-bucket bound. No field can be read after
+    ``unpersist``."""
 
     signatures: DataFrame  # doc_id, shingles, sig, simhash
     bands: DataFrame  # band_id, band_hash, doc_id
@@ -69,15 +75,14 @@ class DedupResult:
     clusters: DataFrame  # doc_id, cluster_id
 
     def unpersist(self) -> None:
-        """Release the ``REUSED_STAGES`` tables ``minhash_dedup`` cached.
-        Call when done with the result — repeated pipeline runs in one
-        session otherwise accumulate cached tables (executor-memory
-        pressure; see round-2 VERDICT). Blocking: an async unpersist can
-        race stages still reading the cache and logs spurious
-        'non-existent accumulator' DAGScheduler errors (round-3 VERDICT
-        #1)."""
-        for name in REUSED_STAGES:
-            getattr(self, name).unpersist(blocking=True)
+        """Release the ``REUSED_STAGES`` checkpoints ``minhash_dedup``
+        made (``session.release``). Call after the last read of the
+        result: no field can be read afterwards. Repeated pipeline runs in
+        one session otherwise hold every run's blocks on the executors
+        (executor-memory pressure; see round-2 VERDICT). Blocking: an
+        async release can race stages still reading the blocks (round-3
+        VERDICT #1)."""
+        release([getattr(self, name) for name in REUSED_STAGES])
 
 
 def flagship_bands(sigs: DataFrame, cfg: DedupConfig = DedupConfig()) -> DataFrame:
@@ -101,11 +106,12 @@ def flagship_stages(
     ``(doc_id, text)``; every other stage reads only earlier outputs.
 
     ``verified`` passes ``materialize_pairs=False``: each runner hands it
-    candidates that are cheap to traverse twice (cached in memory, a
-    parquet checkpoint scan, or the checkpointed micro-batch union). A
-    runner that already knows the candidate row count passes it as
-    ``deps["candidates_count"]`` (an int), and verify's broadcast gate
-    then launches no count job."""
+    candidates that are cheap to traverse twice (an eager checkpoint in
+    ``minhash_dedup`` and ``process_batch``, a parquet checkpoint scan in
+    ``dedup_pipeline``). A runner that already knows the candidate row
+    count (the in-memory runners, from their checkpoint's
+    ``Observation``) passes it as ``deps["candidates_count"]`` (an int),
+    and verify's broadcast gate then launches no count job."""
 
     def signatures(spark, deps):
         return with_signatures(docs(spark), cfg).select(
@@ -153,18 +159,32 @@ def minhash_dedup(
     text_col: str = "text",
 ) -> DedupResult:
     """The flagship near-dup pipeline, run in memory. ``docs`` needs
-    (id_col, text_col). Runs ``flagship_stages`` in order and persists
-    ``REUSED_STAGES``; release them with ``DedupResult.unpersist``.
+    (id_col, text_col). Runs ``flagship_stages`` in order, checkpoints
+    ``REUSED_STAGES`` (an ``Observation`` counts the candidates for
+    verify's gate) and releases them on failure; else release them with
+    ``DedupResult.unpersist``.
 
     Note ``.verified`` is pivot-star-complete, not clique-complete, for
     buckets above ``cfg.bucket_pivots`` — see ``DedupResult``.
     """
     text = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    outputs: dict[str, DataFrame] = {}
-    for stage in flagship_stages(lambda _: text, cfg):
-        out = stage.fn(docs.sparkSession, outputs)
-        outputs[stage.name] = out.persist() if stage.name in REUSED_STAGES else out
-    return DedupResult(**outputs)
+    deps: dict = {}
+    held: list[DataFrame] = []
+    found = Observation()
+    try:
+        for stage in flagship_stages(lambda _: text, cfg):
+            out = stage.fn(docs.sparkSession, deps)
+            if stage.name == "candidates":
+                out = checkpoint(out.observe(found, F.count(F.lit(1)).alias("n")), held)
+                deps["candidates_count"] = found.get["n"]
+            elif stage.name in REUSED_STAGES:
+                out = checkpoint(out, held)
+            deps[stage.name] = out
+    except BaseException:
+        release(held)
+        raise
+    del deps["candidates_count"]
+    return DedupResult(**deps)
 
 
 def exact_dedup_groups(
@@ -266,10 +286,6 @@ def ngram_jaccard_pairs_exact(
     recall regressions. Returns (doc_a, doc_b, jaccard).
     """
     from pyspark.sql import Window
-
-    from lsh_forest_for_multi_vector_retrieval_spark.session import (
-        ensure_min_partitions,
-    )
 
     staged = with_shingle_strings(
         ensure_min_partitions(

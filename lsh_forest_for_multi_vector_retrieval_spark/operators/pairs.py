@@ -32,6 +32,7 @@ from lsh_forest_for_multi_vector_retrieval_spark.config import DedupConfig
 from lsh_forest_for_multi_vector_retrieval_spark.functions.simhash import (
     hamming_chunk_cols,
 )
+from lsh_forest_for_multi_vector_retrieval_spark.session import checkpoint, release
 
 
 def star_pair_structs(ids_col, bucket_pivots: int):
@@ -220,11 +221,12 @@ def bucket_drop_summary(bands: DataFrame, cfg: DedupConfig = DedupConfig()) -> d
     # totals aggregated IN Spark; only 100 detail rows ever reach the
     # driver — on a pathological corpus with millions of hot buckets
     # the old full-ledger collect was unbounded (round-4 VERDICT #6)
-    # persisted across the two actions: the ledger is a corpus-scale
-    # groupBy over the band table, and totals + detail would otherwise
-    # recompute it back-to-back
-    ledger = bucket_drop_stats(bands, cfg).persist()
+    # one eager checkpoint read by both actions: the ledger is a
+    # corpus-scale groupBy over the band table, and totals + detail would
+    # otherwise recompute it back-to-back
+    held: list[DataFrame] = []
     try:
+        ledger = checkpoint(bucket_drop_stats(bands, cfg), held)
         totals = ledger.agg(
             F.coalesce(F.sum("dropped_docs"), F.lit(0)).alias("d"),
             F.coalesce(F.sum("starred_pairs_skipped"), F.lit(0)).alias("s"),
@@ -233,7 +235,7 @@ def bucket_drop_summary(bands: DataFrame, cfg: DedupConfig = DedupConfig()) -> d
             F.desc("bucket_n"), "band_id", "band_hash"
         ).limit(100).collect()
     finally:
-        ledger.unpersist()
+        release(held)
     return {
         "dropped_docs_total": int(totals.d),
         "starred_pairs_skipped_total": int(totals.s),

@@ -16,7 +16,6 @@ pure Column expression on the gathered pairs.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -92,20 +91,17 @@ def _join_shingles(
     60.8 s of a 133 s four-core flagship pass at 320k docs: ~0.6 GB of
     arrays shuffled to verify 10k pairs).
 
-    ``n_pairs`` is the row count of ``pairs`` when the caller already
-    knows it (``process_batch`` counts its candidate checkpoint with an
-    ``Observation``); such a ``pairs`` must be cheap to read twice, as
-    the tier above the gate does. Otherwise the count and the endpoint
-    rows read ``pairs`` twice (three times above the gate), so an
-    UNCACHED ``pairs`` plan is materialized once as an eager
-    ``localCheckpoint`` whose ``Observation`` supplies the count: the
-    checkpoint costs no extra job. Callers whose ``pairs`` is ALREADY
-    cheap to traverse again (persisted, a bare parquet scan, or itself a
-    checkpoint) pass ``materialize_pairs=False``. ``Dataset.storageLevel``
-    consults only the cache manager and reads NONE for checkpointed
-    plans, so such a caller MUST pass it or pay a second copy.
+    ``n_pairs`` is the row count of ``pairs`` when the caller knows it
+    (``minhash_dedup`` and ``process_batch`` observe their candidate
+    checkpoint); such a ``pairs`` must be cheap to read twice, as the tier
+    above the gate does. Otherwise the count and the endpoint rows read
+    ``pairs`` twice (three times above the gate), so ``materialize_pairs``
+    makes it an eager ``localCheckpoint`` whose ``Observation`` supplies
+    the count at no extra job. A ``pairs`` already cheap to read again (a
+    parquet scan or a checkpoint) passes ``materialize_pairs=False``, and
+    then a count job gives the gate its count. Only these two decide.
     """
-    if n_pairs is None and materialize_pairs and pairs.storageLevel == StorageLevel.NONE:
+    if n_pairs is None and materialize_pairs:
         counted = Observation()
         pairs = pairs.observe(counted, F.count(F.lit(1)).alias("n"))
         pairs = pairs.localCheckpoint(eager=True)
@@ -146,11 +142,12 @@ def verify_pairs(
     with several identical rows in ``docs_with_shingles`` counts once;
     rows that differ give one output row per combination.
 
-    ``materialize_pairs=False`` skips the eager localCheckpoint of an
-    uncached ``pairs`` — pass it when ``pairs`` is already a bare parquet
-    scan or a checkpoint, so a cheap re-scan isn't copied into
-    block-manager storage. ``n_pairs``, the row count of ``pairs`` when
-    the caller knows it, saves the count job of the broadcast gate."""
+    ``materialize_pairs=False`` skips the eager localCheckpoint of
+    ``pairs`` — pass it when ``pairs`` is already a bare parquet scan or
+    a checkpoint, so a cheap re-scan isn't copied into block-manager
+    storage. ``n_pairs``, the row count of ``pairs`` when the caller
+    knows it, saves the count job of the broadcast gate (and the
+    checkpoint)."""
     joined = _join_shingles(
         pairs,
         docs_with_shingles,

@@ -10,7 +10,7 @@ from __future__ import annotations
 import os
 import site
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 WORKER_DAEMON_MODULE = "lsh_forest_for_multi_vector_retrieval_spark.worker_daemon"
 
@@ -100,13 +100,11 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # let AQE re-partition plans that feed a .persist(): without this a
-        # cached table freezes its pre-AQE partitioning, so the tiny
-        # candidate-pair / verified tables cache in shuffle_partitions
-        # slivers and every downstream action (CC gate count, cluster
-        # count) launches one near-empty task per sliver — measured ~12 s
-        # of latency-bound stages per flagship pass at local[4] (per-stage
-        # task metrics; `perfbench/run.py --trace 1` reports them per
-        # layer), pure Amdahl floor at any scale
+        # cached table freezes its pre-AQE partitioning in shuffle_partitions
+        # slivers, one near-empty task each per downstream action (~12 s per
+        # flagship pass at local[4] when it cached its pairs). The flagship
+        # now uses ``checkpoint``; perfbench's inputs and sinks/plots.py
+        # still persist
         .config(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
             "true",
@@ -137,6 +135,28 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def checkpoint(df: DataFrame, held: list[DataFrame]) -> DataFrame:
+    """``df`` as an eager ``localCheckpoint``, appended to ``held`` for
+    ``release``: how the dedup flagship materialises what it reads twice.
+    An ``Observation`` on ``df`` is filled when this returns."""
+    held.append(df.localCheckpoint(eager=True))
+    return held[-1]
+
+
+def release(held: list[DataFrame]) -> None:
+    """Drop the blocks of eager ``localCheckpoint``s. The cache manager
+    does not know them, so ``DataFrame.unpersist`` cannot; left alone
+    they stay on the executors until a driver GC lets the ContextCleaner
+    run (every 30 min by default), one set per call. Each frame's plan
+    is the ``LogicalRDD`` over the checkpointed RDD, and its blocks are
+    dropped the way the ContextCleaner drops them (``RDD.unpersist``
+    also warns per checkpoint that its lineage is lost). A released
+    frame, and any plan over it, cannot be read again."""
+    for df in held:
+        rdd = df._jdf.queryExecution().analyzed().rdd()
+        rdd.context().unpersistRDD(rdd.id(), True)
 
 
 def ensure_min_partitions(df, min_partitions: int | None = None):

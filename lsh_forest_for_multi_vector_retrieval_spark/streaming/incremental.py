@@ -49,9 +49,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from lsh_forest_for_multi_vector_retrieval_spark.config import DedupConfig
+from lsh_forest_for_multi_vector_retrieval_spark.fsutil import (
+    fs_exists as _fs_exists,
+    fs_read_text as _fs_read_text,
+    fs_write_text as _fs_write_text,
+)
 from lsh_forest_for_multi_vector_retrieval_spark.operators.dedup import (
     flagship_stages,
 )
+from lsh_forest_for_multi_vector_retrieval_spark.session import checkpoint, release
 
 #: declared state-table schemas (band_hash/simhash are xxhash64 →
 #: bigint; band_id is a posexplode position → int). ``batch_id`` is the
@@ -61,17 +67,6 @@ SIGS_SCHEMA = (
     "doc_id bigint, shingles array<bigint>, simhash bigint, batch_id int"
 )
 PAIRS_SCHEMA = "doc_a bigint, doc_b bigint, jaccard double, batch_id int"
-
-
-from lsh_forest_for_multi_vector_retrieval_spark.fsutil import (  # noqa: E402
-    fs_exists as _fs_exists,
-)
-from lsh_forest_for_multi_vector_retrieval_spark.fsutil import (  # noqa: E402
-    fs_read_text as _fs_read_text,
-)
-from lsh_forest_for_multi_vector_retrieval_spark.fsutil import (  # noqa: E402
-    fs_write_text as _fs_write_text,
-)
 
 
 def history_collisions(
@@ -147,20 +142,6 @@ def history_collisions(
         )
         .where(F.col("doc_a") != F.col("doc_b"))
     )
-
-
-def _release(checkpoints: list[DataFrame]) -> None:
-    """Drop the blocks of eager ``localCheckpoint``s. The cache manager
-    does not know them, so ``DataFrame.unpersist`` cannot; left alone
-    they stay on the executors until a driver GC lets the ContextCleaner
-    run (every 30 min by default), one set per micro-batch. Each frame's
-    plan is the ``LogicalRDD`` over the checkpointed RDD, and its blocks
-    are dropped the way the ContextCleaner drops them (``RDD.unpersist``
-    does the same but logs a warning per checkpoint that its lineage is
-    lost)."""
-    for df in checkpoints:
-        rdd = df._jdf.queryExecution().analyzed().rdd()
-        rdd.context().unpersistRDD(rdd.id(), True)
 
 
 class IncrementalDedup:
@@ -302,7 +283,7 @@ class IncrementalDedup:
         try:
             self._insert(batch, batch_id, held)
         finally:
-            _release(held)
+            release(held)
 
     def _insert(
         self, batch: DataFrame, batch_id: int, held: list[DataFrame]
@@ -324,11 +305,6 @@ class IncrementalDedup:
         docs = batch.select("doc_id", "text")
         stage = {s.name: s.fn for s in flagship_stages(lambda _: docs, cfg)}
 
-        def checkpoint(df: DataFrame) -> DataFrame:
-            # eager, and on ``held`` for process_batch to release
-            held.append(df.localCheckpoint(eager=True))
-            return held[-1]
-
         # the batch is signed once, into an eager checkpoint that every
         # later read (bands, the store, verify) consumes. Its Observation
         # counts the non-empty docs, and ``band_table`` emits exactly
@@ -336,11 +312,8 @@ class IncrementalDedup:
         # rejected in __init__), so the broadcast gate needs no job of
         # its own
         signed = Observation()
-        sigs = checkpoint(
-            stage["signatures"](spark, {}).observe(
-                signed, F.count_if(F.size("shingles") > 0).alias("n")
-            )
-        )
+        n_signed = F.count_if(F.size("shingles") > 0).alias("n")
+        sigs = checkpoint(stage["signatures"](spark, {}).observe(signed, n_signed), held)
         # the persisted store carries only what verification reads; the
         # sig array exists transiently for the bands stage
         store_sigs = sigs.select("doc_id", "shingles", "simhash")
@@ -389,9 +362,8 @@ class IncrementalDedup:
         # union's also folds a history pair found in several bands (and
         # a pair of a doc id stored by two batches)
         intra = stage["candidates"](spark, {"bands": new_bands})
-        # an eager checkpoint, not a cache: verify reads the pairs more
-        # than once above its broadcast gate, and everything is
-        # materialized BEFORE the first
+        # an eager checkpoint: verify reads the pairs more than once above
+        # its broadcast gate, and everything is materialized BEFORE the first
         # state write — the verified plan reads the history tables, and
         # executing it after this batch's own sigs/bands writes makes the
         # file source re-list a directory with in-flight files (observed:
@@ -401,21 +373,11 @@ class IncrementalDedup:
         # so the writes below consume only materialized data. Its
         # Observation counts the pairs for verify's broadcast gate.
         found = Observation()
-        cands = checkpoint(
-            (
-                intra if hist_hits is None else intra.unionByName(hist_hits).distinct()
-            ).observe(found, F.count(F.lit(1)).alias("n"))
-        )
-        verified = checkpoint(
-            stage["verified"](
-                spark,
-                {
-                    "candidates": cands,
-                    "signatures": all_sigs,
-                    "candidates_count": found.get["n"],
-                },
-            )
-        )
+        pairs = intra if hist_hits is None else intra.unionByName(hist_hits).distinct()
+        cands = checkpoint(pairs.observe(found, F.count(F.lit(1)).alias("n")), held)
+        n_found = found.get["n"]
+        deps = {"candidates": cands, "signatures": all_sigs, "candidates_count": n_found}
+        verified = checkpoint(stage["verified"](spark, deps), held)
 
         def _write(df: DataFrame, path: str) -> None:
             # straight into the batch's partition directory, replacing only

@@ -162,22 +162,39 @@ def test_unpersisted_path_matches_and_checkpoints_pairs(result, corpus):
     assert "ExistingRDD" in plan, plan
 
 
-def test_minhash_dedup_caches_exactly_reused_stages(corpus):
-    """``minhash_dedup`` persists exactly ``REUSED_STAGES`` — the stage
-    outputs read twice or more — and ``unpersist`` releases all of
-    them."""
-    from pyspark import StorageLevel
-
+def test_minhash_dedup_checkpoints_exactly_reused_stages(spark, corpus):
+    """``minhash_dedup`` materialises exactly ``REUSED_STAGES`` — the
+    stage outputs read twice or more — as eager checkpoints, not caches:
+    the cache manager stays empty, block storage holds one more RDD per
+    reused stage (checkpoints are not in the cache manager; only the
+    block manager's RDD list shows them), and ``unpersist`` drops them
+    all."""
     from lsh_forest_for_multi_vector_retrieval_spark.operators.dedup import (
         REUSED_STAGES,
     )
 
-    res = minhash_dedup(corpus, CFG)
-    names = ["signatures", "bands", "candidates", "verified", "clusters"]
-    cached = {n for n in names if getattr(res, n).storageLevel != StorageLevel.NONE}
-    assert cached == set(REUSED_STAGES) == {"signatures", "candidates", "verified"}
-    res.unpersist()
-    assert all(getattr(res, n).storageLevel == StorageLevel.NONE for n in names)
+    spark.catalog.clearCache()  # earlier tests' caches are not this call's
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    sc = spark.sparkContext._jsc.sc()
+
+    def stored() -> set[int]:
+        return {info.id() for info in sc.getRDDStorageInfo()}
+
+    before = stored()
+    try:
+        res = minhash_dedup(corpus, CFG)
+        assert cache.isEmpty()
+        held = {
+            getattr(res, n)._jdf.queryExecution().analyzed().rdd().id()
+            for n in REUSED_STAGES
+        }
+        assert stored() - before == held
+        assert len(held) == len(REUSED_STAGES) == 3
+        assert set(REUSED_STAGES) == {"signatures", "candidates", "verified"}
+        res.unpersist()
+        assert stored() <= before
+    finally:
+        corpus.persist()  # the module's other tests read it cached
 
 
 def test_idempotent_rerun(corpus):

@@ -1,8 +1,8 @@
 """Module boundaries of the package: no module imports another module's
 underscore name, except the Arrow list decoder and the kernel-choice
-check that ``functions/vectors.py`` shares, and no ``operators/`` module
+check that ``functions/vectors.py`` shares, no ``operators/`` module
 imports a sibling inside a function body, where an import cycle would
-hide instead of failing at load."""
+hide instead of failing at load, and the dedup flagship caches nothing."""
 
 from __future__ import annotations
 
@@ -11,6 +11,14 @@ import ast
 from test_reachability import PKG_ROOT, _body, _names
 
 PKG = PKG_ROOT.name
+FLAGSHIP = [
+    "operators/dedup.py",
+    "operators/bands.py",
+    "operators/pairs.py",
+    "operators/verify.py",
+    "operators/components.py",
+    "streaming/incremental.py",
+]
 SHARED = {"functions.vectors": {"_list_parts", "_vectors", "_spans", "_require_kernel"}}
 
 
@@ -81,5 +89,21 @@ def test_no_operator_imports_a_sibling_inside_a_function():
         for path in sorted((PKG_ROOT / "operators").glob("*.py"))
         for mod, names, in_fn in _imports(path)
         if in_fn and mod.split(".")[0] == "operators"
+    ]
+    assert not bad, bad
+
+
+def test_flagship_materialises_only_through_checkpoints():
+    """The flagship's modules materialise a frame only with
+    ``session.checkpoint`` and free it with ``session.release``: no call
+    of ``persist``, ``cache`` or ``unpersist`` (defining a method of that
+    name is fine)."""
+    bad = [
+        (rel, node.lineno, node.func.attr)
+        for rel in FLAGSHIP
+        for node in ast.walk(ast.Module(_body(PKG_ROOT / rel), []))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in {"persist", "cache", "unpersist"}
     ]
     assert not bad, bad

@@ -38,20 +38,28 @@ def main() -> int:
     import __spark_entry__ as em
 
     from lsh_forest_for_multi_vector_retrieval_spark.operators.dedup import (
+        flagship_stages,
         minhash_dedup,
     )
 
     sections: list[tuple[str, str, list[str]]] = []
 
-    # 1. flagship verified pairs: the band->pair->verify chain, in its
-    # PRODUCTION shape (signatures persisted — the verify join reads the
-    # cached table, so the signature subtree appears once, not three times)
+    # 1. flagship verified pairs: the band->pair->verify chain of
+    # flagship_stages over the signatures checkpoint minhash_dedup makes
+    # (the band stage and the verify join read it, so the signature
+    # subtree is one scan), captured after an action. minhash_dedup's own
+    # verified is a checkpoint scan, so the chain is composed here without
+    # its candidates checkpoint, with that checkpoint's count as the gate's
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     res = minhash_dedup(docs, DedupConfig())
-    res.signatures.count()  # materialize the cache so the plan shows it
+    stage = {s.name: s.fn for s in flagship_stages(lambda _: docs, DedupConfig())}
+    deps = {"signatures": res.signatures, "candidates_count": res.candidates.count()}
+    for name in ("bands", "candidates", "verified"):
+        deps[name] = stage[name](spark, deps)
+    deps["verified"].collect()
     sections.append((
-        "flagship verified pairs (minhash_dedup.verified, signatures cached)",
-        plan_of(res.verified),
+        "flagship verified pairs (flagship_stages over minhash_dedup's signatures checkpoint)",
+        plan_of(deps["verified"]),
         ["no CartesianProduct", "codegen spans", "single shuffle per groupBy/join"],
     ))
 
@@ -258,6 +266,13 @@ def main() -> int:
     def check(name: str, ok: bool, detail: str = "") -> None:
         checks.append(f"- {'PASS' if ok else 'FAIL'}: {name}{' — ' + detail if detail else ''}")
 
+    import re as _re
+
+    def details(plan: str, node_id: str) -> str:
+        # the per-node block of the formatted explain's details section
+        m = _re.search(rf"\n\({node_id}\) [^\n]*\n(.*?)(?:\n\n|\Z)", plan, _re.S)
+        return m.group(1) if m else ""
+
     flag = sections[0][1]
     check("flagship has no CartesianProduct", "CartesianProduct" not in flag)
     n_cg = flag.count("codegen id :")
@@ -267,20 +282,19 @@ def main() -> int:
         f"{n_cg} '[codegen id : N]' markers",
     )
     check(
-        "flagship reads signatures from cache",
-        "InMemoryTableScan" in flag or "InMemoryRelation" in flag,
+        "flagship reads signatures from its checkpoint scan",
+        any(
+            "shingles" in details(flag, i)
+            for i in _re.findall(r"Scan ExistingRDD \((\d+)\)", flag)
+        ),
     )
-    # formatted explain re-prints cached/AQE subplans under every
-    # reference AND prints each AQE subplan twice (== Final Plan == and
-    # == Initial Plan ==, distinct node ids for the same physical
-    # shuffle — since round-5's canChangeCachedPlanOutputPartitioning,
-    # cached subtrees wrap in AdaptiveSparkPlan and the Initial copies
-    # would double-count). Count the shuffles that actually RAN: unique
-    # materialized ShuffleQueryStage ids (the plan is captured after an
-    # action, so every executed exchange has one). Broadcast exchanges
-    # counted separately (cheap by construction).
-    import re as _re
-
+    # formatted explain prints each AQE subplan twice (== Final Plan ==
+    # and == Initial Plan ==, distinct node ids for the same physical
+    # shuffle), and the Initial copies would double-count. Count the
+    # shuffles that actually RAN: unique materialized ShuffleQueryStage
+    # ids (the plan is captured after an action, so every executed
+    # exchange has one). Broadcast exchanges counted separately (cheap by
+    # construction).
     shuffle_ids = set(_re.findall(r"ShuffleQueryStage \((\d+)\)", flag))
     bcast_ids = set(_re.findall(r"BroadcastExchange \((\d+)\)", flag))
     check(
@@ -291,8 +305,8 @@ def main() -> int:
         # provably shuffles (pair distinct, CC), so demand >= 1.
         1 <= len(shuffle_ids) <= 8,
         f"{len(shuffle_ids)} materialized ShuffleQueryStages + "
-        f"{len(bcast_ids)} broadcast-exchange node ids (signature "
-        "repartition, salted bucket stage-1 groupBy + tiny pre-capped "
+        f"{len(bcast_ids)} broadcast-exchange node ids (salted bucket "
+        "stage-1 groupBy + tiny pre-capped "
         "stage-2 merge, pair distinct, and verify's gather of each "
         "pair's two docs on (doc_a, doc_b): verify broadcasts the pairs' "
         "endpoint rows and probes the signature table in place, so no "
@@ -350,11 +364,6 @@ def main() -> int:
         "(round-4 VERDICT #5: the old shuffle join re-partitioned the whole "
         "history every micro-batch)",
     )
-
-    def details(plan: str, node_id: str) -> str:
-        # the per-node block of the formatted explain's details section
-        m = _re.search(rf"\n\({node_id}\) [^\n]*\n(.*?)(?:\n\n|\Z)", plan, _re.S)
-        return m.group(1) if m else ""
 
     def exchange_ids(plan: str) -> list[str]:
         # shuffle exchanges (not Broadcast/ReusedExchange) of a plan's tree

@@ -19,9 +19,10 @@ A from-scratch re-expression of the query semantics of
 Everything is DataFrame/Catalyst-first; Python runs only in Arrow-batched
 kernels, never one UDF call per row:
 
-* signatures: the MinHash and SimHash pandas UDFs (``functions.minhash``,
-  ``functions.simhash``) behind ``with_signatures``, hence behind dedup,
-  incremental dedup and forest vote
+* signatures: the MinHash pandas UDF (``functions.minhash``) behind
+  ``with_signatures``, hence behind dedup, incremental dedup and forest
+  vote; its SimHash twin (``functions.simhash``) runs only where a caller
+  reads the ``simhash`` column, as ``simhash_dedup_pairs`` does
 * the vector kernels, ``arrow_udf``s over the one Arrow list decoder of
   ``functions.vectors``: the hyperplane SimHash of ``lsh_topk``, and with
   ``scoring="pandas"`` / ``assignment="pandas"`` the ANN family's cosine

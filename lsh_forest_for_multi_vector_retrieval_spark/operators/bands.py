@@ -33,7 +33,10 @@ def with_signatures(
     text_col: str = "text",
 ) -> DataFrame:
     """text -> shingles -> MinHash sig (+ SimHash). One narrow stage
-    (plus an up-repartition when the source arrives under-partitioned)."""
+    (plus an up-repartition when the source arrives under-partitioned).
+    Each signature is its own pandas UDF, so a caller that projects
+    ``simhash`` away (the flagship's ``signatures`` stage) runs the
+    MinHash UDF alone."""
     from lsh_forest_for_multi_vector_retrieval_spark.session import (
         ensure_min_partitions,
     )
@@ -93,15 +96,14 @@ def adaptive_band_table(
 
     Extra rows come from the RESERVED permutation region — positions
     ``num_bands*rows_per_band .. signature_len-1`` that no base band
-    consumes. Round-2 VERDICT nit: the old implementation wrapped into the
-    *neighboring band's base rows*, correlating the deepened key with that
-    band's key and weakening tree independence; reserved rows are fresh
-    permutations. Since round 4 the DEFAULT adaptive path reserves
-    ``cfg.adaptive_reserved_rows`` (64 = num_bands * max_extra, so every
-    band's extras are disjoint) fresh rows via
-    ``cfg.signature_len``, so the wrap fallback only triggers when a user
-    explicitly zeroes the reservation (kept, documented as a
-    weaker-independence trade).
+    consumes, ``adaptive_max_extra_rows`` of them per band (see
+    ``DedupConfig.signature_len``): band b's extra row j is reserved
+    position ``b*adaptive_max_extra_rows + j``, so bands deepen with
+    disjoint fresh permutations and never with a neighboring band's rows
+    (which would correlate the trees). ``sigs`` must be signed under
+    ``cfg`` with ``use_adaptive_bands`` on, which is what reserves those
+    rows; any other ``cfg`` is refused, since a deepened key would read
+    past the end of the signature.
 
     Each round's surviving band table is eagerly localCheckpoint-ed:
     round r's lineage otherwise chains r groupBys + joins back to
@@ -110,9 +112,13 @@ def adaptive_band_table(
     shuffle recomputation, including re-running the MinHash UDF itself
     when ``sigs`` arrives unmaterialized (round-5 review).
     """
+    if not cfg.use_adaptive_bands:
+        raise ValueError(
+            "adaptive_band_table needs cfg.use_adaptive_bands=True: only then "
+            "does signature_len reserve the deepening rows"
+        )
     base_rows = cfg.rows_per_band
     base_end = cfg.num_bands * base_rows
-    reserved = cfg.signature_len - base_end
 
     def bands_at_depth(extra: int) -> DataFrame:
         rows = base_rows + extra
@@ -121,18 +127,13 @@ def adaptive_band_table(
             # depth-0 adaptive buckets can never diverge from the
             # fixed-depth band_table's (round-5 review)
             chosen = band_hashes_col(F.col("sig"), cfg.num_bands, base_rows)
-        elif reserved > 0:
-            # band b's extra row j = reserved position
-            # (b*max_extra + j) mod reserved — bands draw disjoint extras
-            # whenever reserved >= num_bands*max_extra
+        else:
             def deep_key(b):
                 extras = F.array(
                     *[
                         F.get(
                             F.col("sig"),
-                            (b * cfg.adaptive_max_extra_rows + F.lit(j))
-                            % reserved
-                            + F.lit(base_end),
+                            b * cfg.adaptive_max_extra_rows + F.lit(j + base_end),
                         )
                         for j in range(extra)
                     ]
@@ -146,36 +147,6 @@ def adaptive_band_table(
 
             chosen = F.transform(
                 F.sequence(F.lit(0), F.lit(cfg.num_bands - 1)), deep_key
-            )
-        else:
-            # no reserved rows: wrap into the neighboring band (documented
-            # independence trade; raise num_perm to avoid). The wrap is a
-            # TRUE modular walk per extra row — F.slice clamps at the
-            # array end instead of wrapping, so the old slice form gave
-            # end-of-signature bands FEWER extra rows and their hot
-            # buckets could never split further (round-5 review)
-            def wrap_key(b):
-                extras = F.array(
-                    *[
-                        F.get(
-                            F.col("sig"),
-                            F.pmod(
-                                b * base_rows + base_rows + F.lit(j),
-                                F.lit(cfg.num_perm),
-                            ),
-                        )
-                        for j in range(extra)
-                    ]
-                )
-                return F.xxhash64(
-                    F.concat(
-                        F.slice(F.col("sig"), b * base_rows + F.lit(1), base_rows),
-                        extras,
-                    )
-                )
-
-            chosen = F.transform(
-                F.sequence(F.lit(0), F.lit(cfg.num_bands - 1)), wrap_key
             )
         return sigs.where(F.size("shingles") > 0).select(
             F.col(id_col).alias("doc_id"),

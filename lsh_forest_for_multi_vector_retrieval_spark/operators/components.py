@@ -206,7 +206,13 @@ def connected_components(
     # first and pull only under the bound (one extra action).
     pdf = None
     if driver_max_edges > 0:
-        bounded = edges.select("doc_a", "doc_b").limit(driver_max_edges + 1)
+        # a NULL endpoint joins nothing (the star path drops it too), and
+        # left in, it would make pandas pull the ids as float64
+        bounded = (
+            edges.select("doc_a", "doc_b")
+            .where(F.col("doc_a").isNotNull() & F.col("doc_b").isNotNull())
+            .limit(driver_max_edges + 1)
+        )
         integral = isinstance(edges.schema["doc_a"].dataType, T.IntegralType)
         if integral or bounded.count() <= driver_max_edges:
             pdf = bounded.toPandas()

@@ -65,10 +65,12 @@ class DedupResult:
     unaffected (the star keeps every bucket connected) and every skipped
     comparison is counted in ``pairs.bucket_drop_stats``; set
     ``bucket_pivots >= max_bucket_docs`` if a complete pair list matters
-    more than the O(k*n) hot-bucket bound. No field can be read after
-    ``unpersist``."""
+    more than the O(k*n) hot-bucket bound. ``signatures`` carries no
+    SimHash: no flagship stage reads one, so the flagship signs each doc
+    with the MinHash UDF alone (``simhash_dedup_pairs`` is the SimHash
+    operator). No field can be read after ``unpersist``."""
 
-    signatures: DataFrame  # doc_id, shingles, sig, simhash
+    signatures: DataFrame  # doc_id, shingles, sig
     bands: DataFrame  # band_id, band_hash, doc_id
     candidates: DataFrame  # doc_a, doc_b
     verified: DataFrame  # doc_a, doc_b, jaccard  (see pair completeness)
@@ -104,6 +106,10 @@ def flagship_stages(
     """The flagship, once: ``signatures -> bands -> candidates -> verified
     -> clusters`` as ``plans.pipeline.Stage``s. ``docs(spark)`` yields
     ``(doc_id, text)``; every other stage reads only earlier outputs.
+    ``signatures`` keeps ``(doc_id, shingles, sig)``, what the later stages
+    read: the projection drops ``with_signatures``' SimHash column, so
+    Catalyst prunes the SimHash UDF and the signing stage runs one Python
+    UDF.
 
     ``verified`` passes ``materialize_pairs=False``: each runner hands it
     candidates that are cheap to traverse twice (an eager checkpoint in
@@ -114,9 +120,7 @@ def flagship_stages(
     and verify's broadcast gate then launches no count job."""
 
     def signatures(spark, deps):
-        return with_signatures(docs(spark), cfg).select(
-            "doc_id", "shingles", "sig", "simhash"
-        )
+        return with_signatures(docs(spark), cfg).select("doc_id", "shingles", "sig")
 
     def bands(spark, deps):
         return flagship_bands(deps["signatures"], cfg)

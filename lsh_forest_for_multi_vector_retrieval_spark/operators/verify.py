@@ -8,10 +8,9 @@ Jaccard over distinct shingle sets.
 ``verify_pairs`` computes it JVM-side from ``array_intersect`` sizes
 inside whole-stage codegen — no Python crossing at all. Each pair's two
 shingle sets meet through one broadcast probe of the signature table and
-one exchange on the pair (``_join_shingles``).
-
-An optional SimHash Hamming pre-filter (``bit_count(xor) <= h``) runs as a
-pure Column expression on the gathered pairs.
+one exchange on the pair (``_join_shingles``). Only the shingle sets
+travel: other columns of the signature table (``sig``, or the SimHash of
+``with_signatures``) are projected away before the probe.
 """
 
 from __future__ import annotations
@@ -32,14 +31,15 @@ def _endpoints(pairs: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def _gather(hits: DataFrame, cols: list[str], id_col: str) -> DataFrame:
-    """``(doc_a, doc_b, <c>_a, <c>_b for c in cols)`` from the endpoint
-    rows matched to docs: one exchange on the pair, then one row per
+def _gather(hits: DataFrame, id_col: str) -> DataFrame:
+    """``(doc_a, doc_b, shingles_a, shingles_b)`` from the endpoint rows
+    matched to docs: one exchange on the pair, then one row per
     a-side x b-side doc match. Each side's set counts an identical doc
     row once, so a doc id stored twice with the same content does not
     multiply the pair; docs that share an id but differ still give one
-    row per combination."""
-    row = F.struct(*cols)
+    row per combination. The struct keeps a NULL shingle set in the set
+    (``collect_set`` skips bare NULLs)."""
+    row = F.struct("shingles")
 
     def side(end: str) -> Column:
         # collect_set skips the NULL of the other endpoint's rows
@@ -53,8 +53,8 @@ def _gather(hits: DataFrame, cols: list[str], id_col: str) -> DataFrame:
         .select(
             "doc_a",
             "doc_b",
-            *[F.col(f"_a.{c}").alias(f"{c}_a") for c in cols],
-            *[F.col(f"_b.{c}").alias(f"{c}_b") for c in cols],
+            F.col("_a.shingles").alias("shingles_a"),
+            F.col("_b.shingles").alias("shingles_b"),
         )
     )
 
@@ -67,8 +67,8 @@ def _join_shingles(
     materialize_pairs: bool = True,
     n_pairs: int | None = None,
 ) -> DataFrame:
-    """Attach each side's shingle set (and simhash when present) with one
-    probe of ``docs`` and one exchange.
+    """Attach each side's shingle set with one probe of ``docs`` and one
+    exchange.
 
     Each pair is exploded into one row per distinct endpoint. Those rows
     are BROADCAST and the signature table is probed in place: the inner
@@ -108,8 +108,7 @@ def _join_shingles(
         n_pairs = counted.get["n"]
     elif n_pairs is None:
         n_pairs = pairs.count()
-    cols = ["shingles"] + (["simhash"] if "simhash" in docs.columns else [])
-    docs = docs.select(id_col, *cols)
+    docs = docs.select(id_col, "shingles")
     ends = _endpoints(pairs, id_col)
     if 6 * n_pairs <= max_broadcast_ids:
         hits = docs.join(F.broadcast(ends), id_col)
@@ -118,13 +117,7 @@ def _join_shingles(
         if ids.count() <= max_broadcast_ids:
             ids = F.broadcast(ids)
         hits = ends.join(docs.join(ids, id_col, "left_semi"), id_col)
-    return _gather(hits, cols, id_col)
-
-
-def simhash_prefilter(joined: DataFrame, max_hamming: int) -> DataFrame:
-    return joined.where(
-        F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))) <= max_hamming
-    )
+    return _gather(hits, id_col)
 
 
 def verify_pairs(
@@ -138,9 +131,11 @@ def verify_pairs(
 ) -> DataFrame:
     """``(doc_a, doc_b, jaccard)`` for pairs with jaccard >= threshold.
 
-    ``pairs`` is a set: a pair listed twice is verified once. A doc id
-    with several identical rows in ``docs_with_shingles`` counts once;
-    rows that differ give one output row per combination.
+    ``docs_with_shingles`` needs ``(id_col, shingles)``; verify reads no
+    other column of it. ``pairs`` is a set: a pair listed twice is
+    verified once. A doc id with several identical rows in
+    ``docs_with_shingles`` counts once; rows that differ give one output
+    row per combination.
 
     ``materialize_pairs=False`` skips the eager localCheckpoint of
     ``pairs`` — pass it when ``pairs`` is already a bare parquet scan or
@@ -156,11 +151,6 @@ def verify_pairs(
         materialize_pairs=materialize_pairs,
         n_pairs=n_pairs,
     )
-    if (
-        cfg.simhash_prefilter_max_hamming is not None
-        and "simhash_a" in joined.columns
-    ):
-        joined = simhash_prefilter(joined, cfg.simhash_prefilter_max_hamming)
     inter = F.size(F.array_intersect("shingles_a", "shingles_b"))
     union = F.size("shingles_a") + F.size("shingles_b") - inter
     out = joined.select(

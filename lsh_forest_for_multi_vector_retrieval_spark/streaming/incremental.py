@@ -59,13 +59,14 @@ from lsh_forest_for_multi_vector_retrieval_spark.operators.dedup import (
 )
 from lsh_forest_for_multi_vector_retrieval_spark.session import checkpoint, release
 
-#: declared state-table schemas (band_hash/simhash are xxhash64 →
-#: bigint; band_id is a posexplode position → int). ``batch_id`` is the
-#: partition column. Declared so empty tables read back as empty frames.
+#: declared state-table schemas (band_hash is xxhash64 → bigint; band_id
+#: is a posexplode position → int). ``batch_id`` is the partition column.
+#: Declared so empty tables read back as empty frames, and read by name,
+#: so files with more columns (``sigs/`` partitions that also hold a
+#: ``simhash``, written before the flagship stopped signing one) still
+#: read.
 BANDS_SCHEMA = "band_id int, band_hash bigint, doc_id bigint, batch_id int"
-SIGS_SCHEMA = (
-    "doc_id bigint, shingles array<bigint>, simhash bigint, batch_id int"
-)
+SIGS_SCHEMA = "doc_id bigint, shingles array<bigint>, batch_id int"
 PAIRS_SCHEMA = "doc_a bigint, doc_b bigint, jaccard double, batch_id int"
 
 
@@ -148,8 +149,8 @@ class IncrementalDedup:
     """File-stream incremental near-dup detection.
 
     ``state_dir`` holds: ``bands/`` (band rows of all docs seen),
-    ``sigs/`` (shingle sets + simhash for exact verification — the
-    MinHash sig array itself is NOT persisted: no reader consumes it and
+    ``sigs/`` (shingle sets for exact verification — the MinHash sig
+    array itself is NOT persisted: no reader consumes it and
     at 10M docs it would be ~10 GB of dead state), ``pairs/`` (verified
     dup pairs, appended per batch), ``_chk/`` (streaming checkpoint).
     """
@@ -165,7 +166,9 @@ class IncrementalDedup:
     #: store signed under one value of any of these is UNREADABLE (not
     #: wrong — silently collision-free) under another, because new
     #: band_hash values would never equal history's. Checked against a
-    #: ``_params.json`` fingerprint in the state dir.
+    #: ``_params.json`` fingerprint in the state dir. The band strategy
+    #: is not among them: ``__init__`` rejects adaptive bands, so every
+    #: store is fixed-depth.
     SIGNATURE_PARAMS = (
         "shingle_size",
         "lowercase",
@@ -174,8 +177,6 @@ class IncrementalDedup:
         "minhash_seed",
         "num_bands",
         "rows_per_band",
-        "use_adaptive_bands",
-        "adaptive_reserved_rows",
     )
 
     def __init__(
@@ -183,7 +184,6 @@ class IncrementalDedup:
         state_dir: str,
         cfg: DedupConfig = DedupConfig(),
         broadcast_max_band_rows: int | None = None,
-        trust_legacy_state: bool = False,
         spark: SparkSession | None = None,
     ):
         if cfg.use_adaptive_bands:
@@ -219,14 +219,16 @@ class IncrementalDedup:
                 "state_dir on the session's filesystem — start one first "
                 "or pass spark= explicitly"
             )
-        self._check_state_params(trust_legacy_state)
+        self._check_state_params()
 
-    def _check_state_params(self, trust_legacy_state: bool) -> None:
+    def _check_state_params(self) -> None:
         """Refuse to extend a signature store built under a different
         hash family. A mismatch is not an error Spark can see — new
         band hashes simply never collide with history, so duplicates
         against everything already ingested are SILENTLY missed (pure
-        recall loss). Fail at construction instead."""
+        recall loss). Fail at construction instead, also for a store
+        that holds band history but no fingerprint. A fingerprint's keys
+        that ``SIGNATURE_PARAMS`` no longer lists are ignored."""
         spark = self._spark
         want = {k: getattr(self.cfg, k) for k in self.SIGNATURE_PARAMS}
         if _fs_exists(spark, self._params_path):
@@ -246,13 +248,11 @@ class IncrementalDedup:
                     "config, or use a fresh state_dir."
                 )
             return
-        if _fs_exists(spark, self.bands_path) and not trust_legacy_state:
+        if _fs_exists(spark, self.bands_path):
             raise ValueError(
                 f"state_dir {self.state_dir} holds band history but no "
-                "_params.json fingerprint (written by an older version). "
-                "If it was signed under THIS config, pass "
-                "trust_legacy_state=True to stamp and continue; otherwise "
-                "re-sign or use a fresh state_dir."
+                "_params.json fingerprint, so its hash family is unknown. "
+                "Re-sign the store, or use a fresh state_dir."
             )
         _fs_write_text(
             spark, self._params_path, json.dumps(want, indent=1, sort_keys=True)
@@ -316,7 +316,7 @@ class IncrementalDedup:
         sigs = checkpoint(stage["signatures"](spark, {}).observe(signed, n_signed), held)
         # the persisted store carries only what verification reads; the
         # sig array exists transiently for the bands stage
-        store_sigs = sigs.select("doc_id", "shingles", "simhash")
+        store_sigs = sigs.select("doc_id", "shingles")
         # a narrow projection of the checkpoint: every reader recomputes
         # the band hashes in the JVM rather than caching the rows
         new_bands = stage["bands"](spark, {"signatures": sigs})

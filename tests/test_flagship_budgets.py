@@ -18,7 +18,10 @@ from lsh_forest_for_multi_vector_retrieval_spark.operators.bands import (
 from lsh_forest_for_multi_vector_retrieval_spark.operators.components import (
     connected_components,
 )
-from lsh_forest_for_multi_vector_retrieval_spark.operators.dedup import minhash_dedup
+from lsh_forest_for_multi_vector_retrieval_spark.operators.dedup import (
+    flagship_stages,
+    minhash_dedup,
+)
 from lsh_forest_for_multi_vector_retrieval_spark.operators.pairs import candidate_pairs
 from lsh_forest_for_multi_vector_retrieval_spark.operators.verify import verify_pairs
 
@@ -47,6 +50,22 @@ def test_minhash_dedup_job_budget(pages, jobs):
         res.unpersist()
 
     assert _warm(jobs, run) == 13
+
+
+def test_flagship_signs_with_the_minhash_udf_alone(spark, pages):
+    """The flagship's ``signatures`` stage keeps ``(doc_id, shingles,
+    sig)``, so Catalyst prunes the SimHash UDF of ``with_signatures``: the
+    executed plan runs one ``ArrowEvalPython``, and it evaluates
+    ``_minhash`` only."""
+    stage = flagship_stages(lambda _: pages, CFG)[0]
+    assert stage.name == "signatures"
+    sigs = stage.fn(spark, {})
+    sigs.collect()
+    plan = sigs._jdf.queryExecution().executedPlan().toString()
+    evals = [line for line in plan.splitlines() if "ArrowEvalPython" in line]
+    assert len(evals) == 1, plan
+    assert "_minhash" in evals[0] and "_simhash" not in evals[0], plan
+    assert sigs.columns == ["doc_id", "shingles", "sig"]
 
 
 def test_layer_job_budgets(pages, jobs):

@@ -95,30 +95,6 @@ def test_verify_prune_broadcast_gate(sigs):
     assert v_nm.exceptAll(v_bc).count() == 0
 
 
-def test_verify_parity_holds_with_simhash_prefilter(sigs):
-    """The SimHash prefilter only drops pairs: the prefiltered verified
-    set is a subset of the unfiltered one, with identical jaccards."""
-    from dataclasses import replace
-
-    cfg = replace(CFG, simhash_prefilter_max_hamming=3)
-    pairs = candidate_pairs(band_table(sigs, CFG), CFG)
-    v1 = verify_pairs(pairs, sigs, cfg).select("doc_a", "doc_b", "jaccard")
-    v0 = verify_pairs(
-        pairs, sigs, replace(cfg, simhash_prefilter_max_hamming=None)
-    ).select("doc_a", "doc_b", "jaccard")
-    assert v1.exceptAll(v0).count() == 0
-    # the prefilter must actually bite on this fixture (else the test
-    # proves nothing): some candidate pair exceeds hamming 3
-    loose = verify_pairs(
-        pairs, sigs, replace(cfg, simhash_prefilter_max_hamming=None),
-        keep_below_threshold=True,
-    ).count()
-    tight = verify_pairs(
-        pairs, sigs, cfg, keep_below_threshold=True
-    ).count()
-    assert tight < loose
-
-
 def test_verify_pandas_null_shingles_fold_like_jvm(spark):
     """A NULL shingle array folds to jaccard 0.0, and the threshold then
     drops those rows without failing the stage."""
@@ -227,9 +203,10 @@ def test_verify_above_gate_prunes_before_any_exchange(sigs):
 def degenerate(spark):
     """Docs and pairs on every edge verify has: a doc id stored twice
     identically and twice differently, NULL and empty shingles, a NULL
-    simhash and id, self, reversed and NULL-id pairs, and an endpoint
-    missing from docs. The oracle is the two-join plan over the distinct
-    doc rows: ``(doc_a, doc_b, jaccard, hamming <= 3)``."""
+    id, self, reversed and NULL-id pairs, and an endpoint missing from
+    docs. The docs carry a ``simhash`` column that verify must not read.
+    The oracle is the two-join plan over the distinct doc rows:
+    ``(doc_a, doc_b, jaccard)``."""
     docs = spark.createDataFrame(
         [
             (1, [1, 2, 3, 4], 10), (1, [1, 2, 3, 4], 10), (2, [1, 2, 3, 5], 11),
@@ -254,7 +231,6 @@ def degenerate(spark):
         "doc_a",
         "doc_b",
         F.when(union > 0, inter / union).otherwise(0.0).alias("jaccard"),
-        F.coalesce(F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))) <= 3, F.lit(False)),
     )
     return docs, pairs, [tuple(r) for r in oracle.collect()]
 
@@ -266,41 +242,44 @@ def _verified(df) -> list[tuple]:
 @pytest.mark.parametrize("max_ids", [10_000_000, 20, 0], ids=["broadcast", "rescue", "shuffle"])
 def test_verify_degenerate_grid_matches_two_join_oracle(degenerate, max_ids):
     """Every tier gives the two-join plan's rows over the distinct doc
-    rows, with and without the threshold and the SimHash prefilter."""
+    rows, with and without the threshold."""
     from dataclasses import replace
 
     docs, pairs, oracle = degenerate
+    cfg = replace(CFG, verify_prune_max_ids=max_ids)
     for keep in (False, True):
-        for hamming in (None, 3):
-            cfg = replace(
-                CFG, verify_prune_max_ids=max_ids, simhash_prefilter_max_hamming=hamming
-            )
-            want = sorted(
-                (a, b, j)
-                for a, b, j, near in oracle
-                if (keep or j >= cfg.jaccard_threshold) and (hamming is None or near)
-            )
-            got = _verified(verify_pairs(pairs, docs, cfg, keep_below_threshold=keep))
-            assert got == want, (keep, hamming)
+        want = sorted(r for r in oracle if keep or r[2] >= cfg.jaccard_threshold)
+        got = _verified(verify_pairs(pairs, docs, cfg, keep_below_threshold=keep))
+        assert got == want, keep
     if max_ids == 10_000_000:
         checkpointed = pairs.localCheckpoint(eager=True)
         got = verify_pairs(
             checkpointed, docs.drop("simhash"), CFG, keep_below_threshold=True,
             materialize_pairs=False, n_pairs=checkpointed.count(),
         )
-        assert _verified(got) == sorted((a, b, j) for a, b, j, _ in oracle)
+        assert _verified(got) == sorted(oracle)
 
 
-def test_adaptive_bands_cover_same_docs(spark, sigs):
-    small_cfg = DedupConfig(adaptive_max_bucket=2, adaptive_max_extra_rows=3)
+def test_adaptive_bands_cover_same_docs(spark):
+    small_cfg = DedupConfig(
+        use_adaptive_bands=True, adaptive_max_bucket=2, adaptive_max_extra_rows=3
+    )
+    pages = generate_pages(spark, n_clusters=15, cluster_size=3, n_singletons=60)
+    sigs = with_signatures(pages.select("doc_id", "text"), small_cfg)
     ab = adaptive_band_table(sigs, small_cfg)
     assert ab.select("doc_id").distinct().count() == sigs.where(
         F.size("shingles") > 0
     ).count()
     # depth only grows
     assert ab.where(F.col("depth") < small_cfg.rows_per_band).count() == 0
+    assert ab.where(F.col("depth") > small_cfg.rows_per_band).count() > 0
     # diagnostics table runs
     assert bucket_stats(ab).count() > 0
+    # the deepening rows exist only in a signature signed for them
+    from dataclasses import replace
+
+    with pytest.raises(ValueError, match="use_adaptive_bands"):
+        adaptive_band_table(sigs, replace(small_cfg, use_adaptive_bands=False))
 
 
 def test_connected_components_known_graph(spark):
@@ -332,7 +311,9 @@ def test_connected_components_long_chain(spark):
 def test_connected_components_paths_agree(spark):
     # the size-gated driver union-find and the distributed star loop
     # must produce the identical labeling (cluster_id = component min) on a
-    # graph with chains, merges, duplicate + reversed edges, and self-loops
+    # graph with chains, merges, duplicate + reversed edges, and self-loops,
+    # and on one with NULL endpoints and ids above 2**53: a NULL endpoint
+    # joins nothing, so its other end is a singleton of ``all_vertices``
     import random
 
     rng = random.Random(7)
@@ -340,11 +321,22 @@ def test_connected_components_paths_agree(spark):
     edges_py += [(100 + i, 100 + i + 1) for i in range(15)]   # one 16-node chain
     edges_py += [(rng.randrange(200, 230), rng.randrange(200, 230)) for _ in range(40)]
     edges_py += [(b, a) for a, b in edges_py[:10]] + [(300, 300)]
-    edges = spark.createDataFrame(edges_py, "doc_a long, doc_b long")
-    driver = connected_components(edges)  # gate: tiny -> union-find
-    dist = connected_components(edges, driver_max_edges=0)  # forced star
-    assert driver.exceptAll(dist).count() == 0
-    assert dist.exceptAll(driver).count() == 0
+    big = 2**60 + 1
+    null_py = [(1, 2), (None, 3), (big, big + 1), (4, None)]
+    for graph, vertices in ((edges_py, None), (null_py, [1, 2, 3, 4, big, big + 1])):
+        edges = spark.createDataFrame(graph, "doc_a long, doc_b long")
+        if vertices is not None:
+            vertices = spark.createDataFrame([(v,) for v in vertices], "doc_id long")
+        stats: dict = {}
+        # gate: tiny -> union-find
+        driver = connected_components(edges, all_vertices=vertices, stats=stats)
+        assert stats["strategy"] == "driver_union_find"
+        dist = connected_components(edges, all_vertices=vertices, driver_max_edges=0)
+        assert driver.exceptAll(dist).count() == 0
+        assert dist.exceptAll(driver).count() == 0
+    assert sorted(tuple(r) for r in driver.collect()) == [
+        (1, 1), (2, 1), (3, 3), (4, 4), (big, big), (big + 1, big),
+    ]
 
 
 @pytest.mark.parametrize("id_type", ["long", "string"])
@@ -419,21 +411,19 @@ def test_bucket_drop_stats_clamps_negative_star_skips(spark):
 def test_default_adaptive_config_reserves_fresh_rows():
     """Round-3 VERDICT #5: the DEFAULT adaptive path must never wrap a
     deepened key into a neighbor band's base rows — signature_len extends
-    the signature with adaptive_reserved_rows fresh permutations."""
+    the signature with num_bands * adaptive_max_extra_rows fresh
+    permutations, a disjoint run per band."""
     fixed = DedupConfig()
     assert fixed.signature_len == fixed.num_perm == 128
     ad = DedupConfig(use_adaptive_bands=True)
-    # 16*8 base + 64 reserved (= num_bands*max_extra, so every band's
-    # extras are DISJOINT — round-5 review: the old 32 made bands b and
-    # b+8 deepen with identical permutation rows)
+    # 16*8 base + 16*4 reserved
     assert ad.signature_len == 192
     # explicit num_perm above base+reserved wins
     big = DedupConfig(use_adaptive_bands=True, num_perm=256)
     assert big.signature_len == 256
-    # overlapping reservations are rejected outright; 0 opts into wrap
-    with pytest.raises(ValueError, match="overlapping"):
-        DedupConfig(use_adaptive_bands=True, adaptive_reserved_rows=32)
-    assert DedupConfig(use_adaptive_bands=True, adaptive_reserved_rows=0).signature_len == 128
+    # more bands reserve more rows: 32*4 base + 32*4 reserved
+    many = DedupConfig(use_adaptive_bands=True, num_bands=32, rows_per_band=4)
+    assert many.signature_len == 256
 
 
 def test_config_rejects_degenerate_caps():

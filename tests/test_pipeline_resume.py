@@ -61,7 +61,7 @@ def test_pipeline_bands_match_minhash_dedup(spark, tmp_path, cfg):
     run = dedup_pipeline(p, str(tmp_path / "wd"), cfg).run(spark)
     res = minhash_dedup(spark.read.parquet(p), cfg)
     cols = {
-        "signatures": ["doc_id", "shingles", "sig", "simhash"],
+        "signatures": ["doc_id", "shingles", "sig"],
         "bands": ["band_id", "band_hash", "doc_id"],
         "candidates": ["doc_a", "doc_b"],
         "verified": ["doc_a", "doc_b", "jaccard"],

@@ -174,7 +174,9 @@ def test_forest_statistics_png(spark, tmp_path):
         generate_pages,
     )
 
-    cfg = DedupConfig(adaptive_max_bucket=2, adaptive_max_extra_rows=3)
+    cfg = DedupConfig(
+        use_adaptive_bands=True, adaptive_max_bucket=2, adaptive_max_extra_rows=3
+    )
     pages = generate_pages(spark, n_clusters=10, cluster_size=3, n_singletons=30)
     sigs = with_signatures(pages.select("doc_id", "text"), cfg)
     bands = adaptive_band_table(sigs, cfg)

@@ -56,8 +56,10 @@ def test_incremental_equals_batch(spark, tmp_path, split):
 def test_store_with_legacy_band_column_order(spark, tmp_path):
     """Band files were once written ``(doc_id, band_id, band_hash)``
     (``band_table``'s order); they are now written ``(band_id,
-    band_hash, doc_id)``. History reads resolve columns by name, so a
-    store whose batch 0 holds the old order still finds every pair."""
+    band_hash, doc_id)``. Signature files once also held a ``simhash``;
+    they now hold ``(doc_id, shingles)``. History reads resolve columns
+    by name, so a store whose batch 0 holds the old layouts still finds
+    every pair."""
     from lsh_forest_for_multi_vector_retrieval_spark.operators.bands import (
         band_table,
         with_signatures,
@@ -73,20 +75,34 @@ def test_store_with_legacy_band_column_order(spark, tmp_path):
 
     inc = IncrementalDedup(str(tmp_path / "state"), CFG)
     inc.process_batch(half_a, 0)
-    # rewrite batch 0's band partition the way the old writer laid it out
-    (
-        band_table(with_signatures(half_a, CFG), CFG)
-        .withColumn("batch_id", F.lit(0))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(inc.bands_path)
-    )
+    assert spark.read.parquet(inc.sigs_path + "/batch_id=0").columns == [
+        "doc_id", "shingles",
+    ]
+    # rewrite batch 0's band and signature partitions the way the old
+    # writers laid them out
+    old_sigs = with_signatures(half_a, CFG)
+    for table, path in (
+        (band_table(old_sigs, CFG), inc.bands_path),
+        (old_sigs.select("doc_id", "shingles", "simhash"), inc.sigs_path),
+    ):
+        (
+            table.withColumn("batch_id", F.lit(0))
+            .write.mode("overwrite")
+            .partitionBy("batch_id")
+            .parquet(path)
+        )
     assert spark.read.parquet(inc.bands_path + "/batch_id=0").columns == [
         "doc_id", "band_id", "band_hash",
+    ]
+    assert spark.read.parquet(inc.sigs_path + "/batch_id=0").columns == [
+        "doc_id", "shingles", "simhash",
     ]
     inc.process_batch(half_b, 1)
     assert spark.read.parquet(inc.bands_path + "/batch_id=1").columns == [
         "band_id", "band_hash", "doc_id",
+    ]
+    assert spark.read.parquet(inc.sigs_path + "/batch_id=1").columns == [
+        "doc_id", "shingles",
     ]
 
     got = {
@@ -220,7 +236,7 @@ def test_state_params_fingerprint_guard(spark, tmp_path):
     different hash family would SILENTLY stop colliding with history
     (pure recall loss, no error from Spark). The _params.json
     fingerprint must refuse the mismatch at construction, and refuse a
-    legacy store with no fingerprint unless explicitly trusted."""
+    legacy store with no fingerprint."""
     import json
     from dataclasses import replace
 
@@ -255,8 +271,6 @@ def test_state_params_fingerprint_guard(spark, tmp_path):
     fs_delete(spark, params)
     with pytest.raises(ValueError, match="fingerprint"):
         IncrementalDedup(state, CFG)
-    IncrementalDedup(state, CFG, trust_legacy_state=True)  # stamps it
-    IncrementalDedup(state, CFG)  # marker restored, re-opens fine
 
 
 def test_history_hot_bucket_cap_bounds_pairs(spark):

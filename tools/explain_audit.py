@@ -238,8 +238,9 @@ def main() -> int:
          "every scoring stage above it"],
     ))
 
-    # 11. verify_pairs (perfbench's call): checkpointed candidates and
-    # signatures, captured after an action
+    # 11. verify_pairs over checkpointed candidates and signatures, the
+    # signatures projected as the flagship's signatures stage projects
+    # them, captured after an action
     from lsh_forest_for_multi_vector_retrieval_spark.operators.pairs import (
         candidate_pairs,
     )
@@ -248,7 +249,7 @@ def main() -> int:
     )
 
     v_sigs = with_signatures(docs.select("doc_id", "text"), cfg).select(
-        "doc_id", "shingles", "sig", "simhash"
+        "doc_id", "shingles", "sig"
     ).localCheckpoint(eager=True)
     v_cands = candidate_pairs(band_table(v_sigs, cfg), cfg).localCheckpoint(eager=True)
     verified = verify_pairs(v_cands, v_sigs, cfg, materialize_pairs=False)

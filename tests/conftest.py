@@ -54,6 +54,37 @@ def compiles(spark):
     return count
 
 
+#: The physical operators that run Python: scalar Arrow and pickled UDFs
+#: and ``mapInArrow`` passes.
+PY_OPS = ("ArrowEvalPython", "BatchEvalPython", "MapInArrow")
+
+
+@pytest.fixture
+def py_ops(spark):
+    """``py_ops(action)``: the Python operators (``PY_OPS``) in the final
+    plans of every SQL execution that one call of ``action`` runs, its
+    internal collects and checkpoints included. The plans come from the
+    SQL status store, which Spark fills with the UI off."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions() -> list:
+        bus.waitUntilEmpty()
+        runs = store.executionsList()
+        return [runs.apply(i).executionId() for i in range(runs.size())]
+
+    def count(action) -> int:
+        seen = set(executions())
+        action()
+        total = 0
+        for run in set(executions()) - seen:
+            nodes = store.planGraph(run).allNodes()
+            total += sum(nodes.apply(i).name() in PY_OPS for i in range(nodes.size()))
+        return total
+
+    return count
+
+
 @pytest.fixture
 def slices(monkeypatch):
     """The list of ``topk.query_slices``' results, one per call made

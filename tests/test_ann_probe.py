@@ -242,26 +242,38 @@ def test_one_row_per_query_and_id_when_the_corpus_repeats_an_id(spark, vecs):
 
 
 # --------------------------------------------------------- CI guards
-def test_ann_topk_job_count_and_plan_shape(jobs, vecs):
+def test_ann_topk_job_count_and_plan_shape(jobs, py_ops, vecs):
     """A saturated ``ensure_k`` call runs 5 jobs: the query collect, the
     checkpointed corpus pass, the count-row collect and the result's
     collect (one exchange stage + the result stage); without ``ensure_k``
     it runs 3, the query collect and the result's two. No Exchange sits
     below the corpus pass, so the corpus is never shuffled; the one
-    exchange is the re-rank's ``q_id`` shuffle of the candidate table."""
+    exchange is the re-rank's ``q_id`` shuffle of the candidate table.
+
+    Python operators per call, with or without ``ensure_k``: LSH signs
+    the queries and the corpus and runs the pass (3), and the pandas
+    cosine adds one (4); IVF runs the pass alone (1), and its pandas
+    kernels add the cell assignment and the cosine (3)."""
     queries = vecs.where(F.col("vec_id") < 20)
     cb = _codebook(8)
+    lsh = dict(k=10, n_chunks=16, round_digits=6)
+    ivf = dict(k=10, centroids=cb, nprobe=4, round_digits=6)
+    pandas = dict(assignment="pandas", scoring="pandas")
     calls = {
-        "lsh": lambda **kw: lsh_topk(vecs, queries, k=10, n_chunks=16, round_digits=6, **kw),
-        "ivf": lambda **kw: ivf_topk(vecs, queries, k=10, centroids=cb, nprobe=4, round_digits=6, **kw),
+        "lsh": (3, lambda **kw: lsh_topk(vecs, queries, **lsh, **kw)),
+        "lsh_pandas": (4, lambda **kw: lsh_topk(vecs, queries, scoring="pandas", **lsh, **kw)),
+        "ivf": (1, lambda **kw: ivf_topk(vecs, queries, **ivf, **kw)),
+        "ivf_pandas": (3, lambda **kw: ivf_topk(vecs, queries, **ivf, **pandas, **kw)),
     }
-    for name, call in calls.items():
+    for name, (ops, call) in calls.items():
         call(ensure_k=True).collect()  # warm
         assert jobs(lambda: call(ensure_k=True).collect()) == 5, name
+        assert py_ops(lambda: call(ensure_k=True).collect()) == ops, name
 
         bare = call(ensure_k=False)
         bare.collect()
         assert jobs(lambda: call(ensure_k=False).collect()) == 3, name
+        assert py_ops(lambda: call(ensure_k=False).collect()) == ops, name
         plan = _final_plan(bare)
         at = [i for i, line in enumerate(plan) if "MapInArrow" in line]
         assert len(at) == 1, (name, plan)
@@ -287,11 +299,12 @@ def _below(plan: list[str], at: int) -> list[str]:
     return below
 
 
-def test_forest_vote_job_count_and_plan_shape(spark, jobs, monkeypatch):
+def test_forest_vote_job_count_and_plan_shape(spark, jobs, py_ops, monkeypatch):
     """A warm ``forest_vote_scores`` + ``get_top_k`` collect runs 5 jobs:
     the query collect, the checkpointed corpus pass, the count-row
     collect and the result's collect (one exchange stage + the result
-    stage). The pass is one ``MapInArrow`` with no Exchange below it, so
+    stage), and 2 Python operators: the pass and the node-count attach.
+    The pass is one ``MapInArrow`` with no Exchange below it, so
     the corpus is never shuffled; the result's plan holds one Exchange,
     ``hashpartitioning(query_id)``, with the node cap on and off."""
     from lsh_forest_for_multi_vector_retrieval_spark.config import DedupConfig
@@ -316,6 +329,7 @@ def test_forest_vote_job_count_and_plan_shape(spark, jobs, monkeypatch):
 
         call().collect()  # warm
         assert jobs(lambda: call().collect()) == 5, cap
+        assert py_ops(lambda: call().collect()) == 2, cap
 
         passes.clear()
         top = call()
@@ -365,12 +379,14 @@ def test_forest_vote_counts_the_corpus_under_its_checkpoint(spark, jobs, monkeyp
     docs.unpersist()
 
 
-def test_ensure_k_new_query_batch_compiles_no_class(vecs, compiles, jobs, monkeypatch):
+def test_ensure_k_new_query_batch_compiles_no_class(vecs, compiles, jobs, py_ops, monkeypatch):
     """The ascend's per-query choices are data, not literals in the plan:
     once one ``ensure_k`` call has compiled its plan, a call on another
     query batch whose short queries ascend compiles no class. The LSH
     call runs 5 jobs: the query collect, the checkpointed leaf pass, the
-    count-row collect and the result's collect over the ascend pass."""
+    count-row collect and the result's collect over the ascend pass; and
+    5 Python operators: the query signing, and the corpus signing and
+    the pass of each of its two passes."""
     batches = [
         vecs.where(F.col("vec_id") % 7 == r).localCheckpoint(eager=True) for r in (0, 1)
     ]
@@ -395,3 +411,4 @@ def test_ensure_k_new_query_batch_compiles_no_class(vecs, compiles, jobs, monkey
         assert ascended == [True], name
         if name == "lsh":
             assert jobs(lambda: call(batches[1]).collect()) == 5
+            assert py_ops(lambda: call(batches[1]).collect()) == 5

@@ -282,22 +282,25 @@ def test_doc_token_bound_fails_loudly_above_and_passes_at(spark, corpus, queries
 
 
 # ------------------------------------------------------------- CI guards
-def test_plaid_job_count_and_plan_shape(jobs, corpus, queries, cents):
+def test_plaid_job_count_and_plan_shape(jobs, py_ops, corpus, queries, cents):
     """A warm re-rank call runs 7 jobs: the query collect, the per-doc
     exchange, the query-vector broadcast, the pool window's exchange, the
     pool broadcast, the final window's exchange and the result (the
     codebook is a local relation: collecting it runs none); without
     re-rank it runs 4: the query collect, the per-doc exchange, the
-    window's exchange and the result.
+    window's exchange and the result. Its Python operators: the S_cq
+    scores, the cell assignment and the pass, and with re-rank the exact
+    chamfer (4 and 3).
     Exactly one Exchange sits below the pass, keyed on ``doc_id``, and the
     re-rank reads that same exchange: ``doc_vectors`` is aggregated once."""
     def call(rerank=20):
         return plaid_topk(corpus, queries, cents, k=10, nprobe=4, rerank=rerank,
                           assignment="pandas", scoring="pandas")
 
-    for rerank, budget in ((20, 7), (None, 4)):
+    for rerank, budget, ops in ((20, 7, 4), (None, 4, 3)):
         call(rerank).collect()  # warm
         assert jobs(lambda: call(rerank).collect()) == budget, rerank
+        assert py_ops(lambda: call(rerank).collect()) == ops, rerank
 
     df = call()
     df.collect()

@@ -90,18 +90,11 @@ def hamming_chunk_cols(name: str, width: int, n_chunks: int) -> Column:
     return F.expr(f"array({', '.join(chunks)})")
 
 
-def hyperplane_simhash_udf(dim: int, bits: int = 64, seed: int = 42) -> Column:
-    """Literal reference H1: seeded random hyperplanes over float vectors.
-
-    ``array<float>[dim] -> bigint`` — one matmul per Arrow batch against a
-    (dim, bits) Gaussian matrix drawn once from RandomState(seed)
+def hyperplanes(dim: int, bits: int = 64, seed: int = 42) -> np.ndarray:
+    """The ``(dim, bits)`` Gaussian hyperplane matrix of
+    :func:`hyperplane_simhash_udf`, drawn once from RandomState(seed)
     (reference draws per-closure, lsh_family.py:30-36; we draw the whole
-    matrix up front — same distribution, executor-deterministic).
-
-    A NULL, ragged or wrong-dim vector signs NULL. A NULL or NaN element
-    makes every projection NaN, and ``NaN >= 0`` is false, so the row
-    signs 0; an inf element signs by its infinite projections.
-    """
+    matrix up front — same distribution, executor-deterministic)."""
     if not 1 <= bits <= 64:
         # the signature is packed into ONE 64-bit word; numpy uint64
         # left-shift by >=64 is C-undefined (x86: shift mod 64), so
@@ -109,24 +102,41 @@ def hyperplane_simhash_udf(dim: int, bits: int = 64, seed: int = 42) -> Column:
         # destroy the LSH property with no error. More bits = more
         # independent tables (distinct seeds), not a wider word.
         raise ValueError(f"bits must be in [1, 64], got {bits}")
-    rng = np.random.RandomState(seed)
-    w = rng.standard_normal((dim, bits))
+    return np.random.RandomState(seed).standard_normal((dim, bits))
+
+
+def hyperplane_simhash_arrow(vec_col: pa.Array, w: np.ndarray) -> pa.Array:
+    """The body of :func:`hyperplane_simhash_udf` over an Arrow vector
+    array and a :func:`hyperplanes` matrix; ``lsh_topk`` also calls it on
+    the driver for its collected queries."""
+    dim, bits = w.shape
+    # NULL / ragged / wrong-dim rows DEGRADE to a NULL signature (they
+    # drop out of chunk blocking downstream) instead of failing the task
+    lens, valid, gather = _vectors(vec_col)
+    good = valid & (lens == dim)
+    rows = np.flatnonzero(good)
+    proj = gather(rows, dim) @ w  # (n_good, bits)
     bit_idx = np.arange(bits, dtype=np.uint64)
+    words = ((proj >= 0).astype(np.uint64) << bit_idx[None, :]).sum(axis=1, dtype=np.uint64)
+    vals = np.zeros(len(vec_col), dtype=np.int64)
+    vals[rows] = words.view(np.int64)
+    return pa.array(vals, mask=~good)
+
+
+def hyperplane_simhash_udf(dim: int, bits: int = 64, seed: int = 42) -> Column:
+    """Literal reference H1: seeded random hyperplanes over float vectors.
+
+    ``array<float>[dim] -> bigint`` — one matmul per Arrow batch against
+    the :func:`hyperplanes` matrix.
+
+    A NULL, ragged or wrong-dim vector signs NULL. A NULL or NaN element
+    makes every projection NaN, and ``NaN >= 0`` is false, so the row
+    signs 0; an inf element signs by its infinite projections.
+    """
+    w = hyperplanes(dim, bits, seed)
 
     @arrow_udf(T.LongType())
     def _hp_simhash(vec_col: pa.Array) -> pa.Array:
-        # NULL / ragged / wrong-dim rows DEGRADE to a NULL signature
-        # (they drop out of chunk blocking downstream) instead of
-        # failing the whole Spark task
-        lens, valid, gather = _vectors(vec_col)
-        good = valid & (lens == dim)
-        rows = np.flatnonzero(good)
-        proj = gather(rows, dim) @ w  # (n_good, bits)
-        words = ((proj >= 0).astype(np.uint64) << bit_idx[None, :]).sum(
-            axis=1, dtype=np.uint64
-        )
-        vals = np.zeros(len(vec_col), dtype=np.int64)
-        vals[rows] = words.view(np.int64)
-        return pa.array(vals, mask=~good)
+        return hyperplane_simhash_arrow(vec_col, w)
 
     return _hp_simhash

@@ -15,15 +15,19 @@ Two implementations with one semantics:
   ann.py). They remain the ORACLE path: a strict left-to-right fold is
   bit-reproducible everywhere, which is what lets expected-parquet
   fixtures hash-match.
-* the NumPy kernels — ``cosine_pandas_udf``,
-  ``nearest_centroid_pandas_udf``, ``centroid_scorevec_pandas_udf`` and
-  ``chamfer_pair_pandas_udf`` here, ``simhash.hyperplane_simhash_udf``
-  next door: ``arrow_udf``s, one GEMM or einsum per Arrow batch, the
-  PRODUCTION path (the operators' ``scoring="pandas"`` and
-  ``assignment="pandas"``). The names and the knob value predate the
-  move from pandas to Arrow UDFs; callers and the benchmark pass them,
-  so they stay. ulp-level reduction-order differences from the fold are
-  possible, so fixture-oracle comparisons keep the fold.
+* the NumPy kernels — plain functions over Arrow arrays, one GEMM or
+  einsum per call: ``cosine_arrow``, ``centroid_scorevec_arrow`` and
+  ``chamfer_pair_arrow`` here, ``simhash.hyperplane_simhash_arrow`` next
+  door. They are the PRODUCTION path (the operators' ``scoring="pandas"``
+  and ``assignment="pandas"``): the ``mapInArrow`` corpus passes score
+  the rows they keep with them, the driver computes a query batch's keys
+  and scores with them, and where a Spark stage must run one per row it
+  is wrapped as an ``arrow_udf`` (``cosine_pandas_udf``,
+  ``nearest_centroid_pandas_udf``, ``simhash.hyperplane_simhash_udf``).
+  The names and the knob value predate the move from pandas to Arrow
+  UDFs; callers and the benchmark pass them, so they stay. ulp-level
+  reduction-order differences from the fold are possible, so
+  fixture-oracle comparisons keep the fold.
 
 Every NumPy kernel, and the ``mapInArrow`` corpus passes of
 ``operators/ann.py`` and ``operators/plaid.py``, reads its vector columns
@@ -221,31 +225,27 @@ def nearest_centroid_pandas_udf(centroids: list[list[float]]):
     return _cell
 
 
-def centroid_scorevec_pandas_udf(centroids: list[list[float]]):
-    """Arrow-batched GEMM: per input vector, the dot against EVERY codebook
-    centroid as ``array<double>`` in codebook-POSITION order — the
-    production sibling of ``transform(centroid_scores_arr(...), c -> c.s)``
-    (one matmul per batch instead of k interpreted folds per row).
-    Degenerate rows (NULL / empty / wrong-dim vectors) yield an array of
-    SQL NULLs, exactly like the per-centroid fold (``dot_col`` is NULL on
-    every such row); a NULL element poisons that row's products, which
-    are NULL per position (fold semantics again)."""
-    cmat = np.asarray(centroids, dtype=np.float64)
+def centroid_scorevec_arrow(v: pa.Array, cmat: np.ndarray) -> pa.Array:
+    """NumPy GEMM over an Arrow vector array: per vector, the dot against
+    EVERY row of the ``(k, dim)`` codebook matrix as ``array<double>`` in
+    codebook-POSITION order — the pandas sibling of
+    ``transform(centroid_scores_arr(...), c -> c.s)`` (one matmul instead
+    of k interpreted folds per row). ``plaid_topk`` runs it on the driver
+    over its collected query tokens. Degenerate rows (NULL / empty /
+    wrong-dim vectors) yield an array of SQL NULLs, exactly like the
+    per-centroid fold (``dot_col`` is NULL on every such row); a NULL
+    element poisons that row's products, which are NULL per position
+    (fold semantics again)."""
     k, dim = cmat.shape
-
-    @arrow_udf("array<double>")
-    def _scores(v: pa.Array) -> pa.Array:
-        lens, valid, gather = _vectors(v)
-        rows = np.flatnonzero(valid & (lens == dim))
-        out = np.full((len(v), k), np.nan)
-        out[rows] = gather(rows, dim) @ cmat.T
-        flat = out.ravel()
-        return pa.ListArray.from_arrays(
-            pa.array(np.arange(len(v) + 1) * k, pa.int32()),
-            pa.array(flat, mask=np.isnan(flat)),
-        )
-
-    return _scores
+    lens, valid, gather = _vectors(v)
+    rows = np.flatnonzero(valid & (lens == dim))
+    out = np.full((len(v), k), np.nan)
+    out[rows] = gather(rows, dim) @ cmat.T
+    flat = out.ravel()
+    return pa.ListArray.from_arrays(
+        pa.array(np.arange(len(v) + 1) * k, pa.int32()),
+        pa.array(flat, mask=np.isnan(flat)),
+    )
 
 
 def _token_table(col):
@@ -262,77 +262,74 @@ def _token_table(col):
     return row[keep], token[keep], lens[token[keep]], gather
 
 
-def chamfer_pair_pandas_udf():
-    """Arrow-batched max-sum interaction over ``(array<array>, array<array>)``
-    row pairs: per row, ``sum over query tokens of max over doc tokens of
-    dot(q, d)`` — ONE einsum per equal-shape group per batch, replacing the
+def chamfer_pair_arrow(qs: pa.Array, ds: pa.Array) -> pa.Array:
+    """NumPy max-sum interaction over two Arrow ``array<array>`` arrays
+    of row pairs: per row, ``sum over query tokens of max over doc tokens
+    of dot(q, d)`` — ONE einsum per equal-shape group, replacing the
     q_tok x d_tok row explosion + two hash aggregates of the former exact
-    re-rank plan. Matches the relational production path's NULL handling:
-    a NULL token vector is a missing token, NaN dots (NULL elements) are
-    missing, a token whose dots are all missing is skipped by the sum (SQL
-    ``sum`` ignores NULLs), and a row with no scoreable token at all is
-    NULL. A row whose token vectors differ in length is scored as the fold
-    scores it: a dot across unequal lengths is NULL, so each query token
-    meets only the doc tokens of its own length. Token-sum order is the
-    given query-token order (callers pass q_idx-sorted matrices), so
-    results are deterministic; ulp-level differences vs the interpreted
-    fold are possible — fixture-oracle comparisons keep the fold."""
-
-    @arrow_udf("double")
-    def _chamfer(qs: pa.Array, ds: pa.Array) -> pa.Array:
-        n = len(qs)
-        q_row, q_tok, q_len, q_mat = _token_table(qs)
-        d_row, d_tok, d_len, d_mat = _token_table(ds)
-        nq, nd = np.bincount(q_row, minlength=n), np.bincount(d_row, minlength=n)
-        lo, hi = np.full(n, np.iinfo(np.int64).max), np.full(n, -1)
-        for row, length in ((q_row, q_len), (d_row, d_len)):
-            np.minimum.at(lo, row, length)
-            np.maximum.at(hi, row, length)
-        both = (nq > 0) & (nd > 0)
-        dense = both & (lo == hi) & (lo > 0)
-        out = np.full(n, np.nan)
-        # dense rows: one einsum per (query tokens, dim, doc tokens) shape
-        rows = np.flatnonzero(dense)
-        shapes, group = np.unique(
-            np.stack([nq[rows], lo[rows], nd[rows]], axis=1), axis=0, return_inverse=True
+    re-rank plan. ``plaid_topk``'s corpus pass scores the rows it keeps
+    with it. Matches the relational path's NULL handling: a NULL token
+    vector is a missing token, NaN dots (NULL elements) are missing, a
+    token whose dots are all missing is skipped by the sum (SQL ``sum``
+    ignores NULLs), and a row with no scoreable token at all is NULL. A
+    row whose token vectors differ in length is scored as the fold scores
+    it: a dot across unequal lengths is NULL, so each query token meets
+    only the doc tokens of its own length. Token-sum order is the given
+    query-token order (callers pass q_idx-sorted token lists), so results
+    are deterministic; ulp-level differences vs the interpreted fold
+    (``plaid.chamfer_pair_fold_col``) are possible — fixture-oracle
+    comparisons keep the fold."""
+    n = len(qs)
+    q_row, q_tok, q_len, q_mat = _token_table(qs)
+    d_row, d_tok, d_len, d_mat = _token_table(ds)
+    nq, nd = np.bincount(q_row, minlength=n), np.bincount(d_row, minlength=n)
+    lo, hi = np.full(n, np.iinfo(np.int64).max), np.full(n, -1)
+    for row, length in ((q_row, q_len), (d_row, d_len)):
+        np.minimum.at(lo, row, length)
+        np.maximum.at(hi, row, length)
+    both = (nq > 0) & (nd > 0)
+    dense = both & (lo == hi) & (lo > 0)
+    out = np.full(n, np.nan)
+    # dense rows: one einsum per (query tokens, dim, doc tokens) shape
+    rows = np.flatnonzero(dense)
+    shapes, group = np.unique(
+        np.stack([nq[rows], lo[rows], nd[rows]], axis=1), axis=0, return_inverse=True
+    )
+    q_at, d_at = np.cumsum(nq) - nq, np.cumsum(nd) - nd
+    for g, (tq, dim, td) in enumerate(shapes):
+        sel = rows[group.ravel() == g]
+        Q = q_mat(q_tok[(q_at[sel][:, None] + np.arange(tq)).ravel()], dim)
+        D = d_mat(d_tok[(d_at[sel][:, None] + np.arange(td)).ravel()], dim)
+        s = np.einsum(
+            "nqe,npe->nqp", Q.reshape(len(sel), tq, dim), D.reshape(len(sel), td, dim)
         )
-        q_at, d_at = np.cumsum(nq) - nq, np.cumsum(nd) - nd
-        for g, (tq, dim, td) in enumerate(shapes):
-            sel = rows[group.ravel() == g]
-            Q = q_mat(q_tok[(q_at[sel][:, None] + np.arange(tq)).ravel()], dim)
-            D = d_mat(d_tok[(d_at[sel][:, None] + np.arange(td)).ravel()], dim)
-            s = np.einsum(
-                "nqe,npe->nqp", Q.reshape(len(sel), tq, dim), D.reshape(len(sel), td, dim)
-            )
-            # NaN dots are missing (the fold scores them NULL; max ignores
-            # them): fmax skips NaN, and is NaN only when all are missing
-            tok_best = np.fmax.reduce(s, axis=2)  # (n, q)
-            any_tok = ~np.isnan(tok_best)
-            totals = np.where(any_tok, tok_best, 0.0).sum(axis=1)
-            out[sel] = np.where(any_tok.any(axis=1), totals, np.nan)
-        # ragged rows: each query token meets the doc tokens of its length
-        ragged = both & ~dense
-        qi, di = np.flatnonzero(ragged[q_row]), np.flatnonzero(ragged[d_row])
-        width = max(q_len.max(initial=0), d_len.max(initial=0)) + 1
-        d_key = d_row[di] * width + d_len[di]
-        order = np.argsort(d_key, kind="stable")
-        q_key = q_row[qi] * width + q_len[qi]
-        first = np.searchsorted(d_key[order], q_key, "left")
-        cnt = np.searchsorted(d_key[order], q_key, "right") - first
-        pq, pd = np.repeat(qi, cnt), di[order[_spans(first, cnt)]]
-        dots = np.empty(len(pq))
-        for dim in np.unique(q_len[pq]):
-            at = np.flatnonzero(q_len[pq] == dim)
-            dots[at] = np.einsum("ij,ij->i", q_mat(q_tok[pq[at]], dim), d_mat(d_tok[pd[at]], dim))
-        best = np.full(len(q_row), np.nan)
-        np.fmax.at(best, pq, dots)
-        # the sum over the scored tokens, in token order
-        ok = qi[~np.isnan(best[qi])]
-        scored = np.bincount(q_row[ok], minlength=n) > 0
-        out[scored] = np.bincount(q_row[ok], weights=best[ok], minlength=n)[scored]
-        return pa.array(out, mask=np.isnan(out))
-
-    return _chamfer
+        # NaN dots are missing (the fold scores them NULL; max ignores
+        # them): fmax skips NaN, and is NaN only when all are missing
+        tok_best = np.fmax.reduce(s, axis=2)  # (n, q)
+        any_tok = ~np.isnan(tok_best)
+        totals = np.where(any_tok, tok_best, 0.0).sum(axis=1)
+        out[sel] = np.where(any_tok.any(axis=1), totals, np.nan)
+    # ragged rows: each query token meets the doc tokens of its length
+    ragged = both & ~dense
+    qi, di = np.flatnonzero(ragged[q_row]), np.flatnonzero(ragged[d_row])
+    width = max(q_len.max(initial=0), d_len.max(initial=0)) + 1
+    d_key = d_row[di] * width + d_len[di]
+    order = np.argsort(d_key, kind="stable")
+    q_key = q_row[qi] * width + q_len[qi]
+    first = np.searchsorted(d_key[order], q_key, "left")
+    cnt = np.searchsorted(d_key[order], q_key, "right") - first
+    pq, pd = np.repeat(qi, cnt), di[order[_spans(first, cnt)]]
+    dots = np.empty(len(pq))
+    for dim in np.unique(q_len[pq]):
+        at = np.flatnonzero(q_len[pq] == dim)
+        dots[at] = np.einsum("ij,ij->i", q_mat(q_tok[pq[at]], dim), d_mat(d_tok[pd[at]], dim))
+    best = np.full(len(q_row), np.nan)
+    np.fmax.at(best, pq, dots)
+    # the sum over the scored tokens, in token order
+    ok = qi[~np.isnan(best[qi])]
+    scored = np.bincount(q_row[ok], minlength=n) > 0
+    out[scored] = np.bincount(q_row[ok], weights=best[ok], minlength=n)[scored]
+    return pa.array(out, mask=np.isnan(out))
 
 
 def cosine_pandas_udf():
@@ -344,21 +341,28 @@ def cosine_pandas_udf():
     ``otherwise(0.0)``, which also catches a NULL input array and a NULL
     element); a ragged pair scores NULL (``zip_with`` null-pads it); a
     NaN result (an inf element: inf*0 or inf/inf) is NULL, like
-    ``cosine_col``'s outer nanvl. Production scoring path for the ANN
-    re-rank family (``scoring="pandas"``)."""
+    ``cosine_col``'s outer nanvl. The embedding near-dup verify's
+    ``scoring="pandas"`` kernel; the ANN corpus pass calls its body,
+    :func:`cosine_arrow`, on the rows it keeps."""
 
     @arrow_udf("double")
     def _cos(a: pa.Array, b: pa.Array) -> pa.Array:
-        la, va, ga = _vectors(a)
-        lb, vb, gb = _vectors(b)
-        out = np.where(va & vb & (la != lb), np.nan, 0.0)
-        ok = va & vb & (la == lb)
-        for dim in np.unique(la[ok]):
-            rows = np.flatnonzero(ok & (la == dim))
-            ma, mb = ga(rows, dim), gb(rows, dim)
-            num = np.einsum("ij,ij->i", ma, mb)
-            den = np.sqrt(np.einsum("ij,ij->i", ma, ma)) * np.sqrt(np.einsum("ij,ij->i", mb, mb))
-            out[rows] = np.where(den > 0, num / np.where(den > 0, den, 1.0), 0.0)
-        return pa.array(out, mask=np.isnan(out))
+        return cosine_arrow(a, b)
 
     return _cos
+
+
+def cosine_arrow(a: pa.Array, b: pa.Array) -> pa.Array:
+    """The body of :func:`cosine_pandas_udf` over two Arrow vector
+    arrays."""
+    la, va, ga = _vectors(a)
+    lb, vb, gb = _vectors(b)
+    out = np.where(va & vb & (la != lb), np.nan, 0.0)
+    ok = va & vb & (la == lb)
+    for dim in np.unique(la[ok]):
+        rows = np.flatnonzero(ok & (la == dim))
+        ma, mb = ga(rows, dim), gb(rows, dim)
+        num = np.einsum("ij,ij->i", ma, mb)
+        den = np.sqrt(np.einsum("ij,ij->i", ma, ma)) * np.sqrt(np.einsum("ij,ij->i", mb, mb))
+        out[rows] = np.where(den > 0, num / np.where(den > 0, den, 1.0), 0.0)
+    return pa.array(out, mask=np.isnan(out))

@@ -18,10 +18,14 @@ Three strategies; only the probe differs between them:
 ``lsh_topk`` and ``ivf_topk`` share one core, ``_probe_topk``, on
 ``operators/topk.py`` (REPOSE, ICDE 2021): each corpus partition answers
 top-k locally, and one step merges. The query batch is collected once
-and broadcast; one ``mapInArrow`` pass over the corpus partitions applies
-the probe mask, drops self-matches and keeps, per (partition, query), a
-provable superset of the local top-k. The corpus is never shuffled: only
-that small candidate table reaches ``_rerank_topk`` (exact cosine +
+and broadcast (``lsh_topk`` signs it on the driver, with the function
+its corpus UDF wraps); one ``mapInArrow`` pass over the corpus partitions
+applies the probe mask, drops self-matches and keeps, per (partition,
+query), a provable superset of the local top-k. With
+``scoring="pandas"`` the pass also emits each kept row's exact cosine
+(``functions.vectors.cosine_arrow``), so no Python stage follows it;
+the fold scores the kept rows after it. The corpus is never shuffled:
+only that small scored table reaches ``_rerank_topk`` (rounding +
 ``topk.get_top_k``), the re-rank tail of all three strategies.
 """
 
@@ -30,17 +34,27 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 from pyspark.sql.window import Window
 
 from lsh_forest_for_multi_vector_retrieval_spark.functions.simhash import (
+    hyperplane_simhash_arrow,
     hyperplane_simhash_udf,
+    hyperplanes,
 )
 from lsh_forest_for_multi_vector_retrieval_spark.functions.vectors import (
     _list_parts,
     _require_kernel,
     _vectors,
     centroid_scores_arr,
+    cosine_arrow,
     cosine_col,
     cosine_pandas_udf,
     nearest_centroid,
@@ -70,35 +84,38 @@ def _validate_chunking(bits: int, n_chunks: int) -> None:
 
 
 def _cosine_fn(scoring: str):
-    """Exact-rerank scorer: "fold" = bit-reproducible interpreted HOF
-    Column fold (oracle path); "pandas" = Arrow-batched NumPy einsum
-    (production path — round-4 VERDICT "What's missing" #2: at 64 dims x
-    thousands of candidates/query the interpreted fold was the dominant
-    per-row cost of every ANN row). Identical semantics; ulp-level
-    reduction-order differences possible, so fixtures keep "fold"."""
+    """Exact cosine Column kernel of the near-dup verify: "fold" =
+    bit-reproducible interpreted HOF Column fold (oracle path); "pandas" =
+    Arrow-batched NumPy einsum (production path — round-4 VERDICT "What's
+    missing" #2: at 64 dims x thousands of candidates/query the
+    interpreted fold was the dominant per-row cost). Identical semantics;
+    ulp-level reduction-order differences possible, so fixtures keep
+    "fold". The top-k operators score in their corpus pass instead
+    (``_probe_kernel``)."""
     return cosine_pandas_udf() if scoring == "pandas" else cosine_col
 
 
 def _rerank_topk(
-    cand: DataFrame, cosine, k: int, round_digits: int | None = None, ascend: bool = False
+    scored: DataFrame, k: int, round_digits: int | None = None, ascend: bool = False
 ) -> DataFrame:
-    """(q_id, n_id, cosine, rank): exact cosine over the candidate
-    vectors, optionally rounded BEFORE ranking, one row per ``(q_id,
-    n_id)``, then the per-query top-k (ties by ``n_id``). Scoring runs
-    before the one ``q_id`` exchange, which the per-pair max shares with
-    the window, so only scores are shuffled; when the corpus repeats an
-    id, its best-scoring vector counts.
+    """(q_id, n_id, cosine, rank) of ``scored`` ``(q_id, n_id, cosine)``
+    rows, each an exact cosine of one candidate vector: the cosine,
+    optionally rounded BEFORE ranking, one row per ``(q_id, n_id)``, then
+    the per-query top-k (ties by ``n_id``). The rows are scored before
+    the one ``q_id`` exchange, which the per-pair max shares with the
+    window, so only scores are shuffled; when the corpus repeats an id,
+    its best-scoring vector counts.
 
-    ``ascend``: ``cand`` holds the rows of several nested probe levels
+    ``ascend``: ``scored`` holds the rows of several nested probe levels
     (``lvl``), and each query keeps only those of its first level with
     at least k distinct ids, or of its last level. The windows that pick
     it run after the same exchange, so the choice is data: no per-query
     value enters the plan."""
-    cos = cosine(F.col("q_vec"), F.col("n_vec"))
+    cos = F.col("cosine")
     if round_digits is not None:
         cos = F.round(cos, round_digits)
     keys = ["q_id", "n_id"] + (["lvl"] if ascend else [])
-    scored = cand.select(*keys, cos.alias("cosine")).repartition("q_id")
+    scored = scored.select(*keys, cos.alias("cosine")).repartition("q_id")
     if ascend:
         q, level = Window.partitionBy("q_id"), Window.partitionBy("q_id", "lvl")
         scored = (
@@ -183,13 +200,15 @@ def _approx_cosine(view: dict, qv, rows):
     return score, dirty
 
 
-def _probe_kernel(bq, levels: list, k: int, margin: float, counts: bool, schema):
+def _probe_kernel(bq, levels: list, k: int, margin: float, counts: bool, exact: bool, schema):
     """The ``mapInArrow`` body of ``_probe_topk`` over ``(n_id, n_vec,
     *keys)``. Per query and level ``topk.keep_loop`` keeps every candidate
     row dirty or within ``margin`` of the partition's k-th best, and
     with ``counts`` one count row: ``n`` distinct candidate ids (capped
-    at k) and, below k, the ids themselves. It decides no final score or
-    rank; rows stream through, so memory holds only what is kept."""
+    at k) and, below k, the ids themselves. A kept row carries its exact
+    ``cosine`` (``cosine_arrow``, the pandas kernel) with ``exact``, else
+    both vectors, for the fold. It decides no rank; rows stream through,
+    so memory holds only what is kept."""
 
     def run(batches):
         import pyarrow as pa
@@ -228,20 +247,26 @@ def _probe_kernel(bq, levels: list, k: int, margin: float, counts: bool, schema)
                         seen[key].update(ids[rows].tolist())
                     yield (key, rows, *_approx_cosine(view, q["dense"][j], rows), ids[rows])
 
+        def nulls(m: int, *names):
+            return [pa.nulls(m, schema.field(c).type) for c in names]
+
         pieces, cols = topk.keep_loop(batches, k, margin, candidates)
         if pieces:
             held, n = zip(*pieces)
             pos = pa.array(np.repeat([j for _, j in held], n))
             m = sum(n)
+            q_vec = q["arrow_vecs"].take(pos)
+            if exact:
+                scored = [*nulls(m, "q_vec", "n_vec"), cosine_arrow(q_vec, cols[1])]
+            else:
+                scored = [q_vec, cols[1], *nulls(m, "cosine")]
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(np.repeat([lvl for lvl, _ in held], n), pa.int32()),
                     q["arrow_ids"].take(pos),
                     cols[0],
-                    q["arrow_vecs"].take(pos),
-                    cols[1],
-                    pa.nulls(m, pa.int32()),
-                    pa.nulls(m, schema.field("ids").type),
+                    *scored,
+                    *nulls(m, "n", "ids"),
                 ],
                 schema=schema,
             )
@@ -252,9 +277,7 @@ def _probe_kernel(bq, levels: list, k: int, margin: float, counts: bool, schema)
                 [
                     pa.array([lvl for lvl, _ in keys], pa.int32()),
                     q["arrow_ids"].take(pa.array([j for _, j in keys])),
-                    pa.nulls(m, schema.field("n_id").type),
-                    pa.nulls(m, schema.field("q_vec").type),
-                    pa.nulls(m, schema.field("n_vec").type),
+                    *nulls(m, "n_id", "q_vec", "n_vec", "cosine"),
                     pa.array([min(len(seen[key]), k) for key in keys], pa.int32()),
                     pa.array(
                         [list(seen[key]) if len(seen[key]) < k else None for key in keys],
@@ -307,9 +330,12 @@ def _query_payload(rows: list, keys: list[str], arrow) -> dict:
     }
 
 
-def _candidates(out: DataFrame) -> DataFrame:
-    """The candidate rows of a corpus pass (count rows carry ``n``)."""
-    return out.where(F.col("n").isNull()).select("lvl", "q_id", "n_id", "q_vec", "n_vec")
+def _candidates(out: DataFrame, exact: bool) -> DataFrame:
+    """``(lvl, q_id, n_id, cosine)``: the candidate rows of a corpus pass
+    (count rows carry ``n``), scored by the pass with ``exact``, else by
+    the fold over their vectors."""
+    cos = F.col("cosine") if exact else cosine_col(F.col("q_vec"), F.col("n_vec"))
+    return out.where(F.col("n").isNull()).select("lvl", "q_id", "n_id", cos.alias("cosine"))
 
 
 def _reached(out: DataFrame, k: int) -> set:
@@ -330,13 +356,15 @@ def _probe_topk(
     queries: DataFrame,
     levels: list,
     k: int,
-    cosine,
+    scoring: str,
     round_digits: int | None,
     ensure_k: bool,
 ) -> DataFrame:
     """(q_id, n_id, cosine, rank): the top-k of ``corpus`` ``(n_id, n_vec,
     *keys)`` for ``queries`` ``(q_id, q_vec, *keys)`` over the probe
-    ``levels`` (see the note above ``_key_matrix``).
+    ``levels`` (see the note above ``_key_matrix``), ranked by the exact
+    cosine: ``scoring="pandas"`` computes it in the corpus pass, "fold"
+    after it (``cosine_col``).
 
     The queries are collected once and broadcast, in slices bounded by
     ``spark.sql.autoBroadcastJoinThreshold`` (one corpus pass per slice).
@@ -353,6 +381,7 @@ def _probe_topk(
     own) rows."""
     topk.require_positive(k=k)
     margin = topk.keep_margin(round_digits)
+    exact = scoring == "pandas"
     qrows = queries.collect()
 
     def scan(lv: list, rows: list, counts: bool) -> DataFrame:
@@ -366,6 +395,7 @@ def _probe_topk(
                 StructField("n_id", n_id),
                 StructField("q_vec", queries.schema["q_vec"].dataType),
                 StructField("n_vec", frame.schema["n_vec"].dataType),
+                StructField("cosine", DoubleType()),
                 StructField("n", IntegerType()),
                 StructField("ids", ArrayType(n_id)),
             ]
@@ -374,19 +404,19 @@ def _probe_topk(
         return topk.sliced_pass(
             frame, schema, rows,
             lambda s, arrow: _query_payload(s, names, arrow),
-            lambda bq, arrow: _probe_kernel(bq, spec, k, margin, counts, arrow),
+            lambda bq, arrow: _probe_kernel(bq, spec, k, margin, counts, exact, arrow),
         )
 
     first = scan(levels[:1], qrows, ensure_k)
     if not ensure_k:
-        return _rerank_topk(_candidates(first), cosine, k, round_digits)
+        return _rerank_topk(_candidates(first, exact), k, round_digits)
     first = first.localCheckpoint(eager=True)
     reached = _reached(first, k)
     short = [r for r in qrows if r.q_id is not None and (0, r.q_id) not in reached]
     if not short:
-        return _rerank_topk(_candidates(first), cosine, k, round_digits)
+        return _rerank_topk(_candidates(first, exact), k, round_digits)
     second = scan(levels[1:], short, False).withColumn("lvl", F.col("lvl") + 1)
-    return _rerank_topk(_candidates(first.union(second)), cosine, k, round_digits, ascend=True)
+    return _rerank_topk(_candidates(first.union(second), exact), k, round_digits, ascend=True)
 
 
 def brute_force_topk(
@@ -406,7 +436,9 @@ def brute_force_topk(
         F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec")
     )
     pairs = F.broadcast(q).crossJoin(c).where(F.col("q_id") != F.col("n_id"))
-    return _rerank_topk(pairs, cosine_col, k)
+    return _rerank_topk(
+        pairs.select("q_id", "n_id", cosine_col(F.col("q_vec"), F.col("n_vec")).alias("cosine")), k
+    )
 
 
 def lsh_topk(
@@ -426,9 +458,9 @@ def lsh_topk(
     """LSH-bucketed ANN: exact rerank only of the corpus vectors sharing
     a signature chunk with the query.
 
-    ``scoring="pandas"``: Arrow-batched einsum cosine for the re-rank
-    (production path; "fold" stays the fixture-oracle path — see
-    ``_cosine_fn``).
+    ``scoring="pandas"``: the corpus pass scores the rows it keeps with
+    the Arrow-batched einsum cosine (production path); "fold" stays the
+    fixture-oracle path (``cosine_col`` after the pass).
 
     ``round_digits``: round the cosine BEFORE ranking (ties then broken by
     ``n_id``), making the full output deterministic and expected-parquet
@@ -446,9 +478,12 @@ def lsh_topk(
     recover recall with multiple independent tables (distinct ``seed``s,
     union the candidates) rather than a wider word.
 
-    Plan: the queries' signatures are collected and broadcast, and one
-    pass over the corpus partitions keeps each partition's local top-k
-    candidates (``_probe_topk``); the corpus is never shuffled.
+    Plan: the queries are collected in one JVM job and signed on the
+    driver by the UDF's own function (``hyperplane_simhash_arrow``); their
+    chunks are then a projection of an Arrow local relation, collected
+    without a job, and broadcast. One pass over the corpus partitions
+    signs the corpus and keeps each partition's local top-k candidates
+    (``_probe_topk``); the corpus is never shuffled.
 
     ``ensure_k``: the reference's ASCEND phase (query_rec walks up parents
     collecting candidates until max_candidates, reference src/shared/
@@ -460,32 +495,38 @@ def lsh_topk(
     min(k, number of distinct corpus ids other than its own) rows.
     """
     _require_kernel(scoring=scoring)
-    cosine = _cosine_fn(scoring)
+    topk.require_positive(k=k)
     _validate_chunking(bits, n_chunks)
-    hp = hyperplane_simhash_udf(dim=dim, bits=bits, seed=seed)
+    planes = hyperplanes(dim, bits, seed)
     width = bits // n_chunks
     half = max(width // 2, 1)
 
-    def keyed(df: DataFrame, side: str) -> DataFrame:
-        sig = df.select(
-            F.col(id_col).alias(f"{side}_id"),
-            F.col(vec_col).alias(f"{side}_vec"),
-            hp(F.col(vec_col)).alias("sig"),
-        )
-        return sig.select(
+    def keyed(signed: DataFrame, side: str) -> DataFrame:
+        return signed.select(
             f"{side}_id",
             f"{side}_vec",
             chunk_values("sig", width, n_chunks).alias("leaf"),
             chunk_values("sig", half, bits // half).alias("parent"),
         )
 
+    c_sig = corpus.select(
+        F.col(id_col).alias("n_id"),
+        F.col(vec_col).alias("n_vec"),
+        hyperplane_simhash_udf(dim=dim, bits=bits, seed=seed)(F.col(vec_col)).alias("sig"),
+    )
+    q_sig = topk.driver_column(
+        queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")),
+        "q_vec",
+        StructField("sig", LongType()),
+        lambda vecs: hyperplane_simhash_arrow(vecs, planes),
+    )
     levels = [(("leaf", True),)]
     if width > 1:
         levels.append((("leaf", True), ("parent", True)))
     levels.append(())
     return _probe_topk(
-        keyed(corpus, "n"), keyed(queries, "q"),
-        levels if ensure_k else levels[:1], k, cosine, round_digits, ensure_k,
+        keyed(c_sig, "n"), keyed(q_sig, "q"),
+        levels if ensure_k else levels[:1], k, scoring, round_digits, ensure_k,
     )
 
 
@@ -593,8 +634,10 @@ def ivf_topk(
       batch and broadcast.
     * search: one pass over the corpus partitions keeps, per query, each
       partition's local top-k of the vectors in its probed cells
-      (``_probe_topk``); the corpus is never shuffled. Exact cosine and
-      the per-query top-k run on that small candidate table.
+      (``_probe_topk``); the corpus is never shuffled. With
+      ``scoring="pandas"`` the pass also emits each kept row's exact
+      cosine; with "fold" the cosine runs on that small candidate table.
+      The per-query top-k follows either way.
     * ``ensure_k``: queries with fewer than ``k`` candidates fall back to
       an exact scan of the whole corpus (the root, as in ``lsh_topk``) —
       every query gets min(k, number of distinct corpus ids other than
@@ -614,7 +657,6 @@ def ivf_topk(
     (lsh_forest.py:76-108) with k-means cells instead of hash prefixes.
     """
     _require_kernel(assignment=assignment, scoring=scoring)
-    cosine = _cosine_fn(scoring)
     topk.require_positive(k=k, nprobe=nprobe)
     if centroids is None:
         centroids = sample_codebook(
@@ -643,5 +685,5 @@ def ivf_topk(
     levels = [(("cell", False),), ()]
     return _probe_topk(
         c_cells, q_cells, levels if ensure_k else levels[:1],
-        k, cosine, round_digits, ensure_k,
+        k, scoring, round_digits, ensure_k,
     )

@@ -12,12 +12,14 @@ Spark mapping (SURVEY §2.9): KMeans via ``pyspark.ml`` (P2); the inverted
 index is one ``(doc_id, cposs)`` row per doc (P3, ``centroid_index``).
 ``plaid_topk`` runs on ``operators/topk.py`` (REPOSE, ICDE 2021): the
 small query side (S_cq rows and the kept centroids per query) is
-collected once and broadcast; ``doc_vectors`` is aggregated once, by
-``doc_id``, into ``(doc_id, cposs, d_vecs)``; one ``mapInArrow`` pass
-over that table keeps, per partition and query, a provable superset of
-the local top pool by centroid score; one merge (``topk.get_top_k``)
-ranks it with the relational score kernels, and the exact re-rank reads
-``d_vecs`` for the pool rows only.
+collected once and broadcast, the pandas S_cq computed on the driver;
+``doc_vectors`` is aggregated once, by ``doc_id``, into ``(doc_id, cposs,
+d_vecs)``; one ``mapInArrow`` pass over that table keeps, per partition
+and query, a provable superset of the local top pool by centroid score
+and, for the exact re-rank, scores those rows' chamfer (pandas) or emits
+their token vectors (fold); one ``query_id`` exchange then takes the
+pool by the centroid score (``topk.get_top_k``) and ranks it by the
+exact score.
 """
 
 from __future__ import annotations
@@ -27,15 +29,15 @@ import math
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StructField, StructType
+from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 from lsh_forest_for_multi_vector_retrieval_spark.functions.vectors import (
     _list_parts,
     _require_kernel,
     _spans,
     centroid_scores_arr,
-    centroid_scorevec_pandas_udf,
-    chamfer_pair_pandas_udf,
+    centroid_scorevec_arrow,
+    chamfer_pair_arrow,
     dot_col,
     nearest_centroid,
 )
@@ -43,7 +45,7 @@ from lsh_forest_for_multi_vector_retrieval_spark.operators import topk
 
 #: The most token vectors one document may hold. ``plaid_topk`` keeps one
 #: row per document holding all of its token vectors (``d_vecs``, which
-#: the exact re-rank reads), so a document over this bound fails the call
+#: its corpus pass reads), so a document over this bound fails the call
 #: with its ``doc_id`` instead of building an unbounded row. PLAID and
 #: ColBERT documents hold a few hundred tokens.
 MAX_DOC_TOKENS = 4096
@@ -257,9 +259,9 @@ def _sum_tok_vals(vals, round_digits: int | None):
 def chamfer_pair_fold_col(
     q_vecs: Column, d_vecs: Column, round_digits: int | None
 ) -> Column:
-    """Relational twin of ``chamfer_pair_pandas_udf``: per row, the sum over
-    query tokens (in array order) of the max over doc tokens of their dot,
-    summed by :func:`_sum_tok_vals`."""
+    """Relational twin of ``functions.vectors.chamfer_pair_arrow``: per
+    row, the sum over query tokens (in array order) of the max over doc
+    tokens of their dot, summed by :func:`_sum_tok_vals`."""
     tok_best = F.transform(
         q_vecs,
         lambda q: F.array_max(F.transform(d_vecs, lambda dv: dot_col(q, dv))),
@@ -285,67 +287,76 @@ def _kept_queries(qrows: list, t_cs: float) -> dict:
     return out
 
 
-def _tok_order(t):
+def _tok_order(t, field: str):
     """Sort key of a query token row: the order of Spark's ``array_sort``
-    over ``struct(q_idx, s_arr)`` — NULL first, then ascending; ``s_arr``
-    breaks ``q_idx`` ties element-wise (NULL first, NaN last)."""
+    over ``struct(q_idx, <field>)`` — NULL first, then ascending; the
+    array ``field`` breaks ``q_idx`` ties element-wise (NULL first, NaN
+    last)."""
 
     def key(x):
         return (0,) if x is None else (2,) if math.isnan(x) else (1, x)
 
+    arr = t[field]
     return (
         (0,) if t.q_idx is None else (1, t.q_idx),
-        () if t.s_arr is None else tuple(key(x) for x in t.s_arr),
+        (0,) if arr is None else (1, tuple(key(x) for x in arr)),
     )
 
 
-def _pool_rows(queries: dict, n_cents: int) -> list[tuple]:
-    """One ``(query_id, S, NULL mask, kept)`` row per query with a kept
-    position: ``S`` is its token x position score matrix flattened, tokens
-    in ``_tok_order`` and NULL read as -inf — the shape
-    ``topk.query_slices`` sizes."""
+def _pool_rows(queries: dict, n_cents: int, tokens: bool) -> list[tuple]:
+    """One ``(query_id, S, NULL mask, kept, vectors)`` row per query with a
+    kept position: ``S`` is its token x position score matrix flattened,
+    tokens in ``_tok_order`` of ``s_arr`` and NULL read as -inf. With
+    ``tokens``, ``vectors`` is its token vectors in ``_tok_order`` of
+    ``q_vec`` (the exact re-rank's order), else ``None``. This is the
+    shape ``topk.query_slices`` sizes."""
     rows = []
     for qid, (toks, kept) in queries.items():
         if not kept:
             continue
-        s = [t.s_arr or [None] * n_cents for t in sorted(toks, key=_tok_order)]
+        s = [t.s_arr or [None] * n_cents for t in sorted(toks, key=lambda t: _tok_order(t, "s_arr"))]
         null = np.array([[x is None for x in row] for row in s], dtype=bool)
         mat = np.array([[-np.inf if x is None else x for x in row] for row in s], dtype=np.float64)
-        rows.append((qid, mat.ravel(), null.ravel(), sorted(kept)))
+        vecs = [t.q_vec for t in sorted(toks, key=lambda t: _tok_order(t, "q_vec"))] if tokens else None
+        rows.append((qid, mat.ravel(), null.ravel(), sorted(kept), vecs))
     return rows
 
 
 def _pool_payload(rows: list, n_cents: int, arrow) -> dict:
-    """What the pass needs of a query slice: the ids as Arrow (to emit),
-    and per query a position lookup of its kept centroids, its score
-    matrix and that matrix's NULL mask."""
+    """What the pass needs of a query slice: the ids and token vectors as
+    Arrow (to emit and score), and per query a position lookup of its
+    kept centroids, its score matrix and that matrix's NULL mask."""
     import pyarrow as pa
 
     luts = []
-    for *_, kept in rows:
+    for *_, kept, _ in rows:
         lut = np.zeros(n_cents, dtype=bool)
         lut[kept] = True
         luts.append(lut)
     return {
         "arrow_ids": pa.array([r[0] for r in rows], arrow.field("query_id").type),
+        "arrow_toks": pa.array([r[4] for r in rows], arrow.field("q_vecs").type),
         "kept": luts,
         "scores": [r[1].reshape(-1, n_cents) for r in rows],
         "nulls": [r[2].reshape(-1, n_cents) for r in rows],
     }
 
 
-def _pool_kernel(bq, keep: int, margin: float, max_tokens: int, schema):
+def _pool_kernel(bq, keep: int, margin: float, max_tokens: int, exact: str | None, schema):
     """The ``mapInArrow`` body of ``plaid_topk``'s pass over ``(doc_id,
-    cposs, n_tok)``. Per query it takes the docs whose ``cposs`` meet the
+    d_vecs, cposs)``. Per query it takes the docs whose ``cposs`` meet the
     query's kept centroids and computes ``vals``, each token's maximum
     score over the doc's positions — a selection, no arithmetic, with the
     ``array_max`` rules: NULL skipped, NaN largest, NULL when no score is
     left. It keeps each doc whose ``vals`` hold a NULL or non-finite value
     (dirty), or whose centroid score, the left fold of ``vals`` that
     ``_sum_tok_vals`` computes, lies within ``margin`` of the partition's
-    ``keep``-th best. It emits slim ``(query_id, doc_id, cposs, vals)``
-    rows and decides no score or rank. A doc of more than ``max_tokens``
-    token vectors fails the task."""
+    ``keep``-th best. It emits ``(query_id, doc_id, vals)`` per kept row
+    and, for the exact re-rank, with ``exact="pandas"`` its ``exact``
+    chamfer score (``chamfer_pair_arrow``, the pandas kernel), with
+    "fold" the query's and the doc's token vectors (``q_vecs``,
+    ``d_vecs``) for the fold to score. It decides no rank. A doc of more
+    than ``max_tokens`` token vectors fails the task."""
 
     def run(batches):
         import pyarrow as pa
@@ -354,14 +365,14 @@ def _pool_kernel(bq, keep: int, margin: float, max_tokens: int, schema):
 
         def candidates(b):
             did = b.column(0)
-            ntok = b.column(2).to_numpy(zero_copy_only=False)
+            _, ntok, _, _ = _list_parts(b.column(1))
             over = np.flatnonzero(ntok > max_tokens)
             if len(over):
                 raise ValueError(
                     f"plaid_topk: doc_id {did[int(over[0])].as_py()!r} holds "
                     f"{ntok[over[0]]} token vectors, over MAX_DOC_TOKENS = {max_tokens}"
                 )
-            off, lens, valid, values = _list_parts(b.column(1))
+            off, lens, valid, values = _list_parts(b.column(2))
             rows = np.flatnonzero(did.is_valid().to_numpy(zero_copy_only=False) & valid & (lens > 0))
             if not len(rows):
                 return
@@ -389,11 +400,18 @@ def _pool_kernel(bq, keep: int, margin: float, max_tokens: int, schema):
         pieces, cols = topk.keep_loop(batches, keep, margin, candidates)
         if pieces:
             js, n, vals, nulls = zip(*pieces)
+            at = pa.array(np.repeat(js, n))
+            m = sum(n)
             width = np.repeat([v.shape[1] for v in vals], n)
+            scored = [pa.nulls(m, schema.field(c).type) for c in ("exact", "q_vecs", "d_vecs")]
+            if exact == "pandas":
+                scored[0] = chamfer_pair_arrow(q["arrow_toks"].take(at), cols[1])
+            elif exact == "fold":
+                scored[1:] = [q["arrow_toks"].take(at), cols[1]]
             yield pa.RecordBatch.from_arrays(
                 [
-                    q["arrow_ids"].take(pa.array(np.repeat(js, n))),
-                    *cols,
+                    q["arrow_ids"].take(at),
+                    cols[0],
                     pa.ListArray.from_arrays(
                         pa.array(np.concatenate([[0], np.cumsum(width)]), pa.int32()),
                         pa.array(
@@ -402,6 +420,7 @@ def _pool_kernel(bq, keep: int, margin: float, max_tokens: int, schema):
                         ),
                         type=schema.field("vals").type,
                     ),
+                    *scored,
                 ],
                 schema=schema,
             )
@@ -459,28 +478,33 @@ def plaid_topk(
 
     Physical plan: broadcast queries, one pass over a per-doc table, one
     merge (the ``operators/topk.py`` shape, like ``ann._probe_topk``).
-    * Query side: each token's S_cq array (a LITERAL-codebook projection)
-      and its top-``nprobe`` probe (the ``ann.ivf_topk`` struct sort,
-      desc score / asc position) are collected once; the kept centroids
-      per query are decided on the driver and broadcast, in slices
-      bounded by ``spark.sql.autoBroadcastJoinThreshold``.
+    * Query side: the query tokens are collected in one JVM job. Each
+      token's S_cq array is the LITERAL-codebook fold projection, or with
+      ``scoring="pandas"`` ``centroid_scorevec_arrow`` (the pandas
+      kernel's function) run on the driver over an Arrow local relation.
+      Its top-``nprobe`` probe (the ``ann.ivf_topk`` struct sort, desc
+      score / asc position) is a projection of that collect. The kept
+      centroids per query are decided on the driver and broadcast with
+      the token vectors, in slices bounded by
+      ``spark.sql.autoBroadcastJoinThreshold``.
     * Corpus side: one ``groupBy(doc_id)`` (``centroid_index(...,
       vectors=True)``) gives ``(doc_id, cposs, d_vecs)``, the only
-      Exchange below the pass.
+      Exchange below the pass and the only aggregation of
+      ``doc_vectors``, cached input or not.
     * One ``mapInArrow`` pass over that table takes, per query, the docs
       meeting its kept centroids and their ``vals``: each token's best
       S_cq score among the doc's positions (the ``array_max`` of cell 7,
       a selection, so exact). Per partition it keeps every doc that can
       still reach the top ``max(k, rerank)`` (``k`` without re-rank) by
       centroid score: within ``topk.keep_margin`` of the partition's
-      best, or dirty (a NULL or non-finite value). It emits slim
-      ``(query_id, doc_id, cposs, vals)`` rows, no vectors.
+      best, or dirty (a NULL or non-finite value). With re-rank it
+      scores the kept rows' exact chamfer (``chamfer_pair_arrow``), or
+      under the fold emits their token vectors for
+      ``chamfer_pair_fold_col``.
     * ``_sum_tok_vals`` over ``vals`` is the centroid score and
-      ``get_top_k`` the one merge; the exact re-rank joins the pool to
-      the per-doc table on ``(doc_id, cposs)`` — reading it whole, so
-      Spark reuses its one exchange instead of aggregating
-      ``doc_vectors`` again — and scores with ``chamfer_pair_fold_col``
-      or ``chamfer_pair_pandas_udf``.
+      ``get_top_k`` the one merge; with re-rank, the pool is the top
+      ``max(k, rerank)`` by centroid score and a second window over the
+      same ``query_id`` exchange ranks it by the exact score.
     Rows equal those of the relational plan this replaced (candidate
     join, score join, pool, ``d_mat`` join): the pass only drops rows
     that cannot reach a top-k."""
@@ -488,10 +512,7 @@ def plaid_topk(
     topk.require_positive(k=k, nprobe=nprobe)
     if rerank is not None:
         topk.require_positive(rerank=rerank)
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
 
-    spark = doc_vectors.sparkSession
     # one bounded collect of the tiny codebook, shared by assignment AND
     # scoring. All internal arithmetic runs over codebook POSITIONS in
     # centroid_id order — position ties == lowest-id ties, so sparse
@@ -508,16 +529,21 @@ def plaid_topk(
     # query side: S_cq per token (a projection, not a join) and its
     # top-nprobe probe, struct order (s, -pos, pos) = score desc,
     # position asc — collected once
-    if scoring == "pandas":
-        s_arr = centroid_scorevec_pandas_udf(codebook)(F.col(vec_col))
-    else:
-        s_arr = F.transform(centroid_scores_arr(codebook, vec_col), lambda c: c["s"])
     qtok = query_vectors.select(
         F.col(query_col).alias("query_id"),
         F.col(qvec_id_col).alias("q_idx"),
         F.col(vec_col).alias("q_vec"),
-        s_arr.alias("s_arr"),
     )
+    if scoring == "pandas":
+        cmat = np.asarray(codebook, dtype=np.float64)
+        qtok = topk.driver_column(
+            qtok, "q_vec", StructField("s_arr", ArrayType(DoubleType())),
+            lambda vecs: centroid_scorevec_arrow(vecs, cmat),
+        )
+    else:
+        qtok = qtok.select(
+            "*", F.transform(centroid_scores_arr(codebook, "q_vec"), lambda c: c["s"]).alias("s_arr")
+        )
     probe = F.slice(
         F.reverse(
             F.array_sort(
@@ -537,82 +563,47 @@ def plaid_topk(
     queries = _kept_queries(qtok.select("*", probe.alias("probe")).collect(), t_cs)
     qf = qtok.schema
 
-    # corpus side: the one doc_id aggregation, then one pass per slice.
-    # A NULL doc_id joins nothing; filtering it here, in every reader of
-    # per_doc, keeps the readers' exchanges identical (reused).
+    # corpus side: the one doc_id aggregation, then one pass per slice; a
+    # NULL doc_id joins nothing
     per_doc = centroid_index(
         doc_vectors.where(F.col(doc_col).isNotNull()),
         codebook, doc_col, vec_col, assignment, vectors=True,
     )
-    frame = per_doc.select("doc_id", "cposs", F.size("d_vecs").alias("n_tok"))
     schema = StructType(
         [
             qf["query_id"],
             per_doc.schema["doc_id"],
-            per_doc.schema["cposs"],
             StructField("vals", ArrayType(qf["s_arr"].dataType.elementType)),
+            StructField("exact", DoubleType()),
+            StructField("q_vecs", ArrayType(qf["q_vec"].dataType)),
+            StructField("d_vecs", per_doc.schema["d_vecs"].dataType),
         ]
     )
     keep = k if rerank is None else max(k, rerank)
+    exact = None if rerank is None else scoring
     margin = topk.keep_margin(round_digits)
     survivors = topk.sliced_pass(
-        frame, schema, _pool_rows(queries, n_cents),
+        per_doc.select("doc_id", "d_vecs", "cposs"), schema,
+        _pool_rows(queries, n_cents, tokens=exact is not None),
         lambda s, arrow: _pool_payload(s, n_cents, arrow),
-        lambda bq, arrow: _pool_kernel(bq, keep, margin, MAX_DOC_TOKENS, arrow),
+        lambda bq, arrow: _pool_kernel(bq, keep, margin, MAX_DOC_TOKENS, exact, arrow),
     )
 
     # centroid score: the sum over the q_idx-sorted tokens of each
     # token's best score among the doc's centroid positions
-    scores = survivors.select(
-        "query_id", "doc_id", "cposs", _sum_tok_vals(F.col("vals"), round_digits).alias("score")
-    )
+    score = _sum_tok_vals(F.col("vals"), round_digits).alias("score")
     if rerank is None:
-        return topk.get_top_k(scores.drop("cposs"), k)
+        return topk.get_top_k(survivors.select("query_id", "doc_id", score), k)
 
-    # exact re-rank over matrices: one row per pool (query, doc) carrying
-    # the doc's token list and the query's q_idx-sorted token list — max
-    # over doc tokens is order-independent, so the collect_list order of
-    # d_vecs cannot affect the score
-    pool = topk.get_top_k(scores, keep).select("query_id", "doc_id", "cposs")
-    # the query token lists, from the driver's copy: an Arrow table
-    # becomes a local relation, built without Python tasks
-    qm_schema = StructType(
-        [
-            StructField("query_id", qf["query_id"].dataType),
-            StructField(
-                "qtoks",
-                ArrayType(
-                    StructType(
-                        [
-                            StructField("q_idx", qf["q_idx"].dataType),
-                            StructField("q_vec", qf["q_vec"].dataType),
-                        ]
-                    )
-                ),
-            ),
-        ]
-    )
-    q_mat = spark.createDataFrame(
-        pa.Table.from_pylist(
-            [
-                {"query_id": qid, "qtoks": [{"q_idx": t.q_idx, "q_vec": t.q_vec} for t in toks]}
-                for qid, (toks, _) in queries.items()
-            ],
-            schema=to_arrow_schema(qm_schema),
-        ),
-        qm_schema,
-    ).select("query_id", F.array_sort("qtoks").alias("qtoks"))
-    # joining on cposs as well reads per_doc whole, so Spark reuses the
-    # pass's exchange instead of aggregating doc_vectors a second time
-    joined = (
-        F.broadcast(pool)
-        .join(per_doc, ["doc_id", "cposs"])
-        .join(F.broadcast(q_mat), "query_id")
-    )
-    q_vecs = F.transform(F.col("qtoks"), lambda t: t["q_vec"])
+    # exact re-rank of the pool, the top ``keep`` by centroid score: the
+    # pass's chamfer, or the fold over the token lists it emitted (query
+    # tokens in q_idx order; max over doc tokens is order-independent, so
+    # the collect_list order of d_vecs cannot affect the score)
     if scoring == "pandas":
-        raw = chamfer_pair_pandas_udf()(q_vecs, F.col("d_vecs"))
-        score = raw if round_digits is None else F.round(raw, round_digits)
+        exact_cols = ["exact"]
+        final = F.col("exact") if round_digits is None else F.round("exact", round_digits)
     else:
-        score = chamfer_pair_fold_col(q_vecs, F.col("d_vecs"), round_digits)
-    return topk.get_top_k(joined.select("query_id", "doc_id", score.alias("score")), k)
+        exact_cols = ["q_vecs", "d_vecs"]
+        final = chamfer_pair_fold_col(F.col("q_vecs"), F.col("d_vecs"), round_digits)
+    pool = topk.get_top_k(survivors.select("query_id", "doc_id", score, *exact_cols), keep)
+    return topk.get_top_k(pool.select("query_id", "doc_id", final.alias("score")), k)

@@ -6,7 +6,10 @@ re-rank, top-k. Here in the shape of REPOSE (ICDE 2021): the query batch
 is collected once and broadcast in slices, one ``mapInArrow`` pass per
 slice runs over the corpus partitions (``sliced_pass``), each partition
 keeps a provable superset of its local top-k (``keep_loop``) and one
-merge ranks it (``get_top_k``).
+merge ranks it (``get_top_k``). The query side's keys and scores are
+computed on the driver (``driver_column``) and the pass scores the rows
+it keeps, so a ``scoring="pandas"`` query runs no Python stage besides
+the pass and the corpus-side assignment or signing that it fuses.
 """
 
 from __future__ import annotations
@@ -16,7 +19,7 @@ import functools
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 
 def require_positive(**counts) -> None:
@@ -43,21 +46,40 @@ def get_top_k(
     return scores.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
+def _elements(x) -> int:
+    """The elements of a query row's field, a list of lists counted to
+    its leaves (``None`` holds none)."""
+    if isinstance(x, list):
+        return sum(_elements(e) if isinstance(e, list) else 1 for e in x)
+    return 0 if x is None else len(x)
+
+
 def query_slices(spark, rows: list) -> list[list]:
     """Consecutive slices of the collected query ``rows``, each of at most
     the session's ``spark.sql.autoBroadcastJoinThreshold`` estimated bytes
-    (16 a row and 8 an element of its fields after the first; a
-    non-positive threshold is one slice). Always at least one slice."""
+    (16 a row and 8 an element of its fields after the first, nested
+    lists counted to their leaves; a non-positive threshold is one
+    slice). Always at least one slice."""
     budget = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     out, cur, size = [], [], 0
     for r in rows:
-        b = 16 + 8 * sum(len(x) for x in r[1:] if x is not None)
+        b = 16 + 8 * sum(_elements(x) for x in r[1:])
         if cur and budget > 0 and size + b > budget:
             out.append(cur)
             cur, size = [], 0
         cur.append(r)
         size += b
     return out + [cur]
+
+
+def driver_column(df: DataFrame, src: str, field: StructField, fn) -> DataFrame:
+    """``df`` plus ``field``, computed on the driver: ``df`` is collected
+    as Arrow in one JVM job, ``fn`` maps its column ``src`` (an Arrow
+    array) to the new column, and the result is an Arrow local relation,
+    so projecting and collecting it run no job and no Python task."""
+    tbl = df.toArrow()
+    tbl = tbl.append_column(field.name, fn(tbl.column(src).combine_chunks()))
+    return df.sparkSession.createDataFrame(tbl, StructType(df.schema.fields + [field]))
 
 
 def sliced_pass(frame: DataFrame, schema: StructType, rows: list, payload, kernel) -> DataFrame:

@@ -44,6 +44,13 @@ def _root_scan(short, corpus):
     )
 
 
+def _scored(cand, scoring):
+    """``(q_id, n_id, cosine)`` of candidate vector pairs, by the scoring
+    kernel's Column twin."""
+    cos = ann._cosine_fn(scoring)(F.col("q_vec"), F.col("n_vec"))
+    return cand.select("q_id", "n_id", cos.alias("cosine"))
+
+
 def _ids(side):
     return [F.col("vec_id").alias(f"{side}_id"), F.col("embedding").alias(f"{side}_vec")]
 
@@ -76,7 +83,7 @@ def relational_lsh(corpus, queries, k, n_chunks, ensure_k, round_digits, scoring
             unsat = _short(cand, qsig, k)
         if unsat.count():
             cand = cand.unionByName(_root_scan(unsat, csig)).dropDuplicates(["q_id", "n_id"])
-    return ann._rerank_topk(cand, ann._cosine_fn(scoring), k, round_digits)
+    return ann._rerank_topk(_scored(cand, scoring), k, round_digits)
 
 
 def relational_ivf(corpus, queries, k, centroids, nprobe, ensure_k, round_digits, scoring):
@@ -100,7 +107,7 @@ def relational_ivf(corpus, queries, k, centroids, nprobe, ensure_k, round_digits
         if unsat.count():
             cand = cand.unionByName(_root_scan(unsat, c))
         cand = cand.dropDuplicates(["q_id", "n_id"])
-    return ann._rerank_topk(cand, ann._cosine_fn(scoring), k, round_digits)
+    return ann._rerank_topk(_scored(cand, scoring), k, round_digits)
 
 
 def _rows(df):
@@ -251,19 +258,19 @@ def test_ann_topk_job_count_and_plan_shape(jobs, py_ops, vecs):
     exchange is the re-rank's ``q_id`` shuffle of the candidate table.
 
     Python operators per call, with or without ``ensure_k``: LSH signs
-    the queries and the corpus and runs the pass (3), and the pandas
-    cosine adds one (4); IVF runs the pass alone (1), and its pandas
-    kernels add the cell assignment and the cosine (3)."""
+    the corpus and runs the pass (2: the queries are signed on the driver,
+    and the pandas cosine runs in the pass); IVF runs the pass alone (1),
+    and its pandas assignment adds one (2)."""
     queries = vecs.where(F.col("vec_id") < 20)
     cb = _codebook(8)
     lsh = dict(k=10, n_chunks=16, round_digits=6)
     ivf = dict(k=10, centroids=cb, nprobe=4, round_digits=6)
     pandas = dict(assignment="pandas", scoring="pandas")
     calls = {
-        "lsh": (3, lambda **kw: lsh_topk(vecs, queries, **lsh, **kw)),
-        "lsh_pandas": (4, lambda **kw: lsh_topk(vecs, queries, scoring="pandas", **lsh, **kw)),
+        "lsh": (2, lambda **kw: lsh_topk(vecs, queries, **lsh, **kw)),
+        "lsh_pandas": (2, lambda **kw: lsh_topk(vecs, queries, scoring="pandas", **lsh, **kw)),
         "ivf": (1, lambda **kw: ivf_topk(vecs, queries, **ivf, **kw)),
-        "ivf_pandas": (3, lambda **kw: ivf_topk(vecs, queries, **ivf, **pandas, **kw)),
+        "ivf_pandas": (2, lambda **kw: ivf_topk(vecs, queries, **ivf, **pandas, **kw)),
     }
     for name, (ops, call) in calls.items():
         call(ensure_k=True).collect()  # warm
@@ -385,8 +392,8 @@ def test_ensure_k_new_query_batch_compiles_no_class(vecs, compiles, jobs, py_ops
     query batch whose short queries ascend compiles no class. The LSH
     call runs 5 jobs: the query collect, the checkpointed leaf pass, the
     count-row collect and the result's collect over the ascend pass; and
-    5 Python operators: the query signing, and the corpus signing and
-    the pass of each of its two passes."""
+    4 Python operators: the corpus signing and the pass of each of its
+    two passes (the queries are signed on the driver)."""
     batches = [
         vecs.where(F.col("vec_id") % 7 == r).localCheckpoint(eager=True) for r in (0, 1)
     ]
@@ -411,4 +418,4 @@ def test_ensure_k_new_query_batch_compiles_no_class(vecs, compiles, jobs, py_ops
         assert ascended == [True], name
         if name == "lsh":
             assert jobs(lambda: call(batches[1]).collect()) == 5
-            assert py_ops(lambda: call(batches[1]).collect()) == 5
+            assert py_ops(lambda: call(batches[1]).collect()) == 4

@@ -1,12 +1,14 @@
-"""One Arrow vector decoder: the NumPy vector kernels are ``arrow_udf``s
-over the list decoder of ``functions/vectors.py``, no other module defines
-one, and the decoder reads sliced Arrow arrays (non-zero offsets) like
-whole ones."""
+"""One Arrow vector decoder: the NumPy vector kernels (plain functions
+over Arrow arrays, wrapped as ``arrow_udf``s where a Spark stage runs
+them) read the list decoder of ``functions/vectors.py``, no other module
+defines one, and the decoder reads sliced Arrow arrays (non-zero
+offsets) like whole ones."""
 
 from __future__ import annotations
 
 import ast
 
+import numpy as np
 import pyarrow as pa
 import pytest
 
@@ -14,8 +16,8 @@ from lsh_forest_for_multi_vector_retrieval_spark.functions.simhash import (
     hyperplane_simhash_udf,
 )
 from lsh_forest_for_multi_vector_retrieval_spark.functions.vectors import (
-    centroid_scorevec_pandas_udf,
-    chamfer_pair_pandas_udf,
+    centroid_scorevec_arrow,
+    chamfer_pair_arrow,
     cosine_pandas_udf,
     nearest_centroid_pandas_udf,
 )
@@ -26,13 +28,13 @@ DECODER = {"_list_parts", "_vectors"}
 
 def test_vector_kernels_use_no_pandas_udf():
     assert "pandas_udf" not in _names(_body(PKG_ROOT / "functions/vectors.py"))
-    hp = next(
-        n
-        for n in _body(PKG_ROOT / "functions/simhash.py")
-        if isinstance(n, ast.FunctionDef) and n.name == "hyperplane_simhash_udf"
-    )
-    assert "pandas_udf" not in _names([hp])
-    assert {"arrow_udf", "_vectors"} <= _names([hp])
+    defs = {
+        n.name: n for n in _body(PKG_ROOT / "functions/simhash.py") if isinstance(n, ast.FunctionDef)
+    }
+    hp, body = defs["hyperplane_simhash_udf"], defs["hyperplane_simhash_arrow"]
+    assert "pandas_udf" not in _names([hp, body])
+    assert {"arrow_udf", "hyperplane_simhash_arrow"} <= _names([hp])
+    assert "_vectors" in _names([body])
 
 
 def test_the_list_decoder_is_defined_once():
@@ -88,13 +90,13 @@ def test_kernels_read_sliced_arrays_like_whole_ones(spark, start):
     same rows of the whole array."""
     cents = [[1.0, 0.0], [0.0, 1.0]]
     kernels = [
-        (cosine_pandas_udf(), (A, B)),
-        (nearest_centroid_pandas_udf(cents), (A,)),
-        (centroid_scorevec_pandas_udf(cents), (A,)),
-        (hyperplane_simhash_udf(dim=2, bits=16), (A,)),
-        (chamfer_pair_pandas_udf(), (Q, D)),
+        (cosine_pandas_udf().func, (A, B)),
+        (nearest_centroid_pandas_udf(cents).func, (A,)),
+        (lambda v: centroid_scorevec_arrow(v, np.asarray(cents)), (A,)),
+        (hyperplane_simhash_udf(dim=2, bits=16).func, (A,)),
+        (chamfer_pair_arrow, (Q, D)),
     ]
-    for udf, cols in kernels:
-        whole = udf.func(*cols).to_pylist()
-        part = udf.func(*(c.slice(start, 3) for c in cols)).to_pylist()
-        assert part == whole[start : start + 3], udf.func
+    for kernel, cols in kernels:
+        whole = kernel(*cols).to_pylist()
+        part = kernel(*(c.slice(start, 3) for c in cols)).to_pylist()
+        assert part == whole[start : start + 3], kernel

@@ -305,19 +305,19 @@ def test_round6_kernels_degenerate_inputs(spark):
     array of NULLs (the fold's dot_col is NULL on every such row)."""
     import math
 
+    import pyarrow as pa
     from pyspark.sql import functions as F
 
     from lsh_forest_for_multi_vector_retrieval_spark.functions.vectors import (
         centroid_scores_arr,
-        centroid_scorevec_pandas_udf,
-        chamfer_pair_pandas_udf,
+        centroid_scorevec_arrow,
+        chamfer_pair_arrow,
     )
     from lsh_forest_for_multi_vector_retrieval_spark.operators.plaid import (
         chamfer_pair_fold_col,
     )
-    from test_ann_chamfer import BATCH_3
-    from test_plaid_probe import _conf
 
+    vec = pa.list_(pa.float64())
     q = [[1.0, 0.0], [0.0, 2.0]]
     d = [[1.0, 1.0], [3.0, 0.0]]
     rows = [
@@ -337,13 +337,15 @@ def test_round6_kernels_degenerate_inputs(spark):
     df = spark.createDataFrame(
         rows, "id long, q array<array<double>>, d array<array<double>>"
     )
-    got, fold = {}, {}
-    for r in df.select(
-        "id",
-        chamfer_pair_pandas_udf()(F.col("q"), F.col("d")).alias("s"),
-        chamfer_pair_fold_col(F.col("q"), F.col("d"), None).alias("f"),
-    ).collect():
-        got[r.id], fold[r.id] = r.s, r.f
+    fold = {
+        r.id: r.f
+        for r in df.select(
+            "id", chamfer_pair_fold_col(F.col("q"), F.col("d"), None).alias("f")
+        ).collect()
+    }
+    qs = pa.array([r[1] for r in rows], pa.list_(vec))
+    ds = pa.array([r[2] for r in rows], pa.list_(vec))
+    got = dict(enumerate(chamfer_pair_arrow(qs, ds).to_pylist()))
     assert got[0] == 5.0
     assert got[1] == 3.0
     assert got[2] == 3.0
@@ -351,47 +353,33 @@ def test_round6_kernels_degenerate_inputs(spark):
     assert got[6] == 3.0
     assert got[7] == 3.0
     assert got == fold  # the pandas kernel and its fold twin agree per row
-    # the same rows in one partition, in 3-row Arrow batches
-    with _conf(spark, *BATCH_3):
-        multi = df.coalesce(1).select(
-            "id",
-            chamfer_pair_pandas_udf()(F.col("q"), F.col("d")).alias("s"),
-            chamfer_pair_fold_col(F.col("q"), F.col("d"), None).alias("f"),
-        ).collect()
-    assert {r.id: r.s for r in multi} == {r.id: r.f for r in multi} == got
+    # the same rows in 3-row slices are scored as in the whole array
+    for at in range(0, len(rows), 3):
+        part = chamfer_pair_arrow(qs.slice(at, 3), ds.slice(at, 3)).to_pylist()
+        assert part == [got[i] for i in range(at, min(at + 3, len(rows)))]
 
     cents = [[1.0, 0.0], [0.0, 1.0]]
-    vdf = spark.createDataFrame(
-        [(0, [2.0, 3.0]), (1, None), (2, [1.0])],
-        "id long, v array<double>",
-    )
-    sv = {
-        r.id: r.s
-        for r in vdf.select(
-            "id", centroid_scorevec_pandas_udf(cents)(F.col("v")).alias("s")
-        ).collect()
-    }
+    cmat = np.asarray(cents)
+    sv = centroid_scorevec_arrow(pa.array([[2.0, 3.0], None, [1.0]], vec), cmat).to_pylist()
     assert [round(x, 9) for x in sv[0]] == [2.0, 3.0]
-    assert list(sv[1]) == [None, None]  # NULL vector -> per-centroid NULLs
-    assert list(sv[2]) == [None, None]  # wrong-dim vector -> NULLs
-    # more rows, a NULL element among them, in one partition of 3-row
-    # Arrow batches: the kernel equals its fold twin row for row
-    more = vdf.unionByName(
-        spark.createDataFrame(
-            [(3, [None, 1.0]), (4, [0.5, 0.5]), (5, []), (6, [1.0, 2.0]), (7, [3.0, None])],
-            "id long, v array<double>",
-        )
-    ).coalesce(1)
-    with _conf(spark, *BATCH_3):
-        multi = more.select(
-            "id",
-            centroid_scorevec_pandas_udf(cents)(F.col("v")).alias("s"),
-            F.transform(centroid_scores_arr(cents, "v"), lambda c: c["s"]).alias("f"),
-        ).collect()
-    assert len(multi) == 8
-    for r in multi:
-        assert r.s == r.f, r
-    assert {r.id: r.s for r in multi}[7] == [None, None]  # NULL element
+    assert sv[1] == [None, None]  # NULL vector -> per-centroid NULLs
+    assert sv[2] == [None, None]  # wrong-dim vector -> NULLs
+    # more rows, a NULL element among them, also in 3-row slices: the
+    # kernel equals its fold twin row for row
+    vs = [[2.0, 3.0], None, [1.0], [None, 1.0], [0.5, 0.5], [], [1.0, 2.0], [3.0, None]]
+    fold_sv = [
+        r.f
+        for r in spark.createDataFrame(list(enumerate(vs)), "id long, v array<double>")
+        .select("id", F.transform(centroid_scores_arr(cents, "v"), lambda c: c["s"]).alias("f"))
+        .orderBy("id")
+        .collect()
+    ]
+    arr = pa.array(vs, vec)
+    whole = centroid_scorevec_arrow(arr, cmat).to_pylist()
+    assert whole == fold_sv
+    for at in range(0, len(vs), 3):
+        assert centroid_scorevec_arrow(arr.slice(at, 3), cmat).to_pylist() == whole[at : at + 3]
+    assert whole[7] == [None, None]  # NULL element
 
     # non-finite centroids cannot survive a SQL literal — rejected loudly
     import pytest as _pytest

@@ -7,13 +7,16 @@ from __future__ import annotations
 
 import contextlib
 
+import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 
 from lsh_forest_for_multi_vector_retrieval_spark.functions.vectors import (
     centroid_scores_arr,
-    centroid_scorevec_pandas_udf,
-    chamfer_pair_pandas_udf,
+    centroid_scorevec_arrow,
+    chamfer_pair_arrow,
 )
 from lsh_forest_for_multi_vector_retrieval_spark.operators import plaid
 from lsh_forest_for_multi_vector_retrieval_spark.operators.ann import (
@@ -33,6 +36,27 @@ from test_expected_fixtures import SF001 as SF
 
 
 # ---------------------------------------------------------------- oracle
+def _scorevec_udf(codebook):
+    """The pandas S_cq kernel as a Spark UDF, as the relational plan ran it."""
+    cmat = np.asarray(codebook, dtype=np.float64)
+
+    @arrow_udf("array<double>")
+    def scores(v: pa.Array) -> pa.Array:
+        return centroid_scorevec_arrow(v, cmat)
+
+    return scores
+
+
+def _chamfer_udf():
+    """The pandas chamfer kernel as a Spark UDF, as the relational plan ran it."""
+
+    @arrow_udf("double")
+    def chamfer(qs: pa.Array, ds: pa.Array) -> pa.Array:
+        return chamfer_pair_arrow(qs, ds)
+
+    return chamfer
+
+
 def relational_plaid(doc_vectors, query_vectors, centroids, k=10, nprobe=4, t_cs=0.0,
                      rerank=None, round_digits=None, assignment="fold", scoring="fold"):
     """The relational plan: explode the inverted index, join the kept
@@ -44,7 +68,7 @@ def relational_plaid(doc_vectors, query_vectors, centroids, k=10, nprobe=4, t_cs
     doc_cents = centroid_index(doc_vectors, codebook, assignment=assignment).localCheckpoint(eager=True)
     index = doc_cents.select("doc_id", F.explode("cposs").alias("cpos"))
     if scoring == "pandas":
-        s_arr = centroid_scorevec_pandas_udf(codebook)(F.col("embedding"))
+        s_arr = _scorevec_udf(codebook)(F.col("embedding"))
     else:
         s_arr = F.transform(centroid_scores_arr(codebook, "embedding"), lambda c: c["s"])
     qtok = query_vectors.select(
@@ -95,7 +119,7 @@ def relational_plaid(doc_vectors, query_vectors, centroids, k=10, nprobe=4, t_cs
     joined = pool.join(q_mat, "query_id").join(d_mat, "doc_id")
     q_vecs = F.transform(F.col("qtoks"), lambda t: t["q_vec"])
     if scoring == "pandas":
-        raw = chamfer_pair_pandas_udf()(q_vecs, F.col("d_vecs"))
+        raw = _chamfer_udf()(q_vecs, F.col("d_vecs"))
         score = raw if round_digits is None else F.round(raw, round_digits)
     else:
         score = chamfer_pair_fold_col(q_vecs, F.col("d_vecs"), round_digits)
@@ -283,29 +307,27 @@ def test_doc_token_bound_fails_loudly_above_and_passes_at(spark, corpus, queries
 
 # ------------------------------------------------------------- CI guards
 def test_plaid_job_count_and_plan_shape(jobs, py_ops, corpus, queries, cents):
-    """A warm re-rank call runs 7 jobs: the query collect, the per-doc
-    exchange, the query-vector broadcast, the pool window's exchange, the
-    pool broadcast, the final window's exchange and the result (the
-    codebook is a local relation: collecting it runs none); without
-    re-rank it runs 4: the query collect, the per-doc exchange, the
-    window's exchange and the result. Its Python operators: the S_cq
-    scores, the cell assignment and the pass, and with re-rank the exact
-    chamfer (4 and 3).
-    Exactly one Exchange sits below the pass, keyed on ``doc_id``, and the
-    re-rank reads that same exchange: ``doc_vectors`` is aggregated once."""
+    """A warm call runs 4 jobs with or without re-rank: the query
+    collect, the per-doc exchange, the window's exchange and the result
+    (the codebook is a local relation: collecting it runs none, and the
+    re-rank's two windows share one exchange). It runs 2 Python
+    operators: the cell assignment and the pass (the S_cq scores run on
+    the driver, the exact chamfer in the pass).
+    Exactly one Exchange sits below the pass, keyed on ``doc_id``; it is
+    the plan's only ``doc_id`` exchange and nothing joins the per-doc
+    table, so ``doc_vectors`` is aggregated once."""
     def call(rerank=20):
         return plaid_topk(corpus, queries, cents, k=10, nprobe=4, rerank=rerank,
                           assignment="pandas", scoring="pandas")
 
-    for rerank, budget, ops in ((20, 7, 4), (None, 4, 3)):
+    for rerank, budget, ops in ((20, 4, 2), (None, 4, 2)):
         call(rerank).collect()  # warm
         assert jobs(lambda: call(rerank).collect()) == budget, rerank
         assert py_ops(lambda: call(rerank).collect()) == ops, rerank
 
     df = call()
     df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    plan = plan.split("== Initial Plan ==")[0].splitlines()  # the final plan
+    plan = _final_plan(df)
     at = [i for i, line in enumerate(plan) if "MapInArrow" in line]
     assert len(at) == 1, plan
     depth = len(plan[at[0]]) - len(plan[at[0]].lstrip(" :+-"))
@@ -316,6 +338,32 @@ def test_plaid_job_count_and_plan_shape(jobs, py_ops, corpus, queries, cents):
         below.append(line)
     ex = [line for line in below if "Exchange" in line]
     assert len(ex) == 1 and "hashpartitioning(doc_id" in ex[0], below
-    reads = [line for line in plan if "Exchange hashpartitioning(doc_id" in line]
-    assert len(reads) == 2 and sum("ReusedExchange" in line for line in reads) == 1, plan
+    assert sum("hashpartitioning(doc_id" in line for line in plan) == 1, plan
+    assert not any("Join" in line for line in plan), plan
     assert sum("ObjectHashAggregate" in line and "partial_collect_list" in line for line in plan) == 1
+
+
+@pytest.mark.parametrize("mode", ["fold", "pandas"])
+def test_plaid_aggregates_a_persisted_corpus_once(corpus, queries, cents, mode):
+    """On a ``persist()``ed corpus the re-rank plan holds one ``doc_id``
+    shuffle stage, under either assignment kernel: ``doc_vectors`` is
+    aggregated, and its cells assigned, once (a cached scan is not
+    matched for exchange reuse, so a second reader of the per-doc table
+    would aggregate it again)."""
+    docs = corpus.select("doc_id", "vec_id", "embedding").persist()
+    try:
+        docs.count()
+        df = plaid_topk(docs, queries, cents, k=10, nprobe=4, rerank=20,
+                        assignment=mode, scoring=mode)
+        df.collect()
+        stages = [line for line in _final_plan(df) if "Exchange hashpartitioning(doc_id" in line]
+        assert len(stages) == 1 and "ReusedExchange" not in stages[0], stages
+    finally:
+        docs.unpersist()
+
+
+def _final_plan(df) -> list[str]:
+    """The lines of ``df``'s executed plan; after an action, AQE's final
+    plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0].splitlines()

@@ -347,9 +347,10 @@ def test_plaid_job_count_and_plan_shape(jobs, py_ops, corpus, queries, cents):
 def test_plaid_aggregates_a_persisted_corpus_once(corpus, queries, cents, mode):
     """On a ``persist()``ed corpus the re-rank plan holds one ``doc_id``
     shuffle stage, under either assignment kernel: ``doc_vectors`` is
-    aggregated, and its cells assigned, once (a cached scan is not
-    matched for exchange reuse, so a second reader of the per-doc table
-    would aggregate it again)."""
+    aggregated, and its cells assigned, once. (A re-rank that joined the
+    per-doc table back ran a second aggregation on such a corpus: Spark
+    did not reuse the pass's exchange there, as it does for a
+    checkpointed one.)"""
     docs = corpus.select("doc_id", "vec_id", "embedding").persist()
     try:
         docs.count()
